@@ -21,37 +21,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see GraftSession: re-evaluates generator inputs as pushed filters
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // see GraftSession: >128 groups/partition must not demote the
-      // native top-k/sketch aggregates to sort-based aggregation.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      // The ContextCleaner frees broadcasts/shuffles only when the
-      // DRIVER GCs; a 64 GiB single-JVM suite of ~700 sequential
-      // queries barely GCs the old gen, so executor-side storage fills
-      // with dead broadcasts and random mid-suite keys pay 2-5× in
-      // execution-memory contention (measured: the >2× victim set
-      // wandered between otherwise-identical sweeps). BUT the cleaner's
-      // periodic System.gc() is a FULL STW collection that lands
-      // mid-query: at the data-bound point (64 GiB live heap) each
-      // pause costs seconds to tens of seconds, and two back-to-back
-      // 237-key sweeps showed disjoint contiguous >2× victim windows
-      // (e22-e25 in one, d13/e12-e18/m3-m6/t5 in the other) exactly
-      // where the 60s timer fired. So the interval stays at the 30min
-      // default (≈ off) and the SAME System.gc() runs explicitly in
-      // the harness loops BETWEEN queries — identical broadcast/shuffle
-      // reclamation, zero timed-region pauses (the JMH pattern).
-      .config("spark.cleaner.periodicGC.interval", "30min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up passes: compile+JIT the generated classes each query uses,
     // so the timed pass measures steady-state engine throughput, not
@@ -71,18 +41,35 @@ object Bench {
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
             dir: String): Unit =
       fn(spark, dir).write.format("noop").mode("overwrite").save()
-    // Explicit GC BETWEEN queries (see the periodicGC comment above):
-    // the old-gen walk that frees dead broadcasts/shuffle refs runs in
-    // the untimed gaps, never inside a timed region. ~45s cadence keeps
+    // The ContextCleaner frees broadcasts/shuffles only when the
+    // DRIVER GCs; a 64 GiB single-JVM suite of ~700 sequential
+    // queries barely GCs the old gen, so executor-side storage fills
+    // with dead broadcasts and random mid-suite keys pay 2-5× in
+    // execution-memory contention (measured: the >2× victim set
+    // wandered between otherwise-identical sweeps). BUT the cleaner's
+    // periodic System.gc() is a FULL STW collection that lands
+    // mid-query: at the data-bound point (64 GiB live heap) each
+    // pause costs seconds to tens of seconds, and two back-to-back
+    // 237-key sweeps showed disjoint contiguous >2× victim windows
+    // (e22-e25 in one, d13/e12-e18/m3-m6/t5 in the other) exactly
+    // where a 60s timer fired. So spark.cleaner.periodicGC.interval
+    // stays at its 30min default (≈ off) and the SAME System.gc() runs
+    // here, BETWEEN queries — identical broadcast/shuffle reclamation,
+    // zero timed-region pauses (the JMH pattern). ~45s cadence keeps
     // the old 60s reclamation rate.
     var lastGc = System.nanoTime()
     def gcBetweenQueries(): Unit =
       if ((System.nanoTime() - lastGc) / 1e9 > 45.0) {
         System.gc(); lastGc = System.nanoTime()
       }
-    for (dir <- Seq(warmDir, sfDir); (_, fn) <- selected) {
+    // A query that throws records NO sample (its median prints -1 and a
+    // "failed" list names it): swallowing the error and keeping the
+    // time-to-exception would make a broken query look FAST and lower
+    // the recorded total. A warm-up failure counts too.
+    val failed = scala.collection.mutable.Set.empty[String]
+    for (dir <- Seq(warmDir, sfDir); (name, fn) <- selected) {
       gcBetweenQueries()
-      try run(fn, dir) catch { case _: Throwable => () }
+      try run(fn, dir) catch { case _: Throwable => failed += name }
     }
     // Median-of-N per query (default 3): a single-shot number is hostage
     // to host noise / GC / JIT recompiles; the median is the recorded
@@ -93,11 +80,6 @@ object Bench {
     val ordered = selected.toSeq.sortBy(_._1)
     val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
-    // A query that throws records NO sample (its median prints -1 and a
-    // "failed" list names it): swallowing the error and keeping the
-    // time-to-exception would make a broken query look FAST and lower
-    // the recorded total.
-    val failed = scala.collection.mutable.Set.empty[String]
     for (_ <- 1 to rounds; (name, fn) <- ordered) {
       gcBetweenQueries()
       val t0 = System.nanoTime()

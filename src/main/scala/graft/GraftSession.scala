@@ -3,9 +3,9 @@ package graft
 import graft.plans.GraftExtensions
 import org.apache.spark.sql.SparkSession
 
-/** Canonical session factory for the graft engine: registers the native
+/** The one session factory of the graft engine: registers the native
   * expressions and applies the configuration every entry point (Verify,
-  * Bench, tests, user code) needs.
+  * Bench, the dev mains under `tools/`, tests, user code) runs under.
   */
 object GraftSession {
 
@@ -51,8 +51,12 @@ object GraftSession {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "1000000")
 
-  /** Local session sized for this container (tests / local runs). */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** Local session, one task slot and one shuffle partition per core.
+    * The core count defaults to `SPARK_GRAFT_CPUS` (a deployment
+    * setting: the 8- and 32-core ladders ran two values of it), else
+    * this host's processor count. */
+  def local(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())): SparkSession = {
     val s = builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)

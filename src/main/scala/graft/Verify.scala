@@ -1,28 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Queries in flight at once. */
+  private val Parallelism = 4
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is TIMESTAMP(NANOS) parquet, which Spark 4 rejects as a
-      // timestamp — read as Long (nanos) and do integer time arithmetic.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see GraftSession: re-evaluates generator inputs as pushed filters
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // see GraftSession: >128 groups/partition must not demote the
-      // native top-k/sketch aggregates to sort-based aggregation.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated key filter for fast local iteration.
@@ -34,8 +21,8 @@ object Verify {
     // gate SF is dominated by single-threaded Catalyst planning/codegen,
     // which parallelizes perfectly ACROSS queries (Spark's scheduler
     // interleaves the resulting jobs). Each query writes its own dir.
-    val par = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "4").toInt
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(Parallelism)
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val tasks = selected.toSeq.map { case (name, fn) =>
       pool.submit(new Runnable {
         override def run(): Unit =
@@ -44,6 +31,7 @@ object Verify {
           catch { case e: Throwable =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
             e.printStackTrace()
+            failed.add(name)
           }
       })
     }
@@ -65,5 +53,13 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // fail loudly: a key that threw has no output dir, and a zero exit
+    // would leave only the oracle compare to notice.
+    if (!failed.isEmpty) {
+      val keys = failed.asScala.toSeq.sorted
+      System.err.println(
+        s"[verify] ${keys.size} failed: ${keys.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

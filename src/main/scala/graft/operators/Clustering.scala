@@ -95,8 +95,6 @@ object Clustering {
       .select(col("id"), col("jcid").as("cluster_id"))
     var iter = 0
     var converged = false
-    val ccT0 = System.nanoTime()
-    var ccTPrev = ccT0
     while (iter < maxIter && !converged) {
       // Round 1 = [e,e,e]; rounds ≥2 = [e,j,e,j,e]. One lazy plan per
       // round, materialized by the convergence count — one Spark
@@ -106,25 +104,8 @@ object Clustering {
         else jump(step(jump(step(labels))))
       val next = step(body, withPrev = true)
         .withColumn("chg", col("cluster_id") < col("cid0"))
-      // dev-only plan receipt (never set by Bench/Verify): the round
-      // body's physical plan, which the checkpoint boundary hides from
-      // DumpPlans' final-plan dumps.
-      sys.env.get("SPARK_GRAFT_CC_DUMP_PLAN").foreach { prefix =>
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"${prefix}_round${iter + 1}.txt"),
-          next.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-      }
       val ckpt = next.localCheckpoint(false)
       val changed = ckpt.filter(col("chg")).count()
-      // dev-only diagnostics (never set by Bench/Verify): round-count and
-      // convergence trajectory, the input to round-structure decisions.
-      if (sys.env.contains("SPARK_GRAFT_CC_VERBOSE")) {
-        val now = System.nanoTime()
-        println(f"[cc] round=${iter + 1} changed=$changed " +
-          f"round_s=${(now - ccTPrev) / 1e9}%.3f total_s=${(now - ccT0) / 1e9}%.3f")
-        ccTPrev = now
-      }
       labels = ckpt.select(col("id"), col("cluster_id"))
       converged = changed == 0L
       iter += 1

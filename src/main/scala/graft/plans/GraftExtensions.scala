@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType}
   * lets SQL users call the fused kernels directly:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)...
+  * val spark = GraftSession.local() // installs these extensions
   * spark.sql("SELECT graft_l2sq(qa, qb) FROM pairs")
   * }}}
   *

@@ -19,17 +19,6 @@ import scala.jdk.CollectionConverters._
   */
 object Queries {
 
-  /** `localCheckpoint(false)` — EXCEPT under `SPARK_GRAFT_PLAN_NOCKPT`,
-    * which keeps the lineage intact so `tools/DumpPlans` can dump the
-    * walk loops' per-step subplans (the checkpoint boundary otherwise
-    * truncates the formatted plan to a checkpoint scan — the r13
-    * verdict's plan-receipt gap). Bench and Verify never set the flag:
-    * the executed shape is unchanged. Used only at the loop-internal
-    * checkpoint sites whose structure the receipts must show. */
-  private def lck(df: DataFrame): DataFrame =
-    if (sys.env.contains("SPARK_GRAFT_PLAN_NOCKPT")) df
-    else df.localCheckpoint(false)
-
   // ---------- vector / retrieval core ----------
 
   private def emb(s: SparkSession, d: String) = Tables.embeddings(s, d)
@@ -6307,7 +6296,7 @@ object Queries {
         .select(col("query_id"), col("m.nid").as("cur"))
       // r14: one mid-loop checkpoint caps the 2^3 plan fan-out
       // (coarseDescentLoop's rationale).
-      if (step == 2) cur = lck(cur)
+      if (step == 2) cur = cur.localCheckpoint(false)
     }
     cur.join(vec.select(col("id").as("cur"), col("qv").as("nv")), "cur")
       .join(q, "query_id")
@@ -6547,7 +6536,7 @@ object Queries {
         .select(col("query_id"), col("m.nid").as("cur"))
       // r14: one mid-loop checkpoint caps the 2^3 plan fan-out
       // (coarseDescentLoop's rationale).
-      if (step == 2) cur = lck(cur)
+      if (step == 2) cur = cur.localCheckpoint(false)
     }
     cur.join(vec.select(col("id").as("cur"), col("qv").as("nv")), "cur")
       .join(q, "query_id")
@@ -6611,7 +6600,7 @@ object Queries {
         .select(col("query_id"), col("m.nid").as("cur"))
       // r14: one mid-loop checkpoint caps the 2^3 plan fan-out
       // (coarseDescentLoop's rationale).
-      if (step == 2) cur = lck(cur)
+      if (step == 2) cur = cur.localCheckpoint(false)
     }
     cur.join(vec.select(col("id").as("cur"), col("qv").as("nv")), "cur")
       .join(q, "query_id")
@@ -6694,7 +6683,7 @@ object Queries {
       // shape stays.
       ranked = TopK.perGroupDistinct(scored, "query_id", "nid", "d2", ef,
         ascending = true)
-      if (step < 3) ranked = lck(ranked)
+      if (step < 3) ranked = ranked.localCheckpoint(false)
       frontier = ranked.select(col("query_id"), col("nid"))
     }
     ranked
@@ -6797,7 +6786,7 @@ object Queries {
       // materialization after step 2 caps the fan-out at 2 per
       // boundary for one extra action (guide §3.3: very wide plans
       // make planning itself the bottleneck).
-      if (step == 2) cur = lck(cur)
+      if (step == 2) cur = cur.localCheckpoint(false)
     }
     cur
   }
@@ -7068,7 +7057,7 @@ object Queries {
       // applies here too — measured slower, reverted).
       ranked = TopK.perGroupDistinct(scored, "query_id", "nid", "d2", ef,
         ascending = true)
-      if (step < 3) ranked = lck(ranked)
+      if (step < 3) ranked = ranked.localCheckpoint(false)
       frontier = ranked.select(col("query_id"), col("nid"))
     }
     ranked
@@ -7132,7 +7121,7 @@ object Queries {
         .select(col("query_id"), col("m.nid").as("cur"))
       // r14: one mid-loop checkpoint caps the 2^3 plan fan-out
       // (coarseDescentLoop's rationale).
-      if (step == 2) cur = lck(cur)
+      if (step == 2) cur = cur.localCheckpoint(false)
     }
     // layer 0: the SHARED tombstone beam, seeded by the layer-1 winner
     val frontier0 = cur.select(col("query_id"), col("cur").as("nid"))
@@ -7264,11 +7253,11 @@ object Queries {
     // (v79's truncation rationale). The per-step deduped COUNT is part
     // of the output (dist_evals), so the distinct stays — semantics,
     // not overhead.
-    def expand(frontier: DataFrame): DataFrame = lck(frontier
+    def expand(frontier: DataFrame): DataFrame = frontier
       .unionAll(broadcast(frontier)
         .join(edges, col("nid") === col("src_id"))
         .select(col("query_id"), col("dst_id").as("nid")))
-      .distinct())
+      .distinct().localCheckpoint(false)
     def score(cand: DataFrame): DataFrame = cand
       .join(vec.select(col("id").as("nid"), col("qv").as("nv")), "nid")
       .join(q, "query_id")
@@ -7289,14 +7278,14 @@ object Queries {
     val scored1 = score(cand1)
     val n1 = cand1.agg(count(lit(1)).as("n"))
     Seq(2, 4, 8).map { ef =>
-      var ranked = lck(TopK.perGroup(scored1, "query_id", "nid", "d2", ef,
-        ascending = true))
+      var ranked = TopK.perGroup(scored1, "query_id", "nid", "d2", ef,
+        ascending = true).localCheckpoint(false)
       var evals = n1
       for (step <- 2 to 3) {
         val cand = expand(ranked.select(col("query_id"), col("nid")))
         ranked = TopK.perGroup(score(cand), "query_id", "nid", "d2", ef,
           ascending = true)
-        if (step < 3) ranked = lck(ranked)
+        if (step < 3) ranked = ranked.localCheckpoint(false)
         evals = evals.unionAll(cand.agg(count(lit(1)).as("n")))
       }
       val hit = ranked.join(broadcast(exact),
@@ -7341,10 +7330,11 @@ object Queries {
       // r13 optimization: per-step candidate distinct dropped — the
       // visited pool is distinct'd once at the end anyway, and the
       // frontier cut dedups inside the top-k buffer (perGroupDistinct).
-      val cand = lck(frontier
+      val cand = frontier
         .unionAll(broadcast(frontier)
           .join(edges, col("nid") === col("src_id"))
-          .select(col("query_id"), col("dst_id").as("nid"))))
+          .select(col("query_id"), col("dst_id").as("nid")))
+        .localCheckpoint(false)
       visited = visited.unionAll(cand)
       val scored = cand
         .join(vec.select(col("id").as("nid"), col("qv").as("nv")), "nid")
@@ -7358,7 +7348,7 @@ object Queries {
       // see plainBeamLoop's note.)
       frontier = TopK.perGroupDistinct(scored, "query_id", "nid", "d2", ef,
         ascending = true).select(col("query_id"), col("nid"))
-      if (step < 3) frontier = lck(frontier)
+      if (step < 3) frontier = frontier.localCheckpoint(false)
     }
     val allowed = emb(s, d).filter(col("label") % 3 === 0)
       .select(col("vec_id").cast("long").as("nid"))

@@ -1,8 +1,8 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.operators.Dedup
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling probe for the banded SimHash near-dup join (`d6`'s plan) —
@@ -26,11 +26,7 @@ import org.apache.spark.sql.functions._
 object DedupScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))

@@ -1,7 +1,8 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Builds the DATA-BOUND bench point: a replicated blow-up of the
@@ -39,13 +40,7 @@ object MakeBigSf {
     val dFac = sys.env.getOrElse("SPARK_GRAFT_BIG_DOCS", "20").toInt
     val eFac = sys.env.getOrElse("SPARK_GRAFT_BIG_EMB", "50").toInt
     val vFac = sys.env.getOrElse("SPARK_GRAFT_BIG_EVENTS", "20").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     def reps(n: Int) =

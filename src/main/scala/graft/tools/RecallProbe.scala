@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.queries.Queries
-import org.apache.spark.sql.SparkSession
 
 /** Recall@k of every approximate ANN path against the exact scan, on
   * the same seeded setups the gated queries use. Prints one JSON line
@@ -9,11 +9,7 @@ import org.apache.spark.sql.SparkSession
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     def hits(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =

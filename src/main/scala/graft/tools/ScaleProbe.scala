@@ -1,9 +1,10 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.functions.VectorFunctions._
 import graft.operators.{IvfIndex, IvfPq, KnnJoin, PqIndex}
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling evidence for the ANN paths: replicate the sf0.1 gallery
@@ -14,11 +15,7 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val base = Tables.embeddings(spark, sfDir)
       .select(col("vec_id").cast("long").as("id"),

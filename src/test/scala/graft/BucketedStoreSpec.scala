@@ -5,12 +5,14 @@ import graft.sources.BucketedStore
 class BucketedStoreSpec extends SparkSpec {
   import spark.implicits._
 
+  private val sortMergeOnly = Seq(
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.enabled" -> "false")
+
   test("bucketed tables co-locate joins: no shuffle exchange in the plan") {
     // force a sort-merge join path so the exchange (or its absence) is
-    // observable; restore session confs afterwards
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    // observable
+    withConf(sortMergeOnly: _*) {
       // a previous JVM's warehouse dir survives while the in-memory
       // catalog does not — clear the orphan locations first
       for (t <- Seq("bkt_a", "bkt_b")) {
@@ -33,24 +35,16 @@ class BucketedStoreSpec extends SparkSpec {
       assert(plan.contains("SortMergeJoin"))
       assert(!plan.contains("Exchange"),
         s"bucketed join should not shuffle:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 
   test("unbucketed baseline of the same join DOES shuffle") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf(sortMergeOnly: _*) {
       val a = (0L until 100L).map(i => (i, i * 2)).toDF("id", "x")
       val b = (0L until 100L).map(i => (i, i * 3)).toDF("id", "y")
       val j = a.join(b, "id")
       assert(j.count() === 100L)
       assert(j.queryExecution.executedPlan.toString.contains("Exchange"))
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 }

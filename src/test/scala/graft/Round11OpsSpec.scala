@@ -50,9 +50,8 @@ class Round11OpsSpec extends SparkSpec {
     * sort-merge path (and any exchange) is visible. */
   private def assertNoStoreSideExchange(
       mkFrame: => org.apache.spark.sql.DataFrame): Unit = {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") {
       val plan = mkFrame.queryExecution.executedPlan.toString
       val lines = plan.linesIterator.toVector
       val smj = lines.indexWhere(_.contains("SortMergeJoin"))
@@ -62,9 +61,6 @@ class Round11OpsSpec extends SparkSpec {
         .filterNot(l => l.takeWhile(c => !c.isLetterOrDigit).contains(':'))
       assert(storeSide.nonEmpty && !storeSide.exists(_.contains("Exchange")),
         s"store-side exchange leaked into the anti-join plan:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 

@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.VectorFunctions.quantize
 import graft.operators.KnnJoin
-import graft.plans.GraftExtensions
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -14,7 +13,6 @@ class SqlSurfaceSpec extends SparkSpec {
   import spark.implicits._
 
   test("pure-SQL KNN via graft_topk + graft_l2sq matches KnnJoin") {
-    GraftExtensions.register(spark)
     Tables.embeddings(spark, sf)
       .select($"vec_id".cast("long").as("id"),
         quantize($"embedding").as("qv"))
@@ -39,7 +37,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("graft_vecsum from SQL matches the Column-API classSums sums") {
-    GraftExtensions.register(spark)
     Seq((0L, Seq(1L, 2L)), (0L, Seq(10L, 20L)), (1L, Seq(5L, 5L)))
       .toDF("lab", "qv").createOrReplaceTempView("vs_in")
     val got = spark.sql(
@@ -49,7 +46,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("graft_minhash from SQL matches the Column API kernel") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT graft_minhash(array('a b c', 'b c d'), 4) AS sig").collect()
       .head.getSeq[String](0)
@@ -63,7 +59,6 @@ class SqlSurfaceSpec extends SparkSpec {
   test("graft_topk from SQL keeps the bounded hash-aggregate plan " +
     "shape — partial (map-side) + final ObjectHashAggregate, never a " +
     "sort-based demotion") {
-    GraftExtensions.register(spark)
     Tables.embeddings(spark, sf)
       .select($"vec_id".cast("long").as("id"),
         quantize($"embedding").as("qv"))
@@ -90,7 +85,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("wrong SQL argument count yields a clear arity error") {
-    GraftExtensions.register(spark)
     val err = intercept[Exception] {
       spark.sql("SELECT graft_topk(id, CAST(id AS DOUBLE), 5) FROM range(3)")
         .collect()
@@ -99,7 +93,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("graft_topk rejects non-literal k with a clear error") {
-    GraftExtensions.register(spark)
     val err = intercept[Exception] {
       spark.sql("SELECT graft_topk(id, CAST(id AS DOUBLE), CAST(id AS INT), true) " +
         "FROM range(3)").collect()
@@ -108,7 +101,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("graft_simhash64 from SQL matches the Column API kernel") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT graft_simhash64(array('alpha', 'beta', 'gamma')) AS f")
       .collect().head.get(0)
@@ -119,7 +111,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("graft_gram from SQL matches the hand-computed upper triangle") {
-    GraftExtensions.register(spark)
     Seq(Seq(1L, 2L), Seq(3L, 4L)).map(Tuple1(_)).toDF("v")
       .createOrReplaceTempView("gram_in")
     val got = spark.sql("SELECT graft_gram(v) AS g FROM gram_in")
@@ -130,7 +121,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("graft_pq_grid_sums from SQL carries (n, slice-sum) per cell") {
-    GraftExtensions.register(spark)
     // two vectors, m=2 subspaces of sub=2, ksub=2; codes route them
     Seq((Seq(1L, 2L, 3L, 4L), Seq(0L, 1L)),
         (Seq(5L, 6L, 7L, 8L), Seq(0L, 0L)))

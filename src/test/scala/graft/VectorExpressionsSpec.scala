@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.VectorFunctions._
-import graft.plans.GraftExtensions
 import graft.sources.Tables
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -30,7 +29,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("registered functions work from SQL") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT graft_l2sq(array(0L, 3L), array(4L, 0L)) AS d, " +
       "graft_dot(array(2L, 3L), array(5L, 7L)) AS p")

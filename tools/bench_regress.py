@@ -73,9 +73,10 @@ def solo_probe(key, sf_dir, cp=None):
     if cp is None:
         cp = open("/tmp/graft_cp.txt").read().strip()
     out = tempfile.NamedTemporaryFile(suffix=".json", delete=False).name
+    # SPARK_GRAFT_CPUS is inherited: the probe must run the partitioning
+    # of the sweep it checks (Bench defaults it to the core count)
     env = dict(os.environ,
                SPARK_GRAFT_SF_DIR=sf_dir,
-               SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "32"),
                SPARK_GRAFT_BENCH_ROUNDS="1",
                SPARK_GRAFT_ONLY=key,
                SPARK_GRAFT_BENCH_OUT=out)
