@@ -128,7 +128,7 @@ object IvfIndex {
   def search(index: DataFrame, centroids: DataFrame, queries: DataFrame,
              idCol: String, vecCol: String, cidCol: String, qidCol: String,
              k: Int, nprobe: Int, scale: Int = DefaultScale): DataFrame = {
-    // stage 1: query → nprobe nearest centroids (tiny crossjoin).
+    // stage 1: query → nprobe nearest centroids (exact KnnJoin scan).
     val probes = KnnJoin.knnL2(
       centroids.select(col(cidCol), col(vecCol)), queries,
       cidCol, vecCol, qidCol, k = nprobe, scale = scale)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * partitioning and PQ codes:
   *
   *  - coarse quantizer routes each query to `nprobe` centroids
-  *    (tiny crossjoin, centroids broadcast-sized);
+  *    (the exact `KnnJoin` scan over the centroids);
   *  - the codes table is pruned to probed partitions by a broadcast
   *    join on centroid_id (on the persisted partitioned layout this is
   *    partition pruning — reads nprobe/nlist of the data);

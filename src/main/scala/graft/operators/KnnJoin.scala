@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
+import graft.plans.{KnnMetric, KnnScan}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -8,15 +9,13 @@ import org.apache.spark.sql.functions._
   * reference's `IndexFlatL2.search` (faiss_utils.py:19-22), generalized
   * from one query vector to a query *set*.
   *
-  * Plan shape (scale rationale):
-  *  - the query side is small → `broadcast` crossjoin, no shuffle of the
-  *    gallery;
-  *  - distance math is codegen'd column expressions on fixed-point Longs
-  *    (see [[graft.functions.VectorFunctions.quantize]]);
-  *  - top-k runs through [[TopKAggregator]] with map-side partials, so
-  *    shuffle volume is O(queries · k), independent of gallery size.
-  * At 100 TB the gallery streams straight from parquet through one
-  * map-only stage plus a tiny aggregate — no O(N·Q) materialization.
+  * Plan shape: one [[graft.plans.KnnScanExec]] over the gallery with the
+  * quantized queries broadcast. Each gallery task decodes the query
+  * matrix once, scores its partition block by block with exact integer
+  * arithmetic and keeps a bounded top-k per query, so only Q·k rows
+  * leave a partition — no (query, gallery) pair becomes a row.
+  * [[TopK.perGroup]] then merges the partitions' rows per query (rank
+  * order, lowest-id ties, NaN last), a shuffle of O(Q·k·partitions).
   */
 object KnnJoin {
 
@@ -29,79 +28,57 @@ object KnnJoin {
     */
   def knnL2(gallery: DataFrame, queries: DataFrame, idCol: String,
             vecCol: String, qidCol: String, k: Int,
-            scale: Int = DefaultScale): DataFrame = {
-    val g = gallery.select(col(idCol).cast("long").as("neighbor_id"),
-      quantize(col(vecCol), scale).as("gv"))
-    val q = queries.select(col(qidCol).cast("long").as("query_id"),
-      quantize(col(vecCol), scale).as("qv"))
-    val scored = g.join(broadcast(q))
-      .select(col("query_id"), col("neighbor_id"),
-        intL2Sq(col("gv"), col("qv")).cast("double").as("d2"))
-    TopK.perGroup(scored, "query_id", "neighbor_id", "d2", k, ascending = true)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        distFromIntSq(col("d2"), scale).as("dist"))
-  }
+            scale: Int = DefaultScale): DataFrame =
+    withDist(scan(KnnMetric.L2, gallery, queries, idCol, vecCol, qidCol, k,
+      quantize(_, scale)), scale)
 
   /** [[knnL2]] over PRE-QUANTIZED integer vectors (array<long>): skips
-    * the per-row toDoubleArray→round→cast quantize pass, so the hot
-    * gallery scan is a straight integer-L2 kernel over the stored
-    * arrays — the right entry point for code/SQ8 spaces where vectors
-    * are already integers (re-quantizing with scale=1 is numerically
-    * exact but wastes an array transform per row on both join sides).
+    * the quantize pass, the entry point for code/SQ8 spaces where
+    * vectors are already integers.
     *
     * @param scale the fixed-point scale the integers ALREADY carry
     *              (dist is reported on the original scale) */
   def knnL2Pre(gallery: DataFrame, queries: DataFrame, idCol: String,
                vecCol: String, qidCol: String, k: Int,
-               scale: Int = 1): DataFrame = {
-    val g = gallery.select(col(idCol).cast("long").as("neighbor_id"),
-      col(vecCol).as("gv"))
-    val q = queries.select(col(qidCol).cast("long").as("query_id"),
-      col(vecCol).as("qv"))
-    val scored = g.join(broadcast(q))
-      .select(col("query_id"), col("neighbor_id"),
-        intL2Sq(col("gv"), col("qv")).cast("double").as("d2"))
-    TopK.perGroup(scored, "query_id", "neighbor_id", "d2", k, ascending = true)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        distFromIntSq(col("d2"), scale).as("dist"))
-  }
+               scale: Int = 1): DataFrame =
+    withDist(scan(KnnMetric.L2, gallery, queries, idCol, vecCol, qidCol, k,
+      identity), scale)
 
   /** Exact top-k by INNER PRODUCT (MIPS — the faiss IndexFlatIP
-    * metric): largest dot product wins, ties to lowest id. Same
-    * broadcast(queries) × streaming-gallery harness as [[knnL2]]; the
-    * integer dot is exact and the single division back to the original
-    * scale is one IEEE op. */
+    * metric): largest dot product wins, ties to lowest id. The integer
+    * dot is exact and the single division back to the original scale is
+    * one IEEE op. */
   def knnDot(gallery: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, qidCol: String, k: Int,
-             scale: Int = DefaultScale): DataFrame = {
-    val g = gallery.select(col(idCol).cast("long").as("neighbor_id"),
-      quantize(col(vecCol), scale).as("gv"))
-    val q = queries.select(col(qidCol).cast("long").as("query_id"),
-      quantize(col(vecCol), scale).as("qv"))
-    val scored = g.join(broadcast(q))
-      .select(col("query_id"), col("neighbor_id"),
-        intDot(col("gv"), col("qv")).cast("double").as("dp"))
-    TopK.perGroup(scored, "query_id", "neighbor_id", "dp", k,
-      ascending = false)
+             scale: Int = DefaultScale): DataFrame =
+    scan(KnnMetric.Dot, gallery, queries, idCol, vecCol, qidCol, k,
+        quantize(_, scale))
       .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dp") / lit(scale.toDouble * scale)).as("dot"))
-  }
+        (col("score") / lit(scale.toDouble * scale)).as("dot"))
 
-  /** Exact top-k by cosine similarity on quantized vectors. */
+  /** Exact top-k by cosine similarity on quantized vectors; a zero-norm
+    * vector scores NaN and ranks last. */
   def knnCosine(gallery: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, qidCol: String, k: Int,
-                scale: Int = DefaultScale): DataFrame = {
+                scale: Int = DefaultScale): DataFrame =
+    scan(KnnMetric.Cosine, gallery, queries, idCol, vecCol, qidCol, k,
+        quantize(_, scale))
+      .withColumnRenamed("score", "cos_sim")
+
+  /** (query_id, rnk, neighbor_id, score): the blocked scan, then the
+    * per-query merge of its partitions' rows. */
+  private def scan(metric: KnnMetric, gallery: DataFrame, queries: DataFrame,
+                   idCol: String, vecCol: String, qidCol: String, k: Int,
+                   vec: Column => Column): DataFrame = {
     val g = gallery.select(col(idCol).cast("long").as("neighbor_id"),
-      quantize(col(vecCol), scale).as("gv"))
-      .withColumn("gn", intNormSq(col("gv")))
+      vec(col(vecCol)).as("gv"))
     val q = queries.select(col(qidCol).cast("long").as("query_id"),
-      quantize(col(vecCol), scale).as("qv"))
-      .withColumn("qn", intNormSq(col("qv")))
-    val scored = g.join(broadcast(q))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineFromInts(intDot(col("gv"), col("qv")), col("gn"), col("qn"))
-          .as("cos_sim"))
-    TopK.perGroup(scored, "query_id", "neighbor_id", "cos_sim", k,
-      ascending = false)
+      vec(col(vecCol)).as("qv"))
+    TopK.perGroup(KnnScan(metric, k, g, q), "query_id", "neighbor_id",
+      "score", k, metric.ascending)
   }
+
+  private def withDist(ranked: DataFrame, scale: Int): DataFrame =
+    ranked.select(col("query_id"), col("rnk"), col("neighbor_id"),
+      distFromIntSq(col("score"), scale).as("dist"))
 }

@@ -1,48 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** One scored candidate flowing into the top-k aggregate. */
-case class Scored(id: Long, score: Double)
-
-/** Bounded top-k buffer (kept sorted, length ≤ k). */
-case class TopKBuf(items: Seq[Scored])
-
-/** Partial-merge bounded top-k by (score, id) — the scale-critical piece
-  * of batch KNN. Because this is an `Aggregator` (TypedImperativeAggregate
-  * under the hood), Spark runs it with map-side partial aggregation: each
-  * task keeps only its local k best, so the shuffle for a Q-query × N-row
-  * gallery is O(Q·k·partitions), never O(Q·N). A window/row_number over
-  * the cross product would shuffle every scored pair — wrong at 100 TB.
-  *
-  * `ascending=true` → smallest scores win (L2 distance);
-  * `ascending=false` → largest win (cosine similarity).
-  * Ties always break by lowest id (deterministic, oracle-matchable).
-  */
-class TopKAggregator(k: Int, ascending: Boolean)
-    extends Aggregator[Scored, TopKBuf, TopKBuf] {
-
-  private def key(s: Scored): (Double, Long) =
-    (if (ascending) s.score else -s.score, s.id)
-  private implicit val ord: Ordering[(Double, Long)] =
-    Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-
-  override def zero: TopKBuf = TopKBuf(Vector.empty)
-
-  override def reduce(b: TopKBuf, a: Scored): TopKBuf =
-    if (b.items.size >= k && ord.gteq(key(a), key(b.items.last))) b
-    else TopKBuf((b.items :+ a).sortBy(key).take(k))
-
-  override def merge(b1: TopKBuf, b2: TopKBuf): TopKBuf =
-    TopKBuf((b1.items ++ b2.items).sortBy(key).take(k))
-
-  override def finish(r: TopKBuf): TopKBuf = r
-  override def bufferEncoder: Encoder[TopKBuf] = Encoders.product[TopKBuf]
-  override def outputEncoder: Encoder[TopKBuf] = Encoders.product[TopKBuf]
-}
-
+/** Bounded per-group top-k by (score, id): ties break to the lowest id,
+  * NaN scores rank last. Map-side partial aggregation keeps each task's
+  * local k best, so the shuffle is O(groups · k · partitions). */
 object TopK {
   /** Per-group top-k over a pre-scored DataFrame.
     *
@@ -87,21 +50,6 @@ object TopK {
       .groupBy(col(groupCol))
       .agg(agg.as("topk"))
       .select(col(groupCol), posexplode(col("topk")).as(Seq("pos", "hit")))
-      .select(
-        col(groupCol),
-        (col("pos") + 1).cast("long").as("rnk"),
-        col("hit.id").as(idCol),
-        col("hit.score").as(scoreCol))
-  }
-
-  /** Previous udaf-wrapped form, kept for A/B reference. */
-  def perGroupUdaf(scored: DataFrame, groupCol: String, idCol: String,
-                   scoreCol: String, k: Int, ascending: Boolean): DataFrame = {
-    val agg = udaf(new TopKAggregator(k, ascending), Encoders.product[Scored])
-    scored
-      .groupBy(col(groupCol))
-      .agg(agg(col(idCol), col(scoreCol)).as("topk"))
-      .select(col(groupCol), posexplode(col("topk.items")).as(Seq("pos", "hit")))
       .select(
         col(groupCol),
         (col("pos") + 1).cast("long").as("rnk"),

@@ -33,11 +33,16 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType}
   *    subspace-slice sum (m/ksub/sub literal ints; the v78 Lloyd
   *    carrier)
   *
+  * and one planner strategy, [[KnnScanStrategy]], which plans the
+  * exact KNN scan ([[KnnScan]]) of `graft.operators.KnnJoin`.
+  *
   * For an already-running session use `GraftExtensions.register(spark)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(e.injectFunction)
+    e.injectPlannerStrategy(_ => KnnScanStrategy)
+  }
 }
 
 object GraftExtensions {
@@ -124,9 +129,12 @@ object GraftExtensions {
           litInt(exprs(4), "graft_pq_grid_sums", "sub"))
       }))
 
-  /** Register the graft functions into a live session's registry. */
-  def register(spark: SparkSession): Unit =
+  /** Register the graft functions into a live session's registry and
+    * install the planner strategy (both idempotent). */
+  def register(spark: SparkSession): Unit = {
     functions.foreach { case (id, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     }
+    KnnScanStrategy.install(spark)
+  }
 }

@@ -17,8 +17,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *
   * Semantics are IDENTICAL to the composed form (exact Long arithmetic,
   * see graft.functions.VectorFunctions), so oracle results are unchanged.
-  * Both vectors must be non-null array<long> of equal length with no
-  * null elements (guaranteed by `VectorFunctions.quantize`).
+  * Both vectors must be non-null array<long> with no null elements
+  * (guaranteed by `VectorFunctions.quantize`). Arrays of different
+  * lengths throw an `IllegalArgumentException`: `UnsafeArrayData`'s
+  * bounds check is a JVM assert, off in production, so reading on past
+  * the shorter array would return a number from adjacent memory.
   */
 abstract class IntVectorKernel extends BinaryExpression {
   override def dataType: DataType = LongType
@@ -34,6 +37,25 @@ abstract class IntVectorKernel extends BinaryExpression {
     } else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
       .TypeCheckFailure(s"left side must be array<bigint>, got ${left.dataType}")
   }
+
+  /** Element count of `a`, after checking `b` has as many. */
+  protected def length(a: ArrayData, b: ArrayData): Int = {
+    val n = a.numElements()
+    if (b.numElements() != n) throw new IllegalArgumentException(
+      s"$prettyName: array lengths differ: left has $n elements, right has " +
+        b.numElements())
+    n
+  }
+
+  /** Generated-code twin of [[length]]: declares `n` as `a`'s length. */
+  protected def genLength(a: String, b: String, n: String): String =
+    s"""
+       |final int $n = $a.numElements();
+       |if ($b.numElements() != $n) {
+       |  throw new IllegalArgumentException("$prettyName: array lengths " +
+       |    "differ: left has " + $n + " elements, right has " + $b.numElements());
+       |}
+     """.stripMargin
 }
 
 /** Exact integer squared L2 distance: sum_i (a_i - b_i)^2. */
@@ -44,7 +66,7 @@ case class IntVectorL2Sq(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
+    val n = length(x, y)
     var acc = 0L
     var i = 0
     while (i < n) {
@@ -62,7 +84,7 @@ case class IntVectorL2Sq(left: Expression, right: Expression)
       val acc = ctx.freshName("acc")
       val d = ctx.freshName("d")
       s"""
-         |final int $n = $a.numElements();
+         |${genLength(a, b, n)}
          |long $acc = 0L;
          |for (int $i = 0; $i < $n; $i++) {
          |  final long $d = $a.getLong($i) - $b.getLong($i);
@@ -85,7 +107,7 @@ case class IntVectorDot(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
+    val n = length(x, y)
     var acc = 0L
     var i = 0
     while (i < n) {
@@ -101,7 +123,7 @@ case class IntVectorDot(left: Expression, right: Expression)
       val n = ctx.freshName("n")
       val acc = ctx.freshName("acc")
       s"""
-         |final int $n = $a.numElements();
+         |${genLength(a, b, n)}
          |long $acc = 0L;
          |for (int $i = 0; $i < $n; $i++) {
          |  $acc += $a.getLong($i) * $b.getLong($i);

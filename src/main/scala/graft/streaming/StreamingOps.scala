@@ -58,10 +58,10 @@ object StreamingOps {
     * static gallery and keep each query's top-k — the continuous twin
     * of batch retrieval (`KnnJoin.knnL2`), e.g. scoring fresh documents
     * against a reference embedding set at ingest. The static gallery
-    * broadcasts once; the codegen'd integer distance kernel and the
-    * bounded native top-k aggregate ([[graft.plans.TopKAggregate]]) are
-    * the SAME operators the batch path runs, so streaming results match
-    * batch bit-for-bit. State per query is the k-element heap (update/
+    * broadcasts once; scores are the same exact integer squared L2 the
+    * batch scan computes, ranked by the same bounded top-k
+    * ([[graft.plans.TopKAggregate]]), so streaming results match batch
+    * bit-for-bit. State per query is the k-element heap (update/
     * complete output modes). */
   def knnStream(queries: DataFrame, gallery: DataFrame, qidCol: String,
                 vecCol: String, gidCol: String, k: Int,

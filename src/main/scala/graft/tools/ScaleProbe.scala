@@ -53,19 +53,6 @@ object ScaleProbe {
         KnnJoin.knnL2(gallery, queries, "id", "qemb", "id", k = 5,
           scale = 1).count())
       emit("exact_knn", factor, n, tKnn)
-      // distance stage alone (no top-k aggregate): locates the bottleneck
-      if (sys.env.contains("SPARK_GRAFT_SCALE_STAGES")) {
-        val g = gallery.select(col("id").cast("long").as("neighbor_id"),
-          quantize(col("qemb"), 1).as("gv"))
-        val q = queries.select(col("id").cast("long").as("query_id"),
-          quantize(col("qemb"), 1).as("qv"))
-        val scored = g.join(broadcast(q))
-          .select(col("query_id"), col("neighbor_id"),
-            intL2Sq(col("gv"), col("qv")).cast("double").as("d2"))
-        scored.count()
-        val (_, tScored) = time(scored.count())
-        emit("exact_knn_scored_only", factor, n, tScored)
-      }
       // index build (encode + coarse assign), then probe search
       val (codes, tBuild) = time {
         val c = PqIndex.encode(gallery, "id", "qemb", dim, m, book)

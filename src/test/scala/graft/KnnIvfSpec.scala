@@ -33,6 +33,24 @@ class KnnIvfSpec extends SparkSpec {
     assert(math.abs(r(0)._4 - 1.0) < 1e-6)
   }
 
+  test("knnL2 plans one blocked scan over a broadcast query side, " +
+    "no nested-loop join") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    val df = KnnJoin.knnL2(gallery, gallery, "vec_id", "embedding", "vec_id",
+      k = 2)
+    df.collect()
+    val names = nodes(df.queryExecution.executedPlan).map(_.nodeName)
+    assert(names.count(_ == "KnnScan") === 1, names)
+    assert(names.contains("BroadcastExchange"), names)
+    assert(!names.exists(_.contains("NestedLoopJoin")), names)
+  }
+
   test("IVF assignment is the brute-force argmin") {
     val cents = Seq((0L, Array(0.0f, 0.0f)), (1L, Array(5.0f, 5.0f)))
       .toDF("cid", "embedding")

@@ -1,6 +1,10 @@
 package graft
 
-import graft.operators.{Dedup, TemporalJoins, TopK}
+import graft.functions.VectorFunctions.{cosineFromInts, distFromIntSq,
+  intDot, intL2Sq, intNormSq, quantize}
+import graft.operators.{Dedup, KnnJoin, TemporalJoins, TopK}
+import graft.plans.KnnMetric
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Seeded-randomized equivalence checks: the operators with novel
@@ -322,5 +326,124 @@ class RandomizedEquivalenceSpec extends SparkSpec {
       if (n == 0) None else Some(i -> n.toLong)
     }.toMap
     assert(got === expected)
+  }
+
+  // ---- the blocked exact scan (KnnJoin) against its crossjoin form ----
+
+  /** Reference: KnnJoin as a crossjoin, one scored row per (query,
+    * gallery) pair into TopK.perGroup. A zero-norm
+    * cosine is NaN here as in the scan (Spark's ANSI division would
+    * throw on it). Same output columns as the KnnJoin wrapper. */
+  private def crossjoinKnn(metric: KnnMetric, gallery: DataFrame,
+                           queries: DataFrame, k: Int): DataFrame = {
+    val g = gallery.select(col("id").cast("long").as("neighbor_id"),
+      quantize(col("v"), 1).as("gv"))
+    val q = queries.select(col("id").cast("long").as("query_id"),
+      quantize(col("v"), 1).as("qv"))
+    val (gv, qv) = (col("gv"), col("qv"))
+    val score: Column = metric match {
+      case KnnMetric.L2 => intL2Sq(gv, qv).cast("double")
+      case KnnMetric.Dot => intDot(gv, qv).cast("double")
+      case KnnMetric.Cosine =>
+        when(intNormSq(gv) * intNormSq(qv) === 0L, lit(Double.NaN))
+          .otherwise(cosineFromInts(intDot(gv, qv), intNormSq(gv),
+            intNormSq(qv)))
+    }
+    val ranked = TopK.perGroup(g.join(broadcast(q)).select(col("query_id"),
+        col("neighbor_id"), score.as("score")),
+      "query_id", "neighbor_id", "score", k, metric.ascending)
+    ranked.select(col("query_id"), col("rnk"), col("neighbor_id"),
+      (metric match {
+        case KnnMetric.L2 => distFromIntSq(col("score"), 1)
+        case KnnMetric.Dot => col("score") / lit(1.0)
+        case KnnMetric.Cosine => col("score")
+      }).as("score"))
+  }
+
+  private def knn(metric: KnnMetric, gallery: DataFrame, queries: DataFrame,
+                  k: Int): DataFrame = {
+    val f = metric match {
+      case KnnMetric.L2 => KnnJoin.knnL2 _
+      case KnnMetric.Dot => KnnJoin.knnDot _
+      case KnnMetric.Cosine => KnnJoin.knnCosine _
+    }
+    f(gallery, queries, "id", "v", "id", k, 1)
+  }
+
+  /** Rows in a canonical order; scores by bit pattern, so NaN == NaN. */
+  private def rowsOf(df: DataFrame): Seq[(Long, Long, Long, Long)] =
+    df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+      java.lang.Double.doubleToLongBits(r.getDouble(3)))).sorted
+
+  private val metrics = Seq(KnnMetric.L2, KnnMetric.Dot, KnnMetric.Cosine)
+
+  /** Tie-heavy integer vectors: duplicates, one null vector, one null
+    * id, one zero vector. */
+  private def knnGallery(seed: Int, n: Int, dim: Int): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    val base = (0 until n).map { i =>
+      (Option(i.toLong * 3 + 1),
+        Option(Seq.fill(dim)((rnd.nextInt(7) - 3).toDouble)))
+    }
+    val dups = base.take(n / 5).map { case (id, v) => (id.map(_ + 1), v) }
+    val odd = Seq((Option(-5L), None), (None, Option(Seq.fill(dim)(1.0))),
+      (Option(-7L), Option(Seq.fill(dim)(0.0))))
+    rnd.shuffle(base ++ dups ++ odd).toDF("id", "v")
+  }
+
+  private def knnQueries(seed: Int, n: Int, dim: Int): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    ((0 until n).map(i => (1000L + i,
+        Option(Seq.fill(dim)((rnd.nextInt(7) - 3).toDouble)))) ++
+      Seq((2000L, Option(Seq.fill(dim)(0.0))), (2001L, None)))
+      .toDF("id", "v")
+  }
+
+  test("blocked KNN scan == crossjoin + TopK.perGroup for L2, dot and " +
+    "cosine: duplicates, null and zero-norm vectors, k > N, many blocks") {
+    for ((n, parts) <- Seq((40, 4), (300, 1), (300, 3)); dim <- Seq(1, 5)) {
+      val g = knnGallery(n + dim, n, dim).repartition(parts)
+      val q = knnQueries(dim, 6, dim)
+      for (metric <- metrics; k <- Seq(1, 3, 1000)) {
+        val got = rowsOf(knn(metric, g, q, k))
+        assert(got === rowsOf(crossjoinKnn(metric, g, q, k)),
+          s"n=$n parts=$parts dim=$dim $metric k=$k")
+        if (k == 1000) // every non-null gallery row, for each scored query
+          assert(got.size === 7 * (n + n / 5 + 1), s"$metric n=$n")
+      }
+    }
+  }
+
+  test("blocked KNN scan: an empty query set and empty gallery " +
+    "partitions give the crossjoin's rows") {
+    val g = knnGallery(3, 12, 4)
+    val q = knnQueries(4, 3, 4)
+    for (metric <- metrics) {
+      assert(knn(metric, g, q.filter(lit(false)), 3).count() === 0)
+      // 32 partitions over 15 rows: most partitions are empty
+      val sparse = g.repartition(32)
+      assert(rowsOf(knn(metric, sparse, q, 4)) ===
+        rowsOf(crossjoinKnn(metric, sparse, q, 4)), s"$metric")
+      // a gallery with no rows at all
+      assert(knn(metric, g.filter(lit(false)), q, 4).count() === 0)
+    }
+  }
+
+  test("blocked KNN scan rows are invariant under gallery row order, " +
+    "repartition(1/4/32) and AQE off") {
+    val g = knnGallery(5, 80, 6)
+    val q = knnQueries(6, 5, 6)
+    val shuffled = g.orderBy(rand(17))
+    for (metric <- metrics) {
+      val expected = rowsOf(crossjoinKnn(metric, g, q, 5))
+      for (parts <- Seq(1, 4, 32)) {
+        assert(rowsOf(knn(metric, shuffled.repartition(parts), q, 5)) ===
+          expected, s"$metric parts=$parts")
+        withConf("spark.sql.adaptive.enabled" -> "false") {
+          assert(rowsOf(knn(metric, g.repartition(parts), q, 5)) ===
+            expected, s"$metric parts=$parts AQE off")
+        }
+      }
+    }
   }
 }

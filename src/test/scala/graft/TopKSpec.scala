@@ -67,6 +67,22 @@ class TopKSpec extends SparkSpec {
     assert(viaBuffer.size === 2) // id 5 occupies TWO slots
   }
 
+  test("perGroupDistinct: one id with two different scores keeps a slot " +
+      "per (score, id) in both directions; repeats across partitions " +
+      "collapse") {
+    // the dedup key is (score, id), not id: each distinct score of id 5
+    // takes its own slot, and the copies of one (score, id) row spread
+    // over several partitions still count once
+    val rows = Seq((1L, 5L, 2.0), (1L, 5L, 1.0), (1L, 6L, 1.5),
+      (1L, 5L, 2.0), (1L, 5L, 1.0)).toDF("g", "id", "s").repartition(4)
+    for (asc <- Seq(true, false)) {
+      val got = TopK.perGroupDistinct(rows, "g", "id", "s", k = 3, asc)
+        .orderBy("rnk").select("id", "s").as[(Long, Double)].collect().toSeq
+      val expected = Seq((5L, 1.0), (6L, 1.5), (5L, 2.0))
+      assert(got === (if (asc) expected else expected.reverse), s"asc=$asc")
+    }
+  }
+
   test("perGroupDistinct handles NaN-score duplicates like distinct()") {
     // NaN scores map to +Inf keys inside the buffer; duplicated NaN
     // rows for the same id must still collapse to one entry.

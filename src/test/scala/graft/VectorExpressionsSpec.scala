@@ -36,4 +36,39 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(r.getLong(0) === 25L)
     assert(r.getLong(1) === 31L)
   }
+
+  /** The IllegalArgumentException somewhere in `e`'s cause chain. */
+  private def mismatch(e: Throwable): IllegalArgumentException =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: IllegalArgumentException => x }
+      .getOrElse(fail(s"no IllegalArgumentException in the cause chain", e))
+
+  test("graft_l2sq/graft_dot reject arrays of different lengths " +
+    "(SQL, interpreted and codegen) instead of reading past the shorter") {
+    for (fn <- Seq("graft_l2sq", "graft_dot")) {
+      val e = mismatch(intercept[Exception](
+        spark.sql(s"SELECT $fn(array(1L, 2L), array(1L))").collect()))
+      assert(e.getMessage.contains(fn) && e.getMessage.contains("2") &&
+        e.getMessage.contains("1"), e.getMessage)
+    }
+    // a parallelized (non-local) relation keeps the projection in
+    // whole-stage codegen
+    val df = spark.sparkContext.parallelize(Seq((Seq(1L, 2L, 3L), Seq(4L))))
+      .toDF("a", "b")
+    for (c <- Seq(intL2Sq($"a", $"b"), intDot($"b", $"a"))) {
+      val e = mismatch(intercept[Exception](df.select(c).collect()))
+      assert(e.getMessage.contains("3") && e.getMessage.contains("1"),
+        e.getMessage)
+    }
+  }
+
+  test("the blocked KNN scan rejects a gallery vector of another length") {
+    val g = spark.sparkContext.parallelize(Seq((1L, Seq(1L, 2L, 3L))))
+      .toDF("id", "v")
+    val q = Seq((7L, Seq(1L, 2L))).toDF("id", "v")
+    val e = mismatch(intercept[Exception](graft.operators.KnnJoin
+      .knnL2Pre(g, q, "id", "v", "id", k = 1).collect()))
+    assert(e.getMessage.contains("3") && e.getMessage.contains("2"),
+      e.getMessage)
+  }
 }
