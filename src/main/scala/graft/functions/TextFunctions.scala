@@ -36,16 +36,9 @@ object TextFunctions {
     * signature element j is the lexicographic min over the shingle set.
     * min-of-md5-hex is a valid uniform minhash and is engine-portable.
     * Routed through the native byte-level kernel
-    * (graft.plans.MinhashSignatureExpr); `minhashSignatureHof` is the
-    * equivalent composed-builtin form. */
+    * (graft.plans.MinhashSignatureExpr). */
   def minhashSignature(shingleCol: Column, k: Int): Column =
     graft.plans.TextExpressions.minhashSignature(shingleCol, k)
-
-  /** Composed-builtin variant of [[minhashSignature]]. */
-  def minhashSignatureHof(shingleCol: Column, k: Int): Column =
-    array((0 until k).map { j =>
-      array_min(transform(shingleCol, s => md5(concat(lit(j.toString), lit(":"), s))))
-    }: _*)
 
   /** LSH band keys from a minhash signature: bands of `rowsPerBand`
     * consecutive signature entries, each hashed to one band key. */
@@ -58,51 +51,14 @@ object TextFunctions {
       md5(concat(parts: _*))
     }: _*)
 
-  /** Hex digit value of the 1-char column `c` ('0'-'9','a'-'f'). Uses
-    * ascii() arithmetic (portable; instr needs a literal needle). */
-  private def hexVal(c: Column): Column =
-    when(ascii(c) >= 97, ascii(c) - 87).otherwise(ascii(c) - 48)
-
   /** 64-bit SimHash of the distinct-token set, as a 64-char '0'/'1'
     * string (string form keeps it exact + portable; no sign issues).
     * Bit j votes +1/-1 per token according to bit j of md5(token).
-    *
-    * Shape matters: ONE `aggregate` over the token array whose
-    * accumulator is the 64-long vote vector. The earlier form (64 bit
-    * transforms, each with its own aggregate over the md5 array) made
-    * the per-token md5 transform an input of each of the 64 lambdas —
-    * re-evaluated once per BIT, 64× the md5 work per document, and no
-    * projection barrier survives CollapseProject for a singly-referenced
-    * alias. Here the hex array is an aggregate input, evaluated once per
-    * row by construction. */
+    * Routed through the native byte-level kernel
+    * (graft.plans.TextExpressions). */
   def simhash64(text: Column): Column =
     graft.plans.TextExpressions.simhash64(
       coalesce(distinctTokens(text), array().cast("array<string>")))
-
-  /** Composed-builtin variant of [[simhash64]] (the HOF form the native
-    * kernel replaced; kept for the randomized-equivalence spec). */
-  def simhash64Hof(text: Column): Column = {
-    // NULL text folds to an empty token set so the aggregate keeps its
-    // all-zero initial votes and the fingerprint stays the documented
-    // 64-char zero string (aggregate over NULL would return NULL and
-    // concat_ws would silently emit "").
-    val hexes = coalesce(
-      transform(distinctTokens(text), t => substring(md5(t), 1, 16)),
-      array().cast("array<string>"))
-    val weights = array(lit(8), lit(4), lit(2), lit(1))
-    // votes[j] += bit_j(md5(token)) ? +1 : -1, for all 64 j per token.
-    // Same char/digit arithmetic as before: char index j div 4, bit
-    // weight 8/4/2/1 by j mod 4; `/` is double division then floor-cast,
-    // identical on both engines.
-    val votes = aggregate(hexes, array_repeat(lit(0), 64),
-      (acc, h) => zip_with(acc, sequence(lit(0), lit(63)), (a, j) => {
-        val p = element_at(weights, (j % 4).cast("int") + 1)
-        val d = hexVal(h.substr((j / 4).cast("int") + 1, lit(1)))
-        a + ((d / p).cast("int") % 2) * 2 - 1
-      }))
-    concat_ws("",
-      transform(votes, v => when(v > 0, lit("1")).otherwise(lit("0"))))
-  }
 
   /** Count of the modal (most frequent) value in a string array = max
     * run length after sorting. ONE linear codegen'd aggregate per row,

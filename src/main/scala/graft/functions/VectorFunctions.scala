@@ -3,9 +3,11 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Dense-vector column functions, built entirely from codegen'd
-  * higher-order functions (`transform` / `zip_with` / `aggregate`) so the
-  * whole distance pipeline stays inside whole-stage codegen — no UDFs.
+/** Dense-vector column functions — no UDFs. The exact integer path
+  * (`quantize`, `intL2Sq`, `intDot`) runs graft's native expressions
+  * ([[graft.plans.VectorExpressions]]); the float path composes Spark's
+  * `transform` / `zip_with` / `aggregate`, which are `CodegenFallback`
+  * (an interpreted lambda per element): general-purpose, not hot.
   *
   * Spark-first re-expression of the reference's FAISS flat index math:
   * L2 distance (reference faiss_utils.py:4-9, IndexFlatL2) and cosine on
@@ -57,12 +59,12 @@ object VectorFunctions {
     array(perm.indices.map(i =>
       lit(signs(i)) * element_at(v, perm(i) + 1)): _*)
 
-  /** Fixed-point quantization: round(x * scale) per element, as Long.
-    * Exact in any engine; makes distance sums order-independent. */
+  /** Fixed-point quantization: round(x * scale) half-up per element, as
+    * Long ([[graft.plans.Quantize]]); makes distance sums exact. */
   def quantize(v: Column, scale: Int = DefaultScale): Column =
-    transform(toDoubleArray(v), x => round(x * lit(scale)).cast("long"))
+    graft.plans.VectorExpressions.quantize(toDoubleArray(v), scale)
 
-  /** Sequential left fold — keeps all math in codegen. */
+  /** Sequential left fold. */
   private def foldSum(v: Column, zero: Column): Column =
     aggregate(v, zero, (acc, x) => acc + x)
 
@@ -84,21 +86,13 @@ object VectorFunctions {
 
   // ---- exact integer path (oracle-deterministic) ----
   // Fused native kernels (graft.plans.VectorExpressions) — one tight
-  // codegen'd loop, no per-row intermediate arrays. `intL2SqHof` /
-  // `intDotHof` are the equivalent built-in-only forms kept for
-  // reference and A/B benchmarking; results are identical.
+  // codegen'd loop, no per-row intermediate arrays.
   /** Integer squared L2 distance between two quantized (Long) vectors. */
   def intL2Sq(a: Column, b: Column): Column =
     graft.plans.VectorExpressions.intL2Sq(a, b)
   /** Integer dot product of quantized vectors. */
   def intDot(a: Column, b: Column): Column =
     graft.plans.VectorExpressions.intDot(a, b)
-  /** Composed-builtin variant of [[intL2Sq]] (zip_with + aggregate). */
-  def intL2SqHof(a: Column, b: Column): Column =
-    foldSum(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L))
-  /** Composed-builtin variant of [[intDot]]. */
-  def intDotHof(a: Column, b: Column): Column =
-    foldSum(zip_with(a, b, (x, y) => x * y), lit(0L))
   /** Integer squared norm. */
   def intNormSq(a: Column): Column = intDot(a, a)
   /** Real-scale distance from integer squared distance. */

@@ -12,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native MinHash signature: for j in 0..k-1, the minimum md5 hex of
   * `"j:" + shingle` over the shingle set — bit-identical to the
-  * composed form in TextFunctions.minhashSignature (and to the DuckDB
-  * oracle), but computed at the byte level:
+  * composed `transform` + `array_min` form (the reference in
+  * TextExpressionsSpec) and to the DuckDB oracle, but computed at the byte level:
   *
   *  - one reused MessageDigest per thread (no per-call allocation),
   *  - mins tracked as raw 16-byte digests with unsigned comparison
@@ -95,9 +95,9 @@ case class MinhashSignatureExpr(child: Expression, k: Int)
 }
 
 /** Native 64-bit SimHash over a (distinct) token-array column —
-  * bit-identical to the composed HOF form in
-  * TextFunctions.simhash64Hof (and to the DuckDB oracle's
-  * ascii-arithmetic CTEs): bit j of the fingerprint votes +1/−1 by
+  * bit-identical to the composed HOF form (the reference in
+  * RandomizedEquivalenceSpec) and to the DuckDB oracle's
+  * ascii-arithmetic CTEs: bit j of the fingerprint votes +1/−1 by
   * bit j (MSB-first) of the first 8 md5 bytes of the token; output is
   * the 64-char '0'/'1' string, '1' where votes > 0.
   *

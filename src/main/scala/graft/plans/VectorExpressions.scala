@@ -1,42 +1,43 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Native Catalyst expressions for the fixed-point vector kernels — the
-  * hot inner loop of every KNN/IVF/near-dup query. The composed
-  * `zip_with` + `aggregate` form allocates an intermediate array per row
-  * pair and evaluates lambda closures per element; these fused kernels
+  * hot inner loops of every KNN/IVF/near-dup query.
+  *
+  * [[IntVectorL2Sq]] and [[IntVectorDot]] score two quantized vectors.
+  * The composed `zip_with` + `aggregate` form allocates an intermediate
+  * array per row pair and runs interpreted lambdas per element (Spark's
+  * higher-order functions are `CodegenFallback`); these fused kernels
   * emit one tight Java loop (`doGenCode`) with zero allocation, which is
   * what you want when the gallery side is 100 TB streaming past a
-  * broadcast query set.
-  *
-  * Semantics are IDENTICAL to the composed form (exact Long arithmetic,
-  * see graft.functions.VectorFunctions), so oracle results are unchanged.
-  * Both vectors must be non-null array<long> with no null elements
+  * broadcast query set. Semantics are IDENTICAL to the composed form
+  * (exact Long arithmetic), so oracle results are unchanged. Both
+  * vectors must be non-null array<long> with no null elements
   * (guaranteed by `VectorFunctions.quantize`). Arrays of different
   * lengths throw an `IllegalArgumentException`: `UnsafeArrayData`'s
   * bounds check is a JVM assert, off in production, so reading on past
   * the shorter array would return a number from adjacent memory.
+  *
+  * [[Quantize]] is `VectorFunctions.quantize` in one loop, bit-identical
+  * to the `transform(v, x => round(x * scale).cast("long"))` it replaces
+  * (an interpreted lambda and a `java.math.BigDecimal` round per
+  * element). It is deliberately a `CodegenFallback` (native
+  * `nullSafeEval`, no `doGenCode`): whole-stage codegen never fuses a
+  * node holding one, so stage boundaries stay where `transform` put
+  * them. A codegen'd quantize let the gallery's Project fuse into a
+  * codegen'd `BroadcastNestedLoopJoin`, whose deferred evaluation then
+  * quantized the gallery vector once per (query, gallery) pair.
   */
-abstract class IntVectorKernel extends BinaryExpression {
+abstract class IntVectorKernel extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (left.dataType == ArrayType(LongType, false) ||
-        left.dataType == ArrayType(LongType, true)) {
-      if (right.dataType == ArrayType(LongType, false) ||
-          right.dataType == ArrayType(LongType, true))
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-        .TypeCheckFailure(s"right side must be array<bigint>, got ${right.dataType}")
-    } else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(s"left side must be array<bigint>, got ${left.dataType}")
-  }
+  override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
 
   /** Element count of `a`, after checking `b` has as many. */
   protected def length(a: ArrayData, b: ArrayData): Int = {
@@ -137,7 +138,53 @@ case class IntVectorDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Fixed-point quantize of an array<double>: each element becomes
+  * round(x * scale) as Long, ties away from zero — the value of Spark's
+  * `round(x * scale).cast("long")`. Null arrays and elements stay null;
+  * the result type is the `transform` form's (its `round` is nullable).
+  * NaN, ±Inf and products outside the Long range follow the cast: with
+  * `failOnError` (ANSI, captured at construction like `Cast`'s) they
+  * throw `[CAST_OVERFLOW]`, otherwise NaN is 0 and the rest clamp. */
+case class Quantize(child: Expression, scale: Int,
+                    failOnError: Boolean = SQLConf.get.ansiEnabled)
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+  override def prettyName: String = "graft_quantize"
+  override def inputTypes = Seq(ArrayType(DoubleType))
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+
+  /** HALF_UP without BigDecimal: `|d| - floor(|d|)` is exact below 2^52,
+    * and larger doubles are integers. NaN and ±Inf reach the cast. */
+  private def toFixed(x: Double): Long = {
+    val d = x * scale
+    val a = Math.abs(d)
+    val t = Math.floor(a)
+    val r = Math.copySign(if (a - t >= 0.5) t + 1 else t, d)
+    if (failOnError) GraftSqlBridge.doubleToLongExact(r) else r.toLong
+  }
+
+  override def nullSafeEval(input: Any): Any = {
+    val in = input.asInstanceOf[ArrayData]
+    val out = new Array[Long](in.numElements())
+    var nulls = false
+    var i = 0
+    while (i < out.length) {
+      if (in.isNullAt(i)) nulls = true else out(i) = toFixed(in.getDouble(i))
+      i += 1
+    }
+    if (!nulls) UnsafeArrayData.fromPrimitiveArray(out)
+    else new GenericArrayData(Array.tabulate[Any](out.length)(j =>
+      if (in.isNullAt(j)) null else out(j)))
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Quantize =
+    copy(child = newChild)
+}
+
 object VectorExpressions {
+  /** Fixed-point quantize of an array<double> column (see [[Quantize]]). */
+  def quantize(v: Column, scale: Int): Column =
+    GraftSqlBridge.column(Quantize(GraftSqlBridge.expression(v), scale))
+
   /** Column API for the fused kernels. */
   def intL2Sq(a: Column, b: Column): Column =
     GraftSqlBridge.column(IntVectorL2Sq(

@@ -7817,8 +7817,7 @@ object Queries {
     val feats = BinaryPipeline.decodeStub(
       BinaryPipeline.toAssets(docs(s, d), "doc_id", "text"), featureDim = 8)
     val qfl = feats.select(col("asset_id").cast("long").as("pair_id"),
-        posexplode(transform(col("features"),
-          f => round(f * lit(100)).cast("long"))).as(Seq("dim", "qx")))
+        posexplode(quantize(col("features"), 100)).as(Seq("dim", "qx")))
       .select(col("pair_id"), col("dim").cast("long").as("dim"), col("qx"))
     val tbl = emb(s, d)
       .select(col("vec_id").cast("long").as("pair_id"),
@@ -8324,20 +8323,13 @@ object Queries {
     * cell key with guard-bounded candidate volume, output is
     * O(verified pairs). */
   def m14AssetNeardup(s: SparkSession, d: String): DataFrame = {
-    val feats = BinaryPipeline.decodeStub(
-      BinaryPipeline.toAssets(docs(s, d), "doc_id", "text"), featureDim = 8)
-    val q = feats.select(col("asset_id"),
-      transform(col("features"),
-        f => round(f * lit(100)).cast("long")).as("qf"))
-    val b = q.withColumn("bucket",
-      concat_ws(":", transform(col("qf"),
-        x => floor(x / lit(1000)).cast("long").cast("string"))))
-    val sizes = b.groupBy("bucket").agg(count(lit(1)).as("bn"))
-    val guarded = b.join(sizes.filter(col("bn") <= 64), "bucket")
+    val guarded = graft.streaming.StreamingOps.cellIndex(
+      BinaryPipeline.decodeStub(BinaryPipeline.toAssets(
+        docs(s, d), "doc_id", "text"), featureDim = 8))
     guarded.as("x").join(guarded.as("y"),
         col("x.bucket") === col("y.bucket") &&
-          col("x.asset_id") < col("y.asset_id"))
-      .select(col("x.asset_id").as("a_id"), col("y.asset_id").as("b_id"),
+          col("x.base_id") < col("y.base_id"))
+      .select(col("x.base_id").as("a_id"), col("y.base_id").as("b_id"),
         intL2Sq(col("x.qf"), col("y.qf")).as("d2"))
       .filter(col("d2") <= 250000L)
       .select(col("a_id"), col("b_id"), col("d2"),

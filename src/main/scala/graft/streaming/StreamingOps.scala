@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -66,7 +67,6 @@ object StreamingOps {
   def knnStream(queries: DataFrame, gallery: DataFrame, qidCol: String,
                 vecCol: String, gidCol: String, k: Int,
                 scale: Int = graft.functions.VectorFunctions.DefaultScale): DataFrame = {
-    import graft.functions.VectorFunctions.{distFromIntSq, intL2Sq, quantize}
     val g = gallery.select(col(gidCol).cast("long").as("neighbor_id"),
       quantize(col(vecCol), scale).as("gv"))
     val q = queries.select(col(qidCol).cast("long").as("query_id"),
@@ -347,7 +347,6 @@ object StreamingOps {
   def dedupServeBatch(requests: DataFrame, gallery: DataFrame,
                       k: Int = 5,
                       scale: Int = graft.functions.VectorFunctions.DefaultScale): DataFrame = {
-    import graft.functions.VectorFunctions.{distFromIntSq, intL2Sq, quantize}
     val batch = requests
       .select(col("request_id").cast("long").as("query_id"),
         quantize(col("embedding"), scale).as("qv"))
@@ -395,7 +394,6 @@ object StreamingOps {
   def graphUpsertBatch(batch: DataFrame, base: DataFrame,
                        storedEdges: DataFrame, k: Int = 3,
                        scale: Int = graft.functions.VectorFunctions.DefaultScale): DataFrame = {
-    import graft.functions.VectorFunctions.{distFromIntSq, intL2Sq, quantize}
     import graft.operators.LshIndex
     val planes = LshIndex.quantizePlanes(
       LshIndex.hyperplanes(dim = 64, nPlanes = 6, seed = 42L))
@@ -439,7 +437,6 @@ object StreamingOps {
                      edges: DataFrame, entryId: Long, ef: Int = 4,
                      steps: Int = 3,
                      scale: Int = graft.functions.VectorFunctions.DefaultScale): DataFrame = {
-    import graft.functions.VectorFunctions.{distFromIntSq, quantize}
     val q = queryBatch
       .select(col("query_id").cast("long").as("query_id"),
         quantize(col("embedding"), scale).as("query_v"))
@@ -457,7 +454,6 @@ object StreamingOps {
     * (query_id, rnk, nid, d2). */
   private def beamLoop(frontier0: DataFrame, q: DataFrame, v: DataFrame,
                        edges: DataFrame, ef: Int, steps: Int): DataFrame = {
-    import graft.functions.VectorFunctions.intL2Sq
     var frontier = frontier0
     var ranked: DataFrame = null
     for (_ <- 1 to steps) {
@@ -503,7 +499,6 @@ object StreamingOps {
                          edges: DataFrame, tombs: DataFrame,
                          entryId: Long, ef: Int = 4, steps: Int = 3,
                          scale: Int = graft.functions.VectorFunctions.DefaultScale): DataFrame = {
-    import graft.functions.VectorFunctions.{distFromIntSq, intL2Sq, quantize}
     val q = queryBatch
       .select(col("query_id").cast("long").as("query_id"),
         quantize(col("embedding"), scale).as("query_v"))
@@ -557,7 +552,6 @@ object StreamingOps {
                      coarseEdges: DataFrame, coarseEntryId: Long,
                      ef: Int = 4, coarseSteps: Int = 3, steps: Int = 3,
                      scale: Int = graft.functions.VectorFunctions.DefaultScale): DataFrame = {
-    import graft.functions.VectorFunctions.{distFromIntSq, intL2Sq, quantize}
     val q = queryBatch
       .select(col("query_id").cast("long").as("query_id"),
         quantize(col("embedding"), scale).as("query_v"))
@@ -605,7 +599,6 @@ object StreamingOps {
                     book: Seq[graft.operators.PqIndex.Codebook],
                     dim: Int = 64, m: Int = 8, k: Int = 5,
                     scale: Int = graft.functions.VectorFunctions.DefaultScale): DataFrame = {
-    import graft.functions.VectorFunctions.quantize
     val q = queryBatch
       .select(col("query_id").cast("long").as("qid"),
         transform(quantize(col("embedding"), scale),
@@ -630,7 +623,6 @@ object StreamingOps {
                        dim: Int = 64, m: Int = 8,
                        scale: Int = graft.functions.VectorFunctions.DefaultScale)
       : DataFrame = {
-    import graft.functions.VectorFunctions.quantize
     val g = vecBatch.select(col("vec_id").cast("long").as("id"),
       transform(quantize(col("embedding"), scale),
         x => x.cast("double")).as("qemb"))
@@ -752,7 +744,6 @@ object StreamingOps {
                      qidCol: String, vecCol: String,
                      k: Int, nprobe: Int,
                      scale: Int = graft.functions.VectorFunctions.DefaultScale): DataFrame = {
-    import graft.functions.VectorFunctions.{distFromIntSq, intL2Sq, quantize}
     require(centroids.nonEmpty, "ivfServeStream: empty centroid set")
     val cands = centroids.toIndexedSeq.map { case (cid, cv) =>
       struct(intL2Sq(col("qv"), array(cv.map(lit).toIndexedSeq: _*))
@@ -824,7 +815,6 @@ object StreamingOps {
                       centroids: Array[(Long, Array[Long])],
                       k: Int = 5, nprobe: Int = 2,
                       scale: Int = graft.functions.VectorFunctions.DefaultScale): DataFrame = {
-    import graft.functions.VectorFunctions.{distFromIntSq, intL2Sq, quantize}
     val qr = queryBatch
       .select(col("vec_id").cast("long").as("query_id"),
         col("label").cast("long").as("qlab"),
@@ -878,11 +868,9 @@ object StreamingOps {
   def assetNearDupAdmission(featStream: DataFrame, baseCells: DataFrame,
                             radiusSq: Long = 250000L,
                             grid: Long = 1000L): DataFrame = {
-    import graft.functions.VectorFunctions.intL2Sq
     val q = featStream
       .select(col("asset_id").cast("long").as("batch_id"),
-        transform(col("features"),
-          f => round(f * lit(100)).cast("long")).as("qfb"))
+        quantize(col("features"), 100).as("qfb"))
       .withColumn("bucket", concat_ws(":", transform(col("qfb"),
         x => floor(x / lit(grid)).cast("long").cast("string"))))
     q.join(baseCells, Seq("bucket"))
@@ -901,8 +889,7 @@ object StreamingOps {
                 grid: Long = 1000L): DataFrame = {
     val b = feats
       .select(col("asset_id").cast("long").as("base_id"),
-        transform(col("features"),
-          f => round(f * lit(100)).cast("long")).as("qf"))
+        quantize(col("features"), 100).as("qf"))
       .withColumn("bucket", concat_ws(":", transform(col("qf"),
         x => floor(x / lit(grid)).cast("long").cast("string"))))
     val sizes = b.groupBy("bucket").agg(count(lit(1)).as("bn"))

@@ -1,6 +1,9 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, Cast,
+  LambdaFunction, Round}
+import org.apache.spark.sql.types.LongType
 
 /** Dumps the formatted physical plan of every SparkEntry query and
   * greps for the scale-health signals SURVEY §4 promises:
@@ -14,6 +17,9 @@ import graft.{GraftSession, SparkEntry}
   *    regression);
   *  - d9's bucketed seen-index scan is missing or re-shuffled (the
   *    BucketedStore contract: no Exchange above the bucketed side);
+  *  - an optimized plan holds a hand-rolled quantize, `transform(v, x =>
+  *    round(x * s).cast("long"))` (an interpreted lambda and a BigDecimal
+  *    round per element; `VectorFunctions.quantize` is one native loop);
   *  - any query fails to build.
   * Run it per round and commit the output as PLAN_AUDIT_r{N}.txt so
   * plan regressions cannot land silently.
@@ -252,6 +258,13 @@ object ExplainAudit {
             case _ => ()
           }
         }
+        df.queryExecution.optimizedPlan.foreach(_.expressions.foreach(_.foreach {
+          case ArrayTransform(_, LambdaFunction(c: Cast, _, _))
+            if c.dataType == LongType && c.child.isInstanceOf[Round] =>
+            violations ::= s"$name: hand-rolled quantize (transform with " +
+              "round(_).cast(long)); use VectorFunctions.quantize"
+          case _ => ()
+        }))
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
         println(plan)
@@ -318,10 +331,10 @@ object ExplainAudit {
     spark.stop()
     if (violations.nonEmpty) {
       println("\n[audit] FAIL:")
-      violations.reverse.foreach(v => println(s"[audit]   $v"))
+      violations.reverse.distinct.foreach(v => println(s"[audit]   $v"))
       sys.exit(1)
     }
     println("\n[audit] PASS: no cartesians, no unexpected BNLJ, " +
-      "bucketed d9 verified, global windows bounded")
+      "bucketed d9 verified, global windows bounded, no hand-rolled quantize")
   }
 }

@@ -2,10 +2,18 @@ package graft
 
 import graft.functions.TextFunctions._
 import graft.sources.Tables
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class TextExpressionsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Composed-builtin form of [[minhashSignature]]: the reference the
+    * native kernel must match. */
+  private def minhashSignatureHof(shingleCol: Column, k: Int): Column =
+    array((0 until k).map { j =>
+      array_min(transform(shingleCol, s => md5(concat(lit(j.toString), lit(":"), s))))
+    }: _*)
 
   test("native minhash matches the composed form on real documents") {
     val d = Tables.documents(spark, sf).limit(100)

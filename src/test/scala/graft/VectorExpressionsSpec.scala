@@ -1,12 +1,30 @@
 package graft
 
 import graft.functions.VectorFunctions._
+import graft.plans.Quantize
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.ArrayTransform
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, StructField, StructType}
 
 class VectorExpressionsSpec extends SparkSpec {
   import spark.implicits._
+
+  // Composed-builtin (zip_with + aggregate) and transform forms of the
+  // native kernels: the references the kernels must match.
+  private def foldSum(v: Column, zero: Column): Column =
+    aggregate(v, zero, (acc, x) => acc + x)
+  private def intL2SqHof(a: Column, b: Column): Column =
+    foldSum(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L))
+  private def intDotHof(a: Column, b: Column): Column =
+    foldSum(zip_with(a, b, (x, y) => x * y), lit(0L))
+  private def quantizeHof(v: Column, scale: Int): Column =
+    transform(toDoubleArray(v), x => round(x * lit(scale)).cast("long"))
 
   test("native kernels match the composed-builtin forms on real data") {
     val e = Tables.embeddings(spark, sf).limit(50)
@@ -70,5 +88,163 @@ class VectorExpressionsSpec extends SparkSpec {
       .knnL2Pre(g, q, "id", "v", "id", k = 1).collect()))
     assert(e.getMessage.contains("3") && e.getMessage.contains("2"),
       e.getMessage)
+  }
+
+  /** One numeric-array column `v`, in a parallelized (non-local)
+    * relation so the projection is planned, not folded into a local
+    * relation by the optimizer. */
+  private def arrays(elem: org.apache.spark.sql.types.DataType,
+                     rows: Seq[Seq[Any]]): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        rows.map(r => Row(if (r == null) null else r)), 4),
+      StructType(Seq(StructField("v", ArrayType(elem, containsNull = true)))))
+
+  /** Asserts quantize(v, scale) equals the transform form row for row,
+    * with the same result type, through the generated projection and
+    * the interpreted one. */
+  private def assertQuantizeMatches(df: DataFrame, scale: Int): Unit = {
+    def run(): Unit = {
+      val out = df.select(quantize($"v", scale).as("n"),
+        quantizeHof($"v", scale).as("r"))
+      assert(out.schema("n").dataType === out.schema("r").dataType)
+      val rows = out.collect()
+      assert(rows.length === df.count())
+      rows.foreach { r =>
+        assert(Option(r.getSeq[Any](0)) === Option(r.getSeq[Any](1)),
+          s"scale $scale")
+      }
+    }
+    run()
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(run())
+  }
+
+  test("quantize is bit-identical to round(x * scale).cast(long) on " +
+    "seeded Gaussians over 1e-4 .. 1e4, half ties and their neighbours") {
+    val rnd = new scala.util.Random(17)
+    val gauss = Seq.fill(1600)(Seq.fill(64)(
+      rnd.nextGaussian() * math.pow(10, rnd.nextDouble() * 8 - 4)))
+    val scales = Seq(1, 100, 255, 10000)
+    val ties = for {
+      s <- scales
+      k <- -300 to 300
+      t <- Seq(k + 0.5, (k + 0.5) / s)
+    } yield Seq(t, math.nextUp(t), math.nextDown(t))
+    val edge = Seq(Seq(-0.0, 0.0, 0.49999999999999994,
+      -0.49999999999999994, 0.5, -0.5, 1e-300, -1e-300,
+      Double.MinPositiveValue, 9.2e14, -9.2e14))
+    val df = arrays(DoubleType, gauss ++ ties ++ edge)
+    assert(gauss.map(_.size).sum >= 100000)
+    scales.foreach(assertQuantizeMatches(df, _))
+    // around 2^52, where doubles stop having a fractional part
+    val big = Seq(4503599627370495.5, 4503599627370497.0, 9007199254740993.0)
+    assertQuantizeMatches(arrays(DoubleType,
+      Seq(big, big.map(-_), big.map(math.nextDown))), 1)
+  }
+
+  test("quantize keeps int and float inputs, nulls and the result type " +
+    "of the transform form") {
+    val rnd = new scala.util.Random(5)
+    val ints = arrays(IntegerType, Seq.fill(200)(Seq.fill(16)(
+      rnd.nextInt(2000001) - 1000000)))
+    val floats = arrays(FloatType, Seq.fill(200)(Seq.fill(16)(
+      (rnd.nextGaussian() * 100).toFloat)) :+ Seq(0.5f, -2.5f, 0.125f))
+    val nulls = arrays(DoubleType, Seq(Seq(1.5, null, -2.5), null,
+      Seq(null), Seq(), Seq(0.004, 0.005, null)))
+    for (df <- Seq(ints, floats, nulls); s <- Seq(1, 100, 255, 10000))
+      assertQuantizeMatches(df, s)
+    val got = nulls.select(quantize($"v", 1)).collect().map(r =>
+      Option(r.getSeq[Any](0)).map(_.toList))
+    assert(got.toList === List(Some(List(2L, null, -3L)), None,
+      Some(List(null)), Some(Nil), Some(List(0L, 0L, null))))
+    // the result type is the transform form's (its round is nullable)
+    val noNulls = Seq(Seq(1.0)).toDF("v")
+    assert(noNulls.select(quantize($"v")).schema.head.dataType ===
+      noNulls.select(quantizeHof($"v", DefaultScale)).schema.head.dataType)
+    assert(noNulls.select(quantize($"v")).schema.head.dataType ===
+      ArrayType(org.apache.spark.sql.types.LongType, containsNull = true))
+  }
+
+  /** The `[CAST_OVERFLOW]` arithmetic error (Spark's
+    * `SparkArithmeticException`) somewhere in `e`'s cause chain. */
+  private def castOverflow(e: Throwable): SparkThrowable =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: ArithmeticException with SparkThrowable => x }
+      .filter(_.getCondition == "CAST_OVERFLOW")
+      .getOrElse(fail("no CAST_OVERFLOW in the cause chain", e))
+
+  test("quantize of NaN, ±Inf and out-of-range values follows the cast: " +
+    "CAST_OVERFLOW under ANSI, 0 or clamped without") {
+    val bad = Seq(Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, 1e300, -1e300)
+    withConf("spark.sql.ansi.enabled" -> "true") {
+      for (x <- bad; s <- Seq(1, 10000)) {
+        val df = arrays(DoubleType, Seq(Seq(1.0, x)))
+        castOverflow(intercept[Exception](
+          df.select(quantize($"v", s)).collect()))
+        castOverflow(intercept[Exception](
+          df.select(quantizeHof($"v", s)).collect()))
+        withConf("spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+          castOverflow(intercept[Exception](
+            df.select(quantize($"v", s)).collect()))
+        }
+      }
+    }
+    withConf("spark.sql.ansi.enabled" -> "false") {
+      val df = arrays(DoubleType, Seq(bad))
+      Seq(1, 10000).foreach(assertQuantizeMatches(df, _))
+      assert(df.select(quantize($"v", 1)).head().getSeq[Long](0) ===
+        Seq(0L, Long.MaxValue, Long.MinValue, Long.MaxValue, Long.MinValue))
+    }
+  }
+
+  /** Every node of `p`, through AQE and query-stage wrappers. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case other => other.children.flatMap(nodes)
+  })
+
+  private def hasExpr(p: SparkPlan, f: PartialFunction[Any, Boolean]) =
+    p.expressions.exists(_.find(e => f.applyOrElse(e, (_: Any) => false))
+      .isDefined)
+
+  test("quantize runs once per row: never fused into a codegen'd " +
+    "nested-loop join, and knnL2 plans no transform lambda") {
+    val rnd = new scala.util.Random(11)
+    def vecs(n: Int, id: String, v: String) = spark.sparkContext
+      .parallelize((0 until n).map(i =>
+        (i.toLong, Seq.fill(8)(rnd.nextGaussian()))), 4).toDF(id, v)
+    val gallery = vecs(300, "id", "v")
+    val queries = vecs(5, "qid", "qv")
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      val scored = gallery.select($"id", quantize($"v").as("gv"))
+        .crossJoin(broadcast(queries.select($"qid",
+          quantize($"qv").as("q"))))
+        .select($"qid", $"id", intL2Sq($"gv", $"q").as("d2"))
+      // the nodes one codegen stage fuses: its subtree down to (not
+      // past) the InputAdapters that feed it
+      def fused(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+        case _: InputAdapter => Nil
+        case other => other.children.flatMap(fused)
+      })
+      val stages = scored.queryExecution.executedPlan.collect {
+        case w: WholeStageCodegenExec => fused(w.child) }
+      val joinStages = stages.filter(
+        _.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]))
+      assert(joinStages.nonEmpty, scored.queryExecution.executedPlan)
+      joinStages.foreach(s => assert(
+        !s.exists(hasExpr(_, { case _: Quantize => true })),
+        scored.queryExecution.executedPlan))
+      assert(scored.count() === 1500)
+    }
+    val knn = graft.operators.KnnJoin.knnL2(gallery, queries.toDF("id", "v"),
+      "id", "v", "id", k = 3)
+    assert(knn.count() === 15)
+    val plan = nodes(knn.queryExecution.executedPlan)
+    assert(plan.exists(hasExpr(_, { case _: Quantize => true })))
+    assert(!plan.exists(hasExpr(_, { case _: ArrayTransform => true })))
   }
 }
