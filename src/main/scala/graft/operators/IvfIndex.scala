@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.plans.{CentroidKernels, Quantize, VectorSumAggregate}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Batch IVF (inverted-file) vector index built with DataFrame ops — the
@@ -14,7 +15,7 @@ import org.apache.spark.sql.functions._
   * the difference between scanning everything and scanning a few shards.
   *
   * Centroids are broadcast everywhere (≤ tens of thousands of rows);
-  * assignment is a map-only pass with a map-side-combined argmin.
+  * assignment is a map-only pass through one native argmin.
   */
 object IvfIndex {
 
@@ -22,78 +23,90 @@ object IvfIndex {
     * ties → lowest centroid id). Returns (id, vec, centroid_id, d2).
     *
     * Centroids are broadcast-sized by definition (nlist × dim), so they
-    * are collected and folded into the plan as literals: the whole
-    * assignment is one map-only codegen'd projection — zero joins, zero
-    * aggregates, zero shuffles. (The earlier groupBy(id, vec)
-    * .agg(min(struct)) shape shuffled every row with the full embedding
-    * in the grouping key — wrong at 100 TB.) */
+    * are collected and ride the plan as literals of one native argmin
+    * ([[graft.plans.IntNearestCentroid]]): the whole assignment is one
+    * map-only projection — zero joins, zero aggregates, zero shuffles.
+    * A null vector gets a null centroid_id and d2; a null element, or a
+    * vector whose length differs from the centroids', throws
+    * `IllegalArgumentException`. */
   def assign(vectors: DataFrame, centroids: DataFrame, idCol: String,
              vecCol: String, cidCol: String,
              scale: Int = DefaultScale): DataFrame = {
-    val cents: Array[(Long, Array[Long])] = centroids
+    val cents = centroids
       .select(col(cidCol).cast("long"), quantize(col(vecCol), scale))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-      .sortBy(_._1)
+    assignTo(vectors, idCol, vecCol, cents, scale)
+  }
+
+  /** [[assign]] against centroids already collected and quantized. */
+  private[operators] def assignTo(vectors: DataFrame, idCol: String,
+                                  vecCol: String,
+                                  cents: Seq[(Long, Array[Long])],
+                                  scale: Int): DataFrame = {
     require(cents.nonEmpty, "assign: empty centroid set")
-    // argmin via array_min over (d2, cid) structs: lexicographic struct
-    // ordering = smallest distance, ties to lowest centroid id.
-    val cands = cents.map { case (cid, cv) =>
-      struct(intL2Sq(col("qv"), array(cv.map(lit): _*)).as("d2"),
-        lit(cid).as("cid"))
-    }
     vectors
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"),
-        quantize(col(vecCol), scale).as("qv"))
-      .withColumn("best", array_min(array(cands.toIndexedSeq: _*)))
+        CentroidKernels.nearestInt(quantize(col(vecCol), scale),
+          cents.head._2.length, 0, cents).as("best"))
       .select(col("id"), col("vec"),
         col("best.cid").as("centroid_id"), col("best.d2").as("d2"))
   }
 
+  /** Quantize driver-side centroids as `quantize` does in a plan. */
+  private[operators] def quantized(cents: Seq[(Long, Array[Double])],
+                                   scale: Int): Seq[(Long, Array[Long])] =
+    cents.map { case (cid, v) => (cid, v.map(Quantize.toFixed(_, scale))) }
+
   /** One Lloyd iteration: recompute centroids as element-wise means of
-    * their assigned vectors. Exploded (cid, dim_pos) partial means —
-    * a single shuffle keyed by (cid, pos), map-side combined. */
-  def lloydStep(assigned: DataFrame): DataFrame =
+    * their assigned vectors. One native aggregate per cluster — the
+    * member count and the double element-wise sum
+    * ([[graft.plans.VectorSumAggregate]]), map-side combined, so the
+    * shuffle carries one dim-sized buffer per (cluster, partition) —
+    * then mean = Σ/n per element, as `avg` computes it. Rows with a
+    * null vec are skipped; a cluster without vectors has no row. */
+  def lloydStep(assigned: DataFrame): DataFrame = {
+    val vecSum = GraftSqlBridge.column(VectorSumAggregate(
+      GraftSqlBridge.expression(toDoubleArray(col("vec")))).toAggregateExpression())
     assigned
+      .groupBy(col("centroid_id"))
+      .agg(count(col("vec")).as("n"), vecSum.as("s"))
+      .filter(col("s").isNotNull)
       .select(col("centroid_id"),
-        posexplode(toDoubleArray(col("vec"))).as(Seq("pos", "x")))
-      .groupBy("centroid_id", "pos")
-      .agg(avg("x").as("m"))
-      .groupBy("centroid_id")
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("centroid_id"),
-        transform(col("pm"), p => p.getField("m")).as("vec"))
+        transform(col("s"), x => x / col("n")).as("vec"))
+  }
 
   /** Full Lloyd/k-means training of the coarse quantizer: deterministic
-    * seeding (k lowest ids), then `iters` assign→mean rounds. Centroids
-    * are collected to the driver between rounds — they are broadcast-
-    * sized by definition (nlist × dim), and re-literalizing them keeps
-    * the per-iteration plan flat instead of a growing lineage. Each
-    * iteration is one map-only assign pass + one (cid,dim)-keyed shuffle.
-    * Returns (cid, embedding) centroids. */
+    * seeding (k lowest ids), then `iters` assign→mean rounds. Each round
+    * is one job: the map-only [[assign]] and the [[lloydStep]]
+    * aggregate in one pass over the vectors, k rows collected to the
+    * driver. Centroids stay on the driver between rounds — broadcast-
+    * sized by definition (nlist × dim) — and ride the next round's plan
+    * as literals, so the per-round plan stays flat instead of a growing
+    * lineage. Returns (cid, embedding) centroids. */
   def train(spark: SparkSession, vectors: DataFrame, idCol: String,
             vecCol: String, k: Int, iters: Int): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
+    var cents: Seq[(Long, Array[Double])] =
+      vectors.orderBy(col(idCol)).limit(k)
+        .select(toDoubleArray(col(vecCol))).collect()
+        .zipWithIndex.map { case (r, i) => (i.toLong, r.getSeq[Double](0).toArray) }
+        .toSeq
+    for (_ <- 1 to iters) {
+      val assigned = assignTo(vectors, idCol, vecCol,
+        quantized(cents, DefaultScale), DefaultScale)
+      cents = lloydStep(assigned).collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+        .sortBy(_._1).toSeq
+    }
     val centSchema = StructType(Seq(
       StructField("cid", LongType, nullable = false),
       StructField(vecCol, ArrayType(DoubleType), nullable = false)))
-    def toDf(rows: Seq[(Long, Seq[Double])]): DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.map(r => Row(r._1, r._2)), 1),
-        centSchema)
-    var cents = toDf(
-      vectors.orderBy(col(idCol)).limit(k)
-        .select(toDoubleArray(col(vecCol))).collect()
-        .zipWithIndex.map { case (r, i) => (i.toLong, r.getSeq[Double](0)) }
-        .toSeq)
-    for (_ <- 1 to iters) {
-      val assigned = assign(vectors, cents, idCol, vecCol, "cid")
-      cents = toDf(lloydStep(assigned)
-        .select(col("centroid_id"), col("vec")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq)
-    }
-    cents
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        cents.map { case (cid, v) => Row(cid, v.toSeq) }, 1),
+      centSchema)
   }
 
   /** Persist the index partitioned by centroid id (partition pruning on

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.plans.CentroidKernels
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** IVF+PQ composite index search — the canonical billion-scale FAISS
@@ -13,10 +14,10 @@ import org.apache.spark.sql.functions._
   *  - the codes table is pruned to probed partitions by a broadcast
   *    join on centroid_id (on the persisted partitioned layout this is
   *    partition pruning — reads nprobe/nlist of the data);
-  *  - ranking is PQ asymmetric distance: per-query lookup tables folded
-  *    in as one literal map keyed by query_id, summed map-side per
-  *    candidate row — no exchange between the prune and the O(Q·k)
-  *    partial top-k.
+  *  - ranking is PQ asymmetric distance: per-query lookup tables ride
+  *    the broadcast probe frame (one positional table per subspace,
+  *    [[PqIndex.posTable]]), summed map-side per candidate row — no
+  *    exchange between the prune and the O(Q·k) partial top-k.
   *
   * Reference anchor: faiss_utils.py:4-22 (flat index build/search this
   * scales out from).
@@ -36,38 +37,34 @@ object IvfPq {
     acc
   }
 
-  /** Residuals v − centroid(v): one map-only pass (assignment argmin +
-    * a literal centroid-map lookup). Returns (id, centroid_id, rvec).
-    * Train residual codebooks on this (`PqIndex.train` over `rvec`). */
+  /** Residuals v − centroid(v): one map-only pass — the
+    * [[IvfIndex.assign]] argmin, then the native subtract of the
+    * assigned centroid ([[graft.plans.CentroidResidual]]); the
+    * centroids are collected once for both. Returns (id, centroid_id,
+    * rvec); a null vector gets a null centroid_id and rvec. Train
+    * residual codebooks on this (`PqIndex.train` over `rvec`). */
   def residuals(vectors: DataFrame, centroids: DataFrame, idCol: String,
                 vecCol: String, cidCol: String,
                 scale: Int = DefaultScale): DataFrame = {
-    val cmap = map(collectVecs(centroids, cidCol, vecCol).flatMap {
-      case (cid, cv) => Seq(lit(cid), array(cv.map(lit): _*))
-    }.toIndexedSeq: _*)
-    IvfIndex.assign(vectors, centroids, idCol, vecCol, cidCol, scale)
+    val cents = collectVecs(centroids, cidCol, vecCol).toSeq
+    IvfIndex.assignTo(vectors, idCol, vecCol,
+        IvfIndex.quantized(cents, scale), scale)
       .select(col("id"), col("centroid_id"),
-        zip_with(toDoubleArray(col("vec")),
-          element_at(cmap, col("centroid_id")),
-          (x, c) => x - c).as("rvec"))
+        CentroidKernels.residual(toDoubleArray(col("vec")),
+          col("centroid_id"), cents).as("rvec"))
   }
 
   /** Residual-PQ encode (IndexIVFPQ by_residual=true): codes quantize
-    * v − centroid(v). Single map-only pass over [[residuals]] output
-    * — slices projected once per subspace, centroid_id carried through.
-    * Returns (id, codes, centroid_id) — the persisted index layout. */
+    * v − centroid(v). Single map-only pass over [[residuals]] output:
+    * each subspace's argmin reads its slice of rvec in place, and
+    * centroid_id is carried through. Returns (id, codes, centroid_id) —
+    * the persisted index layout. */
   def encodeResidual(vectors: DataFrame, centroids: DataFrame,
                      idCol: String, vecCol: String, cidCol: String,
                      dim: Int, m: Int, book: Seq[PqIndex.Codebook],
                      scale: Int = DefaultScale): DataFrame = {
-    val sub = dim / m
     residuals(vectors, centroids, idCol, vecCol, cidCol, scale)
-      .select(col("id") +: col("centroid_id") +:
-        (0 until m).map(j =>
-          slice(col("rvec"), j * sub + 1, sub).as(s"_s$j")): _*)
-      .select(col("id"),
-        array((0 until m).map(j =>
-          PqIndex.encodeSub(col(s"_s$j"), j, book)): _*).as("codes"),
+      .select(col("id"), PqIndex.codesOf(col("rvec"), dim, m, book).as("codes"),
         col("centroid_id"))
   }
 

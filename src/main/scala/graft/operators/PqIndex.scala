@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import graft.plans.{CentroidKernels, PqGridSumAggregate}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,10 +15,11 @@ import org.apache.spark.sql.types._
   * table.
   *
   * Scale shape: codebooks are tiny (m × ksub × D/m) → driver/broadcast;
-  * encoding is a map-only pass over the gallery (literal-folded argmin,
-  * fully codegen'd); ADC search shuffles only (gallery_id × m) code
-  * rows joined to a broadcast distance table, then partial top-k — the
-  * 100 TB gallery is never touched at full precision.
+  * encoding is a map-only pass over the gallery (one native argmin per
+  * subspace, the codebook riding it as literals); ADC search shuffles
+  * only (gallery_id × m) code rows joined to a broadcast distance
+  * table, then partial top-k — the 100 TB gallery is never touched at
+  * full precision.
   */
 object PqIndex {
 
@@ -41,48 +43,85 @@ object PqIndex {
       }.toSeq
   }
 
-  /** Train per-subspace codebooks with deterministic Lloyd k-means.
+  /** Train per-subspace codebooks with deterministic Lloyd k-means,
+    * all m subspaces together. Seeds are the sub-slices of the `ksub`
+    * lowest-id vectors (cid = rank), collected once. Each round is one
+    * job over the unsliced vectors: m exact integer argmins
+    * ([[IvfIndex.assign]]'s kernel on each quantized subspace slice)
+    * feed one native per-(subspace, cid) count-and-sum aggregate
+    * ([[graft.plans.PqGridSumAggregate]], double sums), collected to
+    * the driver; each centroid is Σ/n as `avg` computes it, and a cell
+    * without members drops. Rows with a null vector are skipped.
     * dim must divide evenly into m subspaces. */
   def train(spark: SparkSession, vecs: DataFrame, idCol: String,
             vecCol: String, dim: Int, m: Int, ksub: Int,
             iters: Int): Seq[Codebook] = {
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val sub = dim / m
-    (0 until m).flatMap { j =>
-      val slice_j = vecs.select(col(idCol),
-        slice(toDoubleArray(col(vecCol)), j * sub + 1, sub).as("subvec"))
-      IvfIndex.train(spark, slice_j, idCol, "subvec", ksub, iters)
-        .collect()
-        .map(r => Codebook(j, r.getLong(0).toInt, r.getSeq[Double](1)))
-    }
-  }
-
-  /** Literal-folded argmin over an ALREADY-SLICED subvector column:
-    * distance against every centroid of the subspace's codebook,
-    * smallest (d2, cid) wins. */
-  private[operators] def encodeSub(sliceCol: Column, j: Int,
-                                   book: Seq[Codebook]): Column = {
-    val cands = book.filter(_.sub == j).sortBy(_.cid).map { cb =>
-      val cent = array(cb.centroid.map(lit): _*)
-      struct(l2DistSq(sliceCol, cent).as("d2"), lit(cb.cid).as("cid"))
-    }
-    array_min(array(cands: _*)).getField("cid")
-  }
-
-  /** Encode: (id, codes array<int>) — map-only, no shuffle. Sub-slices
-    * are projected ONCE per subspace before the argmin (inlining the
-    * slice into each candidate's distance re-evaluated it ksub times
-    * per subspace — the dominant cost of index build at 1M rows). */
-  def encode(vecs: DataFrame, idCol: String, vecCol: String, dim: Int,
-             m: Int, book: Seq[Codebook]): DataFrame = {
-    val sub = dim / m
     val v = toDoubleArray(col(vecCol))
-    vecs.select(col(idCol).cast("long").as("id") +:
-        (0 until m).map(j => slice(v, j * sub + 1, sub).as(s"_s$j")): _*)
-      .select(col("id"),
-        array((0 until m).map(j =>
-          encodeSub(col(s"_s$j"), j, book)): _*).as("codes"))
+    val seeds = vecs.orderBy(col(idCol)).limit(ksub).select(v).collect()
+      .map(_.getSeq[Double](0))
+    var book: Seq[Codebook] = for {
+      j <- 0 until m
+      (x, cid) <- seeds.toSeq.zipWithIndex
+    } yield Codebook(j, cid, x.slice(j * sub, (j + 1) * sub))
+    for (_ <- 1 to iters) {
+      val bySub = book.groupBy(_.sub)
+      val qv = quantize(v)
+      val codes = array((0 until m).map { j =>
+        val cents = bySub(j).map(cb => (cb.cid.toLong, cb.centroid.toArray))
+        CentroidKernels.nearestInt(qv, dim, j * sub,
+          IvfIndex.quantized(cents, DefaultScale)).getField("cid")
+      }: _*)
+      val grid = GraftSqlBridge.column(PqGridSumAggregate(
+        GraftSqlBridge.expression(col("x")), GraftSqlBridge.expression(col("codes")),
+        m, ksub, sub).toAggregateExpression())
+      book = vecs.select(v.as("x"), codes.as("codes"))
+        .agg(grid.as("grid"))
+        .collect().head.getSeq[Row](0)
+        .filter(_.getLong(1) > 0)
+        .map { cell =>
+          val (lab, n) = (cell.getLong(0).toInt, cell.getLong(1))
+          Codebook(lab / ksub, lab % ksub,
+            cell.getSeq[Double](2).map(_ / n).toIndexedSeq)
+        }
+    }
+    book
   }
+
+  /** Argmin over an unsliced vector column's subspace `j`: the squared
+    * L2 double fold against every centroid of the subspace's codebook,
+    * smallest (d2, cid) wins ([[graft.plans.DoubleNearestCentroid]],
+    * bit-identical to the `aggregate(zip_with(...))` + `array_min`
+    * form). A vector of another length than `dim`, or a null element
+    * in the subspace, throws `IllegalArgumentException`. */
+  private[operators] def encodeSub(vec: Column, dim: Int, m: Int, j: Int,
+                                   book: Seq[Codebook]): Column = {
+    val sub = dim / m
+    val cents = book.filter(_.sub == j)
+      .map(cb => (cb.cid.toLong, cb.centroid.toArray))
+    require(cents.nonEmpty, s"encode: codebook holds no centroids for subspace $j")
+    require(cents.forall(_._2.length == sub),
+      s"encode: subspace $j centroids must have $sub elements")
+    CentroidKernels.nearestDouble(vec, dim, j * sub, cents)
+      .getField("cid").cast("int")
+  }
+
+  /** The m codes of an array<double> column, each subspace's argmin
+    * reading its slice in place ([[encodeSub]]); null for a null
+    * vector. */
+  private[operators] def codesOf(vec: Column, dim: Int, m: Int,
+                                 book: Seq[Codebook]): Column =
+    when(vec.isNotNull,
+      array((0 until m).map(j => encodeSub(vec, dim, m, j, book)): _*))
+
+  /** Encode: (id, codes array<int>) — map-only, no shuffle. The vector
+    * is cast to doubles once, then [[codesOf]]. */
+  def encode(vecs: DataFrame, idCol: String, vecCol: String, dim: Int,
+             m: Int, book: Seq[Codebook]): DataFrame =
+    vecs.select(col(idCol).cast("long").as("id"),
+        toDoubleArray(col(vecCol)).as("_v"))
+      .select(col("id"), codesOf(col("_v"), dim, m, book).as("codes"))
 
   /** Hard ceiling on a positional table's cid range: positions are
     * allocated DENSELY up to the max cid, so a sparse id-derived cid

@@ -20,8 +20,9 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType}
   *    (k a literal int)
   *  - `graft_topk(id, score, k, ascending)` — bounded top-k aggregate,
   *    array<struct<id,score>> in rank order (k, ascending literals)
-  *  - `graft_vecsum(vec)` — element-wise Long-array sum aggregate (the
-  *    exact-centroid (n, Σ) carrier, one pass, no explode)
+  *  - `graft_vecsum(vec)` — element-wise sum aggregate of an
+  *    array<bigint> (exact, the (n, Σ) centroid carrier) or array<double>
+  *    column, one pass, no explode
   *  - `graft_simhash64(tokens)` — 64-bit SimHash fingerprint of a
   *    token array (the byte-level kernel the d3/d6 family runs)
   *  - `graft_gram(vec)` — upper-triangle Gram aggregate over a

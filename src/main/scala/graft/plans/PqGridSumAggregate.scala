@@ -3,6 +3,7 @@ package graft.plans
 import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -12,10 +13,12 @@ import org.apache.spark.sql.types._
   * grid cell `lab = j·ksub + code`, the member count and the
   * element-wise sum of the subspace slice `qv[j·sub .. j·sub+sub)`.
   * One flat primitive buffer (m·ksub counts + m·ksub·sub sums — 9 KB
-  * at 8×16×8) per partition. */
-final class PqGridState(val m: Int, val ksub: Int, val sub: Int) {
+  * at 8×16×8) per partition; the sums are exact Longs or doubles, as
+  * the vector's element type (see [[SumBuffer]]). */
+final class PqGridState(val m: Int, val ksub: Int, val sub: Int,
+                        exact: Boolean) {
   val counts = new Array[Long](m * ksub)
-  val sums = new Array[Long](m * ksub * sub)
+  val sums = new SumBuffer(exact, m * ksub * sub)
 
   def add(qv: ArrayData, codes: ArrayData): Unit = {
     // the function is on the public SQL surface (graft_pq_grid_sums),
@@ -33,9 +36,7 @@ final class PqGridState(val m: Int, val ksub: Int, val sub: Int) {
         s"graft_pq_grid_sums: code $cl at subspace $j outside [0, $ksub)")
       val c = cl.toInt
       counts(j * ksub + c) += 1
-      val base = (j * ksub + c) * sub
-      var i = 0
-      while (i < sub) { sums(base + i) += qv.getLong(j * sub + i); i += 1 }
+      sums.add((j * ksub + c) * sub, qv, j * sub, sub)
       j += 1
     }
   }
@@ -43,8 +44,7 @@ final class PqGridState(val m: Int, val ksub: Int, val sub: Int) {
   def mergeFrom(o: PqGridState): Unit = {
     var x = 0
     while (x < counts.length) { counts(x) += o.counts(x); x += 1 }
-    x = 0
-    while (x < sums.length) { sums(x) += o.sums(x); x += 1 }
+    sums.merge(o.sums)
   }
 }
 
@@ -55,9 +55,11 @@ final class PqGridState(val m: Int, val ksub: Int, val sub: Int) {
   * round at 40M rows on the data-bound point) and rolled them up with
   * the generic vector-sum aggregate keyed by lab; this expression
   * reads (qv, codes) once per vector into a 9 KB primitive buffer —
-  * the GramAggregate recipe applied to PQ training. Long sums carry
-  * the same exactness bound as the exploded form's VectorSumAggregate
-  * (per-dim |Σx| ≤ rows · scale · max|x|). Output: one array of
+  * the GramAggregate recipe applied to PQ training. An array<bigint>
+  * vector sums exactly, with the same bound as the exploded form's
+  * VectorSumAggregate (per-dim |Σx| ≤ rows · scale · max|x|); an
+  * array<double> vector sums in doubles (`PqIndex.train`, whose means
+  * are Σ/n as `avg` computes them). Output: one array of
   * (lab, n, svec) structs for the m·ksub grid cells in lab order,
   * empty cells carried with n = 0 (the caller filters — the exploded
   * form simply produced no row for them). Rows with a NULL vector or
@@ -74,12 +76,21 @@ case class PqGridSumAggregate(
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("lab", LongType, nullable = false),
     StructField("n", LongType, nullable = false),
-    StructField("svec", ArrayType(LongType, containsNull = false),
+    StructField("svec", ArrayType(elementType, containsNull = false),
       nullable = false))), containsNull = false)
   override def prettyName: String = "graft_pq_grid_sums"
+  override def checkInputDataTypes(): TypeCheckResult =
+    SumBuffer.typeCheck(qvChild.dataType, prettyName)
+
+  private def elementType: DataType = qvChild.dataType match {
+    case ArrayType(t, _) => t
+    case t => t
+  }
+  @transient private lazy val exact: Boolean =
+    SumBuffer.exactFor(qvChild.dataType).get
 
   override def createAggregationBuffer(): PqGridState =
-    new PqGridState(m, ksub, sub)
+    new PqGridState(m, ksub, sub, exact)
 
   override def update(b: PqGridState, input: InternalRow): PqGridState = {
     val qv = qvChild.eval(input)
@@ -98,29 +109,26 @@ case class PqGridSumAggregate(
     val out = new Array[Any](m * ksub)
     var lab = 0
     while (lab < out.length) {
-      val svec = new Array[Long](sub)
-      System.arraycopy(b.sums, lab * sub, svec, 0, sub)
       out(lab) = InternalRow(lab.toLong, b.counts(lab),
-        new GenericArrayData(svec))
+        b.sums.slice(lab * sub, sub))
       lab += 1
     }
     new GenericArrayData(out)
   }
 
   override def serialize(b: PqGridState): Array[Byte] = {
-    val buf = ByteBuffer.allocate((b.counts.length + b.sums.length) * 8)
+    val buf = ByteBuffer.allocate((b.counts.length + b.sums.size) * 8)
     b.counts.foreach(buf.putLong)
-    b.sums.foreach(buf.putLong)
+    b.sums.write(buf)
     buf.array()
   }
 
   override def deserialize(bytes: Array[Byte]): PqGridState = {
     val buf = ByteBuffer.wrap(bytes)
-    val b = new PqGridState(m, ksub, sub)
+    val b = new PqGridState(m, ksub, sub, exact)
     var x = 0
     while (x < b.counts.length) { b.counts(x) = buf.getLong(); x += 1 }
-    x = 0
-    while (x < b.sums.length) { b.sums(x) = buf.getLong(); x += 1 }
+    b.sums.read(buf)
     b
   }
 

@@ -152,23 +152,14 @@ case class Quantize(child: Expression, scale: Int,
   override def inputTypes = Seq(ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
 
-  /** HALF_UP without BigDecimal: `|d| - floor(|d|)` is exact below 2^52,
-    * and larger doubles are integers. NaN and ±Inf reach the cast. */
-  private def toFixed(x: Double): Long = {
-    val d = x * scale
-    val a = Math.abs(d)
-    val t = Math.floor(a)
-    val r = Math.copySign(if (a - t >= 0.5) t + 1 else t, d)
-    if (failOnError) GraftSqlBridge.doubleToLongExact(r) else r.toLong
-  }
-
   override def nullSafeEval(input: Any): Any = {
     val in = input.asInstanceOf[ArrayData]
     val out = new Array[Long](in.numElements())
     var nulls = false
     var i = 0
     while (i < out.length) {
-      if (in.isNullAt(i)) nulls = true else out(i) = toFixed(in.getDouble(i))
+      if (in.isNullAt(i)) nulls = true
+      else out(i) = Quantize.toFixed(in.getDouble(i), scale, failOnError)
       i += 1
     }
     if (!nulls) UnsafeArrayData.fromPrimitiveArray(out)
@@ -178,6 +169,21 @@ case class Quantize(child: Expression, scale: Int,
 
   override protected def withNewChildInternal(newChild: Expression): Quantize =
     copy(child = newChild)
+}
+
+object Quantize {
+  /** One element: HALF_UP without BigDecimal (`|d| - floor(|d|)` is exact
+    * below 2^52, and larger doubles are integers); NaN and ±Inf reach the
+    * cast. Driver code that quantizes collected centroids calls this too,
+    * so its values equal the expression's. */
+  def toFixed(x: Double, scale: Int,
+              failOnError: Boolean = SQLConf.get.ansiEnabled): Long = {
+    val d = x * scale
+    val a = Math.abs(d)
+    val t = Math.floor(a)
+    val r = Math.copySign(if (a - t >= 0.5) t + 1 else t, d)
+    if (failOnError) GraftSqlBridge.doubleToLongExact(r) else r.toLong
+  }
 }
 
 object VectorExpressions {

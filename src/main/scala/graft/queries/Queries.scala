@@ -1600,9 +1600,10 @@ object Queries {
     * arithmetic.
     *
     * Plan shape per round: assignment is ONE map-only projection over
-    * the UNSLICED vector column (all m per-subspace literal argmins
-    * evaluated into a codes array — same candidate expressions as the
-    * oracle, once per vector), and the (n, Σ) grid rides the native
+    * the UNSLICED vector column (all m per-subspace argmins evaluated
+    * into a codes array by native kernels — IntNearestCentroid for the
+    * seed round, PqGridArgmin after — once per vector), and the (n, Σ)
+    * grid rides the native
     * [[graft.plans.PqGridSumAggregate]] (one 9 KB primitive buffer
     * per partition). The previous shape posexploded every vector into
     * m subspace rows and localCheckpointed the 8×-row frame per round
@@ -1630,18 +1631,16 @@ object Queries {
       s"trainedPqBook: seed ids 0..${ksub - 1} must all exist " +
         s"(found ${seeds.length}) — positional seed slices cannot " +
         "degrade to fewer clusters the way the id-keyed oracle does")
-    def sv(j: Int): Column = slice(col("qv"), j * sub + 1, sub)
-    def seedCands(j: Int): Seq[Column] =
-      (0 until ksub).map { cid =>
-        val cv = array(seeds(cid).slice(j * sub, (j + 1) * sub)
-          .map(lit(_)).toIndexedSeq: _*)
-        struct(intL2Sq(sv(j), cv).cast("double").as("dist"),
-          lit(cid.toLong).as("cid"))
-      }
-    // all m per-subspace literal argmins in one projection
-    def assignAll(cands: Int => Seq[Column]): Column =
-      array((0 until m).map(j =>
-        array_min(array(cands(j): _*)).getField("cid")).toIndexedSeq: _*)
+    // the seed round: m per-subspace exact integer argmins in one
+    // projection (IvfIndex.assign's kernel). Ordering by the bigint d2
+    // equals ordering by its double cast while d2 < 2^53, which a
+    // scale-10^4 8-dim slice cannot reach (it needs |x| > 3,000).
+    val seedCodes = array((0 until m).map { j =>
+      graft.plans.CentroidKernels.nearestInt(col("qv"), dim, j * sub,
+        seeds.toSeq.zipWithIndex.map { case (sv, cid) =>
+          (cid.toLong, sv.slice(j * sub, (j + 1) * sub)) })
+        .getField("cid")
+    }: _*)
     def gridSums(codes: Column): Array[(Long, Long, Array[Long])] = {
       import org.apache.spark.sql.GraftSqlBridge
       val agg = GraftSqlBridge.column(
@@ -1664,7 +1663,7 @@ object Queries {
     def roundCodes(sums: Array[(Long, Long, Array[Long])]): Column =
       graft.plans.GridArgmin.pqCodes(col("qv"), sums, m, sub, ksub,
         DefaultScale.toLong)
-    var codes = assignAll(seedCands)
+    var codes = seedCodes
     var sums = gridSums(codes)
     for (_ <- 1 to 2) {
       codes = roundCodes(sums)
@@ -8089,13 +8088,9 @@ object Queries {
     val centArr = seedCentroids(e)
       .select(col("cid").cast("long"), quantize(col("embedding")))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-      .sortBy(_._1)
-    val centCands = centArr.map { case (cid, cv) =>
-      struct(intL2Sq(col("gv"), array(cv.map(lit).toIndexedSeq: _*))
-        .as("d2"), lit(cid).as("cid"))
-    }
     val gAsn = g.withColumn("centroid_id",
-      array_min(array(centCands.toIndexedSeq: _*)).getField("cid"))
+      graft.plans.CentroidKernels.nearestInt(col("gv"),
+        centArr.head._2.length, 0, centArr.toSeq).getField("cid"))
     val candI = gAsn.join(broadcast(probeQ),
         gAsn("centroid_id") === probeQ("pcid") &&
           gAsn("glab") === probeQ("qlab"))

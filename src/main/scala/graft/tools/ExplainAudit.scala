@@ -1,8 +1,9 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
-import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, Cast,
-  LambdaFunction, Round}
+import org.apache.spark.sql.catalyst.expressions.{ArrayMin, ArrayTransform,
+  Cast, CreateArray, CreateNamedStruct, Expression, LambdaFunction, Literal,
+  Round}
 import org.apache.spark.sql.types.LongType
 
 /** Dumps the formatted physical plan of every SparkEntry query and
@@ -20,6 +21,9 @@ import org.apache.spark.sql.types.LongType
   *  - an optimized plan holds a hand-rolled quantize, `transform(v, x =>
   *    round(x * s).cast("long"))` (an interpreted lambda and a BigDecimal
   *    round per element; `VectorFunctions.quantize` is one native loop);
+  *  - an optimized plan holds a hand-rolled argmin, an `array_min` over
+  *    `struct(distance, literal id)` candidates (a Catalyst tree per
+  *    centroid per row; `graft.plans.CentroidKernels` is one loop);
   *  - any query fails to build.
   * Run it per round and commit the output as PLAN_AUDIT_r{N}.txt so
   * plan regressions cannot land silently.
@@ -135,6 +139,23 @@ object ExplainAudit {
     // two-level sweep line: the only unpartitioned window prefix-sums
     // per-HOUR nets — O(#hours) rows, 8760/year by construction.
     "e27_peak_concurrent")
+
+  /** The violation, if `e` is a hand-rolled form of a native kernel:
+    * a quantize `transform(v, x => round(x * s).cast("long"))`, or an
+    * argmin `array_min` over `struct(distance, literal id)` candidates. */
+  def handRolledKernel(e: Expression): Option[String] = e match {
+    case ArrayTransform(_, LambdaFunction(c: Cast, _, _))
+      if c.dataType == LongType && c.child.isInstanceOf[Round] =>
+      Some("hand-rolled quantize (transform with round(_).cast(long)); " +
+        "use VectorFunctions.quantize")
+    case ArrayMin(CreateArray(cands, _)) if cands.nonEmpty && cands.forall {
+        case s: CreateNamedStruct => s.valExprs.exists(_.isInstanceOf[Literal])
+        case _ => false
+      } =>
+      Some("hand-rolled argmin (array_min over literal-candidate structs); " +
+        "use graft.plans.CentroidKernels")
+    case _ => None
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
@@ -258,13 +279,9 @@ object ExplainAudit {
             case _ => ()
           }
         }
-        df.queryExecution.optimizedPlan.foreach(_.expressions.foreach(_.foreach {
-          case ArrayTransform(_, LambdaFunction(c: Cast, _, _))
-            if c.dataType == LongType && c.child.isInstanceOf[Round] =>
-            violations ::= s"$name: hand-rolled quantize (transform with " +
-              "round(_).cast(long)); use VectorFunctions.quantize"
-          case _ => ()
-        }))
+        df.queryExecution.optimizedPlan.foreach(_.expressions.foreach(
+          _.foreach(e => handRolledKernel(e).foreach(v =>
+            violations ::= s"$name: $v"))))
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
         println(plan)
@@ -335,6 +352,7 @@ object ExplainAudit {
       sys.exit(1)
     }
     println("\n[audit] PASS: no cartesians, no unexpected BNLJ, " +
-      "bucketed d9 verified, global windows bounded, no hand-rolled quantize")
+      "bucketed d9 verified, global windows bounded, no hand-rolled " +
+      "quantize or argmin")
   }
 }
