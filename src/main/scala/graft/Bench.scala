@@ -2,23 +2,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
 
-  /** Bench-only keys: persisted-index search variants (build runs once
-    * into /tmp during warm-up, timed rounds measure search alone).
-    * Not in SparkEntry.queries — they share v7/v13's gated math but
-    * exist to split build from search in the recorded numbers. */
-  private def extras
-      : Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = {
-    def idx(dir: String, kind: String) =
-      "/tmp/graft_" + kind + "_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-    Map(
-      "v7_search_persisted" -> ((s, dir) =>
-        queries.Queries.v7SearchPersisted(s, dir, idx(dir, "ivfidx"))),
-      "v13_search_persisted" -> ((s, dir) =>
-        queries.Queries.v13SearchPersisted(s, dir, idx(dir, "pqidx"))),
-      "v57_search_persisted" -> ((s, dir) =>
-        queries.Queries.v57SearchPersisted(s, dir, idx(dir, "graphidx"))))
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
@@ -30,7 +13,7 @@ object Bench {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     // Optional subset filter for iteration (same contract as Verify).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = (SparkEntry.queries ++ extras).filter { case (name, _) =>
+    val selected = SparkEntry.queries.filter { case (name, _) =>
       only.forall(_.contains(name)) }
     // noop sink, not count(): under a count() aggregate Catalyst prunes
     // every projection that doesn't affect row count, so map-only

@@ -118,7 +118,7 @@ object IvfIndex {
   /** Load a persisted index (faiss_utils.py:15-17). The scan is
     * parallelism-ensured: a small index (or one whose files coalesce
     * under maxPartitionBytes) would otherwise run every downstream
-    * map stage on a handful of tasks — measured as v7_search_persisted
+    * map stage on a handful of tasks — measured as v66 (persisted IVF search)
     * benching SLOWER than the full rebuild. No-op on a
     * production-scale multi-split layout. */
   def load(spark: SparkSession, path: String): DataFrame =

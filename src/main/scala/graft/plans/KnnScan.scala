@@ -71,7 +71,9 @@ object KnnScan {
     * into a contiguous `long[Q·D]`; gallery rows stream through in
     * blocks of [[BlockRows]] decoded into a contiguous `long[]`, each
     * block scored against every query in a tight loop into that query's
-    * bounded [[TopKState]]. Only Q·k rows leave the partition. */
+    * bounded [[TopKState]]. Only Q·k rows leave the partition. A null
+    * vector is skipped; a null element inside a vector throws
+    * `IllegalArgumentException` when its row is decoded. */
   private[plans] def scanPartition(
       metric: KnnMetric, k: Int, queries: Array[InternalRow],
       qIdOrd: Int, qVecOrd: Int, gallery: Iterator[InternalRow],
@@ -88,6 +90,7 @@ object KnnScan {
       val v = live(q).getArray(qVecOrd)
       if (v.numElements() != dim) throw new IllegalArgumentException(
         s"vector length mismatch: query vectors have $dim and ${v.numElements()} elements")
+      IntVectorKernel.requireNoNullElement(v, "KnnScan query vector")
       var j = 0
       while (j < dim) { qMat(q * dim + j) = v.getLong(j); j += 1 }
       qNorm(q) = dot(qMat, q * dim, qMat, q * dim, dim)
@@ -106,6 +109,7 @@ object KnnScan {
           val len = v.numElements()
           if (len != dim) throw new IllegalArgumentException(
             s"vector length mismatch: gallery vector has $len elements, query vectors $dim")
+          IntVectorKernel.requireNoNullElement(v, "KnnScan gallery vector")
           if (!r.isNullAt(gIdOrd)) {
             val base = n * dim
             var j = 0

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+import org.apache.spark.unsafe.Platform
 
 /** Native Catalyst expressions for the fixed-point vector kernels — the
   * hot inner loops of every KNN/IVF/near-dup query.
@@ -18,12 +19,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * emit one tight Java loop (`doGenCode`) with zero allocation, which is
   * what you want when the gallery side is 100 TB streaming past a
   * broadcast query set. Semantics are IDENTICAL to the composed form
-  * (exact Long arithmetic), so oracle results are unchanged. Both
-  * vectors must be non-null array<long> with no null elements
-  * (guaranteed by `VectorFunctions.quantize`). Arrays of different
-  * lengths throw an `IllegalArgumentException`: `UnsafeArrayData`'s
-  * bounds check is a JVM assert, off in production, so reading on past
-  * the shorter array would return a number from adjacent memory.
+  * (exact Long arithmetic), so oracle results are unchanged. A null
+  * vector gives null. A null element, or arrays of different lengths,
+  * throw an `IllegalArgumentException`: `getLong` reads a null slot as
+  * 0, and `UnsafeArrayData`'s bounds check is a JVM assert, off in
+  * production, so reading on past the shorter array would return a
+  * number from adjacent memory.
   *
   * [[Quantize]] is `VectorFunctions.quantize` in one loop, bit-identical
   * to the `transform(v, x => round(x * scale).cast("long"))` it replaces
@@ -39,12 +40,15 @@ abstract class IntVectorKernel extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
   override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
 
-  /** Element count of `a`, after checking `b` has as many. */
+  /** Element count of `a`, after checking `b` has as many and neither
+    * holds a null element. */
   protected def length(a: ArrayData, b: ArrayData): Int = {
     val n = a.numElements()
     if (b.numElements() != n) throw new IllegalArgumentException(
       s"$prettyName: array lengths differ: left has $n elements, right has " +
         b.numElements())
+    IntVectorKernel.requireNoNullElement(a, prettyName)
+    IntVectorKernel.requireNoNullElement(b, prettyName)
     n
   }
 
@@ -56,7 +60,37 @@ abstract class IntVectorKernel extends BinaryExpression with ExpectsInputTypes {
        |  throw new IllegalArgumentException("$prettyName: array lengths " +
        |    "differ: left has " + $n + " elements, right has " + $b.numElements());
        |}
+       |graft.plans.IntVectorKernel.requireNoNullElement($a, "$prettyName");
+       |graft.plans.IntVectorKernel.requireNoNullElement($b, "$prettyName");
      """.stripMargin
+}
+
+object IntVectorKernel {
+  /** Throws `IllegalArgumentException` if `v` holds a null element. An
+    * `UnsafeArrayData` (the quantized vectors) is checked one 64-slot
+    * word of its null bitmap at a time, so a kernel pays n/64 loads for
+    * the check, not n. */
+  def requireNoNullElement(v: ArrayData, name: String): Unit = v match {
+    case u: UnsafeArrayData =>
+      // layout: [numElements: 8 bytes][null bitmap: 64-bit words][values]
+      val words = (u.numElements() + 63) / 64
+      var w = 0
+      while (w < words) {
+        val bits = Platform.getLong(u.getBaseObject, u.getBaseOffset + 8L * (w + 1))
+        if (bits != 0) throw nullElement(name,
+          w * 64 + java.lang.Long.numberOfTrailingZeros(bits))
+        w += 1
+      }
+    case _ =>
+      var i = 0
+      while (i < v.numElements()) {
+        if (v.isNullAt(i)) throw nullElement(name, i)
+        i += 1
+      }
+  }
+
+  private def nullElement(name: String, i: Int) =
+    new IllegalArgumentException(s"$name: null element at position $i")
 }
 
 /** Exact integer squared L2 distance: sum_i (a_i - b_i)^2. */

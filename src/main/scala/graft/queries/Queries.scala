@@ -4,7 +4,7 @@ import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 import graft.multimodal.BinaryPipeline
 import graft.operators._
-import graft.sources.Tables
+import graft.sources.{BucketedStore, Store, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -507,9 +507,8 @@ object Queries {
     * not coincidence. Broadcast-sized (64 rows) by contract. */
   private def sqStats(s: SparkSession, d: String)
       : (Array[Long], Array[Long]) = {
-    val table = "graft_sq_stats_" + d.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + graft.sources.BucketedStore.fingerprint(s"$d/embeddings.parquet")
-    val stats = graft.sources.BucketedStore.ensure(s, table, {
+    val table = Store.name("graft_sq_stats", d)
+    val stats = BucketedStore.ensure(s, table, {
       val g = emb(s, d).select(quantize(col("embedding")).as("v"))
       g.select(posexplode(col("v")).as(Seq("i", "x")))
         .groupBy("i").agg(min("x").as("mn"), max("x").as("mx"))
@@ -564,11 +563,9 @@ object Queries {
     val (mns, rngs) = sqStats(s, d)
     val g = emb(s, d).select(col("vec_id").cast("long").as("gid"),
       quantize(col("embedding")).as("v"))
-    val table = "graft_sq8_codes_base_" +
-      d.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + graft.sources.BucketedStore.fingerprint(s"$d/embeddings.parquet")
+    val table = Store.name("graft_sq8_codes_base", d)
     val enc = sqEncodeCol(mns, rngs, levels) _
-    val base = graft.sources.BucketedStore.ensure(s, table,
+    val base = BucketedStore.ensure(s, table,
       g.filter(col("gid") % 4 =!= 0)
         .select(col("gid"), enc(col("v")).as("cv")),
       "gid", numBuckets = 32)
@@ -605,9 +602,8 @@ object Queries {
     * data regenerates. Oracle = v17's SQL verbatim — the gate proves
     * code persistence is bit-transparent. */
   def v86Sq8Persisted(s: SparkSession, d: String): DataFrame = {
-    val table = "graft_sq8_codes_" + d.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + graft.sources.BucketedStore.fingerprint(s"$d/embeddings.parquet")
-    val coded = graft.sources.BucketedStore.ensure(s, table,
+    val table = Store.name("graft_sq8_codes", d)
+    val coded = BucketedStore.ensure(s, table,
       sqCodes(s, d, levels = 255L), "gid", numBuckets = 32)
     KnnJoin.knnL2Pre(coded, coded.filter(col("gid") % 100 === 0),
       "gid", "cv", "gid", k = 5, scale = 1)
@@ -633,125 +629,6 @@ object Queries {
     val codes = PqIndex.encode(g, "id", "qemb", dim, m, book)
       .join(IvfIndex.assign(g, cents, "id", "qemb", "cid", scale = 1)
         .select(col("id"), col("centroid_id")), Seq("id"))
-    val queries = g.filter(col("id") % 100 === 0)
-    IvfPq.search(codes, cents, queries, "cid", "id", "qemb",
-      dim, m, book, k = 5, nprobe = 2, scale = 1)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(DefaultScale.toDouble)).as("dist"))
-  }
-
-  // ---------- bench-only persisted-index variants ----------
-  // (not gated: same math as v7/v13, which ARE gated — these exist so
-  // the data-bound bench can record build and search separately; a
-  // production index is written once and probed many times, so folding
-  // the rebuild into every search measurement overstates search cost)
-
-  /** True iff `path` holds a COMPLETE persisted index: the Hadoop
-    * committer writes the `_SUCCESS` marker only at job commit, so a
-    * crash mid-write leaves a partial directory this check rejects —
-    * the caller then rebuilds with mode("overwrite") instead of
-    * silently serving a truncated index. */
-  private def persistedComplete(path: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS"))
-
-  private val persistLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-
-  /** Recursively delete every /tmp store whose directory name starts
-    * with `prefix` — the reclaim hook a store-layout tag bump calls
-    * from inside the NEW store's build (so orphaned old-layout dirs
-    * don't accrete on long-lived hosts; ADVICE r10). Best-effort: a
-    * vanished file mid-walk is ignored, /tmp being missing is not an
-    * error. */
-  private def deleteStaleStores(prefix: String): Unit = {
-    val tmp = java.nio.file.Paths.get("/tmp")
-    if (!java.nio.file.Files.isDirectory(tmp)) return
-    val stream = java.nio.file.Files.list(tmp)
-    try {
-      stream.iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith(prefix))
-        .foreach { root =>
-          val walk = java.nio.file.Files.walk(root)
-          try {
-            walk.iterator().asScala.toSeq.reverseIterator.foreach { p =>
-              try java.nio.file.Files.deleteIfExists(p)
-              catch { case _: java.io.IOException => () }
-            }
-          } finally walk.close()
-        }
-    } finally stream.close()
-  }
-
-  /** Check-then-build under a per-path JVM lock (BucketedStore.ensure's
-    * contract for /tmp parquet stores): several gated keys can share
-    * one persisted index (v90/v97/v98 the trained-IVF store, v87/v89
-    * the trained-PQ store) and Verify runs them CONCURRENTLY — without
-    * the lock, every sharer passes the !persistedComplete check and
-    * races its mode("overwrite") job against the others' writes and
-    * reads (observed: a corrupted store carrying _SUCCESS). The lock
-    * serializes the first build; after _SUCCESS exists nobody writes
-    * again, so post-build readers need no lock.
-    *
-    * CROSS-PROCESS guard (ADVICE r10): the in-JVM lock cannot stop a
-    * second PROCESS (a bench run alongside verify) from racing its
-    * mode("overwrite") build against this one's, so the build also
-    * holds an OS-level advisory lock on `$path.lock` (FileChannel
-    * .lock blocks until the peer's build — and its _SUCCESS commit —
-    * finishes, then the re-check sees the completed store and skips).
-    * The JVM lock stays: two threads of ONE process hitting
-    * FileChannel.lock on the same file would throw
-    * OverlappingFileLockException instead of queuing. */
-  private def ensurePersisted(path: String)(build: => Unit): Unit = {
-    val lock = persistLocks.getOrElseUpdate(path, new Object)
-    lock.synchronized {
-      if (!persistedComplete(path)) {
-        val ch = java.nio.channels.FileChannel.open(
-          java.nio.file.Paths.get(path + ".lock"),
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.WRITE)
-        try {
-          val fl = ch.lock()
-          try { if (!persistedComplete(path)) build }
-          finally fl.release()
-        } finally ch.close()
-      }
-    }
-  }
-
-  /** v7's probe search against a PERSISTED centroid-partitioned index:
-    * built (and saved) only if `path` is absent, then search reads the
-    * partitioned layout — partition pruning does the nprobe/nlist work
-    * a rebuilt in-memory assignment can't show. */
-  def v7SearchPersisted(s: SparkSession, d: String, path: String): DataFrame = {
-    val e = emb(s, d)
-    val cents = seedCentroids(e)
-    ensurePersisted(path) {
-      IvfIndex.save(
-        IvfIndex.assign(e, cents, "vec_id", "embedding", "cid"), path)
-    }
-    IvfIndex.search(IvfIndex.load(s, path), cents, queryVecs(e),
-      "vec_id", "embedding", "cid", "vec_id", k = 3, nprobe = 2)
-  }
-
-  /** v13's IVFPQ search against PERSISTED codes (partitioned by coarse
-    * centroid): encode+assign runs once into `path`; the timed search
-    * scans only probed partitions of 9-byte code rows. */
-  def v13SearchPersisted(s: SparkSession, d: String, path: String): DataFrame = {
-    val m = 8; val dim = 64; val ksub = 16
-    val e = emb(s, d)
-    val g = e.select(col("vec_id").cast("long").as("id"),
-      transform(quantize(col("embedding")), x => x.cast("double"))
-        .as("qemb"))
-    val book = PqIndex.seededBook(g, "id", "qemb", dim, m, ksub)
-    val cents = g.filter(col("id") < 10)
-      .select(col("id").as("cid"), col("qemb"))
-    ensurePersisted(path) {
-      PqIndex.encode(g, "id", "qemb", dim, m, book)
-        .join(IvfIndex.assign(g, cents, "id", "qemb", "cid", scale = 1)
-          .select(col("id"), col("centroid_id")), Seq("id"))
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(path)
-    }
-    val codes = Tables.ensureParallelism(s.read.parquet(path), Some(path))
     val queries = g.filter(col("id") % 100 === 0)
     IvfPq.search(codes, cents, queries, "cid", "id", "qemb",
       dim, m, book, k = 5, nprobe = 2, scale = 1)
@@ -1069,11 +946,8 @@ object Queries {
     * (O(nlist·dim)) by contract. */
   private def trainedCentsStored(s: SparkSession, d: String)
       : Array[(Long, Long, Array[Long])] = {
-    val safe = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val fp = graft.sources.BucketedStore
-      .fingerprint(s"$d/embeddings.parquet")
-    val centsDf = graft.sources.BucketedStore.ensure(s,
-      s"graft_ivf_tcents_${safe}_$fp", {
+    val centsDf = BucketedStore.ensure(s,
+      Store.name("graft_ivf_tcents", d), {
         import s.implicits._
         trainedCoarseSums(s, d).toIndexedSeq
           .map { case (lab, n, sv) => (lab, n, sv.toSeq) }
@@ -1086,9 +960,6 @@ object Queries {
 
   private def trainedIvfStore(s: SparkSession, d: String)
       : (DataFrame, DataFrame, Array[(Long, Long, Array[Long])]) = {
-    val safe = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val fp = graft.sources.BucketedStore
-      .fingerprint(s"$d/embeddings.parquet")
     val cs = trainedCentsStored(s, d)
     val g = emb(s, d).select(col("vec_id").cast("long").as("id"),
       quantize(col("embedding")).as("qv"))
@@ -1096,19 +967,19 @@ object Queries {
     // (the production filtered-ANN layout: v98's predicate pushes into
     // the partition-pruned scan instead of joining back to the source
     // table). Path tag v2: the pre-round-10 layout lacked `label`.
-    val path = s"/tmp/graft_tivfidx2_${safe}_$fp"
-    ensurePersisted(path) {
+    val path = Store.name("/tmp/graft_tivfidx2", d)
+    Store.ensurePath(path) { tmp =>
       // a tag bump strands the previous layout's stores (ADVICE r10):
       // reclaim every v1-tag dir for this corpus when the v2 store is
       // first built — nothing reads the old tag after this release.
       // ("graft_tivfidx_" cannot match the v2 tag "graft_tivfidx2_".)
-      deleteStaleStores(s"graft_tivfidx_${safe}_")
+      Store.deleteStaleStores("graft_tivfidx", d)
       emb(s, d).select(col("vec_id").cast("long").as("id"),
           quantize(col("embedding")).as("qv"),
           col("label").cast("long").as("label"))
         .withColumn("c", graft.plans.GridArgmin.nearestLab(col("qv"), cs,
           DefaultScale.toLong))
-        .write.mode("overwrite").partitionBy("c").parquet(path)
+        .write.mode("overwrite").partitionBy("c").parquet(tmp)
     }
     val added = Tables.ensureParallelism(s.read.parquet(path), Some(path))
       .select(col("id"), col("qv"), col("label"),
@@ -1176,20 +1047,17 @@ object Queries {
     * snapshot costs one O(segment) assignment job, never a store
     * rewrite. */
   def v112TrainedSegmentServe(s: SparkSession, d: String): DataFrame = {
-    val safe = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val fp = graft.sources.BucketedStore
-      .fingerprint(s"$d/embeddings.parquet")
     val cs = trainedCentsStored(s, d)
     def segment(par: Int): DataFrame = {
-      val path = s"/tmp/graft_tivfseg${par}_${safe}_$fp"
-      ensurePersisted(path) {
+      val path = Store.name(s"/tmp/graft_tivfseg$par", d)
+      Store.ensurePath(path) { tmp =>
         emb(s, d).filter(col("vec_id") % 2 === par)
           .select(col("vec_id").cast("long").as("id"),
             quantize(col("embedding")).as("qv"),
             col("label").cast("long").as("label"))
           .withColumn("c", graft.plans.GridArgmin.nearestLab(col("qv"),
             cs, DefaultScale.toLong))
-          .write.mode("overwrite").partitionBy("c").parquet(path)
+          .write.mode("overwrite").partitionBy("c").parquet(tmp)
       }
       Tables.ensureParallelism(s.read.parquet(path), Some(path))
         .select(col("id"), col("qv"), col("c").cast("long").as("c"))
@@ -1330,11 +1198,8 @@ object Queries {
   private def trainedIvfpqArtifacts(s: SparkSession, d: String)
       : (DataFrame, Seq[PqIndex.Codebook], DataFrame) = {
     val m = 8; val dim = 64; val ksub = 16
-    val safe = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val fp = graft.sources.BucketedStore
-      .fingerprint(s"$d/embeddings.parquet")
-    val centsDf = graft.sources.BucketedStore.ensure(s,
-      s"graft_ivfpq_tcents_${safe}_$fp", {
+    val centsDf = BucketedStore.ensure(s,
+      Store.name("graft_ivfpq_tcents", d), {
         import s.implicits._
         trainedCoarseSums(s, d).map { case (lab, n, svec) =>
           (lab, svec.toIndexedSeq.map(si => math.floor(si.toDouble / n)))
@@ -1343,8 +1208,8 @@ object Queries {
     val g = emb(s, d).select(col("vec_id").cast("long").as("id"),
       transform(quantize(col("embedding")), x => x.cast("double"))
         .as("qemb"))
-    val bookDf = graft.sources.BucketedStore.ensure(s,
-      s"graft_ivfpq_tbook_${safe}_$fp", {
+    val bookDf = BucketedStore.ensure(s,
+      Store.name("graft_ivfpq_tbook", d), {
         import s.implicits._
         PqIndex.seededBook(
           IvfPq.residuals(g, centsDf, "id", "qemb", "cid", scale = 1),
@@ -1367,12 +1232,9 @@ object Queries {
   private[graft] def upsertedIvfpqCodes(s: SparkSession, d: String)
       : (DataFrame, DataFrame, Seq[PqIndex.Codebook], DataFrame) = {
     val m = 8; val dim = 64
-    val safe = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val fp = graft.sources.BucketedStore
-      .fingerprint(s"$d/embeddings.parquet")
     val (centsDf, book, g) = trainedIvfpqArtifacts(s, d)
-    val base = graft.sources.BucketedStore.ensure(s,
-      s"graft_ivfpq_tcodes_base_${safe}_$fp",
+    val base = BucketedStore.ensure(s,
+      Store.name("graft_ivfpq_tcodes_base", d),
       IvfPq.encodeResidual(g.filter(col("id") % 4 =!= 0), centsDf,
         "id", "qemb", "cid", dim, m, book, scale = 1),
       "id", numBuckets = 32)
@@ -1417,17 +1279,14 @@ object Queries {
     * rewrite. */
   def v116IvfpqSegmentServe(s: SparkSession, d: String): DataFrame = {
     val m = 8; val dim = 64
-    val safe = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val fp = graft.sources.BucketedStore
-      .fingerprint(s"$d/embeddings.parquet")
     val (centsDf, book, g) = trainedIvfpqArtifacts(s, d)
     def segment(par: Int): DataFrame = {
-      val path = s"/tmp/graft_tpqseg${par}_${safe}_$fp"
-      ensurePersisted(path) {
+      val path = Store.name(s"/tmp/graft_tpqseg$par", d)
+      Store.ensurePath(path) { tmp =>
         IvfPq.encodeResidual(g.filter(col("id") % 2 === par), centsDf,
             "id", "qemb", "cid", dim, m, book, scale = 1)
           .write.mode("overwrite").partitionBy("centroid_id")
-          .parquet(path)
+          .parquet(tmp)
       }
       Tables.ensureParallelism(s.read.parquet(path), Some(path))
     }
@@ -1458,14 +1317,11 @@ object Queries {
       centsDf: DataFrame, book: Seq[PqIndex.Codebook], g: DataFrame)
       : DataFrame = {
     val m = 8; val dim = 64
-    val safe = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val fp = graft.sources.BucketedStore
-      .fingerprint(s"$d/embeddings.parquet")
-    val path = s"/tmp/graft_tpqidx_${safe}_$fp"
-    ensurePersisted(path) {
+    val path = Store.name("/tmp/graft_tpqidx", d)
+    Store.ensurePath(path) { tmp =>
       IvfPq.encodeResidual(g, centsDf, "id", "qemb", "cid",
           dim, m, book, scale = 1)
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(path)
+        .write.mode("overwrite").partitionBy("centroid_id").parquet(tmp)
     }
     Tables.ensureParallelism(s.read.parquet(path), Some(path))
   }
@@ -1482,9 +1338,6 @@ object Queries {
       : (DataFrame, DataFrame, DataFrame, DataFrame,
          Seq[PqIndex.Codebook], DataFrame) = {
     val m = 8; val dim = 64
-    val safe = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val fp = graft.sources.BucketedStore
-      .fingerprint(s"$d/embeddings.parquet")
     val (centsDf, book, g) = trainedIvfpqArtifacts(s, d)
     val codes4 = trainedIvfpqCodeStore(s, d, centsDf, book, g)
     // warm round: exact integer (n, Σ) per list over the STORED
@@ -1513,14 +1366,14 @@ object Queries {
     val joined = codes4.join(asn5, "id")
     val migIds = joined.filter(col("c5") =!= col("centroid_id"))
       .select(col("id"))
-    val path5 = s"/tmp/graft_tpqretr_${safe}_$fp"
-    ensurePersisted(path5) {
+    val path5 = Store.name("/tmp/graft_tpqretr", d)
+    Store.ensurePath(path5) { tmp =>
       val kept = joined.filter(col("c5") === col("centroid_id"))
         .select(col("id"), col("codes"), col("centroid_id"))
       val reenc = IvfPq.encodeResidual(g.join(migIds, "id"), tc5,
         "id", "qemb", "cid", dim, m, book, scale = 1)
       kept.unionByName(reenc)
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(path5)
+        .write.mode("overwrite").partitionBy("centroid_id").parquet(tmp)
     }
     val mixed = Tables.ensureParallelism(s.read.parquet(path5),
       Some(path5))
@@ -1700,11 +1553,8 @@ object Queries {
     * can only come from the code-store path under test. */
   private def trainedPqBookStore(s: SparkSession, d: String)
       : (Seq[PqIndex.Codebook], DataFrame) = {
-    val safe = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val fp = graft.sources.BucketedStore
-      .fingerprint(s"$d/embeddings.parquet")
-    val bookDf = graft.sources.BucketedStore.ensure(s,
-      s"graft_pq_tbook_${safe}_$fp", {
+    val bookDf = BucketedStore.ensure(s,
+      Store.name("graft_pq_tbook", d), {
         import s.implicits._
         trainedPqBook(s, d).toDF("sub", "cid", "centroid")
       }, "sub", numBuckets = 4)
@@ -1731,13 +1581,10 @@ object Queries {
     * table; the ADC scan streams the union's 8-byte code rows. */
   def v117PqSegmentServe(s: SparkSession, d: String): DataFrame = {
     val m = 8; val dim = 64
-    val safe = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val fp = graft.sources.BucketedStore
-      .fingerprint(s"$d/embeddings.parquet")
     val (book, gd) = trainedPqBookStore(s, d)
     def segment(par: Int): DataFrame =
-      graft.sources.BucketedStore.ensure(s,
-        s"graft_pq_tcodes_seg${par}_${safe}_$fp",
+      BucketedStore.ensure(s,
+        Store.name(s"graft_pq_tcodes_seg$par", d),
         PqIndex.encode(gd.filter(col("id") % 2 === par), "id", "qemb",
           dim, m, book),
         "id", numBuckets = 32)
@@ -1750,12 +1597,9 @@ object Queries {
 
   def v87TrainedPqPersisted(s: SparkSession, d: String): DataFrame = {
     val m = 8; val dim = 64
-    val safe = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val fp = graft.sources.BucketedStore
-      .fingerprint(s"$d/embeddings.parquet")
     val (book, gd) = trainedPqBookStore(s, d)
-    val codes = graft.sources.BucketedStore.ensure(s,
-      s"graft_pq_tcodes_${safe}_$fp",
+    val codes = BucketedStore.ensure(s,
+      Store.name("graft_pq_tcodes", d),
       PqIndex.encode(gd, "id", "qemb", dim, m, book),
       "id", numBuckets = 32)
     PqIndex.searchAdc(codes, gd.filter(col("id") % 100 === 0), "id",
@@ -1777,12 +1621,9 @@ object Queries {
   private[graft] def upsertedPqCodes(s: SparkSession, d: String)
       : (DataFrame, Seq[PqIndex.Codebook], DataFrame) = {
     val m = 8; val dim = 64
-    val safe = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val fp = graft.sources.BucketedStore
-      .fingerprint(s"$d/embeddings.parquet")
     val (book, gd) = trainedPqBookStore(s, d)
-    val base = graft.sources.BucketedStore.ensure(s,
-      s"graft_pq_tcodes_base_${safe}_$fp",
+    val base = BucketedStore.ensure(s,
+      Store.name("graft_pq_tcodes_base", d),
       PqIndex.encode(gd.filter(col("id") % 4 =!= 0), "id", "qemb",
         dim, m, book),
       "id", numBuckets = 32)
@@ -1961,11 +1802,8 @@ object Queries {
     * (the compactedIvfStorePath convention, ADVICE r10). */
   private[graft] def codeCompactionPaths(d: String, tag: String)
       : (String, String) = {
-    val safe = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val fp = graft.sources.BucketedStore
-      .fingerprint(s"$d/embeddings.parquet")
-    (s"/tmp/graft_${tag}_src_${safe}_$fp",
-      s"/tmp/graft_${tag}_cmp_${safe}_$fp")
+    (Store.name(s"/tmp/graft_${tag}_src", d),
+      Store.name(s"/tmp/graft_${tag}_cmp", d))
   }
 
   /** Persist a shard-carrying code frame (id, …, centroid_id) into a
@@ -1977,19 +1815,19 @@ object Queries {
     * resident dead fraction is ≤ 12.5 % BY CONSTRUCTION — the bound
     * v106/v109/v110's broadcast(tombstone) serve hints assume is no
     * longer an assumption but the postcondition of a gated operator.
-    * Build-once semantics via [[ensurePersisted]] on both layouts;
+    * Build-once semantics via [[Store.ensurePath]] on both layouts;
     * compaction cost scales with the flagged fraction, never the
     * store size (faiss `remove_ids` rewrite, faiss_utils.py:11-17,
     * executed only where the rent is due). */
   private def compactedCodeStore(s: SparkSession, d: String, tag: String,
                                  sharded: => DataFrame): DataFrame = {
     val (srcPath, cmpPath) = codeCompactionPaths(d, tag)
-    ensurePersisted(srcPath) {
+    Store.ensurePath(srcPath) { tmp =>
       sharded.write.mode("overwrite").partitionBy("centroid_id")
-        .parquet(srcPath)
+        .parquet(tmp)
     }
-    ensurePersisted(cmpPath) {
-      IvfIndex.compact(s, srcPath, cmpPath, col("id") % 7 === 0)
+    Store.ensurePath(cmpPath) { tmp =>
+      IvfIndex.compact(s, srcPath, tmp, col("id") % 7 === 0)
     }
     IvfIndex.load(s, cmpPath)
   }
@@ -2727,9 +2565,8 @@ object Queries {
     val cents = seedCentroids(e)
     // table name carries a data fingerprint: a regenerated-in-place
     // embeddings.parquet mints a new table instead of a stale probe
-    val table = "graft_ivf_idx_" + d.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + graft.sources.BucketedStore.fingerprint(s"$d/embeddings.parquet")
-    val base = graft.sources.BucketedStore.ensure(s, table,
+    val table = Store.name("graft_ivf_idx", d)
+    val base = BucketedStore.ensure(s, table,
       IvfIndex.assign(e.filter(col("vec_id") % 4 =!= 0), cents,
         "vec_id", "embedding", "cid")
         .select(col("id"), col("centroid_id")),
@@ -3011,9 +2848,8 @@ object Queries {
     // (ADVICE r11 — the bound check alone doesn't cover the scan)
     require((BigInt(64) * (BigInt(levels) * rngs.max).pow(2)).isValidLong,
       s"v101 code-space L2 can overflow Long: maxRng=${rngs.max}")
-    val table = "graft_sq8_codes_" + d.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + graft.sources.BucketedStore.fingerprint(s"$d/embeddings.parquet")
-    val coded = graft.sources.BucketedStore.ensure(s, table,
+    val table = Store.name("graft_sq8_codes", d)
+    val coded = BucketedStore.ensure(s, table,
       sqCodes(s, d, levels = levels), "gid", numBuckets = 32)
     val rgLit = array(rngs.map(lit(_)).toIndexedSeq: _*)
     val scaled = coded.select(col("gid"),
@@ -3208,9 +3044,8 @@ object Queries {
     * table name re-mints the assignment when documents.parquet
     * changes. */
   private def persistedDupLabels(s: SparkSession, d: String): DataFrame = {
-    val table = "graft_dup_clusters_" + d.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + graft.sources.BucketedStore.fingerprint(s"$d/documents.parquet")
-    graft.sources.BucketedStore.ensure(s, table,
+    val table = Store.name("graft_dup_clusters", d, "documents.parquet")
+    BucketedStore.ensure(s, table,
       Clustering.connectedComponents(
         Dedup.simhashDupEdges(docs(s, d), "doc_id", "text"), "a_id", "b_id",
         docs(s, d).select(col("doc_id")), "doc_id"),
@@ -3312,9 +3147,8 @@ object Queries {
   def d9IncrementalDedup(s: SparkSession, d: String): DataFrame = {
     val all = docs(s, d)
     // fingerprint suffix: regenerated documents.parquet ⇒ fresh index
-    val table = "graft_seen_idx_" + d.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + graft.sources.BucketedStore.fingerprint(s"$d/documents.parquet")
-    val seen = graft.sources.BucketedStore.ensure(s, table,
+    val table = Store.name("graft_seen_idx", d, "documents.parquet")
+    val seen = BucketedStore.ensure(s, table,
       all.filter(col("doc_id") % 4 =!= 0)
         .select(md5(col("text")).as("text_hash")),
       "text_hash", numBuckets = 32)
@@ -6261,49 +6095,6 @@ object Queries {
         when(col("exact_rnk").isNotNull, 1L).otherwise(0L).as("in_top5"))
   }
 
-  /** v57 against a PERSISTED edge list (bench-only, the v7/v13
-    * persisted-search pattern): the KNN graph is built ONCE and saved;
-    * timed runs measure the walk alone. This is the deployment shape —
-    * a graph index is built per snapshot and amortized over every
-    * query batch, so the per-query cost is the O(steps·Q·k) walk, not
-    * the O(N·k) graph build the data-bound bench otherwise charges to
-    * every v5x key. */
-  def v57SearchPersisted(s: SparkSession, d: String, path: String)
-      : DataFrame = {
-    val v = bucketedVecs(s, d)
-    val vec = v.select(col("id"), col("qv"))
-    ensurePersisted(path) {
-      knnGraphRanked(v).select(col("src_id"), col("dst_id"))
-        .write.mode("overwrite").parquet(path)
-    }
-    val edges = s.read.parquet(path)
-    val q = vec.filter(col("id") % 100 === 0)
-      .select(col("id").as("query_id"), col("qv").as("query_v"))
-    val entry = vec.agg(min("id").as("cur"))
-    var cur = q.select(col("query_id")).crossJoin(entry)
-    for (step <- 1 to 3) {
-      val cand = cur.select(col("query_id"), col("cur").as("nid"))
-        .unionAll(cur.join(edges, col("cur") === col("src_id"))
-          .select(col("query_id"), col("dst_id").as("nid")))
-      cur = cand
-        .join(vec.select(col("id").as("nid"), col("qv").as("nv")), "nid")
-        .join(q, "query_id")
-        .select(col("query_id"), col("nid"),
-          intL2Sq(col("nv"), col("query_v")).cast("double").as("d2"))
-        .groupBy("query_id")
-        .agg(min(struct(col("d2"), col("nid"))).as("m"))
-        .select(col("query_id"), col("m.nid").as("cur"))
-      // r14: one mid-loop checkpoint caps the 2^3 plan fan-out
-      // (coarseDescentLoop's rationale).
-      if (step == 2) cur = cur.localCheckpoint(false)
-    }
-    cur.join(vec.select(col("id").as("cur"), col("qv").as("nv")), "cur")
-      .join(q, "query_id")
-      .select(col("query_id"), col("cur").as("node_id"),
-        distFromIntSq(intL2Sq(col("nv"), col("query_v")).cast("double"))
-          .as("dist"))
-  }
-
   /** Market-basket pair mining — parts co-ordered in the same order,
     * top-10 by support: the association-rule primitive (the
     * recommendation seed every retail stack computes). Scale shape:
@@ -6399,9 +6190,8 @@ object Queries {
     val base = all.filter(col("doc_id") % 4 =!= 0)
     val batch = all.filter(col("doc_id") % 4 === 0)
     // fingerprint suffix: regenerated documents.parquet ⇒ fresh index
-    val table = "graft_band_idx_" + d.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + graft.sources.BucketedStore.fingerprint(s"$d/documents.parquet")
-    val seenBands = graft.sources.BucketedStore.ensure(s, table,
+    val table = Store.name("graft_band_idx", d, "documents.parquet")
+    val seenBands = BucketedStore.ensure(s, table,
       Dedup.bandIndex(base, "doc_id", "text"), "band_hash",
       numBuckets = 32)
     Dedup.incrementalNearDup(batch, "doc_id", "text", seenBands, base)
@@ -6569,9 +6359,8 @@ object Queries {
     * a fresh edge list. v28/v29/v57 keep their explicit rebuild shape:
     * they gate the BUILD semantics themselves. */
   private def persistedKnnEdges(s: SparkSession, d: String): DataFrame = {
-    val table = "graft_knn_edges_" + d.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + graft.sources.BucketedStore.fingerprint(s"$d/embeddings.parquet")
-    graft.sources.BucketedStore.ensure(s, table,
+    val table = Store.name("graft_knn_edges", d)
+    BucketedStore.ensure(s, table,
       knnGraphRanked(bucketedVecs(s, d))
         .select(col("src_id"), col("dst_id")),
       "src_id", numBuckets = 32)
@@ -6697,9 +6486,8 @@ object Queries {
     * the CONTRACT — portable hash, persisted layer, walk-then-descend
     * — is what scales). */
   private def persistedCoarseEdges(s: SparkSession, d: String): DataFrame = {
-    val table = "graft_coarse_edges_" + d.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + graft.sources.BucketedStore.fingerprint(s"$d/embeddings.parquet")
-    graft.sources.BucketedStore.ensure(s, table,
+    val table = Store.name("graft_coarse_edges", d)
+    BucketedStore.ensure(s, table,
       knnGraphRanked(bucketedVecs(s, d)
           .filter(Sampling.portableHash(col("id")) % 5 === 0))
         .select(col("src_id"), col("dst_id")),
@@ -6797,10 +6585,8 @@ object Queries {
     * which is why a log-depth hierarchy is affordable at 100 TB. */
   private def persistedCoarse2Edges(s: SparkSession, d: String)
       : DataFrame = {
-    val table = "graft_coarse2_edges_" +
-      d.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + graft.sources.BucketedStore.fingerprint(s"$d/embeddings.parquet")
-    graft.sources.BucketedStore.ensure(s, table,
+    val table = Store.name("graft_coarse2_edges", d)
+    BucketedStore.ensure(s, table,
       knnGraphRanked(bucketedVecs(s, d)
           .filter(Sampling.portableHash(col("id")) % 25 === 0))
         .select(col("src_id"), col("dst_id")),
@@ -6997,11 +6783,8 @@ object Queries {
     * (entry = min alive id; queries stay the full gallery's % 100
     * set — deleted vectors may still arrive as queries). */
   def v119GraphCompaction(s: SparkSession, d: String): DataFrame = {
-    val safe = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val fp = graft.sources.BucketedStore
-      .fingerprint(s"$d/embeddings.parquet")
-    val edges = graft.sources.BucketedStore.ensure(s,
-      s"graft_knn_edges_cpt_${safe}_$fp",
+    val edges = BucketedStore.ensure(s,
+      Store.name("graft_knn_edges_cpt", d),
       compactedGraphEdges(s, d), "src_id", numBuckets = 32)
     val v = bucketedVecs(s, d)
     val vec = v.select(col("id"), col("qv"))
@@ -7393,10 +7176,8 @@ object Queries {
     val base = layer.filter(col("id") % 4 =!= 0)
     val batch = layer.filter(col("id") % 4 === 0)
     // fingerprint suffix: regenerated embeddings ⇒ fresh edge store
-    val table = s"graft_${tag}_base_edges_" +
-      d.replaceAll("[^a-zA-Z0-9]", "_") +
-      "_" + graft.sources.BucketedStore.fingerprint(s"$d/embeddings.parquet")
-    val stored = graft.sources.BucketedStore.ensure(s, table,
+    val table = Store.name(s"graft_${tag}_base_edges", d)
+    val stored = BucketedStore.ensure(s, table,
       knnGraphRanked(base).select(col("src_id"), col("dst_id"), col("d2")),
       "src_id", numBuckets = 32)
     // batch-side edges: batch sources against ALL same-bucket mates
@@ -7588,20 +7369,46 @@ object Queries {
     * freshness-safe serving. Identical math to v7 (the oracle IS v7's
     * SQL): the gate checks that the persisted layout round-trips the
     * index bit-exactly. */
-  def v66IvfSearchPersisted(s: SparkSession, d: String): DataFrame =
-    v7SearchPersisted(s, d,
-      "/tmp/graft_ivfidx_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-        graft.sources.BucketedStore.fingerprint(s"$d/embeddings.parquet"))
+  def v66IvfSearchPersisted(s: SparkSession, d: String): DataFrame = {
+    val path = Store.name("/tmp/graft_ivfidx", d)
+    val e = emb(s, d)
+    val cents = seedCentroids(e)
+    Store.ensurePath(path) { tmp =>
+      IvfIndex.save(
+        IvfIndex.assign(e, cents, "vec_id", "embedding", "cid"), tmp)
+    }
+    IvfIndex.search(IvfIndex.load(s, path), cents, queryVecs(e),
+      "vec_id", "embedding", "cid", "vec_id", k = 3, nprobe = 2)
+  }
 
   /** v13's IVFPQ search served from PERSISTED codes (9-byte rows
     * partitioned by coarse centroid), gated — the compressed-index
     * twin of v66: at 100 TB the codes table is ~1/60th the vector
     * bytes and the probe scans 2/nlist of THAT. Oracle = v13's SQL
     * verbatim. */
-  def v67IvfpqSearchPersisted(s: SparkSession, d: String): DataFrame =
-    v13SearchPersisted(s, d,
-      "/tmp/graft_pqidx_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-        graft.sources.BucketedStore.fingerprint(s"$d/embeddings.parquet"))
+  def v67IvfpqSearchPersisted(s: SparkSession, d: String): DataFrame = {
+    val path = Store.name("/tmp/graft_pqidx", d)
+    val m = 8; val dim = 64; val ksub = 16
+    val e = emb(s, d)
+    val g = e.select(col("vec_id").cast("long").as("id"),
+      transform(quantize(col("embedding")), x => x.cast("double"))
+        .as("qemb"))
+    val book = PqIndex.seededBook(g, "id", "qemb", dim, m, ksub)
+    val cents = g.filter(col("id") < 10)
+      .select(col("id").as("cid"), col("qemb"))
+    Store.ensurePath(path) { tmp =>
+      PqIndex.encode(g, "id", "qemb", dim, m, book)
+        .join(IvfIndex.assign(g, cents, "id", "qemb", "cid", scale = 1)
+          .select(col("id"), col("centroid_id")), Seq("id"))
+        .write.mode("overwrite").partitionBy("centroid_id").parquet(tmp)
+    }
+    val codes = Tables.ensureParallelism(s.read.parquet(path), Some(path))
+    val queries = g.filter(col("id") % 100 === 0)
+    IvfPq.search(codes, cents, queries, "cid", "id", "qemb",
+      dim, m, book, k = 5, nprobe = 2, scale = 1)
+      .select(col("query_id"), col("rnk"), col("neighbor_id"),
+        (col("dist") / lit(DefaultScale.toDouble)).as("dist"))
+  }
 
   /** OPQ-path retrieval quality — recall@5 of the pre-rotated PQ
     * search (v31) vs the exact scan, the last missing row of the
@@ -8140,13 +7947,11 @@ object Queries {
   def v77IndexMergeServe(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
     val cents = seedCentroids(e)
-    val fp = graft.sources.BucketedStore.fingerprint(s"$d/embeddings.parquet")
-    val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
     def half(par: Int): String = {
-      val path = s"/tmp/graft_ivfidx_h${par}_${tag}_$fp"
-      ensurePersisted(path) {
+      val path = Store.name(s"/tmp/graft_ivfidx_h$par", d)
+      Store.ensurePath(path) { tmp =>
         IvfIndex.save(IvfIndex.assign(e.filter(col("vec_id") % 2 === par),
-          cents, "vec_id", "embedding", "cid"), path)
+          cents, "vec_id", "embedding", "cid"), tmp)
       }
       path
     }
@@ -8272,26 +8077,20 @@ object Queries {
     * once instead of silently desynchronizing a duplicated path
     * string (ADVICE r10; the tivfidx→tivfidx2 bump is the precedent). */
   def compactedIvfStorePath(d: String): String = {
-    val safe = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val fp = graft.sources.BucketedStore
-      .fingerprint(s"$d/embeddings.parquet")
-    s"/tmp/graft_cmpidx_${safe}_$fp"
+    Store.name("/tmp/graft_cmpidx", d)
   }
 
   def v95CompactionExec(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
-    val safe = d.replaceAll("[^a-zA-Z0-9]", "_")
-    val fp = graft.sources.BucketedStore
-      .fingerprint(s"$d/embeddings.parquet")
-    val srcPath = s"/tmp/graft_ivfidx_${safe}_$fp"
-    ensurePersisted(srcPath) {
+    val srcPath = Store.name("/tmp/graft_ivfidx", d)
+    Store.ensurePath(srcPath) { tmp =>
       IvfIndex.save(
         IvfIndex.assign(e, seedCentroids(e), "vec_id", "embedding",
-          "cid"), srcPath)
+          "cid"), tmp)
     }
     val cmpPath = compactedIvfStorePath(d)
-    ensurePersisted(cmpPath) {
-      IvfIndex.compact(s, srcPath, cmpPath, col("id") % 7 === 0)
+    Store.ensurePath(cmpPath) { tmp =>
+      IvfIndex.compact(s, srcPath, tmp, col("id") % 7 === 0)
     }
     val tombstones = e.filter(col("vec_id") % 7 === 0)
       .select(col("vec_id"))

@@ -36,19 +36,17 @@ object BucketedStore {
     * This is the write-once/join-many contract made explicit — callers
     * (e.g. the incremental-dedup seen index) treat the bucketed layout
     * as a PERSISTED STORE, so repeated query builds in one session are
-    * read-only. A warehouse directory orphaned by a previous JVM (the
-    * in-memory catalog dies with the session, the files do not) is
-    * cleared before the save — resolved from the session's ACTUAL
-    * `spark.sql.warehouse.dir` (a relative "spark-warehouse" guess
-    * breaks under a non-default warehouse or changed CWD), with a
-    * JVM-wide per-table lock so two sessions in one JVM can't race
-    * delete-then-save.
+    * read-only. Callers name the table with [[Store.name]]; the build
+    * runs under [[Store]]'s locks, keyed by the table.
     *
-    * CROSS-PROCESS guard (ADVICE r11, the ensurePersisted pattern):
-    * the delete+save also holds an OS advisory lock on
-    * `<table>.lock` next to the warehouse table dir, so two PROCESSES
-    * can't interleave their rebuild writes. The guard is narrower
-    * than ensurePersisted's: the catalog is per-session, so a second
+    * A warehouse directory orphaned by a previous JVM (the in-memory
+    * catalog dies with the session, the files do not) is cleared before
+    * the save — resolved from the session's ACTUAL
+    * `spark.sql.warehouse.dir` (a relative "spark-warehouse" guess
+    * breaks under a non-default warehouse or changed CWD). The OS lock
+    * on `<table>.lock` next to the table dir stops two PROCESSES from
+    * interleaving their rebuild writes. The guard is narrower than
+    * [[Store.ensurePath]]'s: the catalog is per-session, so a second
     * JVM (whose empty catalog can't see the first's table) still
     * REBUILDS after the lock clears — and an unlocked reader in the
     * first JVM can still see its files swapped mid-read. The
@@ -60,74 +58,28 @@ object BucketedStore {
     * warehouse is a LOCAL filesystem path: for a remote scheme (hdfs,
     * s3a, ...) a java.nio path built from the URI string would create
     * bogus local directories like `hdfs:/...` instead of locking the
-    * real location (ADVICE r12), so we fall back to the JVM-wide lock
-    * alone and let `saveAsTable(overwrite)` own the remote files —
-    * cross-process coordination on a remote warehouse belongs to a
-    * transactional table format, not an advisory file lock. Note the
-    * local `<table>.lock` files are left behind by design (deleting
-    * them would race a peer that holds the lock). */
+    * real location, so a remote warehouse takes the JVM lock alone and
+    * `saveAsTable(overwrite)` owns the remote files — cross-process
+    * coordination on a remote warehouse belongs to a transactional
+    * table format, not an advisory file lock. */
   def ensure(spark: SparkSession, table: String, build: => DataFrame,
              bucketCol: String, numBuckets: Int): DataFrame = {
-    val lock = locks.getOrElseUpdate(table, new Object)
-    lock.synchronized {
-      if (!spark.catalog.tableExists(table)) {
-        val warehouse = java.net.URI.create(
-          spark.conf.get("spark.sql.warehouse.dir"))
-        val isLocalFs =
-          warehouse.getScheme == null || warehouse.getScheme == "file"
-        if (!isLocalFs) {
+    if (!spark.catalog.tableExists(table)) {
+      val warehouse = java.net.URI.create(
+        spark.conf.get("spark.sql.warehouse.dir"))
+      val localRoot =
+        if (warehouse.getScheme == null) Some(warehouse.toString)
+        else if (warehouse.getScheme == "file") Some(warehouse.getPath)
+        else None
+      val root = localRoot.map(java.nio.file.Paths.get(_))
+      root.foreach(java.nio.file.Files.createDirectories(_))
+      Store.locked(table, root.map(_.resolve(table + ".lock"))) {
+        if (!spark.catalog.tableExists(table)) {
+          root.foreach(r => Store.deleteTree(r.resolve(table)))
           save(build, table, bucketCol, numBuckets)
-        } else {
-          val root = java.nio.file.Paths.get(
-            if (warehouse.getScheme == "file") warehouse.getPath
-            else warehouse.toString)
-          java.nio.file.Files.createDirectories(root)
-          val dir = root.resolve(table)
-          val ch = java.nio.channels.FileChannel.open(
-            root.resolve(table + ".lock"),
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.WRITE)
-          try {
-            val fl = ch.lock()
-            try {
-              if (java.nio.file.Files.exists(dir)) {
-                import scala.jdk.CollectionConverters._
-                java.nio.file.Files.walk(dir).iterator().asScala.toSeq
-                  .sortBy(-_.getNameCount)
-                  .foreach(java.nio.file.Files.deleteIfExists(_))
-              }
-              save(build, table, bucketCol, numBuckets)
-            } finally fl.release()
-          } finally ch.close()
         }
       }
     }
     load(spark, table)
   }
-
-  /** Cheap content fingerprint of a source data path (file names,
-    * sizes, mtimes — no data read): callers fold this into
-    * [[ensure]]'s table name so a source regenerated IN PLACE mints a
-    * NEW table instead of silently probing the stale index (the
-    * catalog key alone cannot see data changes). 8 hex chars of the
-    * tuple hash; a missing path fingerprints as "absent" rather than
-    * throwing so the build itself reports the real error. */
-  def fingerprint(path: String): String = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) "absent"
-    else {
-      import scala.jdk.CollectionConverters._
-      val parts = java.nio.file.Files.walk(p).iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(f => s"${p.relativize(f)}:${java.nio.file.Files.size(f)}:" +
-          java.nio.file.Files.getLastModifiedTime(f).toMillis)
-        .toSeq.sorted.mkString("\n")
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(parts.getBytes("UTF-8"))
-      md.take(4).map("%02x".format(_)).mkString
-    }
-  }
-
-  private val locks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
 }

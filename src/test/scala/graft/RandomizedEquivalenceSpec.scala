@@ -213,23 +213,23 @@ class RandomizedEquivalenceSpec extends SparkSpec {
             .mkString(" "),
           "en", s"s${rnd.nextInt(3)}", 0L)
       }.toDF("doc_id", "text", "lang", "source", "n_chars")
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"t5equiv$trial").toString
-      docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val got = graft.queries.Queries.t5TopTerms(spark, dir)
-        .select("source", "rnk", "token", "n")
-        .as[(String, Long, String, Long)].collect().toSet
-      // naive reference: per-source sort by (n desc, token), take 5
-      val counts = docs
-        .select($"source",
-          explode(graft.functions.TextFunctions.tokens($"text")).as("tk"))
-        .groupBy("source", "tk").count()
-        .as[(String, String, Long)].collect()
-      val expected = counts.groupBy(_._1).toSeq.flatMap { case (src, rs) =>
-        rs.sortBy(r => (-r._3, r._2)).take(5).zipWithIndex
-          .map { case (r, i) => (src, (i + 1).toLong, r._2, r._3) }
-      }.toSet
-      assert(got === expected, s"trial=$trial")
+      withTempDir(s"t5equiv$trial") { dir =>
+        docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+        val got = graft.queries.Queries.t5TopTerms(spark, dir)
+          .select("source", "rnk", "token", "n")
+          .as[(String, Long, String, Long)].collect().toSet
+        // naive reference: per-source sort by (n desc, token), take 5
+        val counts = docs
+          .select($"source",
+            explode(graft.functions.TextFunctions.tokens($"text")).as("tk"))
+          .groupBy("source", "tk").count()
+          .as[(String, String, Long)].collect()
+        val expected = counts.groupBy(_._1).toSeq.flatMap { case (src, rs) =>
+          rs.sortBy(r => (-r._3, r._2)).take(5).zipWithIndex
+            .map { case (r, i) => (src, (i + 1).toLong, r._2, r._3) }
+        }.toSet
+        assert(got === expected, s"trial=$trial")
+      }
     }
   }
 

@@ -164,7 +164,7 @@ class Round12OpsSpec extends SparkSpec {
     "seeds: the store holds the round-4 state)") {
     val (_, cs5) = Queries.warmRetrainState(spark, sf) // ensures the store
     val safe = sf.replaceAll("[^a-zA-Z0-9]", "_")
-    val fp = graft.sources.BucketedStore
+    val fp = graft.sources.Store
       .fingerprint(s"$sf/embeddings.parquet")
     val stored = spark.read.parquet(s"/tmp/graft_tivfidx2_${safe}_$fp")
       .select(col("c").cast("long").as("c"), col("qv")).collect()

@@ -328,18 +328,6 @@ class Round6eOpsSpec extends SparkSpec {
     }
   }
 
-  test("v57 persisted-edge variant returns the identical result set") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graphidx").toString + "/edges"
-    val a = Queries.v57GraphSearch(spark, sf).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("node_id"),
-        r.getAs[Double]("dist"))).toSet
-    val b = Queries.v57SearchPersisted(spark, sf, path).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("node_id"),
-        r.getAs[Double]("dist"))).toSet
-    assert(a == b)
-  }
-
   test("v58: every returned neighbor satisfies the filter predicate " +
     "and per-query ranks are dense from 1") {
     val keep = spark.read.parquet(s"$sf/embeddings.parquet")

@@ -30,7 +30,7 @@ class Round7OpsSpec extends SparkSpec {
   test("v64: the edge list is served from a catalog table whose name " +
     "carries the source-data fingerprint") {
     Queries.v64GraphSearchPersisted(spark, sf).collect()
-    val fp = graft.sources.BucketedStore
+    val fp = graft.sources.Store
       .fingerprint(s"$sf/embeddings.parquet")
     assert(fp != "absent" && fp.length == 8)
     val expected = "graft_knn_edges_" +

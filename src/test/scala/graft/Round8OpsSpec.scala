@@ -110,7 +110,7 @@ class Round8OpsSpec extends SparkSpec {
   test("v80: the base edge store persists once under a fingerprinted " +
     "table name and the second call serves from it unchanged") {
     val first = Queries.v80GraphUpsert(spark, sf).collect()
-    val fp = graft.sources.BucketedStore
+    val fp = graft.sources.Store
       .fingerprint(s"$sf/embeddings.parquet")
     assert(fp != "absent" && fp.length == 8)
     val expected = "graft_knn_base_edges_" +

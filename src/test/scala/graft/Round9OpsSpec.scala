@@ -164,18 +164,18 @@ class Round9OpsSpec extends SparkSpec {
 
   test("trained PQ seeding fails loudly when any vec_id in 0..15 is " +
     "missing (positional seeds must not silently degrade)") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sparse_seed").toString
-    // vec_ids 0..20 WITHOUT 7: the seed collect finds 15 < ksub rows
-    val rows = (0 to 20).filter(_ != 7).map { i =>
-      (i.toLong, Seq.fill(64)(i.toDouble / 100.0), i.toLong % 3,
-        s"c${i % 3}")
+    withTempDir("graft_sparse_seed") { dir =>
+      // vec_ids 0..20 WITHOUT 7: the seed collect finds 15 < ksub rows
+      val rows = (0 to 20).filter(_ != 7).map { i =>
+        (i.toLong, Seq.fill(64)(i.toDouble / 100.0), i.toLong % 3,
+          s"c${i % 3}")
+      }
+      rows.toDF("vec_id", "embedding", "label", "category")
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      val ex = intercept[IllegalArgumentException] {
+        Queries.v78TrainedPq(spark, dir).collect()
+      }
+      assert(ex.getMessage.contains("seed ids"))
     }
-    rows.toDF("vec_id", "embedding", "label", "category")
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val ex = intercept[IllegalArgumentException] {
-      Queries.v78TrainedPq(spark, dir).collect()
-    }
-    assert(ex.getMessage.contains("seed ids"))
   }
 }

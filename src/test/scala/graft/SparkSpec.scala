@@ -22,4 +22,12 @@ trait SparkSpec extends AnyFunSuite {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** Runs `body` on a fresh temp directory named after `prefix`, then
+    * deletes the directory and everything in it. */
+  def withTempDir[A](prefix: String)(body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir.toString)
+    finally graft.sources.Store.deleteTree(dir)
+  }
 }

@@ -691,45 +691,47 @@ class StreamingSpec extends SparkSpec {
       .select($"vec_id", $"embedding").limit(200)
     val cents = gallery.filter($"vec_id" < 4)
       .select($"vec_id".as("cid"), $"embedding")
-    def half(par: Int): String = {
-      val path = s"/tmp/graft_test_seg_${par}_${System.nanoTime()}"
-      graft.operators.IvfIndex.save(graft.operators.IvfIndex.assign(
-        gallery.filter($"vec_id" % 2 === par), cents,
-        "vec_id", "embedding", "cid"), path)
-      path
+    withTempDir("graft_test_seg") { dir =>
+      def half(par: Int): String = {
+        val path = s"$dir/seg$par"
+        graft.operators.IvfIndex.save(graft.operators.IvfIndex.assign(
+          gallery.filter($"vec_id" % 2 === par), cents,
+          "vec_id", "embedding", "cid"), path)
+        path
+      }
+      val segs = Seq(half(0), half(1))
+        .map(graft.operators.IvfIndex.load(spark, _))
+      val centArr = cents
+        .select($"cid".cast("long"),
+          graft.functions.VectorFunctions.quantize($"embedding"))
+        .collect()
+        .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+        .sortBy(_._1)
+      val qRows = gallery.filter($"vec_id" % 50 === 0)
+        .select($"vec_id".cast("long"), $"embedding").as[(Long, Seq[Double])]
+        .collect().toSeq
+      val mem = MemoryStream[(Long, Seq[Double])]
+      val q = StreamingOps.ivfServeSegments(
+          mem.toDF().toDF("vec_id", "embedding"), segs, centArr,
+          "vec_id", "embedding", k = 3, nprobe = 2)
+        .writeStream.outputMode("complete")
+        .format("memory").queryName("seg_serve").start()
+      try {
+        mem.addData(qRows.take(2): _*)
+        q.processAllAvailable()
+        mem.addData(qRows.drop(2): _*)
+        q.processAllAvailable()
+        val got = spark.table("seg_serve")
+          .as[(Long, Long, Long, Double)].collect().sorted.toSeq
+        val compacted = graft.operators.IvfIndex.assign(
+          gallery, cents, "vec_id", "embedding", "cid")
+        val batch = graft.operators.IvfIndex.search(compacted, cents,
+            qRows.toDF("vec_id", "embedding"), "vec_id", "embedding",
+            "cid", "vec_id", k = 3, nprobe = 2)
+          .as[(Long, Long, Long, Double)].collect().sorted.toSeq
+        assert(got === batch && got.nonEmpty)
+      } finally q.stop()
     }
-    val segs = Seq(half(0), half(1))
-      .map(graft.operators.IvfIndex.load(spark, _))
-    val centArr = cents
-      .select($"cid".cast("long"),
-        graft.functions.VectorFunctions.quantize($"embedding"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-      .sortBy(_._1)
-    val qRows = gallery.filter($"vec_id" % 50 === 0)
-      .select($"vec_id".cast("long"), $"embedding").as[(Long, Seq[Double])]
-      .collect().toSeq
-    val mem = MemoryStream[(Long, Seq[Double])]
-    val q = StreamingOps.ivfServeSegments(
-        mem.toDF().toDF("vec_id", "embedding"), segs, centArr,
-        "vec_id", "embedding", k = 3, nprobe = 2)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("seg_serve").start()
-    try {
-      mem.addData(qRows.take(2): _*)
-      q.processAllAvailable()
-      mem.addData(qRows.drop(2): _*)
-      q.processAllAvailable()
-      val got = spark.table("seg_serve")
-        .as[(Long, Long, Long, Double)].collect().sorted.toSeq
-      val compacted = graft.operators.IvfIndex.assign(
-        gallery, cents, "vec_id", "embedding", "cid")
-      val batch = graft.operators.IvfIndex.search(compacted, cents,
-          qRows.toDF("vec_id", "embedding"), "vec_id", "embedding",
-          "cid", "vec_id", k = 3, nprobe = 2)
-        .as[(Long, Long, Long, Double)].collect().sorted.toSeq
-      assert(got === batch && got.nonEmpty)
-    } finally q.stop()
   }
 
   test("routeServeBatch via foreachBatch: queries split across two " +

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodege
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
 
 class VectorExpressionsSpec extends SparkSpec {
   import spark.implicits._
@@ -88,6 +88,49 @@ class VectorExpressionsSpec extends SparkSpec {
       .knnL2Pre(g, q, "id", "v", "id", k = 1).collect()))
     assert(e.getMessage.contains("3") && e.getMessage.contains("2"),
       e.getMessage)
+  }
+
+  /** Asserts `run` throws an IllegalArgumentException naming a null
+    * element. */
+  private def assertNullElement(run: => Any): Unit = {
+    val e = mismatch(intercept[Exception](run))
+    assert(e.getMessage.contains("null element"), e.getMessage)
+  }
+
+  test("graft_l2sq/graft_dot reject a null element (interpreted and " +
+    "codegen) instead of reading it as 0") {
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(Seq(1L, null), Seq(1L, 0L)))),
+      StructType(Seq("a", "b").map(StructField(_,
+        ArrayType(LongType, containsNull = true)))))
+    for (fn <- Seq("graft_l2sq", "graft_dot")) {
+      def run(): Unit = {
+        assertNullElement(spark.sql(
+          s"SELECT $fn(array(1L, NULL), array(1L, 0L))").collect())
+        assertNullElement(df.selectExpr(s"$fn(a, b)").collect())
+        assertNullElement(df.selectExpr(s"$fn(b, a)").collect())
+      }
+      // no silent fallback: the generated code itself must throw
+      withConf("spark.sql.codegen.fallback" -> "false")(run())
+      withConf("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(run())
+    }
+  }
+
+  test("the blocked KNN scan rejects a null element in a gallery or a " +
+    "query vector and still skips null vectors") {
+    def frame(rows: (Long, Seq[Any])*): DataFrame = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (i, v) => Row(i, v) }, 2),
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(DoubleType, containsNull = true)))))
+    val ok = frame((1L, Seq(1.0, 2.0)), (2L, Seq(3.0, 4.0)), (3L, null))
+    val holed = frame((4L, Seq(1.0, null)))
+    def knn(g: DataFrame, q: DataFrame) = graft.operators.KnnJoin
+      .knnL2(g, q, "vec_id", "embedding", "vec_id", k = 2)
+      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
+    assertNullElement(knn(ok.union(holed), ok))
+    assertNullElement(knn(ok, ok.union(holed)))
+    assert(knn(ok, ok) === Set((1L, 1L), (1L, 2L), (2L, 2L), (2L, 1L)))
   }
 
   /** One numeric-array column `v`, in a parallelized (non-local)
