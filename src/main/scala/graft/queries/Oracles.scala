@@ -365,9 +365,6 @@ rk5 AS (SELECT query_id, gid, adc,
               row_number() OVER (PARTITION BY query_id ORDER BY adc, gid) AS rnk
        FROM adc5)"""
 
-  /** v65's trained-IVF chain as CTEs (3 Lloyd rounds + the add step
-    * asn4 + probe routing), ending in the ranked `rr`. Shared by v65,
-    * v90 (verbatim via the map) and v92's recall eval. */
   /** The trained-IVF ROUTE: gallery, seed centroids, 3 unrolled Lloyd
     * rounds, queries, and the per-query trained-centroid ranking `qr`
     * — shared by the nprobe=2 serving twins (v65/v90/v92 via
@@ -467,6 +464,9 @@ rr$sfx AS (SELECT query_id, gid, d2,
                 ORDER BY d2, gid) AS rnk
        FROM sc$sfx)"""
 
+  /** v65's trained-IVF chain as CTEs (3 Lloyd rounds + the add step
+    * asn4 + probe routing), ending in the ranked `rr`. Shared by v65,
+    * v90 (verbatim via the map) and v92's recall eval. */
   private def trainedIvfCtes: String = s"""$trainedIvfRouteCtes,
 ${trainedIvfProbeCtes(2, "")}"""
 
@@ -526,12 +526,6 @@ SELECT s3.query_id, s3.cur AS node_id,
 FROM s3 JOIN g gv ON gv.gid = s3.cur
 JOIN q ON q.query_id = s3.query_id"""
 
-  /** The ef=4 BEAM-search CTE chain (v28's bucket-blocked graph + 3
-    * unrolled frontier-expansion steps: candidates = DISTINCT(frontier
-    * ∪ neighbors(frontier)), keep the ef best by (d2, nid)), shared by
-    * v79 (the search) and v81 (its recall row) so the walk arithmetic
-    * cannot diverge between them. Exposes `fr3(query_id, nid, d2, rn)`
-    * (the final frontier ranking) and `f3` (its rn ≤ 4 cut). */
   /** The layer-0 graph + query CTEs of the beam family: gallery `g`,
     * LSH-bucketed `b`, bucket-blocked ranked edges `e` (k=3), queries
     * `q`. Shared by v79/v81/v85 (beam from the global min-id entry)
@@ -569,22 +563,21 @@ f$i$sfx AS (SELECT query_id, nid FROM fr$i$sfx WHERE rn <= $ef)""")
 
   private def beamLoopCtes: String = beamLoopCtesEf(4, "")
 
+  /** The ef=4 BEAM-search CTE chain (v28's bucket-blocked graph + 3
+    * unrolled frontier-expansion steps: candidates = DISTINCT(frontier
+    * ∪ neighbors(frontier)), keep the ef best by (d2, nid)), shared by
+    * v79 (the search) and v81 (its recall row) so the walk arithmetic
+    * cannot diverge between them. Exposes `fr3(query_id, nid, d2, rn)`
+    * (the final frontier ranking) and `f3` (its rn ≤ 4 cut). */
   private def beamSearchCtes: String = s"""
 $beamGraphCtes,
 f0 AS (SELECT query_id, (SELECT min(gid) FROM g) AS nid FROM q),
 $beamLoopCtes"""
 
-  /** The tombstone-aware beam walk (v108): the shared layer-0 graph
-    * CTEs with the delete set applied — entry = min ALIVE gid, each
-    * step expands frontier ∪ neighbors ∪ the one-hop BYPASS through
-    * dead neighbors (a dead neighbor contributes its own neighbors
-    * instead of itself), dead nodes dropped before scoring, top-ef
-    * kept. Exposes g/q/fr3/f3 like the other walk CTE sets so the
-    * shared recall tail composes. */
   /** The three tombstone-aware beam steps from an in-scope
     * `f0(query_id, nid)` frontier — ONE definition shared by v108
     * (flat alive entry) and v118 (hierarchical entry), mirroring the
-    * Spark side's shared tombBeamLoop. */
+    * Spark side's one walk (GraphIndex.walk with the delete set). */
   private def tombBeamLoopCtes: String =
     (1 to 3).map(i => s"""nb$i AS (SELECT f.query_id, e.dst_id AS nid
          FROM f${i - 1} f JOIN e ON e.src_id = f.nid),
@@ -623,6 +616,13 @@ q AS (SELECT gid AS query_id, v AS qv FROM g WHERE gid % 100 = 0),
 f0 AS (SELECT query_id, (SELECT min(gid) FROM ga) AS nid FROM q),
 $beamLoopCtes"""
 
+  /** The tombstone-aware beam walk (v108): the shared layer-0 graph
+    * CTEs with the delete set applied — entry = min ALIVE gid, each
+    * step expands frontier ∪ neighbors ∪ the one-hop BYPASS through
+    * dead neighbors (a dead neighbor contributes its own neighbors
+    * instead of itself), dead nodes dropped before scoring, top-ef
+    * kept. Exposes g/q/fr3/f3 like the other walk CTE sets so the
+    * shared recall tail composes. */
   private def tombBeamCtes: String = s"""
 $beamGraphCtes,
 f0 AS (SELECT query_id, (SELECT min(gid) FROM g WHERE gid % 7 <> 0) AS nid
@@ -717,7 +717,7 @@ ${pfx}e AS (SELECT src_id, dst_id FROM ${pfx}r WHERE rnk <= 3)"""
     * the layer's gallery `$lg`, keeps the (d2, nid)-min. ONE
     * definition shared by v88's layer-1 walk and both of v122's upper
     * layers — descent semantics cannot drift between hierarchy
-    * depths (the Spark side's shared coarseDescentLoop, mirrored). */
+    * depths (the Spark side's GraphIndex.walk at ef = 1, mirrored). */
   private def coarseWalkSteps(walk: String, edges: String,
                               lg: String): String =
     (1 to 3).map(i => s"""${walk}c$i AS (SELECT query_id, cur AS nid FROM $walk${i - 1}

@@ -25,6 +25,15 @@ object Queries {
   private def docs(s: SparkSession, d: String) = Tables.documents(s, d)
   /** Query set: every 100th vector (deterministic, data-independent). */
   private def queryVecs(e: DataFrame) = e.filter(col("vec_id") % 100 === 0)
+  /** The fixture's delete set (v62's tombstones): vec_id % 7 = 0. */
+  private def isDead(id: Column): Column = id % 7 === 0
+  /** The delete set as a (dead_id) frame. */
+  private def deadIds(s: SparkSession, d: String): DataFrame =
+    emb(s, d).filter(isDead(col("vec_id")))
+      .select(col("vec_id").cast("long").as("dead_id"))
+  /** The rows of `vecs` (id, …) whose id is not in `tombs`. */
+  private def withoutDead(vecs: DataFrame, tombs: DataFrame): DataFrame =
+    vecs.join(tombs, vecs("id") === tombs("dead_id"), "left_anti")
   /** Seed centroids: first 10 vectors (deterministic IVF quantizer). */
   private def seedCentroids(e: DataFrame) =
     e.filter(col("vec_id") < 10)
@@ -492,10 +501,6 @@ object Queries {
       "gid", "cv", "gid", k = 5, scale = 1)
   }
 
-  /** The scalar-quantizer ENCODE pass: per-dim (min,max) stats over the
-    * gallery → `levels+1`-level integer codes (gid, cv). Shared by the
-    * rebuild-shape gates (v17/v82 via [[sqKnn]]) and the persisted
-    * serving gate (v86), which stores this frame once. */
   /** The SQ quantizer's per-dim (min, range) stats — the PERSISTED
     * trained artifact (faiss ScalarQuantizer.train's output, stored
     * like the PQ book — ADVICE r11): the full-corpus reduction over
@@ -540,6 +545,10 @@ object Queries {
         ((num - pmod(num, rg)) / rg).cast("long"))))
   }
 
+  /** The scalar-quantizer ENCODE pass: per-dim (min,max) stats over the
+    * gallery → `levels+1`-level integer codes (gid, cv). Shared by the
+    * rebuild-shape gates (v17/v82 via [[sqKnn]]) and the persisted
+    * serving gate (v86), which stores this frame once. */
   private def sqCodes(s: SparkSession, d: String, levels: Long): DataFrame = {
     val e = emb(s, d)
     val g = e.select(col("vec_id").cast("long").as("gid"),
@@ -702,18 +711,6 @@ object Queries {
       queryVecs(e))
   }
 
-  /** One EXACT Lloyd training round under the hard gate — the k-means
-    * step the IVF coarse quantizer trains with (test-only until now
-    * because float centroid means aren't bit-portable). Exactness trick
-    * (same as v14): the updated centroid is carried as (n, sum-vector),
-    * never divided — `||q − s/n||² = A/n²` with `A = Σ(n·q_i − s_i)²`
-    * accumulated in Decimal(38,0), so reassignment compares
-    * `sqrt(A)/(n·scale)` — identical IEEE ops both engines. Plan shape:
-    * map-only literal-argmin assign → one (cluster, dim)-keyed sum
-    * aggregate (map-side combined, nlist·dim output rows) → collect the
-    * broadcast-sized sums → map-only literal-argmin REassign → O(nlist)
-    * count aggregate. Zero data-sized shuffles. Output per cluster:
-    * size after the round and how many members stayed. */
   /** Seed assignment for the Lloyd rounds: every vector argmin-assigned
     * to the 10 seed centroids, carried as (id, qv, c). */
   private def lloydSeedAssign(e: DataFrame): DataFrame =
@@ -920,24 +917,6 @@ object Queries {
         distFromIntSq(col("d2")).as("dist"))
   }
 
-  /** v65's trained-IVF search served from a PERSISTED trained index —
-    * the flat-IVF member of the trained persist-once/serve-many family
-    * (v87 = PQ, v91 = IVFPQ): the three Lloyd rounds persist their
-    * exact (lab, n, sum-vector) carrier into a fingerprinted bucketed
-    * table, the ADD step persists the assigned gallery PARTITIONED BY
-    * trained list (v66's pruning layout), and serving collects the
-    * tiny sums table, rebuilds the literal route candidates, and
-    * probe-joins the stored index with ZERO training jobs. At 100 TB
-    * the nprobe=2 probe reads 2/nlist of the stored bytes via
-    * partition pruning and training is amortized over every query
-    * batch. Oracle = v65's SQL VERBATIM (bit-transparent persistence,
-    * the v66/v86 contract). */
-  /** v90's build path factored out: the persisted trained-IVF store
-    * (trained sums table + ADDed gallery PARTITIONED BY trained list)
-    * plus the quantized gallery and the collected centroid carrier —
-    * shared by v90 (nprobe=2 serving) and v97 (the nprobe sweep, which
-    * must read the SAME store so the curve measures routing depth, not
-    * training variance). */
   /** The persisted trained-centroid carrier (lab, n, svec) collected
     * from (or first built into) the fingerprinted bucketed store —
     * v90's training artifact factored out so the monolithic ADD
@@ -958,6 +937,12 @@ object Queries {
       .sortBy(_._1)
   }
 
+  /** v90's build path factored out: the persisted trained-IVF store
+    * (trained sums table + ADDed gallery PARTITIONED BY trained list)
+    * plus the quantized gallery and the collected centroid carrier —
+    * shared by v90 (nprobe=2 serving) and v97 (the nprobe sweep, which
+    * must read the SAME store so the curve measures routing depth, not
+    * training variance). */
   private def trainedIvfStore(s: SparkSession, d: String)
       : (DataFrame, DataFrame, Array[(Long, Long, Array[Long])]) = {
     val cs = trainedCentsStored(s, d)
@@ -987,6 +972,18 @@ object Queries {
     (added, g, cs)
   }
 
+  /** v65's trained-IVF search served from a PERSISTED trained index —
+    * the flat-IVF member of the trained persist-once/serve-many family
+    * (v87 = PQ, v91 = IVFPQ): the three Lloyd rounds persist their
+    * exact (lab, n, sum-vector) carrier into a fingerprinted bucketed
+    * table, the ADD step persists the assigned gallery PARTITIONED BY
+    * trained list (v66's pruning layout), and serving collects the
+    * tiny sums table, rebuilds the literal route candidates, and
+    * probe-joins the stored index with ZERO training jobs. At 100 TB
+    * the nprobe=2 probe reads 2/nlist of the stored bytes via
+    * partition pruning and training is amortized over every query
+    * batch. Oracle = v65's SQL VERBATIM (bit-transparent persistence,
+    * the v66/v86 contract). */
   def v90TrainedIvfPersisted(s: SparkSession, d: String): DataFrame = {
     val (added, g, cs) = trainedIvfStore(s, d)
     trainedIvfServe(added, g, cs)
@@ -1068,19 +1065,6 @@ object Queries {
     trainedIvfServe(merged, g, cs)
   }
 
-  /** TRAINED-IVF nprobe/recall curve — v46's sweep pointed at the
-    * trained quantizer: recall@5 vs the exact scan at nprobe ∈
-    * {1, 2, 4}, every point served from v90's PERSISTED trained index
-    * (training runs zero times per point — the curve isolates routing
-    * depth, the knob a deployment actually turns; faiss tunes
-    * IndexIVF.nprobe exactly this way). Completes the tuning-surface
-    * matrix: seeded IVF has (v46 recall × v55 cost), the graph family
-    * has v96's ef curve, and the trained quantizer had only v92's
-    * single nprobe=2 point — which the spec proves sits ON this
-    * curve. Scale shape: each point is ONE probe-pruned scan of
-    * nprobe/nlist of the stored bytes + the O(Q·k) partial top-k; the
-    * eval joins two O(Q·k) frames. Counts exact Longs, ONE IEEE
-    * division per row. */
   /** FILTERED trained-IVF search — the metadata-predicate variant of
     * v90 (label % 3 = 0, v15's predicate), completing the filtered-ANN
     * matrix across index families: flat (v15), seeded IVF (v58),
@@ -1123,6 +1107,19 @@ object Queries {
         (col("n_hit") / col("k")).as("recall_at_5"))
   }
 
+  /** TRAINED-IVF nprobe/recall curve — v46's sweep pointed at the
+    * trained quantizer: recall@5 vs the exact scan at nprobe ∈
+    * {1, 2, 4}, every point served from v90's PERSISTED trained index
+    * (training runs zero times per point — the curve isolates routing
+    * depth, the knob a deployment actually turns; faiss tunes
+    * IndexIVF.nprobe exactly this way). Completes the tuning-surface
+    * matrix: seeded IVF has (v46 recall × v55 cost), the graph family
+    * has v96's ef curve, and the trained quantizer had only v92's
+    * single nprobe=2 point — which the spec proves sits ON this
+    * curve. Scale shape: each point is ONE probe-pruned scan of
+    * nprobe/nlist of the stored bytes + the O(Q·k) partial top-k; the
+    * eval joins two O(Q·k) frames. Counts exact Longs, ONE IEEE
+    * division per row. */
   def v97TrainedProbeCurve(s: SparkSession, d: String): DataFrame = {
     val (added, g, cs) = trainedIvfStore(s, d)
     val exact = v1KnnL2(s, d)
@@ -1178,18 +1175,6 @@ object Queries {
         (col("dist") / lit(10000.0)).as("dist"))
   }
 
-  /** v68's trained residual-IVFPQ served from a PERSISTED trained
-    * index — the compressed member of the trained persist-once/
-    * serve-many family (v90 = flat IVF, v87 = pure PQ), and the exact
-    * lifecycle of a production faiss IndexIVFPQ (`train` → `add` →
-    * write_index → many searches, faiss_utils.py:4-22): the Lloyd-
-    * trained grid-floored coarse centroids, the seeded RESIDUAL
-    * codebooks, and the residual-encoded codes all persist once into
-    * fingerprinted stores (two tiny bucketed tables + a code table
-    * PARTITIONED BY coarse list for probe pruning); serving reads
-    * 9-byte code rows from nprobe=2 partitions with zero training and
-    * zero encode jobs. Oracle = v68's SQL VERBATIM (bit-transparent
-    * persistence, the v66/v86 contract). */
   /** v91's persisted trained artifacts — the grid-floored coarse
     * centroid table, the residual codebook, and the gallery in encode
     * form — shared by v91 (full partitioned code store) and v105 (the
@@ -1298,6 +1283,18 @@ object Queries {
         (col("dist") / lit(10000.0)).as("dist"))
   }
 
+  /** v68's trained residual-IVFPQ served from a PERSISTED trained
+    * index — the compressed member of the trained persist-once/
+    * serve-many family (v90 = flat IVF, v87 = pure PQ), and the exact
+    * lifecycle of a production faiss IndexIVFPQ (`train` → `add` →
+    * write_index → many searches, faiss_utils.py:4-22): the Lloyd-
+    * trained grid-floored coarse centroids, the seeded RESIDUAL
+    * codebooks, and the residual-encoded codes all persist once into
+    * fingerprinted stores (two tiny bucketed tables + a code table
+    * PARTITIONED BY coarse list for probe pruning); serving reads
+    * 9-byte code rows from nprobe=2 partitions with zero training and
+    * zero encode jobs. Oracle = v68's SQL VERBATIM (bit-transparent
+    * persistence, the v66/v86 contract). */
   def v91TrainedIvfpqPersisted(s: SparkSession, d: String): DataFrame = {
     val m = 8; val dim = 64
     val (centsDf, book, g) = trainedIvfpqArtifacts(s, d)
@@ -1531,21 +1528,6 @@ object Queries {
     }
   }
 
-  /** v78's trained-PQ search served from a PERSISTED trained index —
-    * the missing persist-once/serve-many form of the TRAINED family
-    * (seeded indexes got theirs in v64/v66/v67/v77/v86; the trained
-    * chains re-paid training per invocation). This is faiss's actual
-    * lifecycle (`train` → `add` → persist → many `search` calls,
-    * faiss_utils.py:4-22): the three Lloyd rounds and the map-only
-    * encode run ONCE at build time into two fingerprinted bucketed
-    * tables — the O(m·ksub·sub) codebook (128 rows) and the 8-byte/row
-    * code table — and serving reads codes + collects the tiny book
-    * with ZERO training jobs. At 100 TB the build is amortized over
-    * every query batch and the served scan reads ~1/32nd of the raw
-    * vector bytes. The source fingerprint in the table names mints a
-    * fresh index when the data regenerates; oracle = v78's SQL
-    * VERBATIM, so the gate proves trained-index persistence is
-    * bit-transparent (the v66/v86 contract). */
   /** The PERSISTED trained-PQ codebook (v87's store) plus the gallery
     * in encode form — shared by v87 (full code store), v99 (the
     * incremental-ingest twin), and their recall rows, so every sharer
@@ -1595,6 +1577,21 @@ object Queries {
         (col("dist") / lit(10000.0)).as("dist"))
   }
 
+  /** v78's trained-PQ search served from a PERSISTED trained index —
+    * the missing persist-once/serve-many form of the TRAINED family
+    * (seeded indexes got theirs in v64/v66/v67/v77/v86; the trained
+    * chains re-paid training per invocation). This is faiss's actual
+    * lifecycle (`train` → `add` → persist → many `search` calls,
+    * faiss_utils.py:4-22): the three Lloyd rounds and the map-only
+    * encode run ONCE at build time into two fingerprinted bucketed
+    * tables — the O(m·ksub·sub) codebook (128 rows) and the 8-byte/row
+    * code table — and serving reads codes + collects the tiny book
+    * with ZERO training jobs. At 100 TB the build is amortized over
+    * every query batch and the served scan reads ~1/32nd of the raw
+    * vector bytes. The source fingerprint in the table names mints a
+    * fresh index when the data regenerates; oracle = v78's SQL
+    * VERBATIM, so the gate proves trained-index persistence is
+    * bit-transparent (the v66/v86 contract). */
   def v87TrainedPqPersisted(s: SparkSession, d: String): DataFrame = {
     val m = 8; val dim = 64
     val (book, gd) = trainedPqBookStore(s, d)
@@ -1659,8 +1656,7 @@ object Queries {
   def v106StoreMaintenance(s: SparkSession, d: String): DataFrame = {
     val m = 8; val dim = 64
     val (merged, book, gd) = upsertedPqCodes(s, d)
-    val tomb = emb(s, d).filter(col("vec_id") % 7 === 0)
-      .select(col("vec_id").cast("long").as("dead_id"))
+    val tomb = deadIds(s, d)
     val alive = merged.join(broadcast(tomb),
       merged("id") === tomb("dead_id"), "left_anti")
     PqIndex.searchAdc(alive, gd.filter(col("id") % 100 === 0), "id",
@@ -1678,7 +1674,7 @@ object Queries {
     * gated O(Q·k) frames → broadcast join + tiny aggregate. */
   def v107MaintainedRecall(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
-    val exact = KnnJoin.knnL2(e.filter(col("vec_id") % 7 =!= 0),
+    val exact = KnnJoin.knnL2(e.filter(!isDead(col("vec_id"))),
         queryVecs(e), "vec_id", "embedding", "vec_id", k = 5)
       .select(col("query_id"), col("neighbor_id"))
     val approx = v106StoreMaintenance(s, d)
@@ -1710,8 +1706,7 @@ object Queries {
     * O(batch) ingest + O(dead) filter, zero store rewrites. */
   def v109SqMaintenance(s: SparkSession, d: String): DataFrame = {
     val merged = upsertedSqCodes(s, d)
-    val tomb = emb(s, d).filter(col("vec_id") % 7 === 0)
-      .select(col("vec_id").cast("long").as("dead_id"))
+    val tomb = deadIds(s, d)
     val alive = merged.join(broadcast(tomb),
       merged("gid") === tomb("dead_id"), "left_anti")
     KnnJoin.knnL2Pre(alive, merged.filter(col("gid") % 100 === 0),
@@ -1726,7 +1721,7 @@ object Queries {
     * → broadcast join + tiny aggregate. */
   def v114SqMaintainedRecall(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
-    val exact = KnnJoin.knnL2(e.filter(col("vec_id") % 7 =!= 0),
+    val exact = KnnJoin.knnL2(e.filter(!isDead(col("vec_id"))),
         queryVecs(e), "vec_id", "embedding", "vec_id", k = 5)
       .select(col("query_id"), col("neighbor_id"))
     val approx = v109SqMaintenance(s, d)
@@ -1759,8 +1754,7 @@ object Queries {
   def v110IvfpqMaintenance(s: SparkSession, d: String): DataFrame = {
     val m = 8; val dim = 64
     val (merged, centsDf, book, g) = upsertedIvfpqCodes(s, d)
-    val tomb = emb(s, d).filter(col("vec_id") % 7 === 0)
-      .select(col("vec_id").cast("long").as("dead_id"))
+    val tomb = deadIds(s, d)
     val alive = merged.join(broadcast(tomb),
       merged("id") === tomb("dead_id"), "left_anti")
     IvfPq.searchResidual(alive, centsDf,
@@ -1779,7 +1773,7 @@ object Queries {
     * aggregate. */
   def v115IvfpqMaintainedRecall(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
-    val exact = KnnJoin.knnL2(e.filter(col("vec_id") % 7 =!= 0),
+    val exact = KnnJoin.knnL2(e.filter(!isDead(col("vec_id"))),
         queryVecs(e), "vec_id", "embedding", "vec_id", k = 5)
       .select(col("query_id"), col("neighbor_id"))
     val approx = v110IvfpqMaintenance(s, d)
@@ -1827,7 +1821,7 @@ object Queries {
         .parquet(tmp)
     }
     Store.ensurePath(cmpPath) { tmp =>
-      IvfIndex.compact(s, srcPath, tmp, col("id") % 7 === 0)
+      IvfIndex.compact(s, srcPath, tmp, isDead(col("id")))
     }
     IvfIndex.load(s, cmpPath)
   }
@@ -1854,8 +1848,7 @@ object Queries {
     * only document. */
   private def residentTombs(s: SparkSession, d: String,
                             store: DataFrame): DataFrame =
-    emb(s, d).filter(col("vec_id") % 7 === 0)
-      .select(col("vec_id").cast("long").as("dead_id"))
+    deadIds(s, d)
       .join(store, col("dead_id") === store("id"), "left_semi")
       .localCheckpoint(false)
 
@@ -2036,6 +2029,18 @@ object Queries {
         sum(when(col("c_prev") === col("c"), 1L).otherwise(0L))
           .as("n_stayed"))
 
+  /** One EXACT Lloyd training round under the hard gate — the k-means
+    * step the IVF coarse quantizer trains with (test-only until now
+    * because float centroid means aren't bit-portable). Exactness trick
+    * (same as v14): the updated centroid is carried as (n, sum-vector),
+    * never divided — `||q − s/n||² = A/n²` with `A = Σ(n·q_i − s_i)²`
+    * accumulated in Decimal(38,0), so reassignment compares
+    * `sqrt(A)/(n·scale)` — identical IEEE ops both engines. Plan shape:
+    * map-only literal-argmin assign → one (cluster, dim)-keyed sum
+    * aggregate (map-side combined, nlist·dim output rows) → collect the
+    * broadcast-sized sums → map-only literal-argmin REassign → O(nlist)
+    * count aggregate. Zero data-sized shuffles. Output per cluster:
+    * size after the round and how many members stayed. */
   def v18LloydRound(s: SparkSession, d: String): DataFrame =
     lloydStats(lloydRound(lloydSeedAssign(emb(s, d))))
 
@@ -2083,6 +2088,11 @@ object Queries {
     lloydStats(cur)
   }
 
+  /** Quantized vectors with their LSH bucket key — the blocked-graph
+    * front end of every graph key ([[GraphIndex.bucketed]]). */
+  private def bucketedVecs(s: SparkSession, d: String): DataFrame =
+    GraphIndex.bucketed(emb(s, d))
+
   /** KNN-graph construction — every vector's top-3 neighbors, the
     * build primitive under graph ANN indexes (NN-descent / HNSW layer
     * 0) and graph-based dedup. All-pairs exact is O(N²) and dies at
@@ -2094,27 +2104,8 @@ object Queries {
     * O(N·k) shuffle — never a per-source sort). Vectors alone in their
     * bucket emit no edges (the recall/coverage trade is the operator
     * contract; more planes + multi-probe tune it at 100 TB). */
-  /** Quantized vectors with their LSH bucket key — the blocked-graph
-    * front end shared by v28 (build) and v29 (refine). */
-  private def bucketedVecs(s: SparkSession, d: String): DataFrame = {
-    val planes = LshIndex.quantizePlanes(
-      LshIndex.hyperplanes(dim = 64, nPlanes = 6, seed = 42L))
-    emb(s, d).select(col("vec_id").cast("long").as("id"),
-        quantize(col("embedding")).as("qv"))
-      .withColumn("bucket", LshIndex.bucketKeyQ(col("qv"), planes))
-  }
-
-  /** The ranked bucket-blocked KNN graph (src_id, rnk, dst_id, d2). */
-  private def knnGraphRanked(v: DataFrame): DataFrame = {
-    val scored = v.as("x").join(v.as("y"),
-        col("x.bucket") === col("y.bucket") && col("x.id") =!= col("y.id"))
-      .select(col("x.id").as("src_id"), col("y.id").as("dst_id"),
-        intL2Sq(col("x.qv"), col("y.qv")).cast("double").as("d2"))
-    TopK.perGroup(scored, "src_id", "dst_id", "d2", k = 3, ascending = true)
-  }
-
   def v28KnnGraph(s: SparkSession, d: String): DataFrame =
-    knnGraphRanked(bucketedVecs(s, d))
+    GraphIndex.knnGraph(bucketedVecs(s, d))
       .select(col("src_id"), col("rnk"), col("dst_id"),
         distFromIntSq(col("d2")).as("dist"))
 
@@ -2135,7 +2126,7 @@ object Queries {
     // g1, g2) — localCheckpoint computes the bucketed join + top-k
     // once instead of three times (the v26 lineage-truncation pattern;
     // at cluster scale, checkpoint to storage)
-    val g = knnGraphRanked(v).select("src_id", "dst_id")
+    val g = GraphIndex.knnGraph(v).select("src_id", "dst_id")
       .localCheckpoint(false)
     val twoHop = g.as("g1").join(g.as("g2"),
         col("g1.dst_id") === col("g2.src_id") &&
@@ -2162,13 +2153,13 @@ object Queries {
     * break at asymmetric links, so clusters follow the data manifold,
     * not the bucket structure). The mutual filter is one self-join of
     * the O(N·k) edge list on the reversed key pair — the list itself
-    * reads from the persisted store ([[persistedKnnEdges]], already
+    * reads from the persisted store ([[persistedLayerEdges]], already
     * materialized, so no checkpoint and no rebuild); components run
     * through the d7 min-label-propagation operator (one shuffle per
     * step, lazy-checkpoint convergence, never a collect). Every vector
     * gets a label; singletons keep their own id. */
   def v30MutualKnnClusters(s: SparkSession, d: String): DataFrame = {
-    val g = persistedKnnEdges(s, d)
+    val g = persistedLayerEdges(s, d, 0)
     val mutual = g.as("a").join(g.as("b"),
         col("a.src_id") === col("b.dst_id") &&
           col("a.dst_id") === col("b.src_id") &&
@@ -4024,21 +4015,6 @@ object Queries {
       .agg(count(lit(1)).as("n_copies"), min("asset_id").as("keep_id"),
         min("n_bytes").as("n_bytes"))
 
-  /** WebDataset-style shard packing — the multimodal EXPORT shape: per
-    * source, assets in id order pack greedily into ~8 KiB shards
-    * (shard = bytes-before div shardBytes); output is the per-shard
-    * manifest a tar-writer would consume. All integer arithmetic.
-    *
-    * The running sum is TWO-LEVEL, never a whole-source single-task
-    * window: assets chunk by id range (4096 ids/chunk), level 1 runs
-    * the running sum WITHIN each (source, chunk) — parallel across
-    * chunks, ≤4096 rows per window partition — and level 2 prefix-sums
-    * the per-chunk byte totals (one row per chunk, 4096× smaller than
-    * the corpus; AQE broadcasts the offsets back onto the level-1
-    * partitioning). bytes_before = chunk offset + chunk-local running
-    * sum — identical to the one-window form. A corpus so large that
-    * the CHUNK TOTALS overwhelm one task recurses the same two-level
-    * split on the chunk frame. */
   /** The packed per-asset frame behind m3/m13: (asset_id, source,
     * n_bytes, bytes_before) via the two-level running sum described on
     * [[m3ShardAssign]]. */
@@ -4063,6 +4039,21 @@ object Queries {
       .withColumn("bytes_before", col("chunk_offset") + col("local_before"))
   }
 
+  /** WebDataset-style shard packing — the multimodal EXPORT shape: per
+    * source, assets in id order pack greedily into ~8 KiB shards
+    * (shard = bytes-before div shardBytes); output is the per-shard
+    * manifest a tar-writer would consume. All integer arithmetic.
+    *
+    * The running sum is TWO-LEVEL, never a whole-source single-task
+    * window: assets chunk by id range (4096 ids/chunk), level 1 runs
+    * the running sum WITHIN each (source, chunk) — parallel across
+    * chunks, ≤4096 rows per window partition — and level 2 prefix-sums
+    * the per-chunk byte totals (one row per chunk, 4096× smaller than
+    * the corpus; AQE broadcasts the offsets back onto the level-1
+    * partitioning). bytes_before = chunk offset + chunk-local running
+    * sum — identical to the one-window form. A corpus so large that
+    * the CHUNK TOTALS overwhelm one task recurses the same two-level
+    * split on the chunk frame. */
   def m3ShardAssign(s: SparkSession, d: String): DataFrame =
     packedAssets(s, d)
       .groupBy(col("source"), floorDiv("bytes_before", 8192L).as("shard_id"))
@@ -5579,11 +5570,11 @@ object Queries {
     * O(N·k); its dst-keyed count is map-side combined; the node join is
     * an O(N) id-equi join; the final histogram is O(distinct degrees)
     * rows. Never touches vectors at all: the edge list comes from the
-    * persisted store ([[persistedKnnEdges]] — the graph is built per
+    * persisted store ([[persistedLayerEdges]] — the graph is built per
     * snapshot, diagnostics read it), and the node universe is the raw
     * id column. */
   def v52GraphDegree(s: SparkSession, d: String): DataFrame = {
-    val deg = persistedKnnEdges(s, d)
+    val deg = persistedLayerEdges(s, d, 0)
       .groupBy(col("dst_id").as("id")).agg(count(lit(1)).as("deg"))
     emb(s, d).select(col("vec_id").cast("long").as("id"))
       .join(deg, Seq("id"), "left")
@@ -5616,14 +5607,14 @@ object Queries {
     * class's outgoing edges that stay inside the class: the cheap
     * embedding-space label-consistency diagnostic (low purity = classes
     * that bleed into each other = mislabels or a weak encoder). Edges
-    * are O(N·k) and read from the persisted store ([[persistedKnnEdges]]
+    * are O(N·k) and read from the persisted store ([[persistedLayerEdges]]
     * — no per-diagnostic rebuild); the two label lookups are id-keyed
     * equi joins against the O(N) label frame; the rollup is map-side
     * combined to O(labels) rows with ONE IEEE division each. */
   def v54KnnPurity(s: SparkSession, d: String): DataFrame = {
     val lab = emb(s, d).select(col("vec_id").cast("long").as("id"),
       col("label").cast("long").as("lab"))
-    val edges = persistedKnnEdges(s, d)
+    val edges = persistedLayerEdges(s, d, 0)
     edges
       .join(lab.select(col("id").as("src_id"), col("lab").as("src_lab")),
         "src_id")
@@ -6007,7 +5998,7 @@ object Queries {
     * native partial top-k. */
   def v62TombstoneSearch(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
-    val tombstones = e.filter(col("vec_id") % 7 === 0)
+    val tombstones = e.filter(isDead(col("vec_id")))
       .select(col("vec_id"))
     val alive = e.join(tombstones, Seq("vec_id"), "left_anti")
     KnnJoin.knnL2(alive, queryVecs(e), "vec_id", "embedding", "vec_id",
@@ -6295,44 +6286,66 @@ object Queries {
     * neighbors(current). Including the current node makes the descent
     * MONOTONE (distance never increases — the spec proves it), and a
     * stalled walk is the greedy fixed point, exactly HNSW's stop rule.
-    * Scale shape: each step joins an O(Q·(k+1)) candidate frame to the
-    * vector store BY ID (AQE broadcasts the candidates; the gallery
-    * streams) — a query batch costs O(steps·Q·k) distance evals total,
-    * independent of N, which is WHY graph search beats scanning at
-    * 100 TB. The edge list is localCheckpointed (computed once,
-    * referenced per step); the entry scalar is a 1-row crossjoin (q20
-    * class). */
+    * It is [[GraphIndex.walk]] at ef = 1. Scale shape: each step joins
+    * an O(Q·(k+1)) candidate frame to the vector store BY ID — a query
+    * batch costs O(steps·Q·k) distance evals total, independent of N,
+    * which is WHY graph search beats scanning at 100 TB. The edge list
+    * is localCheckpointed (computed once, referenced per step); the
+    * entry scalar is a 1-row crossjoin (q20 class). */
   def v57GraphSearch(s: SparkSession, d: String): DataFrame = {
-    val v = bucketedVecs(s, d)
-    val vec = v.select(col("id"), col("qv"))
-    val edges = knnGraphRanked(v).select(col("src_id"), col("dst_id"))
-      .localCheckpoint(false)
-    val q = vec.filter(col("id") % 100 === 0)
-      .select(col("id").as("query_id"), col("qv").as("query_v"))
-    val entry = vec.agg(min("id").as("cur"))
-    var cur = q.select(col("query_id")).crossJoin(entry)
-    for (step <- 1 to 3) {
-      val cand = cur.select(col("query_id"), col("cur").as("nid"))
-        .unionAll(cur.join(edges, col("cur") === col("src_id"))
-          .select(col("query_id"), col("dst_id").as("nid")))
-      cur = cand
-        .join(vec.select(col("id").as("nid"), col("qv").as("nv")), "nid")
-        .join(q, "query_id")
-        .select(col("query_id"), col("nid"),
-          intL2Sq(col("nv"), col("query_v")).cast("double").as("d2"))
-        .groupBy("query_id")
-        .agg(min(struct(col("d2"), col("nid"))).as("m"))
-        .select(col("query_id"), col("m.nid").as("cur"))
-      // r14: one mid-loop checkpoint caps the 2^3 plan fan-out
-      // (coarseDescentLoop's rationale).
-      if (step == 2) cur = cur.localCheckpoint(false)
-    }
-    cur.join(vec.select(col("id").as("cur"), col("qv").as("nv")), "cur")
-      .join(q, "query_id")
-      .select(col("query_id"), col("cur").as("node_id"),
-        distFromIntSq(intL2Sq(col("nv"), col("query_v")).cast("double"))
-          .as("dist"))
+    val (vec, q) = graphInputs(s, d)
+    val edges = GraphIndex.knnGraph(bucketedVecs(s, d))
+      .select(col("src_id"), col("dst_id")).localCheckpoint(false)
+    greedyRows(GraphIndex.walk(entryFrontier(q, vec), q, vec, edges, ef = 1))
   }
+
+  /** The graph family's inputs: the quantized vectors (id, qv) and the
+    * query set, every 100th vector, as (query_id, query_v). */
+  private def graphInputs(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    val vec = bucketedVecs(s, d).select(col("id"), col("qv"))
+    (vec, vec.filter(col("id") % 100 === 0)
+      .select(col("id").as("query_id"), col("qv").as("query_v")))
+  }
+
+  /** Every query starts at the min id of `vecs`: (query_id, nid). */
+  private def entryFrontier(q: DataFrame, vecs: DataFrame): DataFrame =
+    q.select(col("query_id")).crossJoin(vecs.agg(min("id").as("nid")))
+
+  /** A greedy walk's winner as the v57-family row. */
+  private def greedyRows(ranked: DataFrame): DataFrame =
+    ranked.select(col("query_id"), col("nid").as("node_id"),
+      distFromIntSq(col("d2")).as("dist"))
+
+  /** A beam's final frontier as the v79-family row. */
+  private def beamRows(ranked: DataFrame): DataFrame =
+    ranked.select(col("query_id"), col("rnk"), col("nid").as("node_id"),
+      distFromIntSq(col("d2")).as("dist"))
+
+  /** Store names of the persisted layer edge lists, by level. */
+  private val layerStores =
+    Seq("graft_knn_edges", "graft_coarse_edges", "graft_coarse2_edges")
+
+  /** v28's bucket-blocked KNN edge list over hierarchy level `level`
+    * ([[GraphIndex.layer]]: hash % 5^level = 0), served from the
+    * bucketed store — the build-once accessor for every graph-family
+    * key that CONSUMES a graph rather than gating its construction (v52
+    * degree, v54 purity, v30 components, the walks and their recall
+    * rows). The first caller in a session pays the O(|layer|·k) build;
+    * every other key reads the bucketed (src_id-sorted) table with zero
+    * build cost — the amortization a deployment actually gets, since an
+    * index is built per data snapshot, not per query
+    * (faiss_utils.py:11-17). The build shrinks geometrically per level,
+    * which is why a log-depth hierarchy is affordable at 100 TB. The
+    * source fingerprint in the table name means regenerated data mints
+    * a fresh edge list. v28/v29/v57 keep their explicit rebuild shape:
+    * they gate the BUILD semantics themselves. */
+  private def persistedLayerEdges(s: SparkSession, d: String,
+                                  level: Int): DataFrame =
+    BucketedStore.ensure(s, Store.name(layerStores(level), d),
+      GraphIndex.knnGraph(GraphIndex.layer(bucketedVecs(s, d), level))
+        .select(col("src_id"), col("dst_id")),
+      "src_id", numBuckets = 32)
 
   /** v57's greedy walk served from a PERSISTED edge list — the gated
     * deployment shape (persist once, search many — the d9/d23 recipe
@@ -6347,54 +6360,10 @@ object Queries {
     * faiss_utils.py:11-17). Identical math to v57, so the oracle is
     * v57's walk verbatim — the gate checks that persistence round-trips
     * the graph bit-exactly. */
-  /** v28's bucket-blocked KNN edge list served from the bucketed store
-    * — the shared build-once accessor for every graph-family key that
-    * CONSUMES the graph rather than gating its construction (v52 degree,
-    * v54 purity, v30 components, v64 walk, v61 recall). The first
-    * caller in a session pays the O(N·k) build; every other key reads
-    * the bucketed (src_id-sorted) table with zero build cost — the
-    * amortization a deployment actually gets, since an index is built
-    * per data snapshot, not per query (faiss_utils.py:11-17). The
-    * source fingerprint in the table name means regenerated data mints
-    * a fresh edge list. v28/v29/v57 keep their explicit rebuild shape:
-    * they gate the BUILD semantics themselves. */
-  private def persistedKnnEdges(s: SparkSession, d: String): DataFrame = {
-    val table = Store.name("graft_knn_edges", d)
-    BucketedStore.ensure(s, table,
-      knnGraphRanked(bucketedVecs(s, d))
-        .select(col("src_id"), col("dst_id")),
-      "src_id", numBuckets = 32)
-  }
-
   def v64GraphSearchPersisted(s: SparkSession, d: String): DataFrame = {
-    val v = bucketedVecs(s, d)
-    val vec = v.select(col("id"), col("qv"))
-    val edges = persistedKnnEdges(s, d)
-    val q = vec.filter(col("id") % 100 === 0)
-      .select(col("id").as("query_id"), col("qv").as("query_v"))
-    val entry = vec.agg(min("id").as("cur"))
-    var cur = q.select(col("query_id")).crossJoin(entry)
-    for (step <- 1 to 3) {
-      val cand = cur.select(col("query_id"), col("cur").as("nid"))
-        .unionAll(broadcast(cur).join(edges, col("cur") === col("src_id"))
-          .select(col("query_id"), col("dst_id").as("nid")))
-      cur = cand
-        .join(vec.select(col("id").as("nid"), col("qv").as("nv")), "nid")
-        .join(q, "query_id")
-        .select(col("query_id"), col("nid"),
-          intL2Sq(col("nv"), col("query_v")).cast("double").as("d2"))
-        .groupBy("query_id")
-        .agg(min(struct(col("d2"), col("nid"))).as("m"))
-        .select(col("query_id"), col("m.nid").as("cur"))
-      // r14: one mid-loop checkpoint caps the 2^3 plan fan-out
-      // (coarseDescentLoop's rationale).
-      if (step == 2) cur = cur.localCheckpoint(false)
-    }
-    cur.join(vec.select(col("id").as("cur"), col("qv").as("nv")), "cur")
-      .join(q, "query_id")
-      .select(col("query_id"), col("cur").as("node_id"),
-        distFromIntSq(intL2Sq(col("nv"), col("query_v")).cast("double"))
-          .as("dist"))
+    val (vec, q) = graphInputs(s, d)
+    greedyRows(GraphIndex.walk(entryFrontier(q, vec), q, vec,
+      persistedLayerEdges(s, d, 0), ef = 1))
   }
 
   /** BEAM graph search (ef=4) over the persisted KNN graph — the HNSW
@@ -6413,85 +6382,9 @@ object Queries {
     * of N. Output: the final ranked frontier (the top-ef the serving
     * layer would re-rank or return). */
   def v79BeamSearch(s: SparkSession, d: String): DataFrame = {
-    val v = bucketedVecs(s, d)
-    val vec = v.select(col("id"), col("qv"))
-    val edges = persistedKnnEdges(s, d)
-    val q = vec.filter(col("id") % 100 === 0)
-      .select(col("id").as("query_id"), col("qv").as("query_v"))
-    val entry = vec.agg(min("id").as("nid"))
-    plainBeamLoop(q.select(col("query_id")).crossJoin(entry), q, vec,
-        edges)
-      .select(col("query_id"), col("rnk"), col("nid").as("node_id"),
-        distFromIntSq(col("d2")).as("dist"))
-  }
-
-  /** The plain (tombstone-free) 3-step ef=4 beam from a caller-supplied
-    * frontier — ONE definition shared by v79 (flat min-id entry),
-    * [[hnswEntryServe]]'s layer 0 (v88/v103 hierarchical entry), and
-    * v119 (compacted-store serve): the [[tombBeamLoop]] convention
-    * applied to the clean-store paths, so the serve loop cannot drift
-    * between entry/build variants (ADVICE r12). Each step expands the
-    * whole frontier through the edge list (broadcast O(Q·ef) frontier
-    * against the streaming bucketed edge scan), dedups, scores against
-    * `vec` by id, and keeps the ef best by (d2, nid). The ranked frame
-    * is checkpointed per step: the next step references it TWICE
-    * (union + edge join), so without truncation the plan doubles per
-    * step (v26's localCheckpoint rationale applied to the walk state).
-    * Returns the final ranked frontier (query_id, rnk, nid, d2). */
-  private def plainBeamLoop(frontier0: DataFrame, q: DataFrame,
-                            vec: DataFrame, edges: DataFrame,
-                            ef: Int = 4): DataFrame = {
-    var frontier = frontier0
-    var ranked: DataFrame = null
-    for (step <- 1 to 3) {
-      // candidate dedup happens INSIDE the bounded top-k buffer
-      // (perGroupDistinct) — d2 is a deterministic function of
-      // (query_id, nid), so this is exactly the old
-      // `.distinct()` → perGroup result with one less exchange per
-      // step (r13 optimization: 3 shuffles/step → 2).
-      val cand = frontier
-        .unionAll(broadcast(frontier)
-          .join(edges, col("nid") === col("src_id"))
-          .select(col("query_id"), col("dst_id").as("nid")))
-      val scored = cand
-        .join(vec.select(col("id").as("nid"), col("qv").as("nv")), "nid")
-        .join(q, "query_id")
-        .select(col("query_id"), col("nid"),
-          intL2Sq(col("nv"), col("query_v")).cast("double").as("d2"))
-      // checkpoint only the steps whose ranked frame is referenced
-      // twice by the NEXT step (union + edge join); the final step's
-      // output flows straight to the caller — materializing it was one
-      // wasted Spark action per walk (r13 optimization). r14 NOTE: the
-      // verdict-suggested step FUSION (checkpoint only step 2, letting
-      // ReusedExchange collapse the doubled step-1 subtree) was
-      // implemented and MEASURED — interleaved same-host solo probes
-      // showed it consistently SLOWER (in-job time rose more than the
-      // saved action: v108 1.60→2.09 job-s, family 7/7 keys slower,
-      // BENCH_opt14_solo_probes.json) — so the per-step checkpoint
-      // shape stays.
-      ranked = TopK.perGroupDistinct(scored, "query_id", "nid", "d2", ef,
-        ascending = true)
-      if (step < 3) ranked = ranked.localCheckpoint(false)
-      frontier = ranked.select(col("query_id"), col("nid"))
-    }
-    ranked
-  }
-
-  /** Coarse-layer edge list over the portable-hash-sampled subset
-    * (hash % 5 = 0 — v9's split contract, so both engines sample the
-    * identical layer) — the layer-1 graph of the 2-layer HNSW entry
-    * (v88), persisted into the fingerprinted bucketed store like the
-    * layer-0 list. The coarse build costs O(|S|·k) on a 1/5th-size
-    * corpus (a production deployment samples far sparser per level;
-    * the CONTRACT — portable hash, persisted layer, walk-then-descend
-    * — is what scales). */
-  private def persistedCoarseEdges(s: SparkSession, d: String): DataFrame = {
-    val table = Store.name("graft_coarse_edges", d)
-    BucketedStore.ensure(s, table,
-      knnGraphRanked(bucketedVecs(s, d)
-          .filter(Sampling.portableHash(col("id")) % 5 === 0))
-        .select(col("src_id"), col("dst_id")),
-      "src_id", numBuckets = 32)
+    val (vec, q) = graphInputs(s, d)
+    beamRows(GraphIndex.walk(entryFrontier(q, vec), q, vec,
+      persistedLayerEdges(s, d, 0), ef = 4))
   }
 
   /** 2-layer HNSW-style entry — the hierarchy that keeps graph-search
@@ -6510,87 +6403,28 @@ object Queries {
     * walk winner; spec proves the winner lies in the sampled layer and
     * the frontier's recall reads next to v79's. */
   def v88HnswEntry(s: SparkSession, d: String): DataFrame =
-    hnswEntryServe(s, d, persistedKnnEdges(s, d),
-      persistedCoarseEdges(s, d))
+    hnswServe(s, d, Seq(persistedLayerEdges(s, d, 0),
+      persistedLayerEdges(s, d, 1)))
 
-  /** The 2-layer walk of v88 over CALLER-SUPPLIED edge lists — shared
-    * by v88 (persisted full-build stores) and v103 (merged upserted
-    * edges), so the hierarchy's serving semantics cannot drift between
-    * the build paths: coarse greedy width-1 descent seeds v79's ef=4
-    * layer-0 beam. */
-  private def hnswEntryServe(s: SparkSession, d: String,
-                             edges: DataFrame, coarse: DataFrame)
-      : DataFrame = {
-    val v = bucketedVecs(s, d)
-    val vec = v.select(col("id"), col("qv"))
-    val subVec = vec.filter(Sampling.portableHash(col("id")) % 5 === 0)
-    val q = vec.filter(col("id") % 100 === 0)
-      .select(col("id").as("query_id"), col("qv").as("query_v"))
-    // layer 1: greedy width-1 descent over the coarse graph (v57's
-    // loop on the sampled layer, entry = the subset's min id)
-    val entry = subVec.agg(min("id").as("cur"))
-    val cur = coarseDescentLoop(
-      q.select(col("query_id")).crossJoin(entry), q, subVec, coarse)
-    // layer 0: the SHARED plain ef-beam, seeded by the layer-1 winner
-    val frontier0 = cur.select(col("query_id"), col("cur").as("nid"))
-      .localCheckpoint(false)
-    plainBeamLoop(frontier0, q, vec, edges)
-      .select(col("query_id"), col("rnk"), col("nid").as("node_id"),
-        distFromIntSq(col("d2")).as("dist"))
-  }
-
-  /** The 3-step greedy width-1 descent over ONE coarse layer — v57's
-    * loop from a caller-supplied (query_id, cur) state, ONE definition
-    * shared by [[hnswEntryServe]] (v88/v103's single coarse layer) and
-    * v122's multi-layer descent, the plainBeamLoop convention applied
-    * to the upper layers so descent semantics cannot drift between
-    * hierarchy depths. Each step considers {current} ∪
-    * neighbors(current) (broadcast O(Q) state against the streaming
-    * layer edge scan), scores against the LAYER's vectors by id, and
-    * keeps the (d2, nid)-min — monotone, stalls at the greedy fixed
-    * point (HNSW's per-layer stop rule). Returns (query_id, cur). */
-  private def coarseDescentLoop(cur0: DataFrame, q: DataFrame,
-                                layerVec: DataFrame,
-                                layerEdges: DataFrame): DataFrame = {
-    var cur = cur0
-    for (step <- 1 to 3) {
-      val cand = cur.select(col("query_id"), col("cur").as("nid"))
-        .unionAll(broadcast(cur).join(layerEdges,
-            col("cur") === col("src_id"))
-          .select(col("query_id"), col("dst_id").as("nid")))
-      cur = cand
-        .join(layerVec.select(col("id").as("nid"), col("qv").as("nv")),
-          "nid")
-        .join(q, "query_id")
-        .select(col("query_id"), col("nid"),
-          intL2Sq(col("nv"), col("query_v")).cast("double").as("d2"))
-        .groupBy("query_id")
-        .agg(min(struct(col("d2"), col("nid"))).as("m"))
-        .select(col("query_id"), col("m.nid").as("cur"))
-      // r14: one mid-loop checkpoint — each step references `cur`
-      // twice, so the un-truncated 3-step lineage planned 2^3 copies
-      // of the walk state (the 160-exchange v57-family plans); one
-      // materialization after step 2 caps the fan-out at 2 per
-      // boundary for one extra action (guide §3.3: very wide plans
-      // make planning itself the bottleneck).
-      if (step == 2) cur = cur.localCheckpoint(false)
-    }
-    cur
-  }
-
-  /** Layer-2 edge list over the hash % 25 sample — the third level of
-    * v122's geometric hierarchy, persisted into the fingerprinted
-    * bucketed store exactly like the layer-0/1 lists. 1/25th of the
-    * corpus: the O(|S|·k) build cost shrinks geometrically per level,
-    * which is why a log-depth hierarchy is affordable at 100 TB. */
-  private def persistedCoarse2Edges(s: SparkSession, d: String)
-      : DataFrame = {
-    val table = Store.name("graft_coarse2_edges", d)
-    BucketedStore.ensure(s, table,
-      knnGraphRanked(bucketedVecs(s, d)
-          .filter(Sampling.portableHash(col("id")) % 25 === 0))
-        .select(col("src_id"), col("dst_id")),
-      "src_id", numBuckets = 32)
+  /** The hierarchical serve of v88/v103/v118/v122 over CALLER-SUPPLIED
+    * edge lists, `layerEdges(l)` the graph of level l (layer 0 first),
+    * so the hierarchy's serving semantics cannot drift between the
+    * build paths or depths: entry = the top layer's min (alive) id,
+    * greedy width-1 descents down the upper layers, then v79's ef=4
+    * beam at layer 0 ([[GraphIndex.layeredWalk]]). With `tombs`, every
+    * layer walks the delete set (v108's one-hop bypass) over its alive
+    * vectors; the alive frame is one corpus-sized anti-join per query
+    * batch, checkpointed and amortized across every step. */
+  private def hnswServe(s: SparkSession, d: String,
+                        layerEdges: Seq[DataFrame],
+                        tombs: Option[DataFrame] = None): DataFrame = {
+    val (vec, q) = graphInputs(s, d)
+    val alive =
+      tombs.fold(vec)(t => withoutDead(vec, t).localCheckpoint(false))
+    val layers = layerEdges.indices
+      .map(l => (GraphIndex.layer(alive, l), layerEdges(l))).reverse
+    beamRows(GraphIndex.layeredWalk(entryFrontier(q, layers.head._1), q,
+      layers, ef = 4, tombs))
   }
 
   /** The three persisted edge stores of the multi-layer hierarchy
@@ -6599,8 +6433,8 @@ object Queries {
     * graphs v122 serves from. */
   private[graft] def multilayerEdges(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) =
-    (persistedKnnEdges(s, d), persistedCoarseEdges(s, d),
-      persistedCoarse2Edges(s, d))
+    (persistedLayerEdges(s, d, 0), persistedLayerEdges(s, d, 1),
+      persistedLayerEdges(s, d, 2))
 
   /** MULTI-LAYER HNSW — v88's 2-layer entry extended to the geometric
     * hierarchy proper (Malkov & Yashunin '16: ~log N levels, each a
@@ -6611,36 +6445,21 @@ object Queries {
     * property (hash % 25 = 0 ⇒ hash % 5 = 0) that makes every layer's
     * winner a valid seed for the layer below. The walk: entry = the
     * TOP layer's min id, width-1 greedy descent through L2 then L1
-    * (the SHARED coarseDescentLoop, each winner seeding the next
-    * layer), then v79's ef=4 beam at layer 0 (the SHARED
-    * plainBeamLoop). All three layers serve from persisted
-    * fingerprinted edge stores — zero build per batch; the added cost
-    * over v88 is 3 greedy steps of O(Q·(k+1)) distance evals on a
-    * 1/25th-size layer, and at scale each extra level replaces the
-    * linear traversal a too-shallow hierarchy pays crossing a level
-    * that is still too big. Walk state is checkpointed BETWEEN layers
-    * (each descent step references its state twice; 9 steps would
-    * otherwise stack 2^9 plan copies). Oracle = the L2+L1 walk CTEs +
-    * the SHARED beam CTEs; spec replays all nine steps driver-side
-    * and proves the nesting/membership invariants. */
+    * (each winner seeding the next layer), then v79's ef=4 beam at
+    * layer 0 — the SHARED [[hnswServe]]. All three layers serve from
+    * persisted fingerprinted edge stores — zero build per batch; the
+    * added cost over v88 is 3 greedy steps of O(Q·(k+1)) distance
+    * evals on a 1/25th-size layer, and at scale each extra level
+    * replaces the linear traversal a too-shallow hierarchy pays
+    * crossing a level that is still too big. Walk state is
+    * checkpointed BETWEEN layers (each descent step references its
+    * state twice; 9 steps would otherwise stack 2^9 plan copies).
+    * Oracle = the L2+L1 walk CTEs + the SHARED beam CTEs; spec replays
+    * all nine steps driver-side and proves the nesting/membership
+    * invariants. */
   def v122HnswMultilayer(s: SparkSession, d: String): DataFrame = {
-    val v = bucketedVecs(s, d)
-    val vec = v.select(col("id"), col("qv"))
-    val sub1 = vec.filter(Sampling.portableHash(col("id")) % 5 === 0)
-    val sub2 = vec.filter(Sampling.portableHash(col("id")) % 25 === 0)
     val (edges0, edges1, edges2) = multilayerEdges(s, d)
-    val q = vec.filter(col("id") % 100 === 0)
-      .select(col("id").as("query_id"), col("qv").as("query_v"))
-    val entry = sub2.agg(min("id").as("cur"))
-    val w2 = coarseDescentLoop(
-        q.select(col("query_id")).crossJoin(entry), q, sub2, edges2)
-      .localCheckpoint(false)
-    val w1 = coarseDescentLoop(w2, q, sub1, edges1)
-      .localCheckpoint(false)
-    plainBeamLoop(w1.select(col("query_id"), col("cur").as("nid")), q,
-        vec, edges0)
-      .select(col("query_id"), col("rnk"), col("nid").as("node_id"),
-        distFromIntSq(col("d2")).as("dist"))
+    hnswServe(s, d, Seq(edges0, edges1, edges2))
   }
 
   /** Multi-layer HNSW quality — v94's recall convention for v122, so
@@ -6685,34 +6504,25 @@ object Queries {
     * min ALIVE id (the fixture's global min id 0 IS dead — vec_id %
     * 7 — so the gate exercises the bypass from step 0).
     *
-    * Plan shape per step: the O(Q·ef) frontier broadcasts against the
-    * streaming persisted edge store (v79's contract); dead-neighbor
-    * detection inner-joins the tombstone scan with the BROADCAST
-    * O(Q·ef·k) neighbor frame — never the reverse: the delete set is
-    * data-sized and must not be broadcast (v106's bound argument does
-    * not apply to an uncompacted graph store); the bypass re-reads
-    * the edge store for the O(dead-neighbor) rows only; scoring joins
-    * candidates to the ALIVE vector frame by id, so dead candidates
-    * drop out with no anti-join in the per-step path. The alive frame
-    * is ONE corpus-sized anti-join per query batch, checkpointed and
-    * amortized across all steps (a deployment persists it as the
-    * compacted store); everything else is O(Q·ef·k) frames,
-    * independent of N. */
+    * Plan shape per step ([[GraphIndex.expand]]): the O(Q·ef) frontier
+    * broadcasts against the streaming persisted edge store (v79's
+    * contract); dead-neighbor detection inner-joins the tombstone scan
+    * with the BROADCAST O(Q·ef·k) neighbor frame — never the reverse:
+    * the delete set is data-sized and must not be broadcast (v106's
+    * bound argument does not apply to an uncompacted graph store); the
+    * bypass re-reads the edge store for the O(dead-neighbor) rows only;
+    * scoring joins candidates to the ALIVE vector frame by id, so dead
+    * candidates drop out with no anti-join in the per-step path. The
+    * alive frame is ONE corpus-sized anti-join per query batch,
+    * checkpointed and amortized across all steps (a deployment
+    * persists it as the compacted store); everything else is
+    * O(Q·ef·k) frames, independent of N. */
   def v108GraphTombstoneSearch(s: SparkSession, d: String): DataFrame = {
-    val v = bucketedVecs(s, d)
-    val vec = v.select(col("id"), col("qv"))
-    val edges = persistedKnnEdges(s, d)
-    val tombs = emb(s, d).filter(col("vec_id") % 7 === 0)
-      .select(col("vec_id").cast("long").as("dead_id"))
-    val aliveVec = vec.join(tombs, vec("id") === tombs("dead_id"),
-      "left_anti").localCheckpoint(false)
-    val q = vec.filter(col("id") % 100 === 0)
-      .select(col("id").as("query_id"), col("qv").as("query_v"))
-    val entry = aliveVec.agg(min("id").as("nid"))
-    val frontier0 = q.select(col("query_id")).crossJoin(entry)
-    tombBeamLoop(frontier0, q, aliveVec, edges, tombs)
-      .select(col("query_id"), col("rnk"), col("nid").as("node_id"),
-        distFromIntSq(col("d2")).as("dist"))
+    val (vec, q) = graphInputs(s, d)
+    val tombs = deadIds(s, d)
+    val aliveVec = withoutDead(vec, tombs).localCheckpoint(false)
+    beamRows(GraphIndex.walk(entryFrontier(q, aliveVec), q, aliveVec,
+      persistedLayerEdges(s, d, 0), ef = 4, Some(tombs)))
   }
 
   /** The COMPACTED edge list — the graph family's reclaim step
@@ -6728,11 +6538,9 @@ object Queries {
   private[graft] def compactedGraphEdges(s: SparkSession, d: String)
       : DataFrame = {
     val v = bucketedVecs(s, d)
-    val tombs = emb(s, d).filter(col("vec_id") % 7 === 0)
-      .select(col("vec_id").cast("long").as("dead_id"))
-    val alive = v.join(tombs, v("id") === tombs("dead_id"), "left_anti")
-      .localCheckpoint(false)
-    val edges = persistedKnnEdges(s, d)
+    val tombs = deadIds(s, d)
+    val alive = withoutDead(v, tombs).localCheckpoint(false)
+    val edges = persistedLayerEdges(s, d, 0)
     // sources that LOST an edge: alive src with a dead dst
     val affected = edges
       .join(tombs, edges("dst_id") === tombs("dead_id"), "left_semi")
@@ -6748,12 +6556,8 @@ object Queries {
     // repair: affected × same-bucket ALIVE mates, one top-3 cut
     val afV = alive.join(affected.withColumnRenamed("src_id", "id"),
       Seq("id"))
-    val scored = afV.as("x").join(alive.as("y"),
-        col("x.bucket") === col("y.bucket") && col("x.id") =!= col("y.id"))
-      .select(col("x.id").as("src_id"), col("y.id").as("dst_id"),
-        intL2Sq(col("x.qv"), col("y.qv")).cast("double").as("d2"))
-    val repaired = TopK.perGroup(scored, "src_id", "dst_id", "d2",
-        k = 3, ascending = true)
+    val repaired = TopK.perGroup(GraphIndex.bucketPairs(afV, alive),
+        "src_id", "dst_id", "d2", k = GraphIndex.Degree, ascending = true)
       .select(col("src_id"), col("dst_id"))
     keep.unionByName(repaired)
   }
@@ -6762,11 +6566,7 @@ object Queries {
     * scratch on the ALIVE corpus (what compaction must equal). */
   private[graft] def aliveRebuiltEdges(s: SparkSession, d: String)
       : DataFrame = {
-    val tombs = emb(s, d).filter(col("vec_id") % 7 === 0)
-      .select(col("vec_id").cast("long").as("dead_id"))
-    val v = bucketedVecs(s, d)
-    knnGraphRanked(v.join(tombs, v("id") === tombs("dead_id"),
-      "left_anti"))
+    GraphIndex.knnGraph(withoutDead(bucketedVecs(s, d), deadIds(s, d)))
   }
 
   /** GRAPH compaction + serve — the graph family's RECLAIM step
@@ -6786,132 +6586,27 @@ object Queries {
     val edges = BucketedStore.ensure(s,
       Store.name("graft_knn_edges_cpt", d),
       compactedGraphEdges(s, d), "src_id", numBuckets = 32)
-    val v = bucketedVecs(s, d)
-    val vec = v.select(col("id"), col("qv"))
-    val tombs = emb(s, d).filter(col("vec_id") % 7 === 0)
-      .select(col("vec_id").cast("long").as("dead_id"))
-    val q = vec.filter(col("id") % 100 === 0)
-      .select(col("id").as("query_id"), col("qv").as("query_v"))
-    val entry = vec.join(tombs, vec("id") === tombs("dead_id"),
-      "left_anti").agg(min("id").as("nid"))
-    plainBeamLoop(q.select(col("query_id")).crossJoin(entry), q, vec,
-        edges)
-      .select(col("query_id"), col("rnk"), col("nid").as("node_id"),
-        distFromIntSq(col("d2")).as("dist"))
-  }
-
-  /** The 3-step tombstone-aware ef=4 beam from an (already alive)
-    * frontier — ONE definition shared by v108 (flat alive entry) and
-    * v118 (hierarchical entry, seeded by the coarse descent winner),
-    * so the delete semantics cannot drift between the entry paths.
-    * Returns the final ranked frontier (query_id, rnk, nid, d2). */
-  private def tombBeamLoop(frontier0: DataFrame, q: DataFrame,
-                           aliveVec: DataFrame, edges: DataFrame,
-                           tombs: DataFrame, ef: Int = 4): DataFrame = {
-    var frontier = frontier0
-    var ranked: DataFrame = null
-    for (step <- 1 to 3) {
-      // r13 optimization: both per-step `.distinct()`s dropped — the
-      // neighbor frame's dedup only shrank already-tiny O(Q·k)
-      // broadcast frames (duplicates change neither the dead-detection
-      // join's output set nor the bypass expansion's), and candidate
-      // dedup happens inside the bounded top-k buffer
-      // (perGroupDistinct; d2 is deterministic per (query_id, nid)).
-      // 5 shuffles/step → 3, identical rows out.
-      val nbrs = broadcast(frontier)
-        .join(edges, col("nid") === col("src_id"))
-        .select(col("query_id"), col("dst_id").as("nid"))
-      val deadN = tombs.join(broadcast(nbrs),
-          col("dead_id") === col("nid"))
-        .select(col("query_id"), col("nid"))
-      val bypass = broadcast(deadN)
-        .join(edges, col("nid") === col("src_id"))
-        .select(col("query_id"), col("dst_id").as("nid"))
-      val cand = frontier.unionAll(nbrs).unionAll(bypass)
-      val scored = cand
-        .join(aliveVec.select(col("id").as("nid"), col("qv").as("nv")),
-          "nid")
-        .join(q, "query_id")
-        .select(col("query_id"), col("nid"),
-          intL2Sq(col("nv"), col("query_v")).cast("double").as("d2"))
-      // final step's ranked frame is only read once by the caller —
-      // no checkpoint (plainBeamLoop's rationale; its r14 fusion note
-      // applies here too — measured slower, reverted).
-      ranked = TopK.perGroupDistinct(scored, "query_id", "nid", "d2", ef,
-        ascending = true)
-      if (step < 3) ranked = ranked.localCheckpoint(false)
-      frontier = ranked.select(col("query_id"), col("nid"))
-    }
-    ranked
+    val (vec, q) = graphInputs(s, d)
+    val entry = entryFrontier(q, withoutDead(vec, deadIds(s, d)))
+    beamRows(GraphIndex.walk(entry, q, vec, edges, ef = 4))
   }
 
   /** Tombstone-aware 2-LAYER serving — v108's delete semantics on
-    * v88's hierarchical entry (the r11 verdict #1's parenthetical):
-    * BOTH layers walk the delete set. The coarse greedy descent
-    * excludes dead nodes from its width-1 state but bypasses through
-    * their edges (entry = the sampled layer's min ALIVE id — the
-    * fixture's sampled min IS reachable only past dead checks), and
-    * the layer-1 winner seeds the SHARED layer-0 tombstone beam. A
-    * delete batch can therefore neither surface a dead node at either
-    * layer nor strand the descent where deletes cut the coarse graph.
-    * Plan shape: v88's per-step frames with v108's dead-detection
-    * joins — all O(Q·k) broadcast frames against the streaming
-    * persisted edge stores; the alive frames are one corpus-sized and
-    * one subset-sized anti-join per query batch, checkpointed and
-    * amortized across all six steps. */
-  def v118HierTombstoneSearch(s: SparkSession, d: String): DataFrame = {
-    val v = bucketedVecs(s, d)
-    val vec = v.select(col("id"), col("qv"))
-    val edges = persistedKnnEdges(s, d)
-    val coarse = persistedCoarseEdges(s, d)
-    val tombs = emb(s, d).filter(col("vec_id") % 7 === 0)
-      .select(col("vec_id").cast("long").as("dead_id"))
-    val aliveVec = vec.join(tombs, vec("id") === tombs("dead_id"),
-      "left_anti").localCheckpoint(false)
-    val subAlive = aliveVec
-      .filter(Sampling.portableHash(col("id")) % 5 === 0)
-      .localCheckpoint(false)
-    val q = vec.filter(col("id") % 100 === 0)
-      .select(col("id").as("query_id"), col("qv").as("query_v"))
-    // layer 1: greedy width-1 descent with the one-hop bypass
-    val entry = subAlive.agg(min("id").as("cur"))
-    var cur = q.select(col("query_id")).crossJoin(entry)
-    for (step <- 1 to 3) {
-      // r13 optimization: both per-step `.distinct()`s dropped — the
-      // groupBy-min below is duplicate-insensitive, so the candidate
-      // dedup bought nothing, and the neighbor dedup only shrank an
-      // O(Q·k) broadcast frame. 2 exchanges/step removed, same winner.
-      val nbrs = broadcast(cur)
-        .join(coarse, col("cur") === col("src_id"))
-        .select(col("query_id"), col("dst_id").as("nid"))
-      val deadN = tombs.join(broadcast(nbrs),
-          col("dead_id") === col("nid"))
-        .select(col("query_id"), col("nid"))
-      val bypass = broadcast(deadN)
-        .join(coarse, col("nid") === col("src_id"))
-        .select(col("query_id"), col("dst_id").as("nid"))
-      val cand = cur.select(col("query_id"), col("cur").as("nid"))
-        .unionAll(nbrs).unionAll(bypass)
-      cur = cand
-        .join(subAlive.select(col("id").as("nid"), col("qv").as("nv")),
-          "nid")
-        .join(q, "query_id")
-        .select(col("query_id"), col("nid"),
-          intL2Sq(col("nv"), col("query_v")).cast("double").as("d2"))
-        .groupBy("query_id")
-        .agg(min(struct(col("d2"), col("nid"))).as("m"))
-        .select(col("query_id"), col("m.nid").as("cur"))
-      // r14: one mid-loop checkpoint caps the 2^3 plan fan-out
-      // (coarseDescentLoop's rationale).
-      if (step == 2) cur = cur.localCheckpoint(false)
-    }
-    // layer 0: the SHARED tombstone beam, seeded by the layer-1 winner
-    val frontier0 = cur.select(col("query_id"), col("cur").as("nid"))
-      .localCheckpoint(false)
-    tombBeamLoop(frontier0, q, aliveVec, edges, tombs)
-      .select(col("query_id"), col("rnk"), col("nid").as("node_id"),
-        distFromIntSq(col("d2")).as("dist"))
-  }
+    * v88's hierarchical entry: v88's [[hnswServe]] with the delete set,
+    * so BOTH layers walk it. The coarse greedy descent excludes dead
+    * nodes from its width-1 state but bypasses through their edges
+    * (entry = the sampled layer's min ALIVE id — the fixture's sampled
+    * min IS reachable only past dead checks), and the layer-1 winner
+    * seeds the layer-0 tombstone beam. A delete batch can therefore
+    * neither surface a dead node at either layer nor strand the descent
+    * where deletes cut the coarse graph. Plan shape: v88's per-step
+    * frames with v108's dead-detection joins — all O(Q·k) broadcast
+    * frames against the streaming persisted edge stores; the alive
+    * frame is one corpus-sized anti-join per query batch, checkpointed
+    * and amortized across all six steps. */
+  def v118HierTombstoneSearch(s: SparkSession, d: String): DataFrame =
+    hnswServe(s, d, Seq(persistedLayerEdges(s, d, 0),
+      persistedLayerEdges(s, d, 1)), Some(deadIds(s, d)))
 
   /** Maintained-GRAPH retrieval quality — v107's eval convention for
     * v108 (every maintained serving path carries a measured quality
@@ -6924,7 +6619,7 @@ object Queries {
     * broadcast join + tiny aggregate. */
   def v113GraphMaintainedRecall(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
-    val exact = KnnJoin.knnL2(e.filter(col("vec_id") % 7 =!= 0),
+    val exact = KnnJoin.knnL2(e.filter(!isDead(col("vec_id"))),
         queryVecs(e), "vec_id", "embedding", "vec_id", k = 5)
       .select(col("query_id").as("qx"),
         col("rnk").cast("long").as("exact_rnk"), col("neighbor_id"))
@@ -6933,13 +6628,12 @@ object Queries {
 
   /** Both merged edge layers of the hierarchy upsert — exposed to the
     * spec so "merged ≡ rebuilt" is provable row-for-row PER LAYER
-    * against [[knnGraphRanked]] of the full layer corpus. */
+    * against [[GraphIndex.knnGraph]] of the full layer corpus. */
   private[graft] def upsertedHierEdges(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val v = bucketedVecs(s, d)
     (upsertedGraphEdges(s, d, v, "knn"),
-      upsertedGraphEdges(s, d,
-        v.filter(Sampling.portableHash(col("id")) % 5 === 0), "coarse"))
+      upsertedGraphEdges(s, d, GraphIndex.layer(v, 1), "coarse"))
   }
 
   /** The spec's rebuild reference: both layer graphs built from
@@ -6947,8 +6641,7 @@ object Queries {
   private[graft] def rebuiltHierEdges(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val v = bucketedVecs(s, d)
-    (knnGraphRanked(v),
-      knnGraphRanked(v.filter(Sampling.portableHash(col("id")) % 5 === 0)))
+    (GraphIndex.knnGraph(v), GraphIndex.knnGraph(GraphIndex.layer(v, 1)))
   }
 
   /** COARSE-LAYER upsert for the 2-layer hierarchy — v80's localized
@@ -6968,9 +6661,9 @@ object Queries {
     val (l0, l1) = upsertedHierEdges(s, d)
     // the walk re-reads its edge lists every step: checkpoint the
     // merged frames so the 6 steps don't re-run the merge 6 times
-    hnswEntryServe(s, d,
+    hnswServe(s, d, Seq(
       l0.select(col("src_id"), col("dst_id")).localCheckpoint(false),
-      l1.select(col("src_id"), col("dst_id")).localCheckpoint(false))
+      l1.select(col("src_id"), col("dst_id")).localCheckpoint(false)))
   }
 
   /** The beam-family recall row (v81/v94): the beam's rank-1 endpoint
@@ -7021,11 +6714,8 @@ object Queries {
     * ef — counts exact Longs, ONE IEEE division each for the reported
     * recall. */
   def v96EfCurve(s: SparkSession, d: String): DataFrame = {
-    val v = bucketedVecs(s, d)
-    val vec = v.select(col("id"), col("qv"))
-    val edges = persistedKnnEdges(s, d)
-    val q = vec.filter(col("id") % 100 === 0)
-      .select(col("id").as("query_id"), col("qv").as("query_v"))
+    val (vec, q) = graphInputs(s, d)
+    val edges = persistedLayerEdges(s, d, 0)
     val exact = v1KnnL2(s, d)
       .select(col("query_id").as("qx"), col("neighbor_id"))
       .localCheckpoint(false)
@@ -7035,29 +6725,20 @@ object Queries {
     // (v79's truncation rationale). The per-step deduped COUNT is part
     // of the output (dist_evals), so the distinct stays — semantics,
     // not overhead.
-    def expand(frontier: DataFrame): DataFrame = frontier
-      .unionAll(broadcast(frontier)
-        .join(edges, col("nid") === col("src_id"))
-        .select(col("query_id"), col("dst_id").as("nid")))
-      .distinct().localCheckpoint(false)
-    def score(cand: DataFrame): DataFrame = cand
-      .join(vec.select(col("id").as("nid"), col("qv").as("nv")), "nid")
-      .join(q, "query_id")
-      .select(col("query_id"), col("nid"),
-        intL2Sq(col("nv"), col("query_v")).cast("double").as("d2"))
+    def expand(frontier: DataFrame): DataFrame =
+      GraphIndex.expand(frontier, edges).distinct().localCheckpoint(false)
     // r14 optimization (guide §1.2, verdict #4): the STEP-1 candidate
     // set is IDENTICAL across the three ef walks — the frontier is
     // q × entry BEFORE any ef cut — so it is computed, checkpointed and
     // counted ONCE and only the cut differs per ef. Per-step ranked
     // frames keep their checkpoints where the next step references
     // them twice (the r14 fusion experiment measured checkpoint removal
-    // slower — see plainBeamLoop's note); the final step's ranked frame
-    // is read once by the hit join, so its checkpoint is dropped.
+    // slower — see GraphIndex.walk's note); the final step's ranked
+    // frame is read once by the hit join, so its checkpoint is dropped.
     // Actions: 18 → 11 (1 shared step-1 cand + per-ef 2 cands + 1
     // ranked), identical rows out.
-    val entry = vec.agg(min("id").as("nid"))
-    val cand1 = expand(q.select(col("query_id")).crossJoin(entry))
-    val scored1 = score(cand1)
+    val cand1 = expand(entryFrontier(q, vec))
+    val scored1 = GraphIndex.score(cand1, q, vec)
     val n1 = cand1.agg(count(lit(1)).as("n"))
     Seq(2, 4, 8).map { ef =>
       var ranked = TopK.perGroup(scored1, "query_id", "nid", "d2", ef,
@@ -7065,8 +6746,8 @@ object Queries {
       var evals = n1
       for (step <- 2 to 3) {
         val cand = expand(ranked.select(col("query_id"), col("nid")))
-        ranked = TopK.perGroup(score(cand), "query_id", "nid", "d2", ef,
-          ascending = true)
+        ranked = TopK.perGroup(GraphIndex.score(cand, q, vec), "query_id",
+          "nid", "d2", ef, ascending = true)
         if (step < 3) ranked = ranked.localCheckpoint(false)
         evals = evals.unionAll(cand.agg(count(lit(1)).as("n")))
       }
@@ -7100,49 +6781,62 @@ object Queries {
     * steps. */
   def v85FilteredBeam(s: SparkSession, d: String): DataFrame = {
     val ef = 4
-    val v = bucketedVecs(s, d)
-    val vec = v.select(col("id"), col("qv"))
-    val edges = persistedKnnEdges(s, d)
-    val q = vec.filter(col("id") % 100 === 0)
-      .select(col("id").as("query_id"), col("qv").as("query_v"))
-    val entry = vec.agg(min("id").as("nid"))
-    var frontier = q.select(col("query_id")).crossJoin(entry)
+    val (vec, q) = graphInputs(s, d)
+    val edges = persistedLayerEdges(s, d, 0)
+    var frontier = entryFrontier(q, vec)
     var visited = frontier
-    for (step <- 1 to 3) {
+    for (step <- 1 to GraphIndex.Steps) {
       // r13 optimization: per-step candidate distinct dropped — the
       // visited pool is distinct'd once at the end anyway, and the
       // frontier cut dedups inside the top-k buffer (perGroupDistinct).
-      val cand = frontier
-        .unionAll(broadcast(frontier)
-          .join(edges, col("nid") === col("src_id"))
-          .select(col("query_id"), col("dst_id").as("nid")))
-        .localCheckpoint(false)
+      val cand = GraphIndex.expand(frontier, edges).localCheckpoint(false)
       visited = visited.unionAll(cand)
-      val scored = cand
-        .join(vec.select(col("id").as("nid"), col("qv").as("nv")), "nid")
-        .join(q, "query_id")
-        .select(col("query_id"), col("nid"),
-          intL2Sq(col("nv"), col("query_v")).cast("double").as("d2"))
       // the loop's LAST frontier is never read again (only the visited
       // pool flows on) — checkpointing it was a wasted action. (The r14
       // fusion experiment — dropping the step-1/2 frontier checkpoints
       // too — measured 1.33× slower in solo probes and was reverted;
-      // see plainBeamLoop's note.)
-      frontier = TopK.perGroupDistinct(scored, "query_id", "nid", "d2", ef,
-        ascending = true).select(col("query_id"), col("nid"))
-      if (step < 3) frontier = frontier.localCheckpoint(false)
+      // see GraphIndex.walk's note.)
+      frontier = TopK.perGroupDistinct(GraphIndex.score(cand, q, vec),
+          "query_id", "nid", "d2", ef, ascending = true)
+        .select(col("query_id"), col("nid"))
+      if (step < GraphIndex.Steps) frontier = frontier.localCheckpoint(false)
     }
     val allowed = emb(s, d).filter(col("label") % 3 === 0)
       .select(col("vec_id").cast("long").as("nid"))
     val pool = visited.distinct().join(allowed, "nid")
-    val scored = pool
-      .join(vec.select(col("id").as("nid"), col("qv").as("nv")), "nid")
-      .join(q, "query_id")
-      .select(col("query_id"), col("nid"),
-        intL2Sq(col("nv"), col("query_v")).cast("double").as("d2"))
-    TopK.perGroup(scored, "query_id", "nid", "d2", k = 3, ascending = true)
+    TopK.perGroup(GraphIndex.score(pool, q, vec), "query_id", "nid", "d2",
+        k = 3, ascending = true)
       .select(col("query_id"), col("rnk"), col("nid").as("node_id"),
         distFromIntSq(col("d2")).as("dist"))
+  }
+
+  /** The MERGED ranked edge list of an incremental graph upsert over
+    * `layer` (id % 4 = 0 is the arriving batch, the rest the stored
+    * base — v80's split): the base's bucket-blocked top-3 edges are
+    * read from a fingerprinted store (built once, WITH d2 so the merge
+    * never re-scores base×base), batch sources score against ALL
+    * same-bucket mates, base sources repair against same-bucket BATCH
+    * mates only, and one top-3 cut merges the three. Because the
+    * bucket blocking is deterministic, merged ≡ the graph REBUILT on
+    * the whole layer (v80's gate for layer 0; the v103 spec proves it
+    * for the coarse layer too). `tag` keys the base store per layer. */
+  private def upsertedGraphEdges(s: SparkSession, d: String,
+                                 layer: DataFrame, tag: String): DataFrame = {
+    val base = layer.filter(col("id") % 4 =!= 0)
+    val batch = layer.filter(col("id") % 4 === 0)
+    // fingerprint suffix: regenerated embeddings ⇒ fresh edge store
+    val table = Store.name(s"graft_${tag}_base_edges", d)
+    val stored = BucketedStore.ensure(s, table,
+      GraphIndex.knnGraph(base)
+        .select(col("src_id"), col("dst_id"), col("d2")),
+      "src_id", numBuckets = 32)
+    // batch sources against ALL same-bucket mates, plus the localized
+    // repair: base sources against same-bucket BATCH mates only —
+    // never base × base again
+    TopK.perGroup(
+      stored.unionByName(GraphIndex.bucketPairs(base, batch))
+        .unionByName(GraphIndex.bucketPairs(batch, layer)),
+      "src_id", "dst_id", "d2", k = GraphIndex.Degree, ascending = true)
   }
 
   /** INCREMENTAL graph maintenance — v27's persisted-upsert recipe
@@ -7161,41 +6855,6 @@ object Queries {
     * themselves). At 100 TB: batch work is O(batch · bucket), repair
     * fanout is bucket-bounded, and the base corpus is never
     * re-scanned — the stored edges stream from the bucketed store. */
-  /** The MERGED ranked edge list of an incremental graph upsert over
-    * `layer` (id % 4 = 0 is the arriving batch, the rest the stored
-    * base — v80's split): the base's bucket-blocked top-3 edges are
-    * read from a fingerprinted store (built once, WITH d2 so the merge
-    * never re-scores base×base), batch sources score against ALL
-    * same-bucket mates, base sources repair against same-bucket BATCH
-    * mates only, and one top-3 cut merges the three. Because the
-    * bucket blocking is deterministic, merged ≡ the graph REBUILT on
-    * the whole layer (v80's gate for layer 0; the v103 spec proves it
-    * for the coarse layer too). `tag` keys the base store per layer. */
-  private def upsertedGraphEdges(s: SparkSession, d: String,
-                                 layer: DataFrame, tag: String): DataFrame = {
-    val base = layer.filter(col("id") % 4 =!= 0)
-    val batch = layer.filter(col("id") % 4 === 0)
-    // fingerprint suffix: regenerated embeddings ⇒ fresh edge store
-    val table = Store.name(s"graft_${tag}_base_edges", d)
-    val stored = BucketedStore.ensure(s, table,
-      knnGraphRanked(base).select(col("src_id"), col("dst_id"), col("d2")),
-      "src_id", numBuckets = 32)
-    // batch-side edges: batch sources against ALL same-bucket mates
-    val batchCand = batch.as("x").join(layer.as("y"),
-        col("x.bucket") === col("y.bucket") && col("x.id") =!= col("y.id"))
-      .select(col("x.id").as("src_id"), col("y.id").as("dst_id"),
-        intL2Sq(col("x.qv"), col("y.qv")).cast("double").as("d2"))
-    // localized repair: base sources against same-bucket BATCH mates
-    // only — never base × base again
-    val repairCand = base.as("x").join(batch.as("y"),
-        col("x.bucket") === col("y.bucket"))
-      .select(col("x.id").as("src_id"), col("y.id").as("dst_id"),
-        intL2Sq(col("x.qv"), col("y.qv")).cast("double").as("d2"))
-    TopK.perGroup(
-      stored.unionByName(repairCand).unionByName(batchCand),
-      "src_id", "dst_id", "d2", k = 3, ascending = true)
-  }
-
   def v80GraphUpsert(s: SparkSession, d: String): DataFrame =
     upsertedGraphEdges(s, d, bucketedVecs(s, d), "knn")
       .select(col("src_id"), col("rnk"), col("dst_id"),
@@ -8045,12 +7704,21 @@ object Queries {
     IvfIndex.assign(e, seedCentroids(e), "vec_id", "embedding", "cid")
       .groupBy(col("centroid_id"))
       .agg(count(lit(1)).as("n_total"),
-        sum(when(col("id") % 7 === 0, 1L).otherwise(0L)).as("n_dead"))
+        sum(when(isDead(col("id")), 1L).otherwise(0L)).as("n_dead"))
       .select(col("centroid_id"), col("n_total"),
         (col("n_total") - col("n_dead")).as("n_live"), col("n_dead"),
         (col("n_dead") / col("n_total")).as("dead_frac"),
         when(col("n_dead") * 8 > col("n_total"), 1L).otherwise(0L)
           .as("needs_compaction"))
+  }
+
+  /** The fingerprinted path of v95's COMPACTED store — exposed (not
+    * re-derived by callers) so the streaming twin's test serves from
+    * the exact store v95 builds: a future path-tag bump lands here
+    * once instead of silently desynchronizing a duplicated path
+    * string (ADVICE r10; the tivfidx→tivfidx2 bump is the precedent). */
+  def compactedIvfStorePath(d: String): String = {
+    Store.name("/tmp/graft_cmpidx", d)
   }
 
   /** Compaction EXECUTION — the step after v71's decision and the
@@ -8071,15 +7739,6 @@ object Queries {
     * observe. CompactionSpec proves flagged partitions hold zero
     * tombstoned rows and unflagged partition files are bit-identical
     * to the source store's. */
-  /** The fingerprinted path of v95's COMPACTED store — exposed (not
-    * re-derived by callers) so the streaming twin's test serves from
-    * the exact store v95 builds: a future path-tag bump lands here
-    * once instead of silently desynchronizing a duplicated path
-    * string (ADVICE r10; the tivfidx→tivfidx2 bump is the precedent). */
-  def compactedIvfStorePath(d: String): String = {
-    Store.name("/tmp/graft_cmpidx", d)
-  }
-
   def v95CompactionExec(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
     val srcPath = Store.name("/tmp/graft_ivfidx", d)
@@ -8090,9 +7749,9 @@ object Queries {
     }
     val cmpPath = compactedIvfStorePath(d)
     Store.ensurePath(cmpPath) { tmp =>
-      IvfIndex.compact(s, srcPath, tmp, col("id") % 7 === 0)
+      IvfIndex.compact(s, srcPath, tmp, isDead(col("id")))
     }
-    val tombstones = e.filter(col("vec_id") % 7 === 0)
+    val tombstones = e.filter(isDead(col("vec_id")))
       .select(col("vec_id"))
     val alive = IvfIndex.load(s, cmpPath)
       .select(col("id").as("vec_id"), col("vec").as("embedding"))

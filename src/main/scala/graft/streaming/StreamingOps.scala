@@ -319,20 +319,6 @@ object StreamingOps {
     knnStream(queries, alive, qidCol, vecCol, gidCol, k)
   }
 
-  /** Per-micro-batch hybrid vector+keyword serving (streaming twin of
-    * the gated v63): run from `writeStream.foreachBatch` — the
-    * documented Structured Streaming shape for retrieval that needs
-    * TWO independent top-k rankings plus a fusion join (more stateful
-    * operators than a single continuous query supports). The static
-    * indexes persist across batches: `gallery` (id, embedding) for the
-    * vector side and `inv` (sg, doc_id) — the DF-CAPPED inverted index
-    * (the caller applies v63's stop-shingle guard, so a hot shingle's
-    * postings never reach the join). Each arriving query batch is
-    * broadcast-sized by the batch-KNN contract; every window below is
-    * per-query (≤ k+1 rows). Arithmetic is v63's exactly (rank-after-
-    * self-filter, RRF = Σ 1/(60+rank), ties to lowest doc id), so a
-    * bounded stream's union of batch outputs equals the batch v63
-    * rows for the same queries. */
   /** Per-micro-batch REQUEST-DEDUP serving (streaming twin of the
     * gated v75): each arriving batch of (request_id, embedding)
     * requests is collapsed to one representative per md5 vector
@@ -394,26 +380,12 @@ object StreamingOps {
   def graphUpsertBatch(batch: DataFrame, base: DataFrame,
                        storedEdges: DataFrame, k: Int = 3,
                        scale: Int = graft.functions.VectorFunctions.DefaultScale): DataFrame = {
-    import graft.operators.LshIndex
-    val planes = LshIndex.quantizePlanes(
-      LshIndex.hyperplanes(dim = 64, nPlanes = 6, seed = 42L))
-    def prep(df: DataFrame): DataFrame =
-      df.select(col("vec_id").cast("long").as("id"),
-          quantize(col("embedding"), scale).as("qv"))
-        .withColumn("bucket", LshIndex.bucketKeyQ(col("qv"), planes))
-    val b = prep(batch)
-    val bs = prep(base)
-    val union = bs.unionByName(b)
-    val batchCand = b.as("x").join(union.as("y"),
-        col("x.bucket") === col("y.bucket") && col("x.id") =!= col("y.id"))
-      .select(col("x.id").as("src_id"), col("y.id").as("dst_id"),
-        intL2Sq(col("x.qv"), col("y.qv")).cast("double").as("d2"))
-    val repairCand = bs.as("x").join(b.as("y"),
-        col("x.bucket") === col("y.bucket"))
-      .select(col("x.id").as("src_id"), col("y.id").as("dst_id"),
-        intL2Sq(col("x.qv"), col("y.qv")).cast("double").as("d2"))
+    import graft.operators.GraphIndex.{bucketPairs, bucketed}
+    val b = bucketed(batch, scale)
+    val bs = bucketed(base, scale)
     graft.operators.TopK.perGroup(
-      storedEdges.unionByName(repairCand).unionByName(batchCand),
+      storedEdges.unionByName(bucketPairs(bs, b))
+        .unionByName(bucketPairs(b, bs.unionByName(b))),
       "src_id", "dst_id", "d2", k, ascending = true)
       .select(col("src_id"), col("rnk"), col("dst_id"),
         distFromIntSq(col("d2"), scale).as("dist"))
@@ -421,8 +393,8 @@ object StreamingOps {
 
   /** Per-micro-batch BEAM graph serving (streaming twin of the gated
     * v79): each arriving query batch walks the PERSISTED edge store
-    * with the ef-beam expansion — frontier ∪ its neighbors, dedup,
-    * keep the ef best by (d2, id) — for `steps` steps from the store's
+    * with the ef-beam ([[graft.operators.GraphIndex.walk]]) — frontier
+    * ∪ its neighbors, keep the ef best by (d2, id) — from the store's
     * entry node. Run from `writeStream.foreachBatch`: the iterative
     * walk needs steps × (join + rank), more than one continuous query
     * supports (the v63/v75/v76 precedent). Statics persist across
@@ -435,44 +407,28 @@ object StreamingOps {
     * proves it). Stateless: no watermark state to size. */
   def beamServeBatch(queryBatch: DataFrame, vecs: DataFrame,
                      edges: DataFrame, entryId: Long, ef: Int = 4,
-                     steps: Int = 3,
                      scale: Int = graft.functions.VectorFunctions.DefaultScale): DataFrame = {
-    val q = queryBatch
-      .select(col("query_id").cast("long").as("query_id"),
-        quantize(col("embedding"), scale).as("query_v"))
-    val v = vecs.select(col("id").cast("long").as("nid"), col("qv").as("nv"))
-    val frontier0 = q.select(col("query_id"), lit(entryId).as("nid"))
-    beamLoop(frontier0, q, v, edges, ef, steps)
-      .select(col("query_id"), col("rnk"), col("nid").as("node_id"),
-        distFromIntSq(col("d2"), scale).as("dist"))
+    val q = serveQueries(queryBatch, scale)
+    beamRows(graft.operators.GraphIndex.walk(entryAt(q, entryId), q,
+      longIds(vecs), edges, ef), scale)
   }
 
-  /** The shared ef-beam expansion loop (v79's walk): one definition so
-    * the flat-entry serving twin and the hierarchical-entry serving
-    * twin cannot drift in walk semantics. `q` = (query_id, query_v),
-    * `v` = (nid, nv); returns the final ranked frontier
-    * (query_id, rnk, nid, d2). */
-  private def beamLoop(frontier0: DataFrame, q: DataFrame, v: DataFrame,
-                       edges: DataFrame, ef: Int, steps: Int): DataFrame = {
-    var frontier = frontier0
-    var ranked: DataFrame = null
-    for (_ <- 1 to steps) {
-      val cand = frontier
-        .unionAll(broadcast(frontier)
-          .join(edges, col("nid") === col("src_id"))
-          .select(col("query_id"), col("dst_id").as("nid")))
-        .distinct()
-      val scored = cand.join(v, "nid").join(q, "query_id")
-        .select(col("query_id"), col("nid"),
-          intL2Sq(col("nv"), col("query_v")).cast("double").as("d2"))
-      // per-step truncation: cand references the frontier twice, so
-      // the plan doubles per step without it (v79's rationale)
-      ranked = graft.operators.TopK.perGroup(scored, "query_id", "nid",
-        "d2", ef, ascending = true).localCheckpoint(false)
-      frontier = ranked.select(col("query_id"), col("nid"))
-    }
-    ranked
-  }
+  /** (query_id, embedding) → (query_id, query_v), the walk's query
+    * frame. */
+  private def serveQueries(queryBatch: DataFrame, scale: Int): DataFrame =
+    queryBatch.select(col("query_id").cast("long").as("query_id"),
+      quantize(col("embedding"), scale).as("query_v"))
+
+  /** Every query starts at `entryId`: (query_id, nid). */
+  private def entryAt(q: DataFrame, entryId: Long): DataFrame =
+    q.select(col("query_id"), lit(entryId).as("nid"))
+
+  private def longIds(vecs: DataFrame): DataFrame =
+    vecs.select(col("id").cast("long").as("id"), col("qv"))
+
+  private def beamRows(ranked: DataFrame, scale: Int): DataFrame =
+    ranked.select(col("query_id"), col("rnk"), col("nid").as("node_id"),
+      distFromIntSq(col("d2"), scale).as("dist"))
 
   /** Per-micro-batch TOMBSTONE-AWARE beam serving (streaming twin of
     * the gated v108) — the serve side of the graph family's continuous
@@ -486,48 +442,23 @@ object StreamingOps {
     * caller passes `entryId` = the min ALIVE id of the current state
     * (the entry is state, recomputed when a delete kills it — v108's
     * alive-entry rule on the streaming surface). Per step: v108's plan
-    * shape verbatim — the O(batch·ef) frontier broadcasts against the
-    * streaming edge scan, dead-neighbor detection inner-joins the
-    * tombstone scan WITH the broadcast neighbor frame (never the
-    * reverse: the delete set is data-sized on an uncompacted store),
-    * and scoring joins candidates to the alive vector frame by id.
-    * The alive frame is one anti-join per query batch, checkpointed
-    * and amortized across steps. Every query walks independently →
-    * ANY micro-batch partitioning unions to the gated v108 rows (the
+    * shape verbatim ([[graft.operators.GraphIndex.expand]] with the
+    * delete set), scoring against the alive vector frame by id. The
+    * alive frame is one anti-join per query batch, checkpointed and
+    * amortized across steps. Every query walks independently → ANY
+    * micro-batch partitioning unions to the gated v108 rows (the
     * lifecycle spec proves it against interleaved upserts+deletes). */
   def tombBeamServeBatch(queryBatch: DataFrame, vecs: DataFrame,
                          edges: DataFrame, tombs: DataFrame,
-                         entryId: Long, ef: Int = 4, steps: Int = 3,
+                         entryId: Long, ef: Int = 4,
                          scale: Int = graft.functions.VectorFunctions.DefaultScale): DataFrame = {
-    val q = queryBatch
-      .select(col("query_id").cast("long").as("query_id"),
-        quantize(col("embedding"), scale).as("query_v"))
+    val q = serveQueries(queryBatch, scale)
     val t = tombs.select(col("dead_id").cast("long").as("dead_id"))
-    val v = vecs.select(col("id").cast("long").as("nid"), col("qv").as("nv"))
-    val aliveV = v.join(t, v("nid") === t("dead_id"), "left_anti")
+    val v = longIds(vecs)
+    val aliveV = v.join(t, v("id") === t("dead_id"), "left_anti")
       .localCheckpoint(false)
-    var frontier = q.select(col("query_id"), lit(entryId).as("nid"))
-    var ranked: DataFrame = null
-    for (_ <- 1 to steps) {
-      val nbrs = broadcast(frontier)
-        .join(edges, col("nid") === col("src_id"))
-        .select(col("query_id"), col("dst_id").as("nid"))
-        .distinct()
-      val deadN = t.join(broadcast(nbrs), col("dead_id") === col("nid"))
-        .select(col("query_id"), col("nid"))
-      val bypass = broadcast(deadN)
-        .join(edges, col("nid") === col("src_id"))
-        .select(col("query_id"), col("dst_id").as("nid"))
-      val cand = frontier.unionAll(nbrs).unionAll(bypass).distinct()
-      val scored = cand.join(aliveV, "nid").join(q, "query_id")
-        .select(col("query_id"), col("nid"),
-          intL2Sq(col("nv"), col("query_v")).cast("double").as("d2"))
-      ranked = graft.operators.TopK.perGroup(scored, "query_id", "nid",
-        "d2", ef, ascending = true).localCheckpoint(false)
-      frontier = ranked.select(col("query_id"), col("nid"))
-    }
-    ranked.select(col("query_id"), col("rnk"), col("nid").as("node_id"),
-      distFromIntSq(col("d2"), scale).as("dist"))
+    beamRows(graft.operators.GraphIndex.walk(entryAt(q, entryId), q,
+      aliveV, edges, ef, Some(t)), scale)
   }
 
   /** Per-micro-batch 2-LAYER HNSW-ENTRY beam serving (streaming twin
@@ -543,44 +474,20 @@ object StreamingOps {
     * layer-0 stores and `subsetVecs`/`coarseEdges` the layer-1 stores
     * — none re-shuffles per batch; both phases broadcast only
     * O(batch)-row frontiers against the streaming edge scans. The
-    * layer-0 beam is the SAME `beamLoop` as beamServeBatch, so the
+    * serve is v88's [[graft.operators.GraphIndex.layeredWalk]], so the
     * twins cannot drift. Every query walks independently → ANY
     * micro-batch partitioning unions to the gated v88 rows (the
     * parity spec proves it). Stateless: no watermark state to size. */
   def hnswServeBatch(queryBatch: DataFrame, vecs: DataFrame,
                      edges: DataFrame, subsetVecs: DataFrame,
                      coarseEdges: DataFrame, coarseEntryId: Long,
-                     ef: Int = 4, coarseSteps: Int = 3, steps: Int = 3,
+                     ef: Int = 4,
                      scale: Int = graft.functions.VectorFunctions.DefaultScale): DataFrame = {
-    val q = queryBatch
-      .select(col("query_id").cast("long").as("query_id"),
-        quantize(col("embedding"), scale).as("query_v"))
-    val v = vecs.select(col("id").cast("long").as("nid"), col("qv").as("nv"))
-    val sv = subsetVecs
-      .select(col("id").cast("long").as("nid"), col("qv").as("nv"))
-    // layer 1: greedy width-1 descent over the coarse graph (v57's
-    // loop — candidates = {current} ∪ neighbors(current), keep the
-    // (d2, nid)-min, so the walk is monotone and a stall is the fixed
-    // point)
-    var cur = q.select(col("query_id"), lit(coarseEntryId).as("cur"))
-    for (_ <- 1 to coarseSteps) {
-      val cand = cur.select(col("query_id"), col("cur").as("nid"))
-        .unionAll(broadcast(cur)
-          .join(coarseEdges, col("cur") === col("src_id"))
-          .select(col("query_id"), col("dst_id").as("nid")))
-      cur = cand.join(sv, "nid").join(q, "query_id")
-        .select(col("query_id"), col("nid"),
-          intL2Sq(col("nv"), col("query_v")).cast("double").as("d2"))
-        .groupBy("query_id")
-        .agg(min(struct(col("d2"), col("nid"))).as("m"))
-        .select(col("query_id"), col("m.nid").as("cur"))
-    }
-    // layer 0: the SHARED beam loop, frontier seeded by the winner
-    val frontier0 = cur.select(col("query_id"), col("cur").as("nid"))
-      .localCheckpoint(false)
-    beamLoop(frontier0, q, v, edges, ef, steps)
-      .select(col("query_id"), col("rnk"), col("nid").as("node_id"),
-        distFromIntSq(col("d2"), scale).as("dist"))
+    val q = serveQueries(queryBatch, scale)
+    beamRows(graft.operators.GraphIndex.layeredWalk(
+      entryAt(q, coarseEntryId), q,
+      Seq((longIds(subsetVecs), coarseEdges), (longIds(vecs), edges)), ef),
+      scale)
   }
 
   /** Per-micro-batch PQ-ADC serving (streaming twin of the persisted
@@ -667,6 +574,20 @@ object StreamingOps {
     adcServeBatch(queryBatch, alive, book, dim, m, k, scale)
   }
 
+  /** Per-micro-batch hybrid vector+keyword serving (streaming twin of
+    * the gated v63): run from `writeStream.foreachBatch` — the
+    * documented Structured Streaming shape for retrieval that needs
+    * TWO independent top-k rankings plus a fusion join (more stateful
+    * operators than a single continuous query supports). The static
+    * indexes persist across batches: `gallery` (id, embedding) for the
+    * vector side and `inv` (sg, doc_id) — the DF-CAPPED inverted index
+    * (the caller applies v63's stop-shingle guard, so a hot shingle's
+    * postings never reach the join). Each arriving query batch is
+    * broadcast-sized by the batch-KNN contract; every window below is
+    * per-query (≤ k+1 rows). Arithmetic is v63's exactly (rank-after-
+    * self-filter, RRF = Σ 1/(60+rank), ties to lowest doc id), so a
+    * bounded stream's union of batch outputs equals the batch v63
+    * rows for the same queries. */
   def hybridRrfBatch(queryBatch: DataFrame, gallery: DataFrame,
                      inv: DataFrame, k: Int = 5): DataFrame = {
     import graft.functions.TextFunctions.shingles
@@ -703,8 +624,6 @@ object StreamingOps {
       .select("query_id", "rnk", "doc_id", "rrf", "vec_rank", "text_rank")
   }
 
-  /** Tumbling 1-hour windowed counts per event type with a 30-min
-    * watermark (streaming twin of e1). */
   /** Streaming twin of e32/t30's deterministic-HLL register
     * maintenance: the per-(key, bucket) MAX-rho table kept
     * incrementally over an unbounded stream. `max` is
@@ -897,6 +816,8 @@ object StreamingOps {
       .select("base_id", "qf", "bucket")
   }
 
+  /** Tumbling 1-hour windowed counts per event type with a 30-min
+    * watermark (streaming twin of e1). */
   def windowedCounts(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "30 minutes")

@@ -14,8 +14,9 @@ SF dir as NEW) and the probe results are folded back into NEW.json
 under "probes" as {key: {"sweep": s, "solo": s, "old": s,
 "solo_ratio": r}}; the final verdict then counts a key as a REGRESSION
 only if its SOLO time also exceeds threshold x old. Probing needs the
-classpath file /tmp/graft_cp.txt (see the build notes); heap via
-GRAFT_PROBE_XMX (default 64g).
+classpath file /tmp/graft_cp.txt (see the build notes); the probe's
+heap is SPARK_DRIVER_MEM (default 8g), the setting build.sbt's forked
+run reads.
 
 With --same-code=REF (implies --probe), every SOLO-CONFIRMED key also
 gets the decisive noise-attribution receipt (the r11 t8 method,
@@ -80,7 +81,7 @@ def solo_probe(key, sf_dir, cp=None):
                SPARK_GRAFT_BENCH_ROUNDS="1",
                SPARK_GRAFT_ONLY=key,
                SPARK_GRAFT_BENCH_OUT=out)
-    xmx = os.environ.get("GRAFT_PROBE_XMX", "64g")
+    xmx = os.environ.get("SPARK_DRIVER_MEM", "8g")
     # capture stderr so a failing solo run reports its diagnostics
     # instead of a bare CalledProcessError
     proc = subprocess.run(["java", f"-Xmx{xmx}", "-cp", cp, "graft.Bench"],
