@@ -37,6 +37,23 @@ object Verify {
     }
     tasks.foreach(_.get())
     pool.shutdown()
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(selected.keySet))
+    spark.stop()
+    // fail loudly: a key that threw has no output dir, and a zero exit
+    // would leave only the oracle compare to notice.
+    if (!failed.isEmpty) {
+      val keys = failed.asScala.toSeq.sorted
+      System.err.println(
+        s"[verify] ${keys.size} failed: ${keys.mkString(",")}")
+      sys.exit(1)
+    }
+  }
+
+  /** oracle_sql.json: one JSON object mapping each key in `keys` to its
+    * oracle SQL. Only the keys that ran are written, so the compare
+    * checks a `SPARK_GRAFT_ONLY` subset run against that subset. */
+  def oracleJson(keys: collection.Set[String]): String = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -49,17 +66,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    SparkEntry.oracleSql.filter { case (k, _) => keys.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-    // fail loudly: a key that threw has no output dir, and a zero exit
-    // would leave only the oracle compare to notice.
-    if (!failed.isEmpty) {
-      val keys = failed.asScala.toSeq.sorted
-      System.err.println(
-        s"[verify] ${keys.size} failed: ${keys.mkString(",")}")
-      sys.exit(1)
-    }
   }
 }

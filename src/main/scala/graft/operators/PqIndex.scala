@@ -148,7 +148,7 @@ object PqIndex {
     * reference only surviving cids, and if a hole were ever probed the
     * NaN would poison `dist` and fail the hash gate loudly rather than
     * mis-rank silently. */
-  private[operators] def posTable(entries: Seq[(Int, Double)]): Seq[Double] = {
+  private def posTable(entries: Seq[(Int, Double)]): Seq[Double] = {
     require(entries.nonEmpty,
       "posTable: empty codebook subspace — the codebook must hold at " +
         "least one centroid per subspace")
@@ -162,20 +162,65 @@ object PqIndex {
     arr.toSeq
   }
 
-  /** ||q_sub_j − centroid||² for every codebook entry of subspace j —
-    * exact driver math (integer-valued doubles), shared by the ADC
-    * paths. */
-  private[operators] def subDists(qvec: Array[Double], j: Int, sub: Int,
-                                  cbs: Seq[Codebook]): Seq[(Int, Double)] =
+  /** ||x_sub_j − centroid||² for every codebook entry of subspace j —
+    * exact driver math (integer-valued doubles). */
+  private def subDists(x: Array[Double], j: Int, sub: Int,
+                       cbs: Seq[Codebook]): Seq[(Int, Double)] =
     cbs.map { cb =>
       var acc = 0.0
       var i = 0
       while (i < sub) {
-        val dd = qvec(j * sub + i) - cb.centroid(i)
+        val dd = x(j * sub + i) - cb.centroid(i)
         acc += dd * dd; i += 1
       }
       (cb.cid, acc)
     }
+
+  /** The (id, vector) rows of a driver-sized frame (queries, coarse
+    * centroids), sorted by id. A row whose id or vector is NULL is
+    * skipped, as [[graft.plans.KnnScan]] skips such a query. */
+  private[operators] def collectVecs(df: DataFrame, idCol: String,
+                                     vecCol: String)
+      : Array[(Long, Array[Double])] =
+    df.select(col(idCol).cast("long"), toDoubleArray(col(vecCol)))
+      .collect()
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1)
+
+  /** The ADC table builder of one codebook: a vector x (a query, or a
+    * query's residual against a probed centroid) maps to its m
+    * positional tables ||x_j − codeword||² ([[posTable]]). The book is
+    * grouped by subspace once; a subspace without centroids fails here,
+    * naming the subspace, before any query is collected. */
+  private[operators] def adcTables(book: Seq[Codebook], dim: Int, m: Int,
+                                   caller: String)
+      : Array[Double] => Seq[Seq[Double]] = {
+    val sub = dim / m
+    val bySub: Map[Int, Seq[Codebook]] =
+      book.groupBy(_.sub).map { case (j, cbs) => j -> cbs.sortBy(_.cid) }
+    (0 until m).foreach(j => require(bySub.contains(j),
+      s"$caller: codebook holds no centroids for subspace $j of $m"))
+    x => (0 until m).map(j => posTable(subDists(x, j, sub, bySub(j))))
+  }
+
+  /** The ADC rank shared by every PQ search: `cand` carries (id, codes,
+    * query_id, dtab) per candidate row; each row scores m O(1)
+    * positional lookups, then the O(Q·k) partial top-k. Returns
+    * (query_id, rnk, neighbor_id, dist), dist = sqrt(adc). */
+  private[operators] def rankAdc(cand: DataFrame, m: Int,
+                                 k: Int): DataFrame = {
+    val adc = (0 until m)
+      .map(j => element_at(element_at(col("dtab"), j + 1),
+        col("codes").getItem(j) + 1))
+      .reduce(_ + _)
+    val scored = cand.select(col("query_id"),
+      col("id").cast("long").as("neighbor_id"), adc.as("adc"))
+    TopK.perGroup(scored, "query_id", "neighbor_id", "adc", k,
+      ascending = true)
+      .select(col("query_id"), col("rnk"), col("neighbor_id"),
+        sqrt(col("adc")).as("dist"))
+  }
 
   /** ADC search: each query's (sub → cid → d2) lookup table is computed
     * driver-side (queries are broadcast-sized by the batch-KNN contract,
@@ -183,7 +228,7 @@ object PqIndex {
     * (query_id, dtab) frame crossjoined to the codes scan, the same
     * shape as batch KNN's broadcast(queries). Scoring per (row, query)
     * is then m O(1) positional `element_at` lookups ([[posTable]]),
-    * and the only exchange is the O(Q·k) partial top-k.
+    * and the only exchange is the O(Q·k) partial top-k ([[rankAdc]]).
     *
     * Two rejected shapes, both measured: folding the tables in as
     * per-query LITERALS (an exploded Q-struct array) keeps the plan
@@ -198,7 +243,6 @@ object PqIndex {
                 vecCol: String, dim: Int, m: Int, book: Seq[Codebook],
                 k: Int): DataFrame = {
     val spark = codes.sparkSession
-    val sub = dim / m
     // The batch-query contract, enforced BEFORE the collect: each query
     // costs m · (maxCid+1) table doubles, so the Q bound follows from
     // the broadcast budget. limit(maxQ+1).count() reads at most maxQ+1
@@ -211,30 +255,11 @@ object PqIndex {
       s"searchAdc: query batch exceeds $maxQ (the $MaxAdcTableBytes-byte " +
         "ADC table budget at this codebook size) — split the query set " +
         "into batches and union the per-batch top-k results")
-    val bySub: Map[Int, Seq[Codebook]] =
-      book.groupBy(_.sub).map { case (j, cbs) => j -> cbs.sortBy(_.cid) }
-    (0 until m).foreach(j => require(bySub.contains(j),
-      s"searchAdc: codebook holds no centroids for subspace $j of $m"))
-    val qRows: Array[(Long, Array[Double])] = queries
-      .select(col(qidCol).cast("long"), toDoubleArray(col(vecCol)))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
+    val tables = adcTables(book, dim, m, "searchAdc")
     import spark.implicits._
-    val dtabDf = qRows.toSeq.map { case (qid, qvec) =>
-      (qid, (0 until m).map(j =>
-        posTable(subDists(qvec, j, sub, bySub(j)))))
-    }.toDF("query_id", "dtab")
-    val adc = (0 until m)
-      .map(j => element_at(element_at(col("dtab"), j + 1),
-        col("codes").getItem(j) + 1))
-      .reduce(_ + _)
-    val scored = codes.join(broadcast(dtabDf))
-      .select(col("query_id"), col("id").cast("long").as("neighbor_id"),
-        adc.as("adc"))
-    TopK.perGroup(scored, "query_id", "neighbor_id", "adc", k,
-      ascending = true)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        sqrt(col("adc")).as("dist"))
+    val dtabDf = collectVecs(queries, qidCol, vecCol).toSeq
+      .map { case (qid, qvec) => (qid, tables(qvec)) }
+      .toDF("query_id", "dtab")
+    rankAdc(codes.join(broadcast(dtabDf)), m, k)
   }
 }

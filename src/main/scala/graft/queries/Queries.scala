@@ -34,6 +34,36 @@ object Queries {
   /** The rows of `vecs` (id, …) whose id is not in `tombs`. */
   private def withoutDead(vecs: DataFrame, tombs: DataFrame): DataFrame =
     vecs.join(tombs, vecs("id") === tombs("dead_id"), "left_anti")
+  /** Per-query recall of an approximate top-k against the exact one,
+    * both (query_id, neighbor_id, …) frames of O(Q·k) rows: the approx
+    * side is broadcast and left-joined, k counts the exact neighbors,
+    * n_hit the ones found; emits (query_id, n_hit, [k,] n_hit / k as
+    * `recallCol`). */
+  private def recallRow(exact: DataFrame, approx: DataFrame,
+                        recallCol: String = "recall_at_5",
+                        withK: Boolean = false): DataFrame = {
+    val found = approx
+      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
+    exact.select(col("query_id"), col("neighbor_id"))
+      .join(broadcast(found),
+        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
+        "left")
+      .groupBy("query_id")
+      .agg(count(lit(1)).as("k"),
+        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
+      .select(Seq(col("query_id"), col("n_hit")) ++
+        (if (withK) Seq(col("k")) else Nil) :+
+        (col("n_hit") / col("k")).as(recallCol): _*)
+  }
+  /** [[recallRow]] of a maintained store's serve against the exact
+    * top-5 over the alive corpus: the exact side excludes the delete
+    * set too, so the row measures the codes, not the deletes. */
+  private def aliveRecall(s: SparkSession, d: String,
+                          approx: => DataFrame): DataFrame = {
+    val e = emb(s, d)
+    recallRow(KnnJoin.knnL2(e.filter(!isDead(col("vec_id"))),
+      queryVecs(e), "vec_id", "embedding", "vec_id", k = 5), approx)
+  }
   /** Seed centroids: first 10 vectors (deterministic IVF quantizer). */
   private def seedCentroids(e: DataFrame) =
     e.filter(col("vec_id") < 10)
@@ -251,28 +281,61 @@ object Queries {
     * covered by PqIndexSpec. All math runs on fixed-point values
     * (integers carried in doubles, < 2^53), so encode argmins and ADC
     * sums are exact in both engines. */
-  def v11PqAdc(s: SparkSession, d: String): DataFrame = {
-    val (codes, queries, book) = seededPqIndex(s, d)
-    PqIndex.searchAdc(codes, queries, "id", "qemb", PqDim, PqM, book, k = 5)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(10000.0)).as("dist"))
-  }
+  def v11PqAdc(s: SparkSession, d: String): DataFrame = seededPqServe(s, d)
 
   private val PqM = 8; private val PqDim = 64; private val PqKsub = 16
 
-  /** The seeded-PQ index shared by v11 (direct ADC) and v16 (ADC
-    * shortlist + exact re-rank): fixed-point gallery, seeded codebooks,
-    * map-only encode. Returns (codes, queries, codebooks). */
-  private def seededPqIndex(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, Seq[PqIndex.Codebook]) = {
-    val e = emb(s, d)
-    // integer-valued doubles: round(x*10000) — exact in IEEE math
-    val g = e.select(col("vec_id").cast("long").as("id"),
-      transform(quantize(col("embedding")), x => x.cast("double"))
+  /** The fixed-point (id, qemb) gallery every PQ key encodes: qemb
+    * holds integer-valued doubles round(x·10⁴), exact in IEEE math,
+    * passed through `rotate` (the OPQ keys' permutation). */
+  private def qembGallery(s: SparkSession, d: String,
+                          rotate: Column => Column = identity): DataFrame =
+    emb(s, d).select(col("vec_id").cast("long").as("id"),
+      rotate(transform(quantize(col("embedding")), x => x.cast("double")))
         .as("qemb"))
+
+  /** The every-100th query set of an (id, qemb) gallery. */
+  private def qembQueries(g: DataFrame): DataFrame =
+    g.filter(col("id") % 100 === 0)
+
+  /** A PQ-family top-5 with `dist` back on the embedding scale. */
+  private def unscaled(hits: DataFrame): DataFrame =
+    hits.select(col("query_id"), col("rnk"), col("neighbor_id"),
+      (col("dist") / lit(10000.0)).as("dist"))
+
+  /** The flat-PQ serve: ADC top-5 of `g`'s queries over `codes`. */
+  private def pqServe(codes: DataFrame, book: Seq[PqIndex.Codebook],
+                      g: DataFrame): DataFrame =
+    unscaled(PqIndex.searchAdc(codes, qembQueries(g), "id", "qemb",
+      PqDim, PqM, book, k = 5))
+
+  /** v11's serve of the seeded-PQ index under `rotate`. */
+  private def seededPqServe(s: SparkSession, d: String,
+                            rotate: Column => Column = identity)
+      : DataFrame = {
+    val (codes, g, book) = seededPqIndex(s, d, rotate)
+    pqServe(codes, book, g)
+  }
+
+  /** The residual-IVFPQ serve: nprobe = 2 residual-ADC top-5 of `g`'s
+    * queries over `codes`, probes routed against `cents` (cid, qemb). */
+  private def ivfpqServe(codes: DataFrame, cents: DataFrame,
+                         book: Seq[PqIndex.Codebook],
+                         g: DataFrame): DataFrame =
+    unscaled(IvfPq.searchResidual(codes, cents, qembQueries(g), "cid",
+      "id", "qemb", PqDim, PqM, book, k = 5, nprobe = 2))
+
+  /** The seeded-PQ index shared by v11 (direct ADC), v16 (ADC
+    * shortlist + exact re-rank), v44, v51 and the OPQ keys (under their
+    * `rotate`): fixed-point gallery, seeded codebooks, map-only encode.
+    * Returns (codes, gallery, codebooks). */
+  private def seededPqIndex(s: SparkSession, d: String,
+                            rotate: Column => Column = identity)
+      : (DataFrame, DataFrame, Seq[PqIndex.Codebook]) = {
+    val g = qembGallery(s, d, rotate)
     val book = PqIndex.seededBook(g, "id", "qemb", PqDim, PqM, PqKsub)
     val codes = PqIndex.encode(g, "id", "qemb", PqDim, PqM, book)
-    (codes, g.filter(col("id") % 100 === 0), book)
+    (codes, g, book)
   }
 
   /** PQ reconstruction-error report — the quantization-quality metric a
@@ -286,9 +349,7 @@ object Queries {
   def v44PqError(s: SparkSession, d: String): DataFrame = {
     val (codes, _, book) = seededPqIndex(s, d)
     val sub = PqDim / PqM
-    val g = emb(s, d).select(col("vec_id").cast("long").as("id"),
-      transform(quantize(col("embedding")), x => x.cast("double"))
-        .as("qemb"))
+    val g = qembGallery(s, d)
     val cbTables = book.groupBy(_.sub).map { case (j, entries) =>
       val arr = Array.fill(entries.map(_.cid).max + 1)(Seq.empty[Double])
       entries.foreach(e => arr(e.cid) = e.centroid)
@@ -402,18 +463,8 @@ object Queries {
       .select(col("query_id"), col("gid").as("neighbor_id"),
         bit_count(col("code").bitwiseXOR(col("qcode"))).cast("double")
           .as("hamming"))
-    val approx = TopK.perGroup(scored, "query_id", "neighbor_id",
-      "hamming", k = 5, ascending = true)
-      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
-    v1KnnL2(s, d).select(col("query_id"), col("neighbor_id"))
-      .join(broadcast(approx),
-        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("k"),
-        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        (col("n_hit") / col("k")).as("recall_at_5"))
+    recallRow(v1KnnL2(s, d), TopK.perGroup(scored, "query_id",
+      "neighbor_id", "hamming", k = 5, ascending = true))
   }
 
   /** PQ code-usage balance — per subspace, how many of the ksub=16
@@ -446,7 +497,8 @@ object Queries {
     * re-rank join broadcasts the shortlist (Q·20 rows by construction)
     * while the gallery streams through a pruned scan. */
   def v16Rerank(s: SparkSession, d: String): DataFrame = {
-    val (codes, queries, book) = seededPqIndex(s, d)
+    val (codes, gq, book) = seededPqIndex(s, d)
+    val queries = qembQueries(gq)
     val short = PqIndex
       .searchAdc(codes, queries, "id", "qemb", PqDim, PqM, book, k = 20)
       .select(col("query_id"), col("neighbor_id"))
@@ -626,24 +678,34 @@ object Queries {
     * partition pruning × 32-byte codes ≈ read nprobe/nlist of 1/16th
     * the bytes. */
   def v13IvfPqSearch(s: SparkSession, d: String): DataFrame = {
-    val m = 8; val dim = 64; val ksub = 16
-    val e = emb(s, d)
-    val g = e.select(col("vec_id").cast("long").as("id"),
-      transform(quantize(col("embedding")), x => x.cast("double"))
-        .as("qemb"))
-    val book = PqIndex.seededBook(g, "id", "qemb", dim, m, ksub)
-    val cents = g.filter(col("id") < 10)
-      .select(col("id").as("cid"), col("qemb"))
-    // index build: codes + coarse assignment (scale=1: already ints)
-    val codes = PqIndex.encode(g, "id", "qemb", dim, m, book)
+    val g = qembGallery(s, d)
+    val book = PqIndex.seededBook(g, "id", "qemb", PqDim, PqM, PqKsub)
+    val cents = qembSeedCents(g)
+    seededIvfpqServe(seededIvfpqCodes(g, cents, book), cents, book, g)
+  }
+
+  /** The first 10 vectors of an (id, qemb) gallery as (cid, qemb)
+    * coarse centroids (v6's seed rule on the fixed-point gallery). */
+  private def qembSeedCents(g: DataFrame): DataFrame =
+    g.filter(col("id") < 10).select(col("id").as("cid"), col("qemb"))
+
+  /** v13's index build: PQ codes joined to the coarse assignment
+    * (scale = 1: the gallery is already integer-valued), as
+    * (id, codes, centroid_id). */
+  private def seededIvfpqCodes(g: DataFrame, cents: DataFrame,
+                               book: Seq[PqIndex.Codebook]): DataFrame =
+    PqIndex.encode(g, "id", "qemb", PqDim, PqM, book)
       .join(IvfIndex.assign(g, cents, "id", "qemb", "cid", scale = 1)
         .select(col("id"), col("centroid_id")), Seq("id"))
-    val queries = g.filter(col("id") % 100 === 0)
-    IvfPq.search(codes, cents, queries, "cid", "id", "qemb",
-      dim, m, book, k = 5, nprobe = 2, scale = 1)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(DefaultScale.toDouble)).as("dist"))
-  }
+
+  /** v13's serve, shared with v67: nprobe = 2 IVFPQ (non-residual)
+    * ADC top-5 of `g`'s queries. */
+  private def seededIvfpqServe(codes: DataFrame, cents: DataFrame,
+                               book: Seq[PqIndex.Codebook],
+                               g: DataFrame): DataFrame =
+    unscaled(IvfPq.search(codes, cents, qembQueries(g), "cid", "id",
+      "qemb", PqDim, PqM, book, k = 5, nprobe = 2, scale = 1))
+
 
   /** RESIDUAL IVFPQ search under the hard gate — faiss IndexIVFPQ's
     * DEFAULT semantics (by_residual=true): PQ codes quantize
@@ -654,25 +716,17 @@ object Queries {
     * codebooks are the RESIDUALS of the first 16 vectors, all
     * arithmetic fixed-point-exact. Plan shape: map-only residual
     * encode; probe routing on the driver (queries and centroids are
-    * broadcast-sized); per-(query, probed-centroid) lookup tables
-    * folded in as literals; no exchange before the O(Q·k) top-k. */
+    * broadcast-sized); per-(query, probed-centroid) positional lookup
+    * tables in the broadcast probe frame; no exchange before the
+    * O(Q·k) top-k. */
   def v21IvfPqResidual(s: SparkSession, d: String): DataFrame = {
-    val m = 8; val dim = 64; val ksub = 16
-    val e = emb(s, d)
-    val g = e.select(col("vec_id").cast("long").as("id"),
-      transform(quantize(col("embedding")), x => x.cast("double"))
-        .as("qemb"))
-    val cents = g.filter(col("id") < 10)
-      .select(col("id").as("cid"), col("qemb"))
+    val g = qembGallery(s, d)
+    val cents = qembSeedCents(g)
     val res = IvfPq.residuals(g, cents, "id", "qemb", "cid", scale = 1)
-    val book = PqIndex.seededBook(res, "id", "rvec", dim, m, ksub)
+    val book = PqIndex.seededBook(res, "id", "rvec", PqDim, PqM, PqKsub)
     val codes = IvfPq.encodeResidual(g, cents, "id", "qemb", "cid",
-      dim, m, book, scale = 1)
-    val queries = g.filter(col("id") % 100 === 0)
-    IvfPq.searchResidual(codes, cents, queries, "cid", "id", "qemb",
-      dim, m, book, k = 5, nprobe = 2)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(10000.0)).as("dist"))
+      PqDim, PqM, book, scale = 1)
+    ivfpqServe(codes, cents, book, g)
   }
 
   /** KNN hits joined to the full (path, label, category) metadata triple
@@ -1092,20 +1146,8 @@ object Queries {
     * of the index). Approx side serves from v90's persisted trained
     * index through v98's pushed-predicate scan; both inputs are gated
     * O(Q·k) frames → broadcast join + tiny aggregate. */
-  def v100FilteredTrainedRecall(s: SparkSession, d: String): DataFrame = {
-    val exact = v15FilteredKnn(s, d)
-      .select(col("query_id"), col("neighbor_id"))
-    val approx = v98FilteredTrainedIvf(s, d)
-      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
-    exact.join(broadcast(approx),
-        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("k"),
-        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        (col("n_hit") / col("k")).as("recall_at_5"))
-  }
+  def v100FilteredTrainedRecall(s: SparkSession, d: String): DataFrame =
+    recallRow(v15FilteredKnn(s, d), v98FilteredTrainedIvf(s, d))
 
   /** TRAINED-IVF nprobe/recall curve — v46's sweep pointed at the
     * trained quantizer: recall@5 vs the exact scan at nprobe ∈
@@ -1155,24 +1197,17 @@ object Queries {
     * 10-row literal; encode is map-only; the only exchange is the
     * O(Q·k) partial top-k. */
   def v68TrainedIvfPq(s: SparkSession, d: String): DataFrame = {
-    val m = 8; val dim = 64; val ksub = 16
     val centRows = trainedCoarseSums(s, d).map { case (lab, n, svec) =>
       (lab, svec.toIndexedSeq.map(si => math.floor(si.toDouble / n)))
     }.toIndexedSeq
     import s.implicits._
     val cents = centRows.toDF("cid", "qemb")
-    val g = emb(s, d).select(col("vec_id").cast("long").as("id"),
-      transform(quantize(col("embedding")), x => x.cast("double"))
-        .as("qemb"))
+    val g = qembGallery(s, d)
     val res = IvfPq.residuals(g, cents, "id", "qemb", "cid", scale = 1)
-    val book = PqIndex.seededBook(res, "id", "rvec", dim, m, ksub)
+    val book = PqIndex.seededBook(res, "id", "rvec", PqDim, PqM, PqKsub)
     val codes = IvfPq.encodeResidual(g, cents, "id", "qemb", "cid",
-      dim, m, book, scale = 1)
-    val queries = g.filter(col("id") % 100 === 0)
-    IvfPq.searchResidual(codes, cents, queries, "cid", "id", "qemb",
-      dim, m, book, k = 5, nprobe = 2)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(10000.0)).as("dist"))
+      PqDim, PqM, book, scale = 1)
+    ivfpqServe(codes, cents, book, g)
   }
 
   /** v91's persisted trained artifacts — the grid-floored coarse
@@ -1182,7 +1217,6 @@ object Queries {
     * bucketed tables. */
   private def trainedIvfpqArtifacts(s: SparkSession, d: String)
       : (DataFrame, Seq[PqIndex.Codebook], DataFrame) = {
-    val m = 8; val dim = 64; val ksub = 16
     val centsDf = BucketedStore.ensure(s,
       Store.name("graft_ivfpq_tcents", d), {
         import s.implicits._
@@ -1190,15 +1224,13 @@ object Queries {
           (lab, svec.toIndexedSeq.map(si => math.floor(si.toDouble / n)))
         }.toIndexedSeq.toDF("cid", "qemb")
       }, "cid", numBuckets = 4)
-    val g = emb(s, d).select(col("vec_id").cast("long").as("id"),
-      transform(quantize(col("embedding")), x => x.cast("double"))
-        .as("qemb"))
+    val g = qembGallery(s, d)
     val bookDf = BucketedStore.ensure(s,
       Store.name("graft_ivfpq_tbook", d), {
         import s.implicits._
         PqIndex.seededBook(
           IvfPq.residuals(g, centsDf, "id", "qemb", "cid", scale = 1),
-          "id", "rvec", dim, m, ksub).toDF("sub", "cid", "centroid")
+          "id", "rvec", PqDim, PqM, PqKsub).toDF("sub", "cid", "centroid")
       }, "sub", numBuckets = 4)
     val book = bookDf.collect().toIndexedSeq.map(r =>
       PqIndex.Codebook(r.getAs[Int]("sub"), r.getAs[Int]("cid"),
@@ -1216,17 +1248,16 @@ object Queries {
     * merged ≡ rebuilt exactly. */
   private[graft] def upsertedIvfpqCodes(s: SparkSession, d: String)
       : (DataFrame, DataFrame, Seq[PqIndex.Codebook], DataFrame) = {
-    val m = 8; val dim = 64
     val (centsDf, book, g) = trainedIvfpqArtifacts(s, d)
     val base = BucketedStore.ensure(s,
       Store.name("graft_ivfpq_tcodes_base", d),
       IvfPq.encodeResidual(g.filter(col("id") % 4 =!= 0), centsDf,
-        "id", "qemb", "cid", dim, m, book, scale = 1),
+        "id", "qemb", "cid", PqDim, PqM, book, scale = 1),
       "id", numBuckets = 32)
     val newRows = g.join(base.hint("merge"),
       g("id") === base("id"), "left_anti")
     val newCodes = IvfPq.encodeResidual(newRows, centsDf,
-      "id", "qemb", "cid", dim, m, book, scale = 1)
+      "id", "qemb", "cid", PqDim, PqM, book, scale = 1)
     (base.unionByName(newCodes), centsDf, book, g)
   }
 
@@ -1241,13 +1272,8 @@ object Queries {
     * this key gates the INGEST math — production ships both: a
     * list-partitioned store plus an id-keyed membership sidecar.) */
   def v105IvfpqStoreUpsert(s: SparkSession, d: String): DataFrame = {
-    val m = 8; val dim = 64
     val (merged, centsDf, book, g) = upsertedIvfpqCodes(s, d)
-    IvfPq.searchResidual(merged, centsDf,
-        g.filter(col("id") % 100 === 0), "cid", "id", "qemb",
-        dim, m, book, k = 5, nprobe = 2)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(10000.0)).as("dist"))
+    ivfpqServe(merged, centsDf, book, g)
   }
 
   /** SEGMENT-MERGE serving for the TRAINED IVFPQ store — v112's
@@ -1263,24 +1289,19 @@ object Queries {
     * snapshot ingest costs one O(segment) encode job, never a store
     * rewrite. */
   def v116IvfpqSegmentServe(s: SparkSession, d: String): DataFrame = {
-    val m = 8; val dim = 64
     val (centsDf, book, g) = trainedIvfpqArtifacts(s, d)
     def segment(par: Int): DataFrame = {
       val path = Store.name(s"/tmp/graft_tpqseg$par", d)
       Store.ensurePath(path) { tmp =>
         IvfPq.encodeResidual(g.filter(col("id") % 2 === par), centsDf,
-            "id", "qemb", "cid", dim, m, book, scale = 1)
+            "id", "qemb", "cid", PqDim, PqM, book, scale = 1)
           .write.mode("overwrite").partitionBy("centroid_id")
           .parquet(tmp)
       }
       Tables.ensureParallelism(s.read.parquet(path), Some(path))
     }
     val merged = segment(0).unionByName(segment(1))
-    IvfPq.searchResidual(merged, centsDf,
-        g.filter(col("id") % 100 === 0), "cid", "id", "qemb",
-        dim, m, book, k = 5, nprobe = 2)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(10000.0)).as("dist"))
+    ivfpqServe(merged, centsDf, book, g)
   }
 
   /** v68's trained residual-IVFPQ served from a PERSISTED trained
@@ -1296,14 +1317,9 @@ object Queries {
     * zero encode jobs. Oracle = v68's SQL VERBATIM (bit-transparent
     * persistence, the v66/v86 contract). */
   def v91TrainedIvfpqPersisted(s: SparkSession, d: String): DataFrame = {
-    val m = 8; val dim = 64
     val (centsDf, book, g) = trainedIvfpqArtifacts(s, d)
     val codes = trainedIvfpqCodeStore(s, d, centsDf, book, g)
-    val queries = g.filter(col("id") % 100 === 0)
-    IvfPq.searchResidual(codes, centsDf, queries, "cid", "id", "qemb",
-      dim, m, book, k = 5, nprobe = 2)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(10000.0)).as("dist"))
+    ivfpqServe(codes, centsDf, book, g)
   }
 
   /** v91's persisted residual-code table (the depth-4 trained-IVFPQ
@@ -1313,11 +1329,10 @@ object Queries {
   private def trainedIvfpqCodeStore(s: SparkSession, d: String,
       centsDf: DataFrame, book: Seq[PqIndex.Codebook], g: DataFrame)
       : DataFrame = {
-    val m = 8; val dim = 64
     val path = Store.name("/tmp/graft_tpqidx", d)
     Store.ensurePath(path) { tmp =>
       IvfPq.encodeResidual(g, centsDf, "id", "qemb", "cid",
-          dim, m, book, scale = 1)
+          PqDim, PqM, book, scale = 1)
         .write.mode("overwrite").partitionBy("centroid_id").parquet(tmp)
     }
     Tables.ensureParallelism(s.read.parquet(path), Some(path))
@@ -1334,7 +1349,6 @@ object Queries {
   private[graft] def retrainedIvfpqState(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame,
          Seq[PqIndex.Codebook], DataFrame) = {
-    val m = 8; val dim = 64
     val (centsDf, book, g) = trainedIvfpqArtifacts(s, d)
     val codes4 = trainedIvfpqCodeStore(s, d, centsDf, book, g)
     // warm round: exact integer (n, Σ) per list over the STORED
@@ -1368,7 +1382,7 @@ object Queries {
       val kept = joined.filter(col("c5") === col("centroid_id"))
         .select(col("id"), col("codes"), col("centroid_id"))
       val reenc = IvfPq.encodeResidual(g.join(migIds, "id"), tc5,
-        "id", "qemb", "cid", dim, m, book, scale = 1)
+        "id", "qemb", "cid", PqDim, PqM, book, scale = 1)
       kept.unionByName(reenc)
         .write.mode("overwrite").partitionBy("centroid_id").parquet(tmp)
     }
@@ -1401,12 +1415,8 @@ object Queries {
     * byte-unchanged, migrated rows equal a cold re-encode, and the
     * re-encode set IS the drift set. */
   def v123IvfpqRetrain(s: SparkSession, d: String): DataFrame = {
-    val m = 8; val dim = 64
     val (_, tc5, mixed, _, book, g) = retrainedIvfpqState(s, d)
-    IvfPq.searchResidual(mixed, tc5, g.filter(col("id") % 100 === 0),
-        "cid", "id", "qemb", dim, m, book, k = 5, nprobe = 2)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(10000.0)).as("dist"))
+    ivfpqServe(mixed, tc5, book, g)
   }
 
   /** TRAINED-codebook PQ search — closes the train-vs-seed fidelity
@@ -1430,16 +1440,10 @@ object Queries {
     * aggregate per round); encode is map-only; the only O(Q) exchange
     * is the ADC partial top-k. */
   def v78TrainedPq(s: SparkSession, d: String): DataFrame = {
-    val m = 8; val dim = 64
     val book = trainedPqBook(s, d)
-    val gd = emb(s, d).select(col("vec_id").cast("long").as("id"),
-      transform(quantize(col("embedding")), x => x.cast("double"))
-        .as("qemb"))
-    val codes = PqIndex.encode(gd, "id", "qemb", dim, m, book)
-    PqIndex.searchAdc(codes, gd.filter(col("id") % 100 === 0), "id",
-      "qemb", dim, m, book, k = 5)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(10000.0)).as("dist"))
+    val gd = qembGallery(s, d)
+    val codes = PqIndex.encode(gd, "id", "qemb", PqDim, PqM, book)
+    pqServe(codes, book, gd)
   }
 
   /** v78's trained-codebook construction (the TRAIN step alone): three
@@ -1465,7 +1469,7 @@ object Queries {
     * hashes are unchanged. */
   private def trainedPqBook(s: SparkSession,
                             d: String): Seq[PqIndex.Codebook] = {
-    val m = 8; val dim = 64; val sub = dim / m; val ksub = 16
+    val sub = PqDim / PqM
     val g = emb(s, d).select(col("vec_id").cast("long").as("id"),
       quantize(col("embedding")).as("qv"))
     // seed books: sub-slices of the first ksub vectors (v11's
@@ -1473,20 +1477,20 @@ object Queries {
     // seeds(cid) indexes POSITIONALLY, so a corpus with any vec_id in
     // 0..ksub-1 missing must fail loudly here (the oracle's cb0 would
     // silently train fewer clusters — the engines would diverge).
-    val seeds: Array[Array[Long]] = g.filter(col("id") < ksub)
+    val seeds: Array[Array[Long]] = g.filter(col("id") < PqKsub)
       .select(col("id"), col("qv")).collect()
       .sortBy(_.getLong(0))
       .map(_.getSeq[Long](1).toArray)
-    require(seeds.length == ksub,
-      s"trainedPqBook: seed ids 0..${ksub - 1} must all exist " +
+    require(seeds.length == PqKsub,
+      s"trainedPqBook: seed ids 0..${PqKsub - 1} must all exist " +
         s"(found ${seeds.length}) — positional seed slices cannot " +
         "degrade to fewer clusters the way the id-keyed oracle does")
     // the seed round: m per-subspace exact integer argmins in one
     // projection (IvfIndex.assign's kernel). Ordering by the bigint d2
     // equals ordering by its double cast while d2 < 2^53, which a
     // scale-10^4 8-dim slice cannot reach (it needs |x| > 3,000).
-    val seedCodes = array((0 until m).map { j =>
-      graft.plans.CentroidKernels.nearestInt(col("qv"), dim, j * sub,
+    val seedCodes = array((0 until PqM).map { j =>
+      graft.plans.CentroidKernels.nearestInt(col("qv"), PqDim, j * sub,
         seeds.toSeq.zipWithIndex.map { case (sv, cid) =>
           (cid.toLong, sv.slice(j * sub, (j + 1) * sub)) })
         .getField("cid")
@@ -1497,7 +1501,7 @@ object Queries {
         graft.plans.PqGridSumAggregate(
           GraftSqlBridge.expression(col("qv")),
           GraftSqlBridge.expression(col("codes")),
-          m, ksub, sub).toAggregateExpression())
+          PqM, PqKsub, sub).toAggregateExpression())
       g.select(col("qv"), codes.as("codes"))
         .agg(agg.as("grid"))
         .select(explode(col("grid")).as("cell"))
@@ -1511,7 +1515,7 @@ object Queries {
     // native expression for all m subspaces — bit-identical to the
     // previous Decimal(38,0) candidate structs, see GridArgminExpressions)
     def roundCodes(sums: Array[(Long, Long, Array[Long])]): Column =
-      graft.plans.GridArgmin.pqCodes(col("qv"), sums, m, sub, ksub,
+      graft.plans.GridArgmin.pqCodes(col("qv"), sums, PqM, sub, PqKsub,
         DefaultScale.toLong)
     var codes = seedCodes
     var sums = gridSums(codes)
@@ -1523,7 +1527,7 @@ object Queries {
     // reassignment feeds the final grid directly
     sums = gridSums(roundCodes(sums))
     sums.toIndexedSeq.map { case (lab, n, svec) =>
-      PqIndex.Codebook((lab / ksub).toInt, (lab % ksub).toInt,
+      PqIndex.Codebook((lab / PqKsub).toInt, (lab % PqKsub).toInt,
         svec.toIndexedSeq.map(si => math.floor(si.toDouble / n)))
     }
   }
@@ -1545,9 +1549,7 @@ object Queries {
     val book = bookDf.collect().toIndexedSeq.map(r =>
       PqIndex.Codebook(r.getAs[Int]("sub"), r.getAs[Int]("cid"),
         r.getSeq[Double](r.fieldIndex("centroid"))))
-    val gd = emb(s, d).select(col("vec_id").cast("long").as("id"),
-      transform(quantize(col("embedding")), x => x.cast("double"))
-        .as("qemb"))
+    val gd = qembGallery(s, d)
     (book, gd)
   }
 
@@ -1562,19 +1564,15 @@ object Queries {
     * ingest costs one O(segment) encode job into a fresh segment
     * table; the ADC scan streams the union's 8-byte code rows. */
   def v117PqSegmentServe(s: SparkSession, d: String): DataFrame = {
-    val m = 8; val dim = 64
     val (book, gd) = trainedPqBookStore(s, d)
     def segment(par: Int): DataFrame =
       BucketedStore.ensure(s,
         Store.name(s"graft_pq_tcodes_seg$par", d),
         PqIndex.encode(gd.filter(col("id") % 2 === par), "id", "qemb",
-          dim, m, book),
+          PqDim, PqM, book),
         "id", numBuckets = 32)
     val merged = segment(0).unionByName(segment(1))
-    PqIndex.searchAdc(merged, gd.filter(col("id") % 100 === 0), "id",
-      "qemb", dim, m, book, k = 5)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(10000.0)).as("dist"))
+    pqServe(merged, book, gd)
   }
 
   /** v78's trained-PQ search served from a PERSISTED trained index —
@@ -1593,16 +1591,12 @@ object Queries {
     * VERBATIM, so the gate proves trained-index persistence is
     * bit-transparent (the v66/v86 contract). */
   def v87TrainedPqPersisted(s: SparkSession, d: String): DataFrame = {
-    val m = 8; val dim = 64
     val (book, gd) = trainedPqBookStore(s, d)
     val codes = BucketedStore.ensure(s,
       Store.name("graft_pq_tcodes", d),
-      PqIndex.encode(gd, "id", "qemb", dim, m, book),
+      PqIndex.encode(gd, "id", "qemb", PqDim, PqM, book),
       "id", numBuckets = 32)
-    PqIndex.searchAdc(codes, gd.filter(col("id") % 100 === 0), "id",
-      "qemb", dim, m, book, k = 5)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(10000.0)).as("dist"))
+    pqServe(codes, book, gd)
   }
 
   /** The MERGED code frame of v99's incremental ingest — exposed to
@@ -1617,16 +1611,15 @@ object Queries {
     * faiss's `add()` on a loaded IndexPQ (faiss_utils.py:11-17). */
   private[graft] def upsertedPqCodes(s: SparkSession, d: String)
       : (DataFrame, Seq[PqIndex.Codebook], DataFrame) = {
-    val m = 8; val dim = 64
     val (book, gd) = trainedPqBookStore(s, d)
     val base = BucketedStore.ensure(s,
       Store.name("graft_pq_tcodes_base", d),
       PqIndex.encode(gd.filter(col("id") % 4 =!= 0), "id", "qemb",
-        dim, m, book),
+        PqDim, PqM, book),
       "id", numBuckets = 32)
     val newRows = gd.join(base.hint("merge"),
       gd("id") === base("id"), "left_anti")
-    val newCodes = PqIndex.encode(newRows, "id", "qemb", dim, m, book)
+    val newCodes = PqIndex.encode(newRows, "id", "qemb", PqDim, PqM, book)
     (base.unionByName(newCodes), book, gd)
   }
 
@@ -1654,15 +1647,11 @@ object Queries {
     * 100 TB: ingest O(batch), delete O(dead) row filtering, zero
     * store rewrites (v95's compaction is the eventual reclaim). */
   def v106StoreMaintenance(s: SparkSession, d: String): DataFrame = {
-    val m = 8; val dim = 64
     val (merged, book, gd) = upsertedPqCodes(s, d)
     val tomb = deadIds(s, d)
     val alive = merged.join(broadcast(tomb),
       merged("id") === tomb("dead_id"), "left_anti")
-    PqIndex.searchAdc(alive, gd.filter(col("id") % 100 === 0), "id",
-      "qemb", dim, m, book, k = 5)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(10000.0)).as("dist"))
+    pqServe(alive, book, gd)
   }
 
   /** Maintained-store retrieval quality — the eval-matrix row for
@@ -1672,22 +1661,8 @@ object Queries {
     * semantics — the exact side must exclude dead rows too, or the
     * row would punish the deletes instead of the codes). Both inputs
     * gated O(Q·k) frames → broadcast join + tiny aggregate. */
-  def v107MaintainedRecall(s: SparkSession, d: String): DataFrame = {
-    val e = emb(s, d)
-    val exact = KnnJoin.knnL2(e.filter(!isDead(col("vec_id"))),
-        queryVecs(e), "vec_id", "embedding", "vec_id", k = 5)
-      .select(col("query_id"), col("neighbor_id"))
-    val approx = v106StoreMaintenance(s, d)
-      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
-    exact.join(broadcast(approx),
-        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("k"),
-        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        (col("n_hit") / col("k")).as("recall_at_5"))
-  }
+  def v107MaintainedRecall(s: SparkSession, d: String): DataFrame =
+    aliveRecall(s, d, v106StoreMaintenance(s, d))
 
   /** The SQ8 maintenance lifecycle — v106's composed contract
     * (train → incremental ADD → DELETE → serve) for the SCALAR
@@ -1719,22 +1694,8 @@ object Queries {
     * rows too, so the row measures the 1-byte codes under
     * maintenance, not the deletes). Both inputs gated O(Q·k) frames
     * → broadcast join + tiny aggregate. */
-  def v114SqMaintainedRecall(s: SparkSession, d: String): DataFrame = {
-    val e = emb(s, d)
-    val exact = KnnJoin.knnL2(e.filter(!isDead(col("vec_id"))),
-        queryVecs(e), "vec_id", "embedding", "vec_id", k = 5)
-      .select(col("query_id"), col("neighbor_id"))
-    val approx = v109SqMaintenance(s, d)
-      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
-    exact.join(broadcast(approx),
-        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("k"),
-        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        (col("n_hit") / col("k")).as("recall_at_5"))
-  }
+  def v114SqMaintainedRecall(s: SparkSession, d: String): DataFrame =
+    aliveRecall(s, d, v109SqMaintenance(s, d))
 
   /** The IVFPQ maintenance lifecycle — v106's composed contract for
     * the trained residual-IVFPQ store (the last of the three code-
@@ -1752,16 +1713,11 @@ object Queries {
     * artifacts. At 100 TB: O(batch) ingest + O(dead) filter over a
     * ~1/60th-the-vector-bytes store, zero rewrites. */
   def v110IvfpqMaintenance(s: SparkSession, d: String): DataFrame = {
-    val m = 8; val dim = 64
     val (merged, centsDf, book, g) = upsertedIvfpqCodes(s, d)
     val tomb = deadIds(s, d)
     val alive = merged.join(broadcast(tomb),
       merged("id") === tomb("dead_id"), "left_anti")
-    IvfPq.searchResidual(alive, centsDf,
-        g.filter(col("id") % 100 === 0), "cid", "id", "qemb",
-        dim, m, book, k = 5, nprobe = 2)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(10000.0)).as("dist"))
+    ivfpqServe(alive, centsDf, book, g)
   }
 
   /** Maintained-IVFPQ retrieval quality — v107's eval row for v110:
@@ -1771,22 +1727,8 @@ object Queries {
     * — every store family's lifecycle carries a measured quality
     * row. Both inputs gated O(Q·k) frames → broadcast join + tiny
     * aggregate. */
-  def v115IvfpqMaintainedRecall(s: SparkSession, d: String): DataFrame = {
-    val e = emb(s, d)
-    val exact = KnnJoin.knnL2(e.filter(!isDead(col("vec_id"))),
-        queryVecs(e), "vec_id", "embedding", "vec_id", k = 5)
-      .select(col("query_id"), col("neighbor_id"))
-    val approx = v110IvfpqMaintenance(s, d)
-      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
-    exact.join(broadcast(approx),
-        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("k"),
-        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        (col("n_hit") / col("k")).as("recall_at_5"))
-  }
+  def v115IvfpqMaintainedRecall(s: SparkSession, d: String): DataFrame =
+    aliveRecall(s, d, v110IvfpqMaintenance(s, d))
 
   // ---------- code-store compaction (v120/v121/v126) ----------
 
@@ -1894,18 +1836,13 @@ object Queries {
     * — the cheapest compaction of the three families per byte
     * reclaimed. */
   def v121IvfpqCompaction(s: SparkSession, d: String): DataFrame = {
-    val m = 8; val dim = 64
     val (merged, centsDf, book, g) = upsertedIvfpqCodes(s, d)
     val store = compactedCodeStore(s, d, "ivfpqcmp", merged)
     val alive = store
       .join(broadcast(residentTombs(s, d, store)),
         store("id") === col("dead_id"), "left_anti")
       .select(store("id"), store("codes"), store("centroid_id"))
-    IvfPq.searchResidual(alive, centsDf,
-        g.filter(col("id") % 100 === 0), "cid", "id", "qemb",
-        dim, m, book, k = 5, nprobe = 2)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(10000.0)).as("dist"))
+    ivfpqServe(alive, centsDf, book, g)
   }
 
   /** Trained-PQ code-store compaction + serve — v120's contract on
@@ -1919,7 +1856,6 @@ object Queries {
     * maintenance matrix's serve-time bound is an enforced invariant
     * everywhere. */
   def v126PqCompaction(s: SparkSession, d: String): DataFrame = {
-    val m = 8; val dim = 64
     val (merged, book, gd) = upsertedPqCodes(s, d)
     val store = compactedCodeStore(s, d, "pqcmp",
       merged.join(seedShardMap(s, d), merged("id") === col("sid"))
@@ -1928,10 +1864,7 @@ object Queries {
       .join(broadcast(residentTombs(s, d, store)),
         store("id") === col("dead_id"), "left_anti")
       .select(store("id"), store("codes"))
-    PqIndex.searchAdc(alive, gd.filter(col("id") % 100 === 0), "id",
-      "qemb", dim, m, book, k = 5)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(10000.0)).as("dist"))
+    pqServe(alive, book, gd)
   }
 
   /** Incremental ingest into the persisted trained-PQ code store —
@@ -1947,12 +1880,8 @@ object Queries {
     * O(batch) encode + an O(batch) bucketed anti-join probe instead of
     * a full-corpus re-encode; the store is never rewritten. */
   def v99CodeStoreUpsert(s: SparkSession, d: String): DataFrame = {
-    val m = 8; val dim = 64
     val (merged, book, gd) = upsertedPqCodes(s, d)
-    PqIndex.searchAdc(merged, gd.filter(col("id") % 100 === 0), "id",
-      "qemb", dim, m, book, k = 5)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(10000.0)).as("dist"))
+    pqServe(merged, book, gd)
   }
 
   /** TRAINED-PQ retrieval quality — recall@5 of the trained-codebook
@@ -1965,19 +1894,8 @@ object Queries {
     * trained index (bit-identical to v78 by v87's verbatim-oracle
     * gate), so the eval never retrains; both inputs are O(Q·k) frames
     * → broadcast join, tiny aggregate. */
-  def v89TrainedPqRecall(s: SparkSession, d: String): DataFrame = {
-    val exact = v1KnnL2(s, d).select(col("query_id"), col("neighbor_id"))
-    val approx = v87TrainedPqPersisted(s, d)
-      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
-    exact.join(broadcast(approx),
-        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("k"),
-        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        (col("n_hit") / col("k")).as("recall_at_5"))
-  }
+  def v89TrainedPqRecall(s: SparkSession, d: String): DataFrame =
+    recallRow(v1KnnL2(s, d), v87TrainedPqPersisted(s, d))
 
   /** TRAINED-IVF retrieval quality — recall@5 of the trained coarse
     * quantizer's probe search vs v1's exact scan (v39's row reads the
@@ -1986,19 +1904,8 @@ object Queries {
     * serves from v90's persisted trained index (bit-identical to v65
     * by v90's verbatim-oracle gate) — the eval never retrains. Both
     * inputs O(Q·k) frames → broadcast join + tiny aggregate. */
-  def v92TrainedIvfRecall(s: SparkSession, d: String): DataFrame = {
-    val exact = v1KnnL2(s, d).select(col("query_id"), col("neighbor_id"))
-    val approx = v90TrainedIvfPersisted(s, d)
-      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
-    exact.join(broadcast(approx),
-        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("k"),
-        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        (col("n_hit") / col("k")).as("recall_at_5"))
-  }
+  def v92TrainedIvfRecall(s: SparkSession, d: String): DataFrame =
+    recallRow(v1KnnL2(s, d), v90TrainedIvfPersisted(s, d))
 
   /** TRAINED-IVFPQ retrieval quality — recall@5 of the trained
     * residual-IVFPQ search vs v1's exact scan (v56's row reads the
@@ -2007,19 +1914,8 @@ object Queries {
     * size and nprobe — faiss's production default vs the seeded
     * baseline, as a pair of gated rows). Approx side serves from
     * v91's persisted trained index; both inputs O(Q·k) frames. */
-  def v93TrainedIvfpqRecall(s: SparkSession, d: String): DataFrame = {
-    val exact = v1KnnL2(s, d).select(col("query_id"), col("neighbor_id"))
-    val approx = v91TrainedIvfpqPersisted(s, d)
-      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
-    exact.join(broadcast(approx),
-        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("k"),
-        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        (col("n_hit") / col("k")).as("recall_at_5"))
-  }
+  def v93TrainedIvfpqRecall(s: SparkSession, d: String): DataFrame =
+    recallRow(v1KnnL2(s, d), v91TrainedIvfpqPersisted(s, d))
 
   /** Per-cluster membership stats of the LAST round: size after, and
     * how many members kept their previous assignment. */
@@ -2185,18 +2081,8 @@ object Queries {
     * everything downstream IS v11's operator chain, so the index
     * arithmetic cannot drift between the rotated and plain paths. */
   def v31OpqPrerotate(s: SparkSession, d: String): DataFrame = {
-    val (perm, signs) = graft.functions.VectorFunctions
-      .signedPerm(PqDim, seed = 42L)
-    val g = emb(s, d).select(col("vec_id").cast("long").as("id"),
-      graft.functions.VectorFunctions.applySignedPerm(
-        transform(quantize(col("embedding")), x => x.cast("double")),
-        perm, signs).as("qemb"))
-    val book = PqIndex.seededBook(g, "id", "qemb", PqDim, PqM, PqKsub)
-    val codes = PqIndex.encode(g, "id", "qemb", PqDim, PqM, book)
-    PqIndex.searchAdc(codes, g.filter(col("id") % 100 === 0),
-        "id", "qemb", PqDim, PqM, book, k = 5)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(10000.0)).as("dist"))
+    val (perm, signs) = signedPerm(PqDim, seed = 42L)
+    seededPqServe(s, d, applySignedPerm(_, perm, signs))
   }
 
   /** The TRAINED OPQ dim-to-subspace assignment: a variance-balancing
@@ -2241,16 +2127,7 @@ object Queries {
     * +1 — the rotation is a pure permutation, exactly isometric). */
   private def opqTrainedSearch(s: SparkSession, d: String): DataFrame = {
     val perm = trainedOpqPerm(s, d)
-    val g = emb(s, d).select(col("vec_id").cast("long").as("id"),
-      graft.functions.VectorFunctions.applySignedPerm(
-        transform(quantize(col("embedding")), x => x.cast("double")),
-        perm, Array.fill(PqDim)(1)).as("qemb"))
-    val book = PqIndex.seededBook(g, "id", "qemb", PqDim, PqM, PqKsub)
-    val codes = PqIndex.encode(g, "id", "qemb", PqDim, PqM, book)
-    PqIndex.searchAdc(codes, g.filter(col("id") % 100 === 0),
-        "id", "qemb", PqDim, PqM, book, k = 5)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(10000.0)).as("dist"))
+    seededPqServe(s, d, applySignedPerm(_, perm, Array.fill(PqDim)(1)))
   }
 
   /** TRAINED-OPQ retrieval quality — recall@5 of the ADC ranking over
@@ -2262,19 +2139,8 @@ object Queries {
     * O(dims)-key exact aggregate (v33's pass) collected to a 64-entry
     * literal; the chain is v31's map-only encode + broadcast-table ADC
     * + O(Q·k) partial top-k; the eval joins two O(Q·k) frames. */
-  def v102OpqTrainedRecall(s: SparkSession, d: String): DataFrame = {
-    val exact = v1KnnL2(s, d).select(col("query_id"), col("neighbor_id"))
-    val approx = opqTrainedSearch(s, d)
-      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
-    exact.join(broadcast(approx),
-        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("k"),
-        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        (col("n_hit") / col("k")).as("recall_at_5"))
-  }
+  def v102OpqTrainedRecall(s: SparkSession, d: String): DataFrame =
+    recallRow(v1KnnL2(s, d), opqTrainedSearch(s, d))
 
   /** The Gram-diagonal GREEDY OPQ allocation (v125's engine): dims
     * ranked by the exact integer variance numerator n·Σx² − (Σx)²
@@ -2343,16 +2209,7 @@ object Queries {
     opqGreedyAlloc(s, d).foreach { case (dim, sub, slot, _) =>
       perm(sub * cap + slot) = dim
     }
-    val g = emb(s, d).select(col("vec_id").cast("long").as("id"),
-      graft.functions.VectorFunctions.applySignedPerm(
-        transform(quantize(col("embedding")), x => x.cast("double")),
-        perm, Array.fill(PqDim)(1)).as("qemb"))
-    val book = PqIndex.seededBook(g, "id", "qemb", PqDim, PqM, PqKsub)
-    val codes = PqIndex.encode(g, "id", "qemb", PqDim, PqM, book)
-    PqIndex.searchAdc(codes, g.filter(col("id") % 100 === 0),
-        "id", "qemb", PqDim, PqM, book, k = 5)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(10000.0)).as("dist"))
+    seededPqServe(s, d, applySignedPerm(_, perm, Array.fill(PqDim)(1)))
   }
 
   /** Greedy-allocation OPQ retrieval quality — v69's recall tail over
@@ -2362,19 +2219,8 @@ object Queries {
     * measured delta between gated rows. Same scale shape as v102:
     * one O(dims)-key exact aggregate collected to a 64-entry literal,
     * then the map-only encode + broadcast-table ADC + O(Q·k) top-k. */
-  def v129OpqAllocRecall(s: SparkSession, d: String): DataFrame = {
-    val exact = v1KnnL2(s, d).select(col("query_id"), col("neighbor_id"))
-    val approx = opqAllocSearch(s, d)
-      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
-    exact.join(broadcast(approx),
-        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("k"),
-        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        (col("n_hit") / col("k")).as("recall_at_5"))
-  }
+  def v129OpqAllocRecall(s: SparkSession, d: String): DataFrame =
+    recallRow(v1KnnL2(s, d), opqAllocSearch(s, d))
 
   /** Triplet mining — for each anchor, the nearest SAME-label vector
     * (hard positive) and the nearest DIFFERENT-label vector (hard
@@ -2591,38 +2437,16 @@ object Queries {
     * query — ANN quality evaluation as a first-class gated operator,
     * not just a probe script. Both sides are tiny (Q·k rows); the join
     * broadcasts. */
-  def v20RecallEval(s: SparkSession, d: String): DataFrame = {
-    val exact = v1KnnL2(s, d).select(col("query_id"), col("neighbor_id"))
-    val approx = v10LshSearch(s, d)
-      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
-    exact.join(broadcast(approx),
-        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("k"),
-        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        (col("n_hit") / col("k")).as("recall_at_5"))
-  }
+  def v20RecallEval(s: SparkSession, d: String): DataFrame =
+    recallRow(v1KnnL2(s, d), v10LshSearch(s, d))
 
   /** PQ-ADC retrieval quality — recall@5 of v11's 8-byte-code search
     * vs v1's exact scan (the v20 recipe pointed at the PQ path): the
     * number a deployment watches before swapping the exact scan for
     * the quantized index at 100 TB. Both inputs are already-gated
     * O(Q·k) results → broadcast join, tiny aggregate. */
-  def v36PqRecall(s: SparkSession, d: String): DataFrame = {
-    val exact = v1KnnL2(s, d).select(col("query_id"), col("neighbor_id"))
-    val approx = v11PqAdc(s, d)
-      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
-    exact.join(broadcast(approx),
-        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("k"),
-        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        (col("n_hit") / col("k")).as("recall_at_5"))
-  }
+  def v36PqRecall(s: SparkSession, d: String): DataFrame =
+    recallRow(v1KnnL2(s, d), v11PqAdc(s, d))
 
   /** IVF list-balance diagnostic — faiss's imbalance factor
     * nlist·Σnᵢ²/(Σnᵢ)² over the coarse assignment (1.0 = perfectly
@@ -2648,19 +2472,9 @@ object Queries {
     * gated O(Q·k) results → broadcast join, tiny aggregate. */
   def v39IvfRecall(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
-    val exact = KnnJoin.knnL2(e, queryVecs(e),
-        "vec_id", "embedding", "vec_id", k = 3)
-      .select(col("query_id"), col("neighbor_id"))
-    val approx = v7IvfSearch(s, d)
-      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
-    exact.join(broadcast(approx),
-        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("k"),
-        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        (col("n_hit") / col("k")).as("recall_at_3"))
+    recallRow(KnnJoin.knnL2(e, queryVecs(e),
+        "vec_id", "embedding", "vec_id", k = 3),
+      v7IvfSearch(s, d), "recall_at_3")
   }
 
   /** LSH bucket-occupancy histogram — v37's imbalance diagnostic for
@@ -5787,19 +5601,8 @@ object Queries {
     * join + tiny aggregate; oracle reuses v13's chain + v1's exact
     * ranking verbatim so the eval can't drift from the operators it
     * scores. */
-  def v56IvfpqRecall(s: SparkSession, d: String): DataFrame = {
-    val exact = v1KnnL2(s, d).select(col("query_id"), col("neighbor_id"))
-    val approx = v13IvfPqSearch(s, d)
-      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
-    exact.join(broadcast(approx),
-        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("k"),
-        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        (col("n_hit") / col("k")).as("recall_at_5"))
-  }
+  def v56IvfpqRecall(s: SparkSession, d: String): DataFrame =
+    recallRow(v1KnnL2(s, d), v13IvfPqSearch(s, d))
 
   /** Per-doc punctuation/casing/digit profile — the C4/Gopher surface
     * signals t2's stopword score and t12's token-shape filters don't
@@ -6011,57 +5814,24 @@ object Queries {
     * the unfiltered v39 number. Both inputs gated O(Q·k) frames →
     * broadcast join + tiny aggregate; oracle reuses v15's and v58's
     * chains verbatim. */
-  def v59FilteredRecall(s: SparkSession, d: String): DataFrame = {
-    val exact = v15FilteredKnn(s, d).filter(col("rnk") <= 3)
-      .select(col("query_id"), col("neighbor_id"))
-    val approx = v58FilteredIvf(s, d)
-      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
-    exact.join(broadcast(approx),
-        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("k"),
-        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_hit"), col("k"),
-        (col("n_hit") / col("k")).as("recall_at_3"))
-  }
+  def v59FilteredRecall(s: SparkSession, d: String): DataFrame =
+    recallRow(v15FilteredKnn(s, d).filter(col("rnk") <= 3),
+      v58FilteredIvf(s, d), "recall_at_3", withK = true)
 
   /** Recall@5 of the SQ8 quantized scan (v17) vs the exact scan — the
     * last missing row of the eval matrix (PQ v36, IVF v39, LSH v20,
     * binary v49, IVFPQ v56): how much neighbor quality the 4× scan
     * compression costs. Both inputs gated O(Q·k) frames → broadcast
     * join + tiny aggregate. */
-  def v60Sq8Recall(s: SparkSession, d: String): DataFrame = {
-    val exact = v1KnnL2(s, d).select(col("query_id"), col("neighbor_id"))
-    val approx = v17Sq8Knn(s, d)
-      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
-    exact.join(broadcast(approx),
-        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("k"),
-        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_hit"), col("k"),
-        (col("n_hit") / col("k")).as("recall_at_5"))
-  }
+  def v60Sq8Recall(s: SparkSession, d: String): DataFrame =
+    recallRow(v1KnnL2(s, d), v17Sq8Knn(s, d), withK = true)
 
   /** SQ4 recall — v60's row for the 4-bit quantizer (v82): exact top-5
     * vs the nibble-code ranking. Read the (v60, v83) pair as the
     * measured recall price of halving the code bytes — same broadcast
     * join + tiny aggregate shape as v60. */
-  def v83Sq4Recall(s: SparkSession, d: String): DataFrame = {
-    val exact = v1KnnL2(s, d).select(col("query_id"), col("neighbor_id"))
-    val approx = v82Sq4Knn(s, d)
-      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
-    exact.join(broadcast(approx),
-        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("k"),
-        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_hit"), col("k"),
-        (col("n_hit") / col("k")).as("recall_at_5"))
-  }
+  def v83Sq4Recall(s: SparkSession, d: String): DataFrame =
+    recallRow(v1KnnL2(s, d), v82Sq4Knn(s, d), withK = true)
 
   /** Graph-search quality eval — does v57's 3-step greedy walk land
     * inside the exact top-5? The recall row for the graph path
@@ -7047,27 +6817,17 @@ object Queries {
     * verbatim. */
   def v67IvfpqSearchPersisted(s: SparkSession, d: String): DataFrame = {
     val path = Store.name("/tmp/graft_pqidx", d)
-    val m = 8; val dim = 64; val ksub = 16
-    val e = emb(s, d)
-    val g = e.select(col("vec_id").cast("long").as("id"),
-      transform(quantize(col("embedding")), x => x.cast("double"))
-        .as("qemb"))
-    val book = PqIndex.seededBook(g, "id", "qemb", dim, m, ksub)
-    val cents = g.filter(col("id") < 10)
-      .select(col("id").as("cid"), col("qemb"))
+    val g = qembGallery(s, d)
+    val book = PqIndex.seededBook(g, "id", "qemb", PqDim, PqM, PqKsub)
+    val cents = qembSeedCents(g)
     Store.ensurePath(path) { tmp =>
-      PqIndex.encode(g, "id", "qemb", dim, m, book)
-        .join(IvfIndex.assign(g, cents, "id", "qemb", "cid", scale = 1)
-          .select(col("id"), col("centroid_id")), Seq("id"))
+      seededIvfpqCodes(g, cents, book)
         .write.mode("overwrite").partitionBy("centroid_id").parquet(tmp)
     }
     val codes = Tables.ensureParallelism(s.read.parquet(path), Some(path))
-    val queries = g.filter(col("id") % 100 === 0)
-    IvfPq.search(codes, cents, queries, "cid", "id", "qemb",
-      dim, m, book, k = 5, nprobe = 2, scale = 1)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        (col("dist") / lit(DefaultScale.toDouble)).as("dist"))
+    seededIvfpqServe(codes, cents, book, g)
   }
+
 
   /** OPQ-path retrieval quality — recall@5 of the pre-rotated PQ
     * search (v31) vs the exact scan, the last missing row of the
@@ -7080,19 +6840,8 @@ object Queries {
     * exact side runs over the ROTATED gallery (a signed permutation is
     * an exact isometry in integer arithmetic — spec-proved at v31 — so
     * the exact ranking is v1's, with identical tie-breaks). */
-  def v69OpqRecall(s: SparkSession, d: String): DataFrame = {
-    val exact = v1KnnL2(s, d).select(col("query_id"), col("neighbor_id"))
-    val approx = v31OpqPrerotate(s, d)
-      .select(col("query_id").as("qa"), col("neighbor_id").as("na"))
-    exact.join(broadcast(approx),
-        col("query_id") === col("qa") && col("neighbor_id") === col("na"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("k"),
-        sum(when(col("na").isNotNull, 1L).otherwise(0L)).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        (col("n_hit") / col("k")).as("recall_at_5"))
-  }
+  def v69OpqRecall(s: SparkSession, d: String): DataFrame =
+    recallRow(v1KnnL2(s, d), v31OpqPrerotate(s, d))
 
   /** Retrain migration matrix — the (seed list → trained list) flow of
     * every gallery vector between the SEEDED coarse quantizer (v6's

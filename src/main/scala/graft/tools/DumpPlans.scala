@@ -11,7 +11,9 @@ import graft.{GraftSession, SparkEntry}
   *   suffix  "before" | "after"
   *   keys    optional comma list; default = every SparkEntry query.
   * SF dir via SPARK_GRAFT_SF_DIR (default sf0.1 — the bench SF, so the
-  * dumped plan is the plan the bench actually runs). */
+  * dumped plan is the plan the bench actually runs). Lambda addresses
+  * are masked ([[ExplainAudit.maskLambdas]]); exits 1 if any key fails
+  * to plan. */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
@@ -25,18 +27,25 @@ object DumpPlans {
     val selected = SparkEntry.queries
       .filter { case (name, _) => keys.forall(_.contains(name)) }
       .toSeq.sortBy(_._1)
-    selected.foreach { case (name, fn) =>
+    val failed = selected.flatMap { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val plan = ExplainAudit.maskLambdas(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
         println(s"[plans] wrote $outDir/${name}_$suffix.txt")
+        None
       } catch { case e: Throwable =>
         println(s"[plans] $name FAILED: ${e.getMessage}")
+        Some(name)
       }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[plans] ${failed.size} failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -157,6 +157,14 @@ object ExplainAudit {
     case _ => None
   }
 
+  /** `plan` with each JVM lambda's class suffix and identity hash
+    * (`Foo$$$Lambda$5816/0x00007f…@3d446ba9`) masked to `Foo$$$Lambda`:
+    * they change from run to run, so unmasked plan text of unchanged
+    * code would not diff clean. */
+  def maskLambdas(plan: String): String =
+    plan.replaceAll("""\$\$Lambda(\$\d+)?/0x[0-9a-f]+(@[0-9a-f]+)?""",
+      "\\$\\$Lambda")
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -282,8 +290,8 @@ object ExplainAudit {
         df.queryExecution.optimizedPlan.foreach(_.expressions.foreach(
           _.foreach(e => handRolledKernel(e).foreach(v =>
             violations ::= s"$name: $v"))))
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        val plan = maskLambdas(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
         println(plan)
         val pushed = "PushedFilters: \\[[^\\]]".r.findAllIn(plan).size
         val scans = "Scan parquet".r.findAllIn(plan).size

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.PqIndex
+import graft.operators.{IvfIndex, IvfPq, PqIndex}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 class PqIndexSpec extends SparkSpec {
@@ -34,26 +35,55 @@ class PqIndexSpec extends SparkSpec {
     assert(codes(0L) !== codes(2L))
   }
 
+  private val confs = Seq(
+    Seq("spark.sql.shuffle.partitions" -> "1"),
+    Seq("spark.sql.shuffle.partitions" -> "4"),
+    Seq("spark.sql.shuffle.partitions" -> "32"),
+    Seq("spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.adaptive.enabled" -> "false"))
+
+  private def underEveryConf(body: => Unit): Unit =
+    confs.foreach(c => withConf(c: _*)(body))
+
+  private def rows(df: DataFrame): Set[Row] = df.collect().toSet
+
+  // 0 and 1 share their codes, and so do 2 and 3: ADC ties
+  private lazy val codes =
+    PqIndex.encode(vecs, "vec_id", "embedding", 4, 2, book)
+
   test("IVFPQ with full probing equals plain PQ ADC ranking") {
-    import graft.operators.{IvfIndex, IvfPq}
-    val codes = PqIndex.encode(vecs, "vec_id", "embedding", 4, 2, book)
     val cents = Seq((0L, Array(0.0f, 0.0f, 5.0f, 5.0f)),
       (1L, Array(9.0f, 9.0f, 0.0f, 0.0f))).toDF("cid", "embedding")
     val indexed = codes.join(
       IvfIndex.assign(vecs, cents, "vec_id", "embedding", "cid")
         .select(col("id"), col("centroid_id")), Seq("id"))
-    val q = vecs.filter($"vec_id" === 1)
-    val ivfpq = IvfPq.search(indexed, cents, q, "cid", "vec_id",
-      "embedding", 4, 2, book, k = 3, nprobe = 2)
-      .select("rnk", "neighbor_id").as[(Long, Long)].collect().toSet
-    val flat = PqIndex.searchAdc(codes, q, "vec_id", "embedding", 4, 2,
-      book, k = 3)
-      .select("rnk", "neighbor_id").as[(Long, Long)].collect().toSet
-    assert(ivfpq === flat)
+    underEveryConf {
+      val ivfpq = IvfPq.search(indexed, cents, vecs, "cid", "vec_id",
+        "embedding", 4, 2, book, k = 3, nprobe = 2)
+      val flat = PqIndex.searchAdc(codes, vecs, "vec_id", "embedding", 4, 2,
+        book, k = 3)
+      assert(rows(ivfpq) === rows(flat))
+    }
+  }
+
+  test("residual IVFPQ, origin centroids, full probing equals plain PQ ADC") {
+    // residual = v − 0 = v, so the residual codes, tables and ranks are
+    // the plain ones, dist included
+    val cents = Seq((0L, Array(0.0f, 0.0f, 0.0f, 0.0f)),
+      (1L, Array(0.0f, 0.0f, 0.0f, 0.0f))).toDF("cid", "embedding")
+    val rcodes = IvfPq.encodeResidual(vecs, cents, "vec_id", "embedding",
+      "cid", 4, 2, book)
+    underEveryConf {
+      val residual = IvfPq.searchResidual(rcodes, cents, vecs, "cid",
+        "vec_id", "embedding", 4, 2, book, k = 4, nprobe = 2)
+      val flat = PqIndex.searchAdc(rcodes, vecs, "vec_id", "embedding", 4,
+        2, book, k = 4)
+      assert(rows(residual) === rows(flat))
+      assert(rows(residual).size === 5 * 4)
+    }
   }
 
   test("IVFPQ with nprobe=1 prunes to the probed partition only") {
-    import graft.operators.{IvfIndex, IvfPq}
     val codes = PqIndex.encode(vecs, "vec_id", "embedding", 4, 2, book)
     val cents = Seq((0L, Array(0.0f, 0.0f, 10.0f, 10.0f)),
       (1L, Array(9.0f, 9.0f, 0.0f, 0.0f))).toDF("cid", "embedding")
@@ -71,7 +101,7 @@ class PqIndexSpec extends SparkSpec {
   }
 
   test("residual IVFPQ with exact-capacity codebooks reproduces exact KNN") {
-    import graft.operators.{IvfPq, KnnJoin}
+    import graft.operators.KnnJoin
     // 6 distinct vectors, two coarse clusters; residual codebooks with
     // ksub = n represent every residual exactly, so ADC distance equals
     // exact distance and full probing must reproduce the exact ranking.
@@ -100,7 +130,6 @@ class PqIndexSpec extends SparkSpec {
   }
 
   test("ADC search finds the true nearest group first") {
-    val codes = PqIndex.encode(vecs, "vec_id", "embedding", 4, 2, book)
     val q = vecs.filter($"vec_id" === 1)
     val r = PqIndex.searchAdc(codes, q, "vec_id", "embedding", 4, 2, book, k = 3)
       .orderBy("rnk").as[(Long, Long, Long, Double)].collect()
@@ -110,7 +139,6 @@ class PqIndexSpec extends SparkSpec {
   }
 
   test("ADC search enforces the batch-query broadcast contract") {
-    val codes = PqIndex.encode(vecs, "vec_id", "embedding", 4, 2, book)
     // budget / (m * (maxCid+1) * 8 bytes) queries fit; one past it must
     // fail BEFORE any collect, with the batching instruction
     val perQ = 2L * (book.map(_.cid).max + 1) * 8
@@ -125,18 +153,70 @@ class PqIndexSpec extends SparkSpec {
   }
 
   test("posTable rejects empty subspaces and unbounded cid ranges") {
-    assert(intercept[IllegalArgumentException] {
-      PqIndex.searchAdc(
-        PqIndex.encode(vecs, "vec_id", "embedding", 4, 2, book),
-        vecs.limit(1), "vec_id", "embedding", 4, 2,
-        book.filter(_.sub == 0), 3)     // subspace 1 empty
-    }.getMessage.contains("subspace"))
+    val cents = Seq((0L, Array(0.0f, 0.0f, 5.0f, 5.0f)),
+      (1L, Array(9.0f, 9.0f, 0.0f, 0.0f))).toDF("cid", "embedding")
+    val indexed = codes.join(
+      IvfIndex.assign(vecs, cents, "vec_id", "embedding", "cid")
+        .select(col("id"), col("centroid_id")), Seq("id"))
+    val half = book.filter(_.sub == 0)           // subspace 1 empty
+    val searches: Seq[(String, Seq[PqIndex.Codebook] => DataFrame)] = Seq(
+      "searchAdc" -> (b => PqIndex.searchAdc(codes, vecs.limit(1),
+        "vec_id", "embedding", 4, 2, b, 3)),
+      "search" -> (b => IvfPq.search(indexed, cents, vecs.limit(1), "cid",
+        "vec_id", "embedding", 4, 2, b, k = 3, nprobe = 2)),
+      "searchResidual" -> (b => IvfPq.searchResidual(indexed, cents,
+        vecs.limit(1), "cid", "vec_id", "embedding", 4, 2, b, k = 3,
+        nprobe = 2)))
+    searches.foreach { case (name, search) =>
+      val e = intercept[IllegalArgumentException](search(half))
+      assert(e.getMessage.contains(s"$name: codebook holds no centroids " +
+        "for subspace 1 of 2"), e.getMessage)
+    }
     val sparse = book.map(cb =>
       if (cb.sub == 1 && cb.cid == 0) cb.copy(cid = 100000) else cb)
     assert(intercept[IllegalArgumentException] {
-      PqIndex.searchAdc(
-        PqIndex.encode(vecs, "vec_id", "embedding", 4, 2, book),
-        vecs.limit(1), "vec_id", "embedding", 4, 2, sparse, 3)
+      PqIndex.searchAdc(codes, vecs.limit(1), "vec_id", "embedding", 4, 2,
+        sparse, 3)
     }.getMessage.contains("cid"))
+  }
+
+  // Query rows with a NULL vector or a NULL id are skipped, as the exact
+  // scan skips them: the result is the one of the well-formed rows alone.
+  private lazy val nullQueries = Seq(
+    (Option(1L), Option(Array(0.1f, 0.0f, 10.0f, 10.1f))),
+    (Option(7L), Option.empty[Array[Float]]),
+    (Option.empty[Long], Option(Array(9.0f, 9.0f, 0.0f, 0.0f)))
+  ).toDF("vec_id", "embedding")
+  private lazy val wellFormed = nullQueries.filter($"vec_id" === 1)
+
+  test("searchAdc skips query rows with a NULL vector or id") {
+    assert(rows(PqIndex.searchAdc(codes, nullQueries, "vec_id",
+      "embedding", 4, 2, book, 3)) === rows(PqIndex.searchAdc(codes,
+      wellFormed, "vec_id", "embedding", 4, 2, book, 3)))
+  }
+
+  test("IVFPQ search skips query rows with a NULL vector or id") {
+    val cents = Seq((0L, Array(0.0f, 0.0f, 5.0f, 5.0f)),
+      (1L, Array(9.0f, 9.0f, 0.0f, 0.0f))).toDF("cid", "embedding")
+    val indexed = codes.join(
+      IvfIndex.assign(vecs, cents, "vec_id", "embedding", "cid")
+        .select(col("id"), col("centroid_id")), Seq("id"))
+    def run(q: DataFrame) = rows(IvfPq.search(indexed, cents, q, "cid",
+      "vec_id", "embedding", 4, 2, book, k = 3, nprobe = 2))
+    val got = run(nullQueries)
+    assert(got === run(wellFormed))
+    assert(got.size === 3)
+  }
+
+  test("residual IVFPQ search skips query rows with a NULL vector or id") {
+    val cents = Seq((0L, Array(0.0f, 0.0f, 5.0f, 5.0f)),
+      (1L, Array(9.0f, 9.0f, 0.0f, 0.0f))).toDF("cid", "embedding")
+    val rcodes = IvfPq.encodeResidual(vecs, cents, "vec_id", "embedding",
+      "cid", 4, 2, book)
+    def run(q: DataFrame) = rows(IvfPq.searchResidual(rcodes, cents, q,
+      "cid", "vec_id", "embedding", 4, 2, book, k = 3, nprobe = 2))
+    val got = run(nullQueries)
+    assert(got === run(wellFormed))
+    assert(got.size === 3)
   }
 }
