@@ -11,9 +11,18 @@ import org.apache.spark.sql.functions._
   *
   * Plan shape: one [[graft.plans.KnnScanExec]] over the gallery with the
   * quantized queries broadcast. Each gallery task decodes the query
-  * matrix once, scores its partition block by block with exact integer
-  * arithmetic and keeps a bounded top-k per query, so only Q·k rows
-  * leave a partition — no (query, gallery) pair becomes a row.
+  * matrix once, scores its partition in blocks of 128 rows and keeps a
+  * bounded top-k per query, so only Q·k rows leave a partition — no
+  * (query, gallery) pair becomes a row. One register-tiled kernel scores
+  * 4 gallery rows × 4 queries per pass and serves all three metrics: it
+  * takes the integer dot g·q, and L2 follows as ‖g‖² + ‖q‖² − 2·g·q from
+  * norms taken once per block and once per query set (the same integer,
+  * mod 2⁶⁴, as Σ(g − q)²). The dot runs in `double` arithmetic when
+  * D · max|g| · max|q| ≤ 2⁵³ for the block, so every product and partial
+  * sum is an integer a double holds exactly; a block past that bound
+  * falls back to the same tile in wrapping `long` arithmetic. Scores,
+  * ranks, lowest-id ties and NaN-last are those of the pair-at-a-time
+  * integer scan on every input.
   * [[TopK.perGroup]] then merges the partitions' rows per query (rank
   * order, lowest-id ties, NaN last), a shuffle of O(Q·k·partitions).
   */

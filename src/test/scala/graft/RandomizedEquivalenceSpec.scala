@@ -1,10 +1,12 @@
 package graft
 
-import graft.functions.VectorFunctions.{cosineFromInts, distFromIntSq,
-  intDot, intL2Sq, intNormSq, quantize}
+import graft.functions.VectorFunctions.{DefaultScale, cosineFromInts,
+  distFromIntSq, intDot, intL2Sq, intNormSq, quantize}
 import graft.operators.{Dedup, KnnJoin, TemporalJoins, TopK}
-import graft.plans.KnnMetric
+import graft.plans.{KnnMetric, KnnScanExec}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 
 /** Seeded-randomized equivalence checks: the operators with novel
@@ -362,19 +364,21 @@ class RandomizedEquivalenceSpec extends SparkSpec {
   /** Reference: KnnJoin as a crossjoin, one scored row per (query,
     * gallery) pair into TopK.perGroup. A zero-norm
     * cosine is NaN here as in the scan (Spark's ANSI division would
-    * throw on it). Same output columns as the KnnJoin wrapper. */
+    * throw on it; the norms multiply as doubles, as in the scan, since
+    * wide vectors' long product overflows). Same output columns as the
+    * KnnJoin wrapper. */
   private def crossjoinKnn(metric: KnnMetric, gallery: DataFrame,
-                           queries: DataFrame, k: Int): DataFrame = {
+                           queries: DataFrame, k: Int, scale: Int = 1): DataFrame = {
     val g = gallery.select(col("id").cast("long").as("neighbor_id"),
-      quantize(col("v"), 1).as("gv"))
+      quantize(col("v"), scale).as("gv"))
     val q = queries.select(col("id").cast("long").as("query_id"),
-      quantize(col("v"), 1).as("qv"))
+      quantize(col("v"), scale).as("qv"))
     val (gv, qv) = (col("gv"), col("qv"))
     val score: Column = metric match {
       case KnnMetric.L2 => intL2Sq(gv, qv).cast("double")
       case KnnMetric.Dot => intDot(gv, qv).cast("double")
       case KnnMetric.Cosine =>
-        when(intNormSq(gv) * intNormSq(qv) === 0L, lit(Double.NaN))
+        when(intNormSq(gv).cast("double") * intNormSq(qv) === 0.0, lit(Double.NaN))
           .otherwise(cosineFromInts(intDot(gv, qv), intNormSq(gv),
             intNormSq(qv)))
     }
@@ -383,20 +387,22 @@ class RandomizedEquivalenceSpec extends SparkSpec {
       "query_id", "neighbor_id", "score", k, metric.ascending)
     ranked.select(col("query_id"), col("rnk"), col("neighbor_id"),
       (metric match {
-        case KnnMetric.L2 => distFromIntSq(col("score"), 1)
-        case KnnMetric.Dot => col("score") / lit(1.0)
+        case KnnMetric.L2 => distFromIntSq(col("score"), scale)
+        case KnnMetric.Dot => col("score") / lit(scale.toDouble * scale)
         case KnnMetric.Cosine => col("score")
       }).as("score"))
   }
 
+  /** `pre`: L2 through `knnL2Pre` on the integer vectors as they are. */
   private def knn(metric: KnnMetric, gallery: DataFrame, queries: DataFrame,
-                  k: Int): DataFrame = {
+                  k: Int, scale: Int = 1, pre: Boolean = false): DataFrame = {
     val f = metric match {
+      case KnnMetric.L2 if pre => KnnJoin.knnL2Pre _
       case KnnMetric.L2 => KnnJoin.knnL2 _
       case KnnMetric.Dot => KnnJoin.knnDot _
       case KnnMetric.Cosine => KnnJoin.knnCosine _
     }
-    f(gallery, queries, "id", "v", "id", k, 1)
+    f(gallery, queries, "id", "v", "id", k, scale)
   }
 
   /** Rows in a canonical order; scores by bit pattern, so NaN == NaN. */
@@ -406,13 +412,24 @@ class RandomizedEquivalenceSpec extends SparkSpec {
 
   private val metrics = Seq(KnnMetric.L2, KnnMetric.Dot, KnnMetric.Cosine)
 
-  /** Tie-heavy integer vectors: duplicates, one null vector, one null
-    * id, one zero vector. */
-  private def knnGallery(seed: Int, n: Int, dim: Int): DataFrame = {
+  private type Values = scala.util.Random => Double
+  /** Tie-heavy integers in [-3, 3]. */
+  private val smallInts: Values = r => (r.nextInt(7) - 3).toDouble
+  /** perfbench's shape: Gaussians around a few centres, about ±5·10⁴
+    * once quantized at `DefaultScale`, far inside the double path's
+    * bound (64 · 5·10⁴ · 5·10⁴ ≪ 2⁵³). */
+  private val clustered: Values = r => (r.nextInt(4) - 1.5) * 1.5 + r.nextGaussian()
+  /** Integers up to about 2³¹: D · max|g| · max|q| > 2⁵³, so every block
+    * is scored in long arithmetic, and squares of differences overflow. */
+  private val wide: Values = r => ((r.nextInt(9) - 4) * (1L << 29) + r.nextInt(1000)).toDouble
+
+  /** Tie-heavy vectors: duplicates, one null vector, one null id, one
+    * zero vector. */
+  private def knnGallery(seed: Int, n: Int, dim: Int,
+                         value: Values = smallInts): DataFrame = {
     val rnd = new scala.util.Random(seed)
     val base = (0 until n).map { i =>
-      (Option(i.toLong * 3 + 1),
-        Option(Seq.fill(dim)((rnd.nextInt(7) - 3).toDouble)))
+      (Option(i.toLong * 3 + 1), Option(Seq.fill(dim)(value(rnd))))
     }
     val dups = base.take(n / 5).map { case (id, v) => (id.map(_ + 1), v) }
     val odd = Seq((Option(-5L), None), (None, Option(Seq.fill(dim)(1.0))),
@@ -420,10 +437,10 @@ class RandomizedEquivalenceSpec extends SparkSpec {
     rnd.shuffle(base ++ dups ++ odd).toDF("id", "v")
   }
 
-  private def knnQueries(seed: Int, n: Int, dim: Int): DataFrame = {
+  private def knnQueries(seed: Int, n: Int, dim: Int,
+                         value: Values = smallInts): DataFrame = {
     val rnd = new scala.util.Random(seed)
-    ((0 until n).map(i => (1000L + i,
-        Option(Seq.fill(dim)((rnd.nextInt(7) - 3).toDouble)))) ++
+    ((0 until n).map(i => (1000L + i, Option(Seq.fill(dim)(value(rnd))))) ++
       Seq((2000L, Option(Seq.fill(dim)(0.0))), (2001L, None)))
       .toDF("id", "v")
   }
@@ -472,6 +489,46 @@ class RandomizedEquivalenceSpec extends SparkSpec {
           assert(rowsOf(knn(metric, g.repartition(parts), q, 5)) ===
             expected, s"$metric parts=$parts AQE off")
         }
+      }
+    }
+  }
+
+  /** The scan's (pairs scored, blocks scored in long arithmetic) in the
+    * last execution of `df`. */
+  private def scanCounts(df: DataFrame): (Long, Long) = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    val scans = nodes(df.queryExecution.executedPlan).collect { case s: KnnScanExec => s }
+    assert(scans.size === 1)
+    (scans.head.metrics("numPairsScored").value, scans.head.metrics("numLongBlocks").value)
+  }
+
+  test("blocked KNN scan == crossjoin at perfbench magnitudes (double " +
+    "path) and at about ±2³¹ through knnL2Pre (long path), under " +
+    "repartition(1/4/32) and AQE off") {
+    val (n, nq, dim) = (300, 9, 64)
+    // live rows: n, n / 5 duplicates and the zero vector; queries: nq and
+    // the zero vector
+    val pairs = (n + n / 5 + 1).toLong * (nq + 1)
+    for ((value, scale, pre) <- Seq((clustered, DefaultScale, false), (wide, 1, true))) {
+      val asLongs = (df: DataFrame) =>
+        if (pre) df.withColumn("v", col("v").cast("array<bigint>")) else df
+      val g = asLongs(knnGallery(n, n, dim, value))
+      val q = asLongs(knnQueries(nq, nq, dim, value))
+      for (metric <- metrics) {
+        val expected = rowsOf(crossjoinKnn(metric, g, q, 5, scale))
+        for (parts <- Seq(1, 4, 32); aqe <- Seq("true", "false"))
+          withConf("spark.sql.adaptive.enabled" -> aqe) {
+            val run = knn(metric, g.repartition(parts), q, 5, scale, pre)
+            val clue = s"$metric scale=$scale parts=$parts AQE=$aqe"
+            assert(rowsOf(run) === expected, clue)
+            val (scored, longBlocks) = scanCounts(run)
+            assert(scored === pairs, clue)
+            if (pre) assert(longBlocks > 0, clue) else assert(longBlocks === 0, clue)
+          }
       }
     }
   }
