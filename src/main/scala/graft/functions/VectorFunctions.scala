@@ -95,6 +95,10 @@ object VectorFunctions {
     graft.plans.VectorExpressions.intDot(a, b)
   /** Integer squared norm. */
   def intNormSq(a: Column): Column = intDot(a, a)
+  /** Per-group element-wise vector sum, one native aggregate: exact on
+    * quantized (Long) vectors, `double` on float ones. */
+  def vectorSum(v: Column): Column =
+    graft.plans.VectorExpressions.vectorSum(v)
   /** Real-scale distance from integer squared distance. */
   def distFromIntSq(d2: Column, scale: Int = DefaultScale): Column =
     sqrt(d2) / lit(scale.toDouble)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.VectorFunctions.{quantize, DefaultScale}
+import graft.functions.VectorFunctions.{quantize, vectorSum, DefaultScale}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,12 +33,8 @@ object Centroids {
     * is nClasses rows; labels whose vectors are all NULL drop (the
     * exploded form generated no sum rows for them either). */
   def classSums(vecs: DataFrame, labCol: String, qvCol: String): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge
-    val vecSum = GraftSqlBridge.column(
-      graft.plans.VectorSumAggregate(
-        GraftSqlBridge.expression(col(qvCol))).toAggregateExpression())
     vecs.groupBy(col(labCol).as("lab"))
-      .agg(count(lit(1)).as("n"), vecSum.as("svec"))
+      .agg(count(lit(1)).as("n"), vectorSum(col(qvCol)).as("svec"))
       .filter(col("svec").isNotNull)
   }
 

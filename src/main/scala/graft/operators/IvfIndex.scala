@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
-import graft.plans.{CentroidKernels, Quantize, VectorSumAggregate}
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import graft.plans.{CentroidKernels, Quantize}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Batch IVF (inverted-file) vector index built with DataFrame ops — the
@@ -66,11 +66,10 @@ object IvfIndex {
     * then mean = Σ/n per element, as `avg` computes it. Rows with a
     * null vec are skipped; a cluster without vectors has no row. */
   def lloydStep(assigned: DataFrame): DataFrame = {
-    val vecSum = GraftSqlBridge.column(VectorSumAggregate(
-      GraftSqlBridge.expression(toDoubleArray(col("vec")))).toAggregateExpression())
     assigned
       .groupBy(col("centroid_id"))
-      .agg(count(col("vec")).as("n"), vecSum.as("s"))
+      .agg(count(col("vec")).as("n"),
+        vectorSum(toDoubleArray(col("vec"))).as("s"))
       .filter(col("s").isNotNull)
       .select(col("centroid_id"),
         transform(col("s"), x => x / col("n")).as("vec"))
@@ -156,11 +155,7 @@ object IvfIndex {
         quantize(col("vec"), scale).as("nqv"),
         col("centroid_id").cast("long").as("centroid_id"))
       .join(broadcast(probeQ), Seq("centroid_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        intL2Sq(col("nqv"), col("qv")).cast("double").as("d2"))
-    TopK.perGroup(cand, "query_id", "neighbor_id", "d2", k, ascending = true)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        distFromIntSq(col("d2"), scale).as("dist"))
+    KnnJoin.rankPairs(cand.withColumnRenamed("nqv", "gv"), k, scale)
   }
 
   /** Execute tombstone compaction on a persisted centroid-partitioned

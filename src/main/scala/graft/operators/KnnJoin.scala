@@ -7,22 +7,32 @@ import org.apache.spark.sql.functions._
 
 /** Batch exact K-nearest-neighbour join — the Spark-first twin of the
   * reference's `IndexFlatL2.search` (faiss_utils.py:19-22), generalized
-  * from one query vector to a query *set*.
+  * from one query vector to a query *set*. The only code that ranks
+  * candidates by exact integer L2, through two entry points:
   *
-  * Plan shape: one [[graft.plans.KnnScanExec]] over the gallery with the
-  * quantized queries broadcast. Each gallery task decodes the query
-  * matrix once, scores its partition in blocks of 128 rows and keeps a
-  * bounded top-k per query, so only Q·k rows leave a partition — no
-  * (query, gallery) pair becomes a row. One register-tiled kernel scores
-  * 4 gallery rows × 4 queries per pass and serves all three metrics: it
-  * takes the integer dot g·q, and L2 follows as ‖g‖² + ‖q‖² − 2·g·q from
-  * norms taken once per block and once per query set (the same integer,
-  * mod 2⁶⁴, as Σ(g − q)²). The dot runs in `double` arithmetic when
-  * D · max|g| · max|q| ≤ 2⁵³ for the block, so every product and partial
-  * sum is an integer a double holds exactly; a block past that bound
-  * falls back to the same tile in wrapping `long` arithmetic. Scores,
-  * ranks, lowest-id ties and NaN-last are those of the pair-at-a-time
-  * integer scan on every input.
+  *  - a gallery against a broadcast query set (`knnL2`, `knnL2Pre`,
+  *    `knnDot`, `knnCosine`) runs on one [[graft.plans.KnnScanExec]];
+  *  - candidates a routing join already paired (an IVF probe, an LSH
+  *    bucket, a label filter) go to [[rankPairs]].
+  *
+  * `StreamingOps.knnStream` is the one exception: its query side is the
+  * stream and its gallery is static, while the scan broadcasts the
+  * queries, so it keeps the crossjoin into [[TopK.perGroup]].
+  *
+  * Scan plan shape: the quantized queries are broadcast. Each gallery
+  * task decodes the query matrix once, scores its partition in blocks
+  * of 128 rows and keeps a bounded top-k per query, so only Q·k rows
+  * leave a partition — no (query, gallery) pair becomes a row. One
+  * register-tiled kernel scores 4 gallery rows × 4 queries per pass and
+  * serves all three metrics: it takes the integer dot g·q, and L2
+  * follows as ‖g‖² + ‖q‖² − 2·g·q from norms taken once per block and
+  * once per query set (the same integer, mod 2⁶⁴, as Σ(g − q)²). The
+  * dot runs in `double` arithmetic when D · max|g| · max|q| ≤ 2⁵³ for
+  * the block, so every product and partial sum is an integer a double
+  * holds exactly; a block past that bound falls back to the same tile
+  * in wrapping `long` arithmetic. Scores, ranks, lowest-id ties and
+  * NaN-last are those of the pair-at-a-time integer scan on every
+  * input.
   * [[TopK.perGroup]] then merges the partitions' rows per query (rank
   * order, lowest-id ties, NaN last), a shuffle of O(Q·k·partitions).
   */
@@ -74,11 +84,26 @@ object KnnJoin {
         quantize(_, scale))
       .withColumnRenamed("score", "cos_sim")
 
+  /** Exact top-k by L2 over already-joined candidates: one
+    * (query_id, neighbor_id, gv, qv) row per pair, both vectors
+    * quantized at `scale`. Scores the exact integer ‖gv − qv‖² and ranks
+    * each query's candidates as the scan does (lowest id on ties, a NULL
+    * vector skipped); a query keeps fewer than k rows when it has fewer
+    * candidates.
+    * @return (query_id, rnk, neighbor_id, dist) */
+  def rankPairs(cand: DataFrame, k: Int, scale: Int = DefaultScale): DataFrame =
+    TopK.perGroup(cand.select(col("query_id"), col("neighbor_id"),
+        intL2Sq(col("gv"), col("qv")).cast("double").as("d2")),
+      "query_id", "neighbor_id", "d2", k, ascending = true)
+      .select(col("query_id"), col("rnk"), col("neighbor_id"),
+        distFromIntSq(col("d2"), scale).as("dist"))
+
   /** (query_id, rnk, neighbor_id, score): the blocked scan, then the
-    * per-query merge of its partitions' rows. */
-  private def scan(metric: KnnMetric, gallery: DataFrame, queries: DataFrame,
-                   idCol: String, vecCol: String, qidCol: String, k: Int,
-                   vec: Column => Column): DataFrame = {
+    * per-query merge of its partitions' rows. Callers that need the
+    * exact integer score rather than `dist` call it directly. */
+  private[graft] def scan(metric: KnnMetric, gallery: DataFrame, queries: DataFrame,
+                          idCol: String, vecCol: String, qidCol: String, k: Int,
+                          vec: Column => Column): DataFrame = {
     val g = gallery.select(col(idCol).cast("long").as("neighbor_id"),
       vec(col(vecCol)).as("gv"))
     val q = queries.select(col(qidCol).cast("long").as("query_id"),

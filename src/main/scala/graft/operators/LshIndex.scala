@@ -104,13 +104,7 @@ object LshIndex {
         quantize(col(vecCol), scale).as("qv"))
       .withColumn("bucket0", bucketKeyQ(col("qv"), qplanes))
       .withColumn("bucket", explode(array(col("bucket0") +: flips: _*)))
-    val scored = g.join(broadcast(q), Seq("bucket"))
-      .select(col("query_id"), col("neighbor_id"),
-        intL2Sq(col("gv"), col("qv")).cast("double").as("d2"))
-    TopK.perGroup(scored, "query_id", "neighbor_id", "d2", k,
-        ascending = true)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        distFromIntSq(col("d2"), scale).as("dist"))
+    KnnJoin.rankPairs(g.join(broadcast(q), Seq("bucket")), k, scale)
   }
 
   /** Approximate KNN: candidates restricted to the query's bucket, then
@@ -129,11 +123,6 @@ object LshIndex {
       .select(col(qidCol).cast("long").as("query_id"),
         quantize(col(vecCol), scale).as("qv"))
       .withColumn("bucket", bucketKeyQ(col("qv"), qplanes))
-    val scored = g.join(broadcast(q), Seq("bucket"))
-      .select(col("query_id"), col("neighbor_id"),
-        intL2Sq(col("gv"), col("qv")).cast("double").as("d2"))
-    TopK.perGroup(scored, "query_id", "neighbor_id", "d2", k, ascending = true)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        distFromIntSq(col("d2"), scale).as("dist"))
+    KnnJoin.rankPairs(g.join(broadcast(q), Seq("bucket")), k, scale)
   }
 }

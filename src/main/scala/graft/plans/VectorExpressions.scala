@@ -232,4 +232,9 @@ object VectorExpressions {
   def intDot(a: Column, b: Column): Column =
     GraftSqlBridge.column(IntVectorDot(
       GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+
+  /** Element-wise sum aggregate (see [[VectorSumAggregate]]). */
+  def vectorSum(v: Column): Column =
+    GraftSqlBridge.column(
+      VectorSumAggregate(GraftSqlBridge.expression(v)).toAggregateExpression())
 }

@@ -235,43 +235,28 @@ object Queries {
   /** Rocchio pseudo-relevance feedback (query expansion): each query is
     * replaced by itself plus its v1 top-5 neighbors and re-searched.
     * The expanded vector is the exact INTEGER SUM e = q + Σnᵢ (six
-    * quantized vectors — no division anywhere), and the re-search
-    * ranks by ‖6g − e‖², which orders identically to distance-to-mean
-    * ‖g − e/6‖² but stays in exact Long arithmetic. Expansion frame is
-    * Q·6 rows (broadcast-sized by the batch-KNN contract); the gallery
-    * streams once through the codegen'd kernel into the partial top-k
-    * aggregate — same O(Q·k·partitions) shuffle as v1. */
+    * quantized vectors — no division anywhere), one native vector-sum
+    * aggregate per query. The re-search ranks by ‖6g − e‖², which
+    * orders identically to distance-to-mean ‖g − e/6‖² but stays in
+    * exact Long arithmetic: it is plain L2 between 6·g (quantize at
+    * scale 6 of the integer vector, exact far below 2⁵³) and e, so the
+    * gallery streams once through the blocked exact scan against the
+    * broadcast Q-row expansion, as v1 does. */
   def v42QueryExpansion(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d).select(col("vec_id").cast("long").as("vec_id"),
       quantize(col("embedding")).as("qv"))
     val hits = v1KnnL2(s, d).select("query_id", "neighbor_id")
     val nb = e.join(broadcast(hits), col("vec_id") === col("neighbor_id"))
-      .select(col("query_id"), col("qv").as("v"))
+      .select(col("query_id"), col("qv"))
     val q = e.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("qv").as("v"))
-    val exp = nb.unionByName(q)
-      .select(col("query_id"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy("query_id", "dim").agg(sum("x").as("ex"))
-      .groupBy("query_id")
-      .agg(array_sort(collect_list(struct(col("dim"), col("ex"))))
-        .as("pairs"))
-      .select(col("query_id"),
-        transform(col("pairs"), p => p.getField("ex")).as("evec"))
-    // ||6g - e||^2 expanded to 36||g||^2 - 12 g·e + ||e||^2: identical
-    // exact Longs, but the hot per-(row, query) work is ONE codegen'd
-    // intDot kernel — the zip_with/aggregate HOF form allocates a
-    // 64-element array per pair and was measured 12x slower at the
-    // 100k-gallery data-bound point (86.7 s vs the v1-class floor).
-    val expN = exp.withColumn("ensq", intNormSq(col("evec")))
-    val scored = e.withColumn("gnsq", intNormSq(col("qv")))
-      .join(broadcast(expN))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (lit(36L) * col("gnsq") - lit(12L) * intDot(col("qv"), col("evec"))
-          + col("ensq")).cast("double").as("d2s"))
-    TopK.perGroup(scored, "query_id", "neighbor_id", "d2s", k = 5,
-        ascending = true)
+      .select(col("vec_id").as("query_id"), col("qv"))
+    val exp = nb.unionByName(q).groupBy("query_id")
+      .agg(vectorSum(col("qv")).as("qv"))
+    KnnJoin.scan(graft.plans.KnnMetric.L2,
+        e.select(col("vec_id"), quantize(col("qv"), 6).as("qv")), exp,
+        "vec_id", "qv", "query_id", k = 5, identity)
       .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        col("d2s").cast("long").as("d2s"))
+        col("score").cast("long").as("d2s"))
   }
 
   /** PQ asymmetric-distance search under the hard gate. Codebooks are
@@ -962,13 +947,10 @@ object Queries {
     val probes = queryVecs.filter(col("id") % 100 === 0)
       .select(col("id").as("query_id"), col("qv").as("qvec"),
         explode(labs).as("pc"))
-    val scored = added.join(broadcast(probes), col("c") === col("pc"))
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        intL2Sq(col("qv"), col("qvec")).cast("double").as("d2"))
-    TopK.perGroup(scored, "query_id", "neighbor_id", "d2", k = 5,
-        ascending = true)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        distFromIntSq(col("d2")).as("dist"))
+    KnnJoin.rankPairs(
+      added.join(broadcast(probes), col("c") === col("pc"))
+        .select(col("query_id"), col("id").as("neighbor_id"),
+          col("qv").as("gv"), col("qvec").as("qv")), k = 5)
   }
 
   /** The persisted trained-centroid carrier (lab, n, svec) collected
@@ -6894,9 +6876,8 @@ object Queries {
     * gallery vectors (deterministic, index-free: floor((a+b)/2) per
     * dim — one IEEE division + floor on exact integers < 2⁵³, bit-
     * identical both engines), so no query can self-hit and rank 1 is
-    * a genuine nearest-neighbor retrieval. Same harness as v1:
-    * broadcast(queries) × streaming gallery through the codegen'd
-    * integer kernel into the bounded native top-k. */
+    * a genuine nearest-neighbor retrieval. Same harness as v1: the
+    * blocked exact scan of the gallery against the broadcast queries. */
   def v72NovelQueryKnn(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
     val qa = e.filter(col("vec_id") % 100 === 0)
@@ -6909,15 +6890,8 @@ object Queries {
       .select(col("query_id"),
         zip_with(col("va"), col("vb"),
           (a, b) => floor((a + b) / lit(2.0)).cast("long")).as("qv"))
-    val g = e.select(col("vec_id").cast("long").as("neighbor_id"),
-      quantize(col("embedding")).as("gv"))
-    val scored = g.join(broadcast(novel))
-      .select(col("query_id"), col("neighbor_id"),
-        intL2Sq(col("gv"), col("qv")).cast("double").as("d2"))
-    TopK.perGroup(scored, "query_id", "neighbor_id", "d2", k = 5,
-        ascending = true)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        distFromIntSq(col("d2")).as("dist"))
+    KnnJoin.knnL2Pre(e.select(col("vec_id"), quantize(col("embedding")).as("qv")),
+      novel, "vec_id", "qv", "query_id", k = 5, scale = DefaultScale)
   }
 
   /** MMR DIVERSIFIED re-ranking (Carbonell & Goldstein, SIGIR'98) —
@@ -6928,7 +6902,7 @@ object Queries {
     *   argmax over remaining c of  min_{s∈selected} d2(c,s) − d2(q,c)
     * (ties to smaller id), so both engines agree bit-for-bit — no
     * float similarity to drift. Scale shape: the pool is the v1
-    * harness (broadcast queries × streaming gallery → bounded native
+    * harness (the blocked exact scan against the broadcast queries,
     * top-10), localCheckpointed at O(Q·10) rows; the four greedy steps
     * are joins/aggs over THAT frame only (O(Q·10·t) work per step),
     * never the gallery — at 100 TB the gallery is scanned exactly
@@ -6939,14 +6913,11 @@ object Queries {
     val g = e.select(col("vec_id").cast("long").as("neighbor_id"),
       quantize(col("embedding")).as("gv"))
     val q = queryVecs(e).select(col("vec_id").cast("long").as("query_id"),
-      quantize(col("embedding")).as("qv"))
-    val scored = g.join(broadcast(q))
-      .select(col("query_id"), col("neighbor_id"),
-        intL2Sq(col("gv"), col("qv")).cast("double").as("d2"))
-    val pool = TopK.perGroup(scored, "query_id", "neighbor_id", "d2",
-        k = 10, ascending = true)
+      quantize(col("embedding")).as("gv"))
+    val pool = KnnJoin.scan(graft.plans.KnnMetric.L2, g, q, "neighbor_id",
+        "gv", "query_id", k = 10, identity)
       .select(col("query_id"), col("rnk"),
-        col("neighbor_id"), col("d2").cast("long").as("d2q"))
+        col("neighbor_id"), col("score").cast("long").as("d2q"))
       .join(g, "neighbor_id")
       .localCheckpoint(false) // O(Q·10); the greedy loop reads only this
     var sel = pool.filter(col("rnk") === 1)
@@ -7123,24 +7094,11 @@ object Queries {
     * argument applied to request dedup. */
   def v75QueryDedupServe(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
-    val base = queryVecs(e).select(col("vec_id").cast("long").as("query_id"),
-      quantize(col("embedding")).as("qv"))
-    val batch = base.unionByName(
-      base.select((col("query_id") + 1000000L).as("query_id"), col("qv")))
-      .withColumn("qkey", md5(concat_ws(",", col("qv"))))
-    val reps = batch.groupBy("qkey")
-      .agg(first(col("qv")).as("qv"))
-    val g = e.select(col("vec_id").cast("long").as("neighbor_id"),
-      quantize(col("embedding")).as("gv"))
-    val scored = g.join(broadcast(reps))
-      .select(col("qkey"), col("neighbor_id"),
-        intL2Sq(col("gv"), col("qv")).cast("double").as("d2"))
-    val hits = TopK.perGroup(scored, "qkey", "neighbor_id", "d2", k = 5,
-      ascending = true)
-    batch.select(col("query_id"), col("qkey"))
-      .join(hits, "qkey")
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        distFromIntSq(col("d2")).as("dist"))
+    val base = queryVecs(e).select(col("vec_id").cast("long").as("request_id"),
+      col("embedding"))
+    graft.streaming.StreamingOps.dedupServeBatch(base.unionByName(
+      base.select((col("request_id") + 1000000L).as("request_id"),
+        col("embedding"))), e)
   }
 
   /** Cross-doc DUPLICATED-NGRAM MASS — the exact-substring dedup
@@ -7287,11 +7245,9 @@ object Queries {
     val qe = qr.filter(col("route") === "exact")
       .select(col("vec_id").cast("long").as("query_id"), col("qlab"),
         quantize(col("embedding")).as("qv"))
-    val candE = g.join(broadcast(qe), col("glab") === col("qlab"))
-      .select(col("query_id"), col("neighbor_id"),
-        intL2Sq(col("gv"), col("qv")).cast("double").as("d2"))
-    val hitsE = TopK.perGroup(candE, "query_id", "neighbor_id", "d2",
-      k = 5, ascending = true).withColumn("route", lit("exact"))
+    val hitsE = KnnJoin.rankPairs(
+        g.join(broadcast(qe), col("glab") === col("qlab")), k = 5)
+      .withColumn("route", lit("exact"))
     // ivf branch: v7's probe shape + the class filter in the join.
     val qi = qr.filter(col("route") === "ivf")
     val probes = KnnJoin.knnL2(seedCentroids(e), qi,
@@ -7306,16 +7262,11 @@ object Queries {
     val gAsn = g.withColumn("centroid_id",
       graft.plans.CentroidKernels.nearestInt(col("gv"),
         centArr.head._2.length, 0, centArr.toSeq).getField("cid"))
-    val candI = gAsn.join(broadcast(probeQ),
+    val hitsI = KnnJoin.rankPairs(gAsn.join(broadcast(probeQ),
         gAsn("centroid_id") === probeQ("pcid") &&
-          gAsn("glab") === probeQ("qlab"))
-      .select(col("query_id"), col("neighbor_id"),
-        intL2Sq(col("gv"), col("qv")).cast("double").as("d2"))
-    val hitsI = TopK.perGroup(candI, "query_id", "neighbor_id", "d2",
-      k = 5, ascending = true).withColumn("route", lit("ivf"))
+          gAsn("glab") === probeQ("qlab")), k = 5)
+      .withColumn("route", lit("ivf"))
     hitsE.unionByName(hitsI)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        distFromIntSq(col("d2")).as("dist"), col("route"))
   }
 
   /** Per-term BURSTINESS (Church & Gale '95 shape): for every term

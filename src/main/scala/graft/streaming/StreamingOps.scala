@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.VectorFunctions._
+import graft.operators.KnnJoin
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -63,7 +64,10 @@ object StreamingOps {
     * batch scan computes, ranked by the same bounded top-k
     * ([[graft.plans.TopKAggregate]]), so streaming results match batch
     * bit-for-bit. State per query is the k-element heap (update/
-    * complete output modes). */
+    * complete output modes). The one exact-L2 ranking outside
+    * [[KnnJoin]]: the blocked scan broadcasts the queries, but here
+    * the queries are the stream and the static gallery is the
+    * broadcast side, so this stays a crossjoin. */
   def knnStream(queries: DataFrame, gallery: DataFrame, qidCol: String,
                 vecCol: String, gidCol: String, k: Int,
                 scale: Int = graft.functions.VectorFunctions.DefaultScale): DataFrame = {
@@ -329,7 +333,10 @@ object StreamingOps {
     * micro-batches yields the identical per-request rows — two copies
     * of a query landing in different batches each pay one
     * representative scan, same answer (the transparency property v75
-    * gates in batch). Stateless: no watermark state to size. */
+    * gates in batch, through this function). Each representative is
+    * keyed by its digest's lowest request id for the blocked exact
+    * scan, so a digest whose requests all lack an id gets no rows.
+    * Stateless: no watermark state to size. */
   def dedupServeBatch(requests: DataFrame, gallery: DataFrame,
                       k: Int = 5,
                       scale: Int = graft.functions.VectorFunctions.DefaultScale): DataFrame = {
@@ -337,17 +344,16 @@ object StreamingOps {
       .select(col("request_id").cast("long").as("query_id"),
         quantize(col("embedding"), scale).as("qv"))
       .withColumn("qkey", md5(concat_ws(",", col("qv"))))
-    val reps = batch.groupBy("qkey").agg(first(col("qv")).as("qv"))
-    val g = gallery.select(col("vec_id").cast("long").as("neighbor_id"),
-      quantize(col("embedding"), scale).as("gv"))
-    val scored = g.join(broadcast(reps))
-      .select(col("qkey"), col("neighbor_id"),
-        intL2Sq(col("gv"), col("qv")).cast("double").as("d2"))
-    val hits = graft.operators.TopK.perGroup(scored, "qkey",
-      "neighbor_id", "d2", k, ascending = true)
-    batch.select("query_id", "qkey").join(hits, "qkey")
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        distFromIntSq(col("d2"), scale).as("dist"))
+    val reps = batch.groupBy("qkey")
+      .agg(min(col("query_id")).as("rep_id"), first(col("qv")).as("qv"))
+    val g = gallery.select(col("vec_id"),
+      quantize(col("embedding"), scale).as("qv"))
+    val hits = KnnJoin.knnL2Pre(g, reps, "vec_id", "qv", "rep_id", k, scale)
+      .withColumnRenamed("query_id", "rep_id")
+    batch.select("query_id", "qkey")
+      .join(reps.select("qkey", "rep_id"), "qkey")
+      .join(hits, "rep_id")
+      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("dist"))
   }
 
   /** Per-micro-batch INCREMENTAL GRAPH MAINTENANCE (streaming twin of
@@ -678,13 +684,8 @@ object StreamingOps {
       col("centroid_id").cast("long").as("pc"),
       col("id").cast("long").as("neighbor_id"),
       quantize(col("vec"), scale).as("nqv"))
-    val scored = probes.join(g, Seq("pc"))
-      .select(col("query_id"), col("neighbor_id"),
-        intL2Sq(col("nqv"), col("qv")).cast("double").as("d2"))
-    graft.operators.TopK.perGroup(scored, "query_id", "neighbor_id",
-        "d2", k, ascending = true)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        distFromIntSq(col("d2"), scale).as("dist"))
+    KnnJoin.rankPairs(
+      probes.join(g, Seq("pc")).withColumnRenamed("nqv", "gv"), k, scale)
   }
 
   /** Continuous SEGMENT-MERGE serving (streaming twin of the gated
@@ -741,11 +742,8 @@ object StreamingOps {
       .join(broadcast(route), col("qlab") === col("lab")).drop("lab")
     // exact branch: same-class brute force via broadcast queries
     val qe = qr.filter(col("route") === "exact")
-    val candE = g.join(broadcast(qe), col("glab") === col("qlab"))
-      .select(col("query_id"), col("neighbor_id"),
-        intL2Sq(col("gv"), col("qv")).cast("double").as("d2"))
-    val hitsE = graft.operators.TopK.perGroup(candE, "query_id",
-      "neighbor_id", "d2", k, ascending = true)
+    val hitsE = KnnJoin.rankPairs(
+        g.join(broadcast(qe), col("glab") === col("qlab")), k, scale)
       .withColumn("route", lit("exact"))
     // ivf branch: literal-folded probe routing (the ivfServeStream
     // shape — same (d2, cid) order as v76's centroid KNN) + the class
@@ -758,16 +756,11 @@ object StreamingOps {
     val probeQ = qi.withColumn("pcid", explode(transform(
       slice(array_sort(array(cands: _*)), 1, nprobe),
       s => s.getField("cid"))))
-    val candI = g.join(broadcast(probeQ),
-        g("centroid_id") === probeQ("pcid") && g("glab") === probeQ("qlab"))
-      .select(col("query_id"), col("neighbor_id"),
-        intL2Sq(col("gv"), col("qv")).cast("double").as("d2"))
-    val hitsI = graft.operators.TopK.perGroup(candI, "query_id",
-      "neighbor_id", "d2", k, ascending = true)
+    val hitsI = KnnJoin.rankPairs(g.join(broadcast(probeQ),
+        g("centroid_id") === probeQ("pcid") && g("glab") === probeQ("qlab")),
+        k, scale)
       .withColumn("route", lit("ivf"))
     hitsE.unionByName(hitsI)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        distFromIntSq(col("d2"), scale).as("dist"), col("route"))
   }
 
   /** Continuous asset near-dup admission (streaming twin of the gated

@@ -49,8 +49,6 @@ object ExplainAudit {
     // BNLJs are broadcast 1-row scalar crossjoins (q21 pattern: corpus
     // total / p99 threshold riding back).
     "v36_pq_recall", "q27_part_value_share", "e19_power_users",
-    // v42's own broadcast(expanded-queries) scoring crossjoin.
-    "v42_query_expansion",
     // t21's corpus-total 1-row crossjoin (the q21/t8 scalar pattern).
     "t21_chi2_keywords",
     // t22's corpus-total and e23's max-ts/quartile-threshold 1-row
@@ -72,10 +70,6 @@ object ExplainAudit {
     "e32_hll_dau",
     // v69 composes v31's rotated-ADC chain (the v36 class).
     "v69_opq_recall",
-    // v72 scores its midpoint queries with its own broadcast(queries)
-    // crossjoin; v75 scores the deduped representative batch the same
-    // way (the request-dedup serving class).
-    "v72_novel_query_knn", "v75_query_dedup_serve",
     // v76's O(classes) × 1-row totals scalar crossjoin (the q21/e19
     // class) feeding the route table.
     "v76_selectivity_route",

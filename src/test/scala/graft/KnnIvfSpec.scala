@@ -51,6 +51,56 @@ class KnnIvfSpec extends SparkSpec {
     assert(!names.exists(_.contains("NestedLoopJoin")), names)
   }
 
+  test("v42, v72, v73, v75 and dedupServeBatch rank on the blocked scan: " +
+    "the plans they execute hold a KnnScan and no nested-loop join") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    /** The nodes of every plan executed while `build` builds its frame
+      * (v73 checkpoints its pool there) and collects it. */
+    def executedNodes(build: => DataFrame): Seq[SparkPlan] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        val df = build
+        df.collect()
+        // events arrive in order, so once the collect's own is in, all are
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (!seen.asScala.exists(_ eq df.queryExecution) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+        assert(seen.asScala.exists(_ eq df.queryExecution), "collect not seen")
+        seen.asScala.toSeq.flatMap(qe => nodes(qe.executedPlan))
+      } finally spark.listenerManager.unregister(listener)
+    }
+    val emb = Tables.embeddings(spark, sf)
+    val requests = emb.filter($"vec_id" % 100 === 0)
+      .select($"vec_id".as("request_id"), $"embedding")
+    val cases = Seq[(String, () => DataFrame)](
+      "v42" -> (() => graft.queries.Queries.v42QueryExpansion(spark, sf)),
+      "v72" -> (() => graft.queries.Queries.v72NovelQueryKnn(spark, sf)),
+      "v73" -> (() => graft.queries.Queries.v73MmrDiversify(spark, sf)),
+      "v75" -> (() => graft.queries.Queries.v75QueryDedupServe(spark, sf)),
+      "dedupServeBatch" -> (() => graft.streaming.StreamingOps.dedupServeBatch(
+        requests.unionByName(requests), emb)))
+    for ((name, build) <- cases) {
+      val ns = executedNodes(build())
+      assert(ns.exists(_.isInstanceOf[graft.plans.KnnScanExec]), name)
+      assert(!ns.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]), name)
+    }
+  }
+
   test("IVF assignment is the brute-force argmin") {
     val cents = Seq((0L, Array(0.0f, 0.0f)), (1L, Array(5.0f, 5.0f)))
       .toDF("cid", "embedding")

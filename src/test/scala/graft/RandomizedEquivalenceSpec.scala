@@ -393,6 +393,23 @@ class RandomizedEquivalenceSpec extends SparkSpec {
       }).as("score"))
   }
 
+  /** (query_id, neighbor_id, gv, qv) for every (query, gallery) pair:
+    * the candidate rows `KnnJoin.rankPairs` takes. */
+  private def pairs(gallery: DataFrame, queries: DataFrame): DataFrame =
+    gallery.select(col("id").cast("long").as("neighbor_id"),
+        quantize(col("v"), 1).as("gv"))
+      .crossJoin(queries.select(col("id").cast("long").as("query_id"),
+        quantize(col("v"), 1).as("qv")))
+
+  /** Reference for `KnnJoin.rankPairs`: the exact-L2 tail spelled out
+    * op by op. */
+  private def l2Tail(cand: DataFrame, k: Int): DataFrame =
+    TopK.perGroup(cand.select(col("query_id"), col("neighbor_id"),
+        intL2Sq(col("gv"), col("qv")).cast("double").as("d2")),
+      "query_id", "neighbor_id", "d2", k, ascending = true)
+      .select(col("query_id"), col("rnk"), col("neighbor_id"),
+        distFromIntSq(col("d2"), 1).as("dist"))
+
   /** `pre`: L2 through `knnL2Pre` on the integer vectors as they are. */
   private def knn(metric: KnnMetric, gallery: DataFrame, queries: DataFrame,
                   k: Int, scale: Int = 1, pre: Boolean = false): DataFrame = {
@@ -454,6 +471,9 @@ class RandomizedEquivalenceSpec extends SparkSpec {
         val got = rowsOf(knn(metric, g, q, k))
         assert(got === rowsOf(crossjoinKnn(metric, g, q, k)),
           s"n=$n parts=$parts dim=$dim $metric k=$k")
+        if (metric == KnnMetric.L2)
+          assert(rowsOf(KnnJoin.rankPairs(pairs(g, q), k, 1)) === got,
+            s"rankPairs n=$n parts=$parts dim=$dim k=$k")
         if (k == 1000) // every non-null gallery row, for each scored query
           assert(got.size === 7 * (n + n / 5 + 1), s"$metric n=$n")
       }
@@ -488,6 +508,10 @@ class RandomizedEquivalenceSpec extends SparkSpec {
         withConf("spark.sql.adaptive.enabled" -> "false") {
           assert(rowsOf(knn(metric, g.repartition(parts), q, 5)) ===
             expected, s"$metric parts=$parts AQE off")
+          if (metric == KnnMetric.L2)
+            assert(rowsOf(KnnJoin.rankPairs(
+              pairs(shuffled, q).repartition(parts), 5, 1)) === expected,
+              s"rankPairs parts=$parts AQE off")
         }
       }
     }
@@ -530,6 +554,36 @@ class RandomizedEquivalenceSpec extends SparkSpec {
             if (pre) assert(longBlocks > 0, clue) else assert(longBlocks === 0, clue)
           }
       }
+    }
+  }
+
+  /** Rows in a canonical order with a nullable query id. */
+  private def rowsWithNullIds(df: DataFrame): Seq[(Option[Long], Long, Long, Long)] =
+    df.collect().toSeq.map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+      r.getLong(1), r.getLong(2),
+      java.lang.Double.doubleToLongBits(r.getDouble(3)))).sorted
+
+  test("KnnJoin.rankPairs == the hand-rolled exact-L2 tail on routed " +
+    "candidates: ties, k above a query's candidate count, NULL vectors " +
+    "and ids, repartition(1/4/32), AQE off") {
+    val dim = 4
+    val g = knnGallery(21, 60, dim)
+    val q = knnQueries(22, 7, dim).unionByName(
+      Seq((Option.empty[Long], Option(Seq.fill(dim)(1.0)))).toDF("id", "v"))
+    // a routing join's candidate subset: each query sees a different
+    // share of the gallery, query 1000 only ids ≡ 0 (mod 4), 18 of them
+    // with a vector; a NULL id on either side routes like id 0
+    val cand = pairs(g, q).filter(pmod(coalesce(col("neighbor_id"), lit(0L)), lit(4L)) <=
+      pmod(coalesce(col("query_id"), lit(0L)), lit(4L)))
+    for (k <- Seq(1, 3, 1000)) {
+      val expected = rowsWithNullIds(l2Tail(cand, k))
+      if (k == 1000) assert(expected.count(_._1.contains(1000L)) === 18)
+      assert(expected.exists(_._1.isEmpty))
+      for (parts <- Seq(1, 4, 32); aqe <- Seq("true", "false"))
+        withConf("spark.sql.adaptive.enabled" -> aqe) {
+          assert(rowsWithNullIds(KnnJoin.rankPairs(cand.repartition(parts), k, 1)) ===
+            expected, s"k=$k parts=$parts AQE=$aqe")
+        }
     }
   }
 }
